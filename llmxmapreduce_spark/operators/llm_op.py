@@ -9,9 +9,10 @@ error-sentinel bookkeeping columns ``llm_ok/llm_error/llm_attempts``
 (async_d/node/node.py:243-272, decorator.py:9-18).  Failed rows flow on and
 can be quarantined with :func:`dead_letter_split` instead of killing the job.
 
-Scale notes: Arrow-batched (never row-at-a-time Python), no driver collect,
-and the stage's parallelism = its input partitioning, so LLM concurrency is
-tuned by ``repartition(n)`` before the stage.
+Scale notes: Arrow-batched (never row-at-a-time Python), no driver collect.
+``llm_stage``'s parallelism is its input partitioning, so its concurrency
+is tuned by ``repartition(n)`` before the stage; ``llm_stage_cached`` sets
+its own, one model-calling task per ``spark.sql.shuffle.partitions``.
 """
 
 from __future__ import annotations
@@ -84,8 +85,7 @@ def llm_stage(
     falling back to the test default.  The probe instantiates one client on
     the driver; per-partition clients are created inside ``run``.
     """
-    if retry is None:
-        retry = getattr(client_factory(), "retry_policy", None) or RetryPolicy()
+    retry = _resolve_retry(client_factory, retry)
     keep_fields = [df.schema[c] for c in keep_cols]
     out_schema = T.StructType(keep_fields + payload_fields + LLM_COLS)
     payload_names = [f.name for f in payload_fields]
@@ -95,23 +95,9 @@ def llm_stage(
         for pdf in batches:
             out_rows = []
             for row in pdf.to_dict("records"):
-                prompt = build_prompt(row)
-                reply, err, attempts = call_with_retry(client, prompt, retry)
-                if metrics is not None:
-                    metrics.calls.add(1)
-                    metrics.prompt_chars.add(len(prompt))
-                    if reply is None:
-                        metrics.failures.add(1)
-                    else:
-                        metrics.reply_chars.add(len(reply))
-                payload: dict[str, Any] = dict.fromkeys(payload_names)
-                ok = reply is not None
-                if ok:
-                    try:
-                        parsed = parse(reply)
-                        payload.update({k: parsed.get(k) for k in payload_names})
-                    except Exception as e:  # noqa: BLE001 - sentinel semantics
-                        ok, err = False, f"ParseError: {type(e).__name__}: {e}"
+                payload, ok, err, attempts = _call_and_parse(
+                    client, build_prompt(row), parse, payload_names, retry,
+                    metrics)
                 out_rows.append(
                     {**{c: row[c] for c in keep_cols}, **payload,
                      "llm_ok": ok, "llm_error": err, "llm_attempts": attempts}
@@ -119,6 +105,40 @@ def llm_stage(
             yield pd.DataFrame(out_rows, columns=[f.name for f in out_schema.fields])
 
     return df.mapInPandas(run, schema=out_schema)
+
+
+def _resolve_retry(client_factory: Callable[[], LLMClient],
+                   retry: RetryPolicy | None) -> RetryPolicy:
+    """``retry``, else the client's own ``retry_policy``, else the default."""
+    if retry is not None:
+        return retry
+    return getattr(client_factory(), "retry_policy", None) or RetryPolicy()
+
+
+def _call_and_parse(client: LLMClient, prompt: str,
+                    parse: Callable[[str], dict[str, Any]],
+                    payload_names: list[str], retry: RetryPolicy,
+                    metrics: LLMMetrics | None,
+                    ) -> tuple[dict[str, Any], bool, str | None, int]:
+    """One model call with retries, metered and parsed:
+    ``(payload, llm_ok, llm_error, llm_attempts)``."""
+    reply, err, attempts = call_with_retry(client, prompt, retry)
+    if metrics is not None:
+        metrics.calls.add(1)
+        metrics.prompt_chars.add(len(prompt))
+        if reply is None:
+            metrics.failures.add(1)
+        else:
+            metrics.reply_chars.add(len(reply))
+    payload: dict[str, Any] = dict.fromkeys(payload_names)
+    ok = reply is not None
+    if ok:
+        try:
+            parsed = parse(reply)
+            payload.update({k: parsed.get(k) for k in payload_names})
+        except Exception as e:  # noqa: BLE001 - sentinel semantics
+            ok, err = False, f"ParseError: {type(e).__name__}: {e}"
+    return payload, ok, err, attempts
 
 
 def dead_letter_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -142,6 +162,11 @@ PROMPT_HASH_COL = "__prompt_hash"
 # above this on-disk size, llm_stage_cached prunes the cache read with a
 # semi-join on the batch's hashes instead of deduping the whole cache
 PRUNE_CACHE_READ_BYTES = 256 * 1024 * 1024
+
+# llm_stage_cached's internal columns: the cache-side payload struct and
+# the flag on the one row per fresh successful hash that the append writes
+_CACHED_COL = "__cached"
+_FRESH_COL = "__fresh"
 
 
 def _cache_bytes(spark, cache_dir: str) -> int:
@@ -251,9 +276,10 @@ def llm_stage_cached(
     - rows whose prompt hash is already in ``cache_dir`` never reach the
       model: their payload (and original ``llm_attempts``) replays from
       the cache with ``llm_ok=true``;
-    - cache misses are deduplicated by prompt BEFORE calling — N rows
-      sharing one prompt cost ONE call even on a cold cache, then fan
-      back out over the 16-byte hash join;
+    - cache misses cost ONE call per distinct prompt, even on a cold
+      cache: rows are hash-partitioned on the prompt hash, so every row
+      sharing a prompt lands in the same task, and a per-task memo
+      serves the repeats;
     - successful fresh results are appended to ``cache_dir`` (parquet;
       appends are new files, so concurrent runs never corrupt — dup
       hashes are resolved deterministically at read).
@@ -261,82 +287,92 @@ def llm_stage_cached(
     Failed rows (``llm_ok=false``) are returned with the usual sentinel
     but NOT cached, so the next run retries them — the D8/D13 contract.
 
-    The fresh-results frame is eagerly localCheckpointed (the LLM calls
-    must run exactly once for the cache write AND the returned rows);
-    like the fused v2 stages, that one bounded frame stays pinned until
-    the caller's own retention boundary releases it.
+    Job shape, one pass over the input: the lazily hashed input is
+    left-joined with the deduplicated cache (:func:`read_prompt_cache`;
+    Spark broadcasts the cache side while it is small), repartitioned on
+    the hash to ``spark.sql.shuffle.partitions`` tasks, and one
+    ``mapInPandas`` replays hits and calls the model for misses.  That
+    frame is eagerly localCheckpointed — the upstream plan and the model
+    calls run exactly once, for the returned rows AND the cache append,
+    which reads the checkpoint and is skipped when nothing is fresh.
+    The one pinned frame stays until the caller's own retention boundary
+    releases it.  The explicit partition count is what keeps the model
+    calls parallel: AQE may coalesce a count-less repartition of a small
+    miss set into one task that would call the model serially.
 
     Scale: the cache join is an equi-join on a 16-byte hash (broadcast
     while the cache is small, shuffle-on-hash after), the append is an
     executor-side parquet write, and nothing collects to the driver.
+    Past ``PRUNE_CACHE_READ_BYTES`` the cache read is semi-join pruned
+    to the batch's hashes, which evaluates the upstream plan a second
+    time — at that cache size the saved cache-wide dedupe dominates.
     """
     spark = df.sparkSession
+    retry = _resolve_retry(client_factory, retry)
     payload_names = [f.name for f in payload_fields]
-    # Materialize the hash pre-pass ONCE: the hit join, the miss anti-
-    # join, and the fan-out join all read `hashed` — lazy, each would
-    # re-run the whole upstream plan (a chunker feeding an LLM stage is
-    # typical), which measured as ~2× pipeline overhead on the V1 board
-    # fixture.  The checkpoint is one input-pass frame, the same class as
-    # the pipeline's own stage boundaries; it stays pinned until the
-    # caller's retention boundary (like the fresh-results frame below).
-    hashed = with_prompt_hash(df, build_prompt, version) \
-        .localCheckpoint(eager=True)
+    hashed = with_prompt_hash(df, build_prompt, version)
     # Prune the cache read only once the cache is big enough that its
-    # dedupe shuffle dominates (the semi-join costs an extra join — a
-    # net loss while the cache is batch-sized, a requirement once it has
-    # accumulated for months).
+    # dedupe shuffle dominates (the semi-join costs an extra join and an
+    # extra upstream pass — a net loss while the cache is batch-sized, a
+    # requirement once it has accumulated for months).
     prune = _cache_bytes(spark, cache_dir) > PRUNE_CACHE_READ_BYTES
     cache = read_prompt_cache(spark, cache_dir, payload_fields,
                               relevant=hashed if prune else None)
+    if cache is not None:
+        # the cached payload rides in one struct column (null on a miss):
+        # an input column may share a name with a payload column (V1's
+        # map stage reads chunk `text` and emits payload `text`)
+        hashed = hashed.join(
+            cache.select(PROMPT_HASH_COL, F.struct(
+                *payload_names, "llm_attempts").alias(_CACHED_COL)),
+            PROMPT_HASH_COL, "left")
+    n_tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    routed = hashed.repartition(n_tasks, PROMPT_HASH_COL)
 
-    if cache is None:
-        hits = None
-        misses = hashed
-    else:
-        # aliased sides: an input column may legitimately share a name
-        # with a payload column (V1's map stage keeps chunk `text` and
-        # emits payload `text`) — keep_cols resolve against the input,
-        # payload against the cache
-        hits = hashed.alias("__in").join(cache.alias("__c"),
-                                         PROMPT_HASH_COL).select(
-            *[F.col(f"__in.{c}") for c in keep_cols],
-            *[F.col(f"__c.{n}").alias(n) for n in payload_names],
-            F.lit(True).alias("llm_ok"),
-            F.lit(None).cast("string").alias("llm_error"),
-            F.col("__c.llm_attempts").alias("llm_attempts"),
-        )
-        misses = hashed.join(cache.select(PROMPT_HASH_COL),
-                             PROMPT_HASH_COL, "left_anti")
+    keep_fields = [df.schema[c] for c in keep_cols]
+    out_schema = T.StructType(
+        keep_fields + payload_fields + LLM_COLS
+        + [T.StructField(PROMPT_HASH_COL, T.StringType(), False),
+           T.StructField(_FRESH_COL, T.BooleanType(), False)])
+    out_names = [f.name for f in out_schema.fields]
+    fresh_rows = spark.sparkContext.accumulator(0)
 
-    # one call per DISTINCT prompt; any representative row works because
-    # the hash pins the prompt text (build_prompt sees identical inputs)
-    from llmxmapreduce_spark.retention import pinned_ids, release
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        client = None
+        memo: dict[str, tuple] = {}     # hash -> this task's call result
+        for pdf in batches:
+            out_rows = []
+            for row in pdf.to_dict("records"):
+                h = row[PROMPT_HASH_COL]
+                cached = row.get(_CACHED_COL)
+                fresh = False
+                if cached is not None:
+                    payload = {n: cached[n] for n in payload_names}
+                    ok, err, attempts = True, None, cached["llm_attempts"]
+                elif h in memo:
+                    payload, ok, err, attempts = memo[h]
+                else:
+                    if client is None:
+                        client = client_factory()
+                    payload, ok, err, attempts = memo[h] = _call_and_parse(
+                        client, build_prompt(row), parse, payload_names,
+                        retry, metrics)
+                    fresh = ok
+                out_rows.append(
+                    {**{c: row[c] for c in keep_cols}, **payload,
+                     "llm_ok": ok, "llm_error": err, "llm_attempts": attempts,
+                     PROMPT_HASH_COL: h, _FRESH_COL: fresh})
+            fresh_rows.add(sum(r[_FRESH_COL] for r in out_rows))
+            yield pd.DataFrame(out_rows, columns=out_names)
 
-    snap = pinned_ids(spark.sparkContext)
-    fresh_payload = llm_stage(
-        misses.dropDuplicates([PROMPT_HASH_COL]),
-        build_prompt, parse, client_factory, payload_fields,
-        [PROMPT_HASH_COL], retry, metrics,
-    ).localCheckpoint(eager=True)
-    ckpt_ids = pinned_ids(spark.sparkContext) - snap
-
-    # fully-warm fast path: with zero misses the checkpoint is empty —
-    # skip the append job and the fan-out join, release the empty frame,
-    # and serve everything from the cache side (measured: these no-op
-    # jobs are most of a warm re-run's wall with a fast model)
-    if hits is not None and fresh_payload.isEmpty():
-        release(spark.sparkContext, ckpt_ids)
-        return hits
-
-    fresh_payload.filter("llm_ok").select(
-        PROMPT_HASH_COL, *payload_names, "llm_attempts"
-    ).write.mode("append").parquet(cache_dir)
-
-    fresh = misses.select(*keep_cols, PROMPT_HASH_COL).join(
-        fresh_payload, PROMPT_HASH_COL
-    ).select(*keep_cols, *payload_names, "llm_ok", "llm_error",
-             "llm_attempts")
-    return fresh if hits is None else hits.unionByName(fresh)
+    done = routed.mapInPandas(run, schema=out_schema) \
+        .localCheckpoint(eager=True)
+    if fresh_rows.value:
+        done.filter(_FRESH_COL).select(
+            PROMPT_HASH_COL, *payload_names, "llm_attempts"
+        ).write.mode("append").parquet(cache_dir)
+    return done.select(*keep_cols, *payload_names, "llm_ok", "llm_error",
+                       "llm_attempts")
 
 
 # ---------------------------------------------------------------------------

@@ -120,8 +120,11 @@ def run_v1_qa(
     The collapse stage stays uncached on purpose: its inputs are
     intermediate merges that only repeat on byte-identical re-runs,
     and each in-loop cached call would pin a checkpoint frame the
-    round-release ledger does not track.  Each cached stage pins one
-    bounded fresh-results frame for the call (llm_op.py contract).
+    round-release ledger does not track.  Each cached stage is one pass
+    over its input — cache join, hash repartition, one model/replay
+    ``mapInPandas`` — and pins one bounded frame for the call: its
+    eager checkpoint, which also feeds the cache append (llm_op.py
+    contract).
     """
     spark = docs.sparkSession
     map_tmpl = (prompts or {}).get("map", MAP_PROMPT)

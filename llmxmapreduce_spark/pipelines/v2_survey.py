@@ -1436,10 +1436,10 @@ def run_v2_survey(surveys: DataFrame, client_factory,
             sm.materialized("outline")
         fused_df = cfg.fused_digest_feedback
         # Cached-digest ledger: with cfg.llm_cache_dir the digest stage
-        # runs EAGERLY at make_digests call time and pins two bounded
-        # frames (hash pre-pass + fresh results, llm_op.py contract);
-        # each cycle's digest localCheckpoint is their last reader, so
-        # they release right after it materializes.
+        # runs EAGERLY at make_digests call time and pins one bounded
+        # frame (its eager checkpoint, llm_op.py contract); each cycle's
+        # digest localCheckpoint is its last reader, so it releases
+        # right after that materializes.
         _c_snap = pinned_ids(surveys.sparkSession.sparkContext)
         if not fused_df:
             digests, _dead = make_digests(

@@ -22,7 +22,12 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def _default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run on
+    (the affinity mask, which honours taskset and container cpusets)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
 
 
 def get_spark(
@@ -31,7 +36,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(_DEFAULT_CPUS)
+    cpus = _default_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
     builder = (

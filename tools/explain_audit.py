@@ -577,10 +577,10 @@ def main() -> int:
         "```", *fmt(dc.mask_contamination(mc_corpus, mc_bench, n=6)),
         "```", "",
     ]
-    # Prompt-hash LLM cache (operators/llm_op.py, round 13): the warm-run
-    # plan is what matters at scale — the model-call mapInPandas must sit
-    # only under the miss anti-join, and the hit side must be a join of
-    # the materialized hash pre-pass against the parquet cache.
+    # Prompt-hash LLM cache (operators/llm_op.py): the warm-run plan is
+    # what matters at scale — one pass: the hash mapInPandas, a left join
+    # against the deduped parquet cache, a hash repartition with an
+    # explicit count, and the one replay-or-call mapInPandas.
     import shutil
     import tempfile
 
@@ -610,15 +610,19 @@ def main() -> int:
         out += [
             "## llm_stage_cached warm path (operators/llm_op.py)", "",
             "*Intent: prompt-hash result cache, captured WARM (cache fully "
-            "populated). The hash pre-pass is an eager localCheckpoint "
-            "(Scan ExistingRDD — upstream runs once, not once per join); "
-            "hits are an equi-join of that scan against the parquet cache "
-            "on the 16-byte hash (broadcast while small, shuffle-on-hash "
-            "at scale; reads >256 MB prune with a semi-join first); the "
-            "model-call MapInPandas appears ONLY under the left-anti miss "
-            "branch, which is empty here.  Fully-warm calls short-circuit "
-            "before the append job and fan-out join entirely — this "
-            "captured plan is the general mixed-run shape.*", "",
+            "populated). The returned frame is a projection of ONE eager "
+            "localCheckpoint, so the plan below is a Scan ExistingRDD. "
+            "That checkpoint was built in one pass: the hash "
+            "MapInPandas over the upstream (which runs once), a left "
+            "equi-join against the struct-max-deduped parquet cache on "
+            "the 16-byte hash (broadcast while small, shuffle-on-hash at "
+            "scale; reads >256 MB prune with a semi-join first), a "
+            "hash repartition to spark.sql.shuffle.partitions (explicit, "
+            "so AQE cannot fold the misses into one task), and one "
+            "MapInPandas that replays hits and calls the model once per "
+            "distinct missing hash.  The cache append reads the same "
+            "checkpoint and is skipped when nothing is fresh, as here.*",
+            "",
             "```", *fmt(warm), "```", "",
         ]
     finally:
