@@ -1567,18 +1567,9 @@ def q_v2_survey_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     )
     # block_count=1 = the shipped script's setting (pipeline_start.sh:13):
     # digests are regenerated against the refined outline before decode.
-    # shuffle_partitions sized to the survey count — the control plane moves
-    # KBs per survey, so wide shuffles are pure overhead at this scale.
-    # r13 optimization: all three LLM-batch-coalesced stages on — output-
-    # identical to the staged path (tests/test_v2_fused pins stage-level
-    # AND e2e byte equality; this query's golden hash re-verified), 3
-    # shuffles + 4 stage boundaries fewer per run.  q_v2_block_cycle
-    # keeps the staged path on the board deliberately.
     cfg = v2.V2Config(conv_layers=1, receptive_field=2, result_num=2,
                       top_k=2, refine_rounds=1, best_of=1, polish=False,
-                      block_count=1, shuffle_partitions=2,
-                      fused_digest_feedback=True, fused_init_outlines=True,
-                      fused_conv_refine=True)
+                      block_count=1)
     out = v2.run_v2_survey(surveys, MockSurveyClient, cfg)
     return out.select(
         "survey_id", "n_sections", "n_papers", "cite_ratio",
@@ -1616,116 +1607,13 @@ def q_v2_survey_refdefaults(spark: SparkSession, sf: str) -> DataFrame:
     )
     cfg = v2.V2Config(conv_layers=6, receptive_field=3, result_num=10,
                       top_k=6, refine_rounds=3, best_of=3, polish=False,
-                      block_count=1, digest_batch=1, llm_threads=8,
-                      shuffle_partitions=8,
-                      fused_digest_feedback=True, fused_init_outlines=True,
-                      fused_conv_refine=True)
+                      block_count=1, digest_batch=1, llm_threads=8)
     out = v2.run_v2_survey(surveys, MockSurveyClient, cfg)
     return out.select(
         "survey_id", "n_sections", "n_papers", "cite_ratio",
         F.length("content_md").alias("content_len"),
         "block_cycle_count",
     )
-
-
-def _v2_digest_feedback_prep(spark: SparkSession, sf: str):
-    """Shared fixture for the v2_digest_feedback_{unfused,fused} bench
-    pair: 4 surveys × 30 documents-derived papers in digest groups of 3
-    (40 groups → 120 L7 digest calls + 40 L9 feedback calls per run)
-    against a synthesized 4-section outline.  NO LLM work in the prep —
-    both variants pay the identical pure-Catalyst setup, so the timed
-    delta is exactly the staged-vs-fused engine overhead (5 stage
-    boundaries + 2 shuffles + 2 Arrow round-trips vs 1 shuffle + 1
-    Python pass)."""
-    from llmxmapreduce_spark.operators import grouping
-    from llmxmapreduce_spark.pipelines import v2_survey as v2
-
-    d = load_table(spark, sf, "documents").filter("doc_id < 120")
-    sid = F.concat(F.lit("survey"), (F.col("doc_id") % 4).cast("string"))
-    papers = d.select(
-        sid.alias("survey_id"),
-        F.concat(F.lit("Survey of "), sid).alias("survey_title"),
-        F.concat(F.lit("paper_"), F.col("doc_id").cast("string")).alias("bibkey"),
-        F.substring("text", 1, 2000).alias("content"),
-    )
-    grouped = grouping.hash_shuffled_batches(
-        papers, "bibkey", 3, partition_cols=["survey_id"],
-        group_col="digest_id")
-    sections = "\n".join(
-        f"## Topic {t}\nDigest Construction: construction {t}.\n"
-        f"Digest Analysis: analysis {t}."
-        for t in ("Alpha", "Beta", "Gamma", "Delta"))
-    outlines = papers.select("survey_id", "survey_title").distinct().select(
-        "survey_id", "survey_title",
-        F.concat(F.lit("# "), F.col("survey_title"), F.lit("\n" + sections))
-        .alias("outline_md"),
-    )
-    return grouped, outlines, v2.V2Config(digest_batch=3)
-
-
-def _v2_digest_feedback_shape(digests: DataFrame, sugg: DataFrame) -> DataFrame:
-    """Union both stage outputs into one frame so the noop sink
-    materializes the full pair; identical shape for both variants."""
-    return digests.select(
-        "survey_id", F.col("digest_id").cast("string").alias("k"),
-        F.col("pos").cast("string").alias("sub"),
-        F.col("description").alias("payload"),
-    ).unionByName(sugg.select(
-        "survey_id", F.col("sugg_id").alias("k"),
-        F.lit("s").alias("sub"), F.col("content").alias("payload"),
-    ))
-
-
-def q_v2_digest_feedback_unfused(spark: SparkSession, sf: str) -> DataFrame:
-    """BENCH pair (r12 verdict task #6) — the STAGED in-cycle chain:
-    make_digests (mapInPandas L7 over papers → J1 align → explode →
-    A3 merge shuffle) then feedback_suggestions (per-group concat
-    shuffle → broadcast join → mapInPandas L9).  Compare against
-    v2_digest_feedback_fused; outputs are equal by
-    tests/test_v2_fused.py."""
-    from llmxmapreduce_spark.llm.survey_mock import MockSurveyClient
-    from llmxmapreduce_spark.pipelines import v2_survey as v2
-
-    from llmxmapreduce_spark.retention import pinned_ids, release
-
-    grouped, outlines, cfg = _v2_digest_feedback_prep(spark, sf)
-    # Replicate the production staged cycle exactly (run_v2_survey
-    # checkpoints digests before feedback): without the eager boundary,
-    # the un-materialized digest subtree would appear in BOTH union
-    # branches below and the row would only price one L7 pass if
-    # Catalyst's exchange reuse happened to dedupe it (r13 review
-    # finding).  The digest checkpoint is released once the shaped
-    # output is materialized — the superseded-cut discipline — so bench
-    # loops don't accumulate per-run frames; only the (tiny) final
-    # frame stays pinned, same as the fused twin's fused frame.
-    sctx = spark.sparkContext
-    snap = pinned_ids(sctx)
-    digests, _dead = v2.make_digests(grouped, outlines, MockSurveyClient, cfg)
-    digests = digests.localCheckpoint(eager=True)
-    digest_ids = pinned_ids(sctx) - snap
-    sugg = v2.feedback_suggestions(digests, outlines, MockSurveyClient,
-                                   cfg=cfg)
-    out = _v2_digest_feedback_shape(digests, sugg) \
-        .localCheckpoint(eager=True)
-    release(sctx, digest_ids)
-    return out
-
-
-def q_v2_digest_feedback_fused(spark: SparkSession, sf: str) -> DataFrame:
-    """BENCH pair — the LLM-batch-coalesced chain (SURVEY §4):
-    digest_feedback_fused runs the same L7 calls, A3 merge, and L9 call
-    as ONE applyInPandas — one shuffle, one Python pass, zero
-    intermediate materialization.  This line keeps llm_threads=1, i.e.
-    the (survey_id, digest_id) keying, so the unfused-vs-fused delta
-    stays comparable across rounds; the r14 per-survey grouping is
-    priced where its threads knob is set (refdefaults/fullprompts)."""
-    from llmxmapreduce_spark.llm.survey_mock import MockSurveyClient
-    from llmxmapreduce_spark.pipelines import v2_survey as v2
-
-    grouped, outlines, cfg = _v2_digest_feedback_prep(spark, sf)
-    digests, sugg = v2.digest_feedback_fused(grouped, outlines,
-                                             MockSurveyClient, cfg)
-    return _v2_digest_feedback_shape(digests, sugg)
 
 
 def q_v2_survey_fullprompts(spark: SparkSession, sf: str) -> DataFrame:
@@ -1757,9 +1645,7 @@ def q_v2_survey_fullprompts(spark: SparkSession, sf: str) -> DataFrame:
     cfg = v2.V2Config(conv_layers=6, receptive_field=3, result_num=10,
                       top_k=6, refine_rounds=3, best_of=3, polish=False,
                       block_count=1, digest_batch=1, llm_threads=8,
-                      shuffle_partitions=8, full_prompts=True,
-                      fused_digest_feedback=True, fused_init_outlines=True,
-                      fused_conv_refine=True)
+                      full_prompts=True)
     out = v2.run_v2_survey(surveys, MockSurveyClient, cfg)
     return out.select(
         "survey_id", "n_sections", "n_papers", "cite_ratio",
@@ -2267,7 +2153,7 @@ def q_v2_block_cycle(spark: SparkSession, sf: str) -> DataFrame:
     )
     cfg = v2.V2Config(conv_layers=1, receptive_field=2, result_num=2,
                       top_k=2, refine_rounds=1, best_of=1, polish=False,
-                      block_count=1, shuffle_partitions=2)
+                      block_count=1)
     out = v2.run_v2_survey(surveys, RestructuringSurveyClient, cfg)
     sec = RestructuringSurveyClient.SECTION
     return out.select(

@@ -148,8 +148,6 @@ HEADLINE = [
     "pattern_hits",
     "p17_html_extract",
     "html_extract_justext",
-    "v2_digest_feedback_unfused",
-    "v2_digest_feedback_fused",
     "langid_predict_fast",
     "qdigest_values_fast",
     # r14 additions (never remove/rename existing entries)
@@ -168,9 +166,6 @@ ORACLE_TWIN = {
     "minhash_lsh_neardup",      # production: minhash_neardup_estimate
     "substring_dedup",          # production: substring_dedup_fast
     "split_scrub",              # production: split_scrub_fast
-    # comparison baseline, not a deployment path (r13 LLM-batch-
-    # coalescing): production is v2_digest_feedback_fused
-    "v2_digest_feedback_unfused",
 }
 
 # The original five-member twin set (pre-r13): "oracle_twin5_sec" in the
@@ -248,11 +243,6 @@ BENCH_ONLY = {
     # r11: production langid scoring (no-shuffle mapInPandas integer
     # path; the board's langid_predict is its oracle-twin workload)
     "langid_predict_fast": entrymod.q_langid_predict_fast,
-    # r13 LLM-batch-coalescing pair (SURVEY §4): staged in-cycle
-    # digest->feedback chain vs the fused one-stage path; outputs equal
-    # by tests/test_v2_fused.py, delta = pure engine overhead
-    "v2_digest_feedback_unfused": entrymod.q_v2_digest_feedback_unfused,
-    "v2_digest_feedback_fused": entrymod.q_v2_digest_feedback_fused,
     # r11: production q-digest build (single-pass local compression of
     # the universe-bounded leaf table; board entry = Catalyst twin)
     "qdigest_values_fast": entrymod.q_qdigest_values_fast,

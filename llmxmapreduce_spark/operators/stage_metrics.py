@@ -50,6 +50,7 @@ class StageMetrics:
         self._spark = spark
         self._order: list[str] = []
         self._obs: dict[str, Observation] = {}
+        self._n_obs = 0          # observation names must stay unique
         self._llm: dict[str, LLMMetrics] = {}
         self._llm_base: dict[str, dict] = {}
         self._wall: dict[str, float] = {}
@@ -64,7 +65,8 @@ class StageMetrics:
         """Attach a rows-out observation to ``df`` (no extra job; the
         metric materializes with whatever action consumes the plan)."""
         self._ensure(name)
-        obs = Observation(f"stage:{name}:{len(self._obs)}")
+        obs = Observation(f"stage:{name}:{self._n_obs}")
+        self._n_obs += 1
         self._obs[name] = obs
         self._t0.setdefault(name, time.time())
         return df.observe(obs, F.count(F.lit(1)).alias("rows_out"))

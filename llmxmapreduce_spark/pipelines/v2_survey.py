@@ -14,17 +14,20 @@ DAG becomes a chain of Spark jobs with a bounded block-cycle loop
     └─ decode: L14 orchestra leaves → A6 bottom-up assembly →
           L15 polish → P12/J3 renumber → A7 → S5-shape            (decode)
 
-Fused control plane: the convolution block, self-refine, and content
-assembly are per-survey iterative LLM algorithms (the reference runs each
-``forward()`` per survey object).  They are expressed as ONE
-``applyInPandas`` stage per survey each — surveys are the scale axis
+Each stage has exactly one implementation.  The row-parallel LLM fan-outs —
+L5/L6 init outlines, L7 per-paper digests, L9 feedback, L14 orchestra
+leaves — are ``llm_stage`` (``mapInPandas``) operators.  The per-survey
+iterative algorithms (the reference runs each ``forward()`` per survey
+object) are ONE ``applyInPandas`` stage per survey each: :func:`conv_refine`
+runs the convolution block and self-refine back to back, and
+:func:`decode_survey` assembles bottom-up.  Surveys are the scale axis
 (thousands of independent groups on a cluster), per-survey state is tiny
 (≤ result_num outlines), and intra-survey LLM calls can fan out over
-``V2Config.llm_threads`` (the reference's per-node worker pool).  The
-per-paper digest stage and per-section orchestra stage stay row-parallel
-``mapInPandas`` — those are the big fan-outs.  This removes the per-layer /
-per-depth global job barriers the staged form had: the whole refine loop is
-one shuffle, and assembly is one shuffle, regardless of tree depth.
+``V2Config.llm_threads`` (the reference's per-node worker pool).  Neither
+per-survey stage has per-layer or per-depth job barriers: a block cycle's
+conv→refine chain is one shuffle, and assembly is one shuffle, regardless
+of conv depth or tree depth.  :func:`run_v2_survey` never writes session
+conf: shuffles are sized by the session's own settings.
 
 Determinism: every shuffle the reference does with ``random.shuffle`` is a
 keyed-hash order here; T5 sampling uses a per-survey seeded RandomState; the
@@ -67,46 +70,24 @@ class V2Config:
     polish: bool = True
     figures: bool = False        # L16/J5 chart stage (chart_node)
     group_mode: str = "random"   # C7: 'random' (hash) | 'llm' (L4 + repair)
-    llm_threads: int = 1         # intra-survey LLM fan-out inside the fused
-                                 # stages (reference worker pool, node.py:48)
+    llm_threads: int = 1         # intra-survey LLM fan-out inside the
+                                 # per-survey conv_refine and decode
+                                 # assembly stages (reference worker pool,
+                                 # node.py:48); never changes the output
     full_prompts: bool = False   # use the reference's verbatim prompt texts
                                  # (prompts/prompts_{lang}.py) instead of the
                                  # condensed deterministic test templates
     prompt_lang: str = "en"      # reference PROMPT_LANGUAGE: 'en' | 'zh'
-    shuffle_partitions: int | None = None
-    # ^ control-plane shuffle sizing: the refine/assembly stages move a few
-    # KB per survey, so shuffles should be sized to the survey count, not the
-    # session default.  None = leave the session conf alone.  NOTE (r13
-    # ADVICE): setting this ALSO disables spark.sql.adaptive.enabled
-    # SESSION-WIDE for the duration of run_v2_survey (restored on exit) —
-    # AQE re-planning is pure driver latency on KB-sized control-plane
-    # shuffles.  The pipeline already assumes a single driver thread; any
-    # concurrent query sharing the session during the run loses AQE too.
-    fused_digest_feedback: bool = False
-    # ^ run each block cycle's L7 digest → A3 merge → L9 feedback chain as
-    # ONE applyInPandas stage (digest_feedback_fused — the SURVEY §4 LLM-
-    # batch-coalescing strategy).  Output-identical to the staged path
-    # (tests/test_v2_fused.py asserts exact equality); priced by the
-    # v2_digest_feedback_{unfused,fused} bench rows.  Default off so the
-    # golden-transcript hashes keep gating the staged operators too.
-    fused_init_outlines: bool = False
-    # ^ same strategy for the L5 single → L6 concat init chain
-    # (init_outlines_fused); output-identical (tests/test_v2_fused.py).
-    fused_conv_refine: bool = False
-    # ^ same strategy for each cycle's convolution-block → self-refine
-    # chain (conv_refine_fused): one survey-keyed exchange per cycle
-    # instead of two — both stages already ran the SAME shared per-group
-    # bodies, so fusion is byte-identical (tests/test_v2_fused.py).
     llm_cache_dir: str | None = None
     # ^ prompt-hash result cache root (llm_op.llm_stage_cached) for the
     # per-paper digest stage — the pipeline's dominant fan-out.  A re-run
     # over unchanged papers/outlines replays digests from
     # ``{dir}/digest`` instead of re-calling the model; cycle-2 prompts
     # embed the refined outline, so they miss (and populate) naturally.
-    # run_v2_survey tracks the cached stage's two eager frames per call
-    # and releases them once the cycle's digest checkpoint supersedes
-    # them.  Default off; byte-identity with the uncached path is gated
-    # by tests/test_v2_cache.py.
+    # run_v2_survey tracks the cached stage's one eager frame per call
+    # and releases it once the cycle's digest checkpoint supersedes it.
+    # Default off; byte-identity with the uncached path is gated by
+    # tests/test_v2_cache.py.
 
 
 _STR = T.StringType()
@@ -171,8 +152,8 @@ def _parse_score(reply: str) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# prompt templates — shared by the row-parallel llm_stage operators and the
-# fused per-survey stages, so both paths drive the mock identically.
+# prompt templates for the row-parallel llm_stage operators and the
+# per-survey applyInPandas stages.
 #
 # Two prompt modes (SURVEY.md §2 prompt parity):
 # - condensed (default): the short deterministic templates below — the
@@ -289,9 +270,9 @@ def _modify_eval_py(client, retry: RetryPolicy, title: str, outline_md: str,
                     sugg_id: str, content: str,
                     ps: dict[str, str] | None = None) -> dict | None:
     """One L11 modify → L12 eval chain for a candidate suggestion; None on
-    any LLM failure or parse error (the candidate drops, matching the staged
-    ``filter(llm_ok)`` semantics).  Shared by the conv block and
-    self-refine fused stages."""
+    any LLM failure or parse error (the candidate drops, matching
+    ``llm_stage``'s ``filter(llm_ok)`` semantics).  Shared by the conv block
+    and self-refine bodies."""
     reply = _call(client, _modify_prompt(title, outline_md, content, ps), retry)
     if reply is None:
         return None
@@ -312,8 +293,9 @@ def _modify_eval_py(client, retry: RetryPolicy, title: str, outline_md: str,
 
 
 def _pmap(fn, items, threads: int):
-    """Order-preserving map with bounded intra-survey concurrency (the fused
-    analog of the reference's per-node worker pool, async_d node.py:48).
+    """Order-preserving map with bounded intra-survey concurrency (the
+    per-survey stages' analog of the reference's per-node worker pool,
+    async_d node.py:48).
 
     With ``threads > 1`` the ONE client instance of the enclosing stage is
     called concurrently — the same contract as ``LLMClient.complete_batch``
@@ -385,8 +367,7 @@ _OUTLINE_CONCAT_SEPARATOR = "\n--------------------------\n"
 
 def _init_outline_prompt(ps: dict | None, survey_title: str,
                          abstracts: str) -> str:
-    """L5 per-batch outline prompt — shared by the staged
-    :func:`init_outlines` and :func:`init_outlines_fused`."""
+    """L5 per-batch outline prompt."""
     if ps:
         return ps["INIT_OUTLINE_PROMPT"].format(
             title=survey_title, abstracts=abstracts)
@@ -400,7 +381,7 @@ def _init_outline_prompt(ps: dict | None, survey_title: str,
 
 def _concat_outline_prompt(ps: dict | None, survey_title: str,
                            outlines: str) -> str:
-    """L6 per-survey concat prompt — shared by both init paths."""
+    """L6 per-survey concat prompt."""
     if ps:
         return ps["CONCAT_OUTLINE_PROMPT"].format(
             title=survey_title, outlines=outlines)
@@ -411,10 +392,12 @@ def _concat_outline_prompt(ps: dict | None, survey_title: str,
     )
 
 
-def _init_per_batch(papers_grouped: DataFrame, cfg: V2Config) -> DataFrame:
-    """C6 skeleton batching + per-batch abstract packing (pure Catalyst;
-    shared by both init paths): → (survey_id, survey_title, batch_id,
-    abstracts)."""
+def init_outlines(papers_grouped: DataFrame, client_factory, cfg: V2Config,
+                  retry: RetryPolicy | None = None,
+                  metrics=None) -> DataFrame:
+    """C6 skeleton batching + per-batch abstract packing (pure Catalyst),
+    L5 per-batch outlines, then the L6 per-survey concat.
+    → (survey_id, survey_title, outline_md)."""
     batches = grouping.hash_shuffled_batches(
         papers_grouped.select("survey_id", "digest_id").distinct(),
         "digest_id", cfg.skeleton_batch, seed=cfg.seed + 1,
@@ -425,7 +408,7 @@ def _init_per_batch(papers_grouped: DataFrame, cfg: V2Config) -> DataFrame:
         F.lit("Bibkey: '"), F.col("bibkey"), F.lit("':\nAbstract:\n"),
         F.substring(F.col("abstract"), 1, 1500),
     )
-    return (
+    per_batch = (
         joined.withColumn("__a", F.struct(F.col("bibkey").alias("k"),
                                           abstract_fmt.alias("v")))
         .groupBy("survey_id", "survey_title", "batch_id")
@@ -434,13 +417,6 @@ def _init_per_batch(papers_grouped: DataFrame, cfg: V2Config) -> DataFrame:
             F.transform(F.array_sort(F.collect_list("__a")), lambda s: s["v"]),
         ).alias("abstracts"))
     )
-
-
-def init_outlines(papers_grouped: DataFrame, client_factory, cfg: V2Config,
-                  retry: RetryPolicy | None = None,
-                  metrics=None) -> DataFrame:
-    """→ (survey_id, survey_title, outline_md)."""
-    per_batch = _init_per_batch(papers_grouped, cfg)
     ps = _prompt_set(cfg)
     single = llm_stage(
         per_batch,
@@ -479,79 +455,6 @@ def init_outlines(papers_grouped: DataFrame, client_factory, cfg: V2Config,
                               F.col("md").alias("outline_md"))
 
 
-_INIT_FUSED_SCHEMA = T.StructType([
-    T.StructField("survey_id", _STR, False),
-    T.StructField("survey_title", _STR, True),
-    T.StructField("outline_md", _STR, True),
-])
-
-
-def init_outlines_fused(papers_grouped: DataFrame, client_factory,
-                        cfg: V2Config, retry: RetryPolicy | None = None,
-                        metrics=None) -> DataFrame:
-    """The L5 single → L6 concat chain coalesced into ONE
-    ``applyInPandas`` per survey (the second instance of the SURVEY §4
-    LLM-batch-coalescing strategy; the first is
-    :func:`digest_feedback_fused`).  Staged, the chain costs two
-    mapInPandas stages with a per-survey aggregation (shuffle) between
-    them; fused it is the per-batch Catalyst packing (shared code) then
-    one shuffle and one Python pass running every batch's L5 call plus
-    the survey's L6 concat with a single client.  Prompts come from the
-    same builders as the staged path, so outputs are byte-identical
-    (tests/test_v2_fused.py).  Opt-in via
-    ``V2Config(fused_init_outlines=True)``."""
-    if retry is None:
-        retry = getattr(client_factory(), "retry_policy", None) or RetryPolicy()
-    ps = _prompt_set(cfg)
-    per_batch = _init_per_batch(papers_grouped, cfg)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        client = client_factory()
-        title = pdf["survey_title"].iloc[0]
-        survey_id = pdf["survey_id"].iloc[0]
-
-        def _count(prompt, reply):
-            if metrics is not None:
-                metrics.calls.add(1)
-                metrics.prompt_chars.add(len(prompt))
-                if reply is None:
-                    metrics.failures.add(1)
-                else:
-                    metrics.reply_chars.add(len(reply))
-
-        mds: list[tuple[int, str]] = []
-        for row in pdf.sort_values("batch_id").to_dict("records"):
-            prompt = _init_outline_prompt(ps, title, row["abstracts"])
-            reply, _err, _att = call_with_retry(client, prompt, retry)
-            _count(prompt, reply)
-            if reply is None:
-                continue
-            try:
-                mds.append((int(row["batch_id"]), _parse_fenced(reply)["md"]))
-            except Exception:   # parse error == staged llm_ok=false drop
-                continue
-        cols = [f.name for f in _INIT_FUSED_SCHEMA.fields]
-        if not mds:             # staged: no llm_ok batches → survey absent
-            return pd.DataFrame([], columns=cols)
-        outlines = _OUTLINE_CONCAT_SEPARATOR.join(
-            f"```markdown\n{md}\n```" for _b, md in sorted(mds))
-        prompt = _concat_outline_prompt(ps, title, outlines)
-        reply, _err, _att = call_with_retry(client, prompt, retry)
-        _count(prompt, reply)
-        if reply is None:
-            return pd.DataFrame([], columns=cols)
-        try:
-            out_md = _parse_fenced(reply)["md"]
-        except Exception:
-            return pd.DataFrame([], columns=cols)
-        return pd.DataFrame(
-            [{"survey_id": survey_id, "survey_title": title,
-              "outline_md": out_md}], columns=cols)
-
-    return per_batch.groupBy("survey_id", "survey_title") \
-        .applyInPandas(run, schema=_INIT_FUSED_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # digests: L7 per paper → J1 align → A3 merge
 # ---------------------------------------------------------------------------
@@ -559,10 +462,7 @@ def init_outlines_fused(papers_grouped: DataFrame, client_factory,
 
 def _digest_prompt(ps: dict | None, survey_title: str, bibkey: str,
                    content: str, outline_md: str, placeholder_md: str) -> str:
-    """L7 per-paper digest prompt (digest_module.py:99-105) — ONE builder
-    shared by the row-parallel :func:`make_digests` stage and the fused
-    :func:`digest_feedback_fused` stage so the two paths are
-    byte-identical by construction."""
+    """L7 per-paper digest prompt (digest_module.py:99-105)."""
     if ps:
         return ps["SINGLE_DIGEST_PROMPT"].format(
             survey_title=survey_title, paper_bibkey=bibkey,
@@ -581,8 +481,7 @@ def _digest_prompt(ps: dict | None, survey_title: str, bibkey: str,
 
 def _feedback_prompt(ps: dict | None, survey_title: str, outline_md: str,
                      digest_content: str) -> str:
-    """L9 per-digest-group feedback prompt (neurons.py:55-67) — shared by
-    :func:`feedback_suggestions` and :func:`digest_feedback_fused`."""
+    """L9 per-digest-group feedback prompt (neurons.py:55-67)."""
     if ps:
         return ps["DIGEST_BASE_PROMPT"].format(
             title=survey_title, outline=outline_md, digests=digest_content)
@@ -664,7 +563,7 @@ def make_digests(papers_grouped: DataFrame, outlines: DataFrame, client_factory,
 
 
 # ---------------------------------------------------------------------------
-# hidden block: L9 feedback → fused conv block → fused self-refine
+# hidden block: L9 feedback → conv block + self-refine (one stage)
 # ---------------------------------------------------------------------------
 
 
@@ -700,216 +599,6 @@ def feedback_suggestions(digests: DataFrame, outlines: DataFrame, client_factory
     )
 
 
-# ---------------------------------------------------------------------------
-# LLM-batch-coalescing (SURVEY §4 optional optimization, r12 verdict task #6):
-# the in-cycle L7 digest → A3 merge → L9 feedback chain as ONE stage
-# ---------------------------------------------------------------------------
-
-_FUSED_DF_SCHEMA = T.StructType([
-    T.StructField("survey_id", _STR, False),
-    T.StructField("digest_id", T.IntegerType(), False),
-    T.StructField("row_type", _STR, False),          # 'digest' | 'suggestion'
-    T.StructField("pos", T.IntegerType(), True),
-    T.StructField("description", _STR, True),
-    T.StructField("all_bibkeys", T.ArrayType(_STR), True),
-    T.StructField("content", _STR, True),
-])
-
-
-def digest_feedback_fused(
-    papers_grouped: DataFrame,
-    outlines: DataFrame,
-    client_factory,
-    cfg: V2Config,
-    retry: RetryPolicy | None = None,
-    metrics=None,
-    feedback_metrics=None,
-) -> tuple[DataFrame, DataFrame]:
-    """The block cycle's digest→feedback chain coalesced into ONE
-    ``applyInPandas`` over PER-SURVEY groups — the SURVEY §4 "coalesce
-    adjacent LLM mapInPandas ops sharing a model" strategy, taken one
-    level further in r14 (verdict task #7): when ``cfg.llm_threads > 1``
-    the stage groups by ``survey_id`` alone (was: (survey_id,
-    digest_id)), cutting it from surveys×digest-groups Arrow groups to
-    one per survey — one client construction and one outline parse per
-    SURVEY instead of per digest group — while ``llm_threads`` fans the
-    independent digest groups out inside each survey (the reference's
-    own per-node worker pool), so the intra-survey parallelism the finer
-    grouping provided is preserved.  At ``llm_threads=1`` the per-group
-    keying is KEPT: per-survey grouping would run every digest group of
-    a survey serially in one task, a measured regression on the
-    single-survey v3 host (bench run: v3_host_e2e 8.7 → 12.2 s before
-    this guard).  LLM call count, prompts and replies are UNCHANGED
-    either way (per-group bodies run verbatim; metric adds are applied
-    outside the thread pool so accumulator counts stay exact), pinned by
-    tests/test_v2_fused.py::test_fused_per_survey_threading_identical,
-    which compares the two groupings directly.
-
-    Unfused, each cycle costs: a mapInPandas digest stage over papers, a
-    node explode + merge aggregation (shuffle), a per-group concat
-    aggregation (second shuffle on the same key), a broadcast join back
-    to outlines, and a second mapInPandas feedback stage — five stage
-    boundaries and two Arrow round-trips for rows that were already
-    co-grouped by (survey_id, digest_id).  Fused, the chain is one
-    shuffle (the groupBy) and one Python pass: per group, every paper's
-    L7 digest call, the J1 align gate (align_reason_py), the A3 merge
-    (the documented deterministic contract of
-    digest_ops.merge_digest_descriptions, replayed in Python), and the
-    L9 feedback call run against the group's merged digest — one client,
-    zero intermediate materialization.  Both LLM prompts come from the
-    SAME builders as the staged path (_digest_prompt/_feedback_prompt),
-    so the two paths are byte-identical by construction;
-    tests/test_v2_fused.py asserts exact output equality and bench rows
-    v2_digest_feedback_{unfused,fused} price the pair.
-
-    Returns ``(digests, suggestions)`` with exactly the staged schemas
-    (make_digests' merged digests; feedback_suggestions' output).  Both
-    are views over one eagerly-checkpointed fused frame, so the LLM
-    calls run once no matter how many times either side is consumed.
-    Dead letters are dropped (matching the run_v2_survey loop, which
-    discards make_digests' dead-letter frame).
-    """
-    if retry is None:
-        retry = getattr(client_factory(), "retry_policy", None) or RetryPolicy()
-    ps = _prompt_set(cfg)
-    o = outlines.select("survey_id", "survey_title", "outline_md")
-    joined = papers_grouped.drop("survey_title").join(F.broadcast(o), "survey_id")
-    joined = joined.withColumn("digest_id", F.col("digest_id").cast("int"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        client = client_factory()      # ONE per survey (r14; was per group)
-        survey_id = pdf["survey_id"].iloc[0]
-        title = pdf["survey_title"].iloc[0]
-        outline_md = pdf["outline_md"].iloc[0]
-        # outline parse/serialize once per survey (r14; was per group —
-        # it depends only on (title, outline_md))
-        placeholder_md = skeleton.serialize_outline_py(
-            skeleton.parse_outline_py(title, outline_md),
-            with_digest_placeholder=True)
-
-        def _count(prompt, reply, m):
-            if m is not None:
-                m.calls.add(1)
-                m.prompt_chars.add(len(prompt))
-                if reply is None:
-                    m.failures.add(1)
-                else:
-                    m.reply_chars.add(len(reply))
-
-        def one_group(g: pd.DataFrame) -> tuple[list[dict], list[tuple]]:
-            """The verbatim per-(survey, digest)-group body.  Returns
-            (output rows, deferred metric events) — metric adds happen
-            OUTSIDE the thread pool so accumulator counts stay exact."""
-            digest_id = int(g["digest_id"].iloc[0])
-            events: list[tuple] = []
-            # L7 per paper + J1 align gate; order within the group is
-            # irrelevant to the output (per-paper calls are independent)
-            good: list[tuple[str, list[dict]]] = []   # (bibkey, nodes)
-            for row in g.sort_values("bibkey").to_dict("records"):
-                prompt = _digest_prompt(ps, title, row["bibkey"],
-                                        row["content"], outline_md,
-                                        placeholder_md)
-                reply, _err, _att = call_with_retry(client, prompt, retry)
-                events.append((metrics, prompt, reply))
-                if reply is None:
-                    continue
-                try:
-                    md = _parse_fenced_with_suggestion(reply)["md"]
-                except Exception:   # any parse error == staged llm_ok=false
-                    continue
-                if md is None or skeleton.align_reason_py(title, outline_md,
-                                                          md):
-                    continue
-                good.append((row["bibkey"],
-                             skeleton.parse_outline_py(title, md)))
-
-            rows: list[dict] = []
-            if good:
-                # A3 merge — the deterministic contract of
-                # digest_ops.merge_digest_descriptions with
-                # bibkeys=[bibkey]: per pos, non-empty entries sorted by
-                # (bibkey, entry) joined on the 20-dash separator;
-                # all_bibkeys = sorted distinct over ALL papers
-                # contributing rows at that pos
-                by_pos: dict[int, list[tuple[str, str]]] = {}
-                keys_at: dict[int, set] = {}
-                for bibkey, nodes in good:
-                    for n in nodes:
-                        keys_at.setdefault(n["pos"], set()).add(bibkey)
-                        desc = n["description"]
-                        if desc:
-                            by_pos.setdefault(n["pos"], []).append(
-                                (bibkey,
-                                 f"Paper bibkey: [{bibkey}]\nDigest: \n{desc}"))
-                        else:
-                            by_pos.setdefault(n["pos"], [])
-                merged: list[tuple[int, str]] = []
-                for pos in sorted(by_pos):
-                    desc = digest_ops.MERGE_SEPARATOR.join(
-                        v for _k, v in sorted(by_pos[pos]))
-                    merged.append((pos, desc))
-                    rows.append({
-                        "survey_id": survey_id, "digest_id": digest_id,
-                        "row_type": "digest", "pos": pos, "description": desc,
-                        "all_bibkeys": sorted(keys_at[pos]), "content": None,
-                    })
-                # L9 feedback over the merged group (feedback_suggestions'
-                # digest_content: descriptions sorted by pos, '\n'-joined)
-                digest_content = "\n".join(d for _p, d in merged)
-                prompt = _feedback_prompt(ps, title, outline_md,
-                                          digest_content)
-                reply, _err, _att = call_with_retry(client, prompt, retry)
-                events.append((feedback_metrics, prompt, reply))
-                if reply is not None:
-                    try:  # any parse error == staged filter("llm_ok") drop
-                        sugg = _parse_suggestion(reply)["suggestion"]
-                        rows.append({
-                            "survey_id": survey_id, "digest_id": digest_id,
-                            "row_type": "suggestion", "pos": None,
-                            "description": None, "all_bibkeys": None,
-                            "content": sugg,
-                        })
-                    except Exception:
-                        pass
-            return rows, events
-
-        # independent digest groups fan out on the reference's worker
-        # pool (cfg.llm_threads); the deterministic per-group bodies make
-        # the result order-independent, and sort=True keeps the emitted
-        # row order itself deterministic.  Under the (survey_id,
-        # digest_id) keying (llm_threads=1) the pdf IS one digest group —
-        # skip the pandas groupby machinery entirely (it measured ~1 ms
-        # per Arrow group, a real tax at 256 groups).
-        if pdf["digest_id"].nunique() == 1:
-            results = [one_group(pdf)]
-        else:
-            groups = [g for _, g in pdf.groupby("digest_id", sort=True)]
-            results = _pmap(one_group, groups, cfg.llm_threads)
-        rows: list[dict] = []
-        for g_rows, g_events in results:
-            rows.extend(g_rows)
-            for m, prompt, reply in g_events:
-                _count(prompt, reply, m)
-        return pd.DataFrame(
-            rows, columns=[f.name for f in _FUSED_DF_SCHEMA.fields])
-
-    group_keys = (["survey_id"] if cfg.llm_threads > 1
-                  else ["survey_id", "digest_id"])
-    fused = (
-        joined.groupBy(*group_keys)
-        .applyInPandas(run, schema=_FUSED_DF_SCHEMA)
-        .localCheckpoint(eager=True)    # LLM calls run ONCE for both views
-    )
-    digests = fused.filter("row_type = 'digest'").select(
-        "survey_id", "digest_id", "pos", "description", "all_bibkeys")
-    suggestions = fused.filter("row_type = 'suggestion'").select(
-        "survey_id",
-        F.concat(F.lit("s"), F.col("digest_id").cast("string")).alias("sugg_id"),
-        F.col("content"),
-    )
-    return digests, suggestions
-
-
 # The score bookkeeping crosses the applyInPandas boundary as JSON strings:
 # pyarrow's arrow_to_pandas segfaults on null deeply-nested list columns in
 # this environment, and the lists are tiny survey metadata — they become real
@@ -937,50 +626,20 @@ def _dumps(val: list) -> str:
     return json.dumps(val)
 
 
-def convolution_block(outlines: DataFrame, suggestions: DataFrame, client_factory,
-                      cfg: V2Config, retry: RetryPolicy | None = None) -> DataFrame:
-    """convolution_module.py:38-127 as ONE ``applyInPandas`` stage: per
-    survey, the initial single-suggestion pass then ``conv_layers`` rounds of
-    T5 sample → L10 kernel → L11 modify → L12 eval, appending this cycle's
-    per-layer average scores to ``block_avg_score``
-    (convolution_module.py:45-122).  Layer capacity follows the reference's
-    two modes (:80-97): while candidates / receptive_field still exceeds
-    ``result_num``, POOLING — the new results replace the pool outright, so
-    the candidate count contracts by the receptive field each layer;
-    otherwise union + T1 top-k prune.  Documented divergence: the final
-    best is argmax over the prune-accumulated state, which (unlike the
-    reference's last-layer-only pool) can never lose an earlier layer's
-    best outline.  → best (survey_id, survey_title, outline_md, eval_score)
-    per survey."""
-    retry = retry or RetryPolicy()
-    cands = _conv_cands(outlines, suggestions)
-    ps = _prompt_set(cfg)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        client = client_factory()
-        out = _conv_group_py(client, retry, cfg, ps, pdf)
-        if out is None:
-            return pd.DataFrame(columns=[f.name for f in _CONV_SCHEMA.fields])
-        return pd.DataFrame([out])
-
-    return cands.groupBy("survey_id").applyInPandas(run, _CONV_SCHEMA)
-
-
-def _conv_cands(outlines: DataFrame, suggestions: DataFrame) -> DataFrame:
-    return suggestions.join(
-        F.broadcast(outlines.select("survey_id", "survey_title", "outline_md",
-                                    "block_avg_score", "self_refine_score",
-                                    "conv_pool_sizes")),
-        "survey_id",
-    )
-
-
 def _conv_group_py(client, retry, cfg: V2Config, ps, pdf: pd.DataFrame) -> dict | None:
-    """Per-survey convolution-block body, shared VERBATIM by the staged
-    stage (:func:`convolution_block`) and the fused conv+refine stage
-    (:func:`conv_refine_fused`) — one definition is what makes the two
-    paths byte-identical by construction.  Returns the best-outline row
-    dict (``_CONV_SCHEMA`` fields) or ``None`` when every chain died."""
+    """Per-survey convolution block (convolution_module.py:38-127): the
+    initial single-suggestion pass, then ``conv_layers`` rounds of T5
+    sample → L10 kernel → L11 modify → L12 eval, appending this cycle's
+    per-layer average scores to ``block_avg_score``
+    (convolution_module.py:45-122).  Layer capacity follows the
+    reference's two modes (:80-97): while candidates / receptive_field
+    still exceeds ``result_num``, POOLING — the new results replace the
+    pool outright, so the candidate count contracts by the receptive field
+    each layer; otherwise union + T1 top-k prune.  Documented divergence:
+    the final best is argmax over the prune-accumulated state, which
+    (unlike the reference's last-layer-only pool) can never lose an
+    earlier layer's best outline.  Returns the best-outline row dict
+    (``_CONV_SCHEMA`` fields) or ``None`` when every chain died."""
     conv_layers, receptive_field = cfg.conv_layers, cfg.receptive_field
     result_num, top_k, seed, threads = (cfg.result_num, cfg.top_k, cfg.seed,
                                         cfg.llm_threads)
@@ -1060,36 +719,20 @@ def _conv_group_py(client, retry, cfg: V2Config, ps, pdf: pd.DataFrame) -> dict 
     }
 
 
-def self_refine(best: DataFrame, client_factory, cfg: V2Config,
-                retry: RetryPolicy | None = None) -> DataFrame:
-    """refine_module.py:25-66 as one ``applyInPandas`` stage: per survey,
-    ``refine_rounds`` rounds of best-of L13→L11→L12 chains, keeping the max
-    (ties prefer the kept state, matching the staged 'keep' < 'r…c…' key
-    order), appending this cycle's round×chain scores to
-    ``self_refine_score`` (refine_module.py:52-63).
+def _refine_group_py(client, retry, cfg: V2Config, ps, row) -> dict:
+    """Per-survey self-refine (refine_module.py:25-66): ``refine_rounds``
+    rounds of best-of L13→L11→L12 chains, keeping the max (ties prefer the
+    kept state: 'keep' sorts before 'r…c…'), appending this cycle's
+    round×chain scores to ``self_refine_score`` (refine_module.py:52-63).
+    ``row`` is the conv body's best-outline dict (``_CONV_SCHEMA`` fields).
 
-    Documented divergence (mirrors :func:`convolution_block`'s): the
+    Documented divergence (mirrors :func:`_conv_group_py`'s): the
     reference unconditionally adopts the best NEW outline each round even
     when it scores below the incumbent (refine_module.py:49-52); here the
-    incumbent competes in the pool, so a refine round can never regress the
-    running best.  Monotone state is deliberate — at cluster scale a single
-    low-scoring round must not destroy a survey's accumulated outline."""
-    retry = retry or RetryPolicy()
-    ps = _prompt_set(cfg)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        client = client_factory()
-        return pd.DataFrame([_refine_group_py(client, retry, cfg, ps,
-                                              pdf.iloc[0])])
-
-    return best.groupBy("survey_id").applyInPandas(run, _CONV_SCHEMA)
-
-
-def _refine_group_py(client, retry, cfg: V2Config, ps, row) -> dict:
-    """Per-survey self-refine body, shared VERBATIM by the staged stage
-    (:func:`self_refine`) and the fused conv+refine stage
-    (:func:`conv_refine_fused`).  ``row`` is any mapping carrying the
-    ``_CONV_SCHEMA`` fields (a pandas row or the conv body's dict)."""
+    incumbent competes in the pool, so a refine round can never regress
+    the running best.  Monotone state is deliberate — at cluster scale a
+    single low-scoring round must not destroy a survey's accumulated
+    outline."""
     refine_rounds, best_of, threads = cfg.refine_rounds, cfg.best_of, cfg.llm_threads
     sid, title = row["survey_id"], row["survey_title"]
     state_md, state_score = row["outline_md"], float(row["eval_score"])
@@ -1135,25 +778,22 @@ def _refine_group_py(client, retry, cfg: V2Config, ps, row) -> dict:
     }
 
 
-def conv_refine_fused(outlines: DataFrame, suggestions: DataFrame,
-                      client_factory, cfg: V2Config,
-                      retry: RetryPolicy | None = None) -> DataFrame:
-    """The block cycle's convolution→self-refine chain coalesced into ONE
-    ``applyInPandas`` over survey groups (the SURVEY §4 LLM-coalescing
-    strategy, same shape as :func:`digest_feedback_fused`).
-
-    Staged, the chain is two FlatMapGroupsInPandas stages on the SAME
-    ``survey_id`` key — convolution emits exactly one row per survey, yet
-    Catalyst cannot know the output keying matches the input's, so
-    ``self_refine``'s groupBy pays a second full exchange + Arrow
-    round-trip + client construction for one-row groups.  Fused, both
-    per-group bodies (:func:`_conv_group_py`, :func:`_refine_group_py` —
-    the very functions the staged stages call) run back-to-back in one
-    Python pass with one client: one exchange per cycle instead of two.
-    Byte-identical by construction; tests/test_v2_fused.py asserts exact
-    staged-vs-fused output equality."""
+def conv_refine(outlines: DataFrame, suggestions: DataFrame,
+                client_factory, cfg: V2Config,
+                retry: RetryPolicy | None = None) -> DataFrame:
+    """One block cycle's convolution block → self-refine chain as ONE
+    ``applyInPandas`` over survey groups: per survey, :func:`_conv_group_py`
+    then :func:`_refine_group_py` back to back in one Python pass with one
+    client — one survey-keyed exchange per cycle.  A survey whose every
+    conv chain died emits no row.  → (``_CONV_SCHEMA``) one refined
+    outline per survey."""
     retry = retry or RetryPolicy()
-    cands = _conv_cands(outlines, suggestions)
+    cands = suggestions.join(
+        F.broadcast(outlines.select("survey_id", "survey_title", "outline_md",
+                                    "block_avg_score", "self_refine_score",
+                                    "conv_pool_sizes")),
+        "survey_id",
+    )
     ps = _prompt_set(cfg)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1232,10 +872,10 @@ def decode_survey(final_outline: DataFrame, digests: DataFrame, papers: DataFram
         metrics=metrics,
     ).filter("llm_ok").select("survey_id", "pos", "content")
 
-    # A6 bottom-up assembly + L15 polish, fused per survey.  Parent sections
-    # carry their own digest material too: the reference orchestra module
-    # fills the SUMMARY_PROMPT {digest} slot with the section's digest
-    # content (orchestra_module.py:70-78), not an empty string.
+    # A6 bottom-up assembly + L15 polish, one stage per survey.  Parent
+    # sections carry their own digest material too: the reference orchestra
+    # module fills the SUMMARY_PROMPT {digest} slot with the section's
+    # digest content (orchestra_module.py:70-78), not an empty string.
     asm_in = (
         nodes.select("survey_id", "pos", "node_path", "depth", "title", "n_children")
         .join(contents, ["survey_id", "pos"], "left")
@@ -1258,7 +898,7 @@ def decode_survey(final_outline: DataFrame, digests: DataFrame, papers: DataFram
             if len(path) > 1:
                 children_of.setdefault(path[:-1], []).append(r)
         # bottom-up: deepest parents first; a parent whose children all
-        # failed stays contentless (same as the staged inner-join semantics)
+        # failed stays contentless (inner-join semantics)
         parents = [r for r in rows if r["n_children"] > 0]
         for r in sorted(parents, key=lambda r: (-r["depth"], r["pos"])):
             kids = [content[c["pos"]]
@@ -1391,62 +1031,55 @@ def run_v2_survey(surveys: DataFrame, client_factory,
 
     ``stage_metrics``: optional
     :class:`~llmxmapreduce_spark.operators.stage_metrics.StageMetrics` —
-    per-stage rows-out (``observe``), wall time at the checkpoint
-    boundaries, and LLM accumulators for the four row-parallel llm stages
-    (outline / digest / suggest / decode); the reference analyser's
-    per-node table (pipeline_analyser.py:64-124).  After collecting the
-    result, fold the per-layer convolution detail in with
+    per-stage rows-out (``observe``) and wall time at the checkpoint
+    boundaries (papers / outline / digest / refine / decode), and LLM
+    accumulators for the four row-parallel llm stages (outline / digest /
+    suggest / decode); the reference analyser's per-node table
+    (pipeline_analyser.py:64-124).  After collecting the result, fold the
+    per-layer convolution detail in with
     ``stage_metrics.record_v2_layers(rows)``.
+
+    The returned frame is an eager checkpoint; the caller owns its
+    release, as it does the papers, outlines, final refined outline and
+    final digest checkpoints the run leaves pinned.
     """
     cfg = cfg or V2Config()
     sm = stage_metrics
-    spark = surveys.sparkSession
-    prev_parts = None
-    prev_aqe = None
-    if cfg.shuffle_partitions is not None:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
-        # r13: a caller that sizes shuffle_partitions is declaring this a
-        # KB-per-survey control plane; AQE's per-shuffle re-optimization
-        # is pure driver latency on such frames (the run is ~40 jobs of
-        # 1-2 tiny tasks each — measured 15-25% of refdefaults wall) and
-        # has nothing to coalesce or skew-split at ANY cluster size, so
-        # it is turned off for the pipeline and restored with the
-        # partition count.  Plan-only: AQE never changes values.
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    cache_ids: set = set()   # cached-digest frames (set before try: the
-    try:                     # error path releases them, r13 discipline)
-        papers = build_papers(surveys)
+    sctx = surveys.sparkSession.sparkContext
+
+    def llm(stage: str):
+        return sm.llm(stage) if sm is not None else None
+
+    def cut(stage: str, df: DataFrame, observe: bool = True) -> tuple[DataFrame, set]:
+        """Eagerly checkpoint ``df`` as the end of ``stage`` (rows-out
+        observed on the way in, wall time stamped once materialized);
+        → (the checkpoint, the frame ids it pinned)."""
+        if sm is not None and observe:
+            df = sm.observe(stage, df)
+        snap = pinned_ids(sctx)
+        df = df.localCheckpoint(eager=True)
         if sm is not None:
-            papers = sm.observe("papers", papers)
-        papers = papers.localCheckpoint(eager=True)
-        if sm is not None:
-            sm.materialized("papers")
+            sm.materialized(stage)
+        return df, pinned_ids(sctx) - snap
+
+    def digest_pass(outline_df: DataFrame) -> tuple[DataFrame, set]:
+        """L7→A3 digests against ``outline_df`` → (digests, the frame ids
+        the digest stage pinned).  The ids are non-empty only with
+        ``cfg.llm_cache_dir``: the cached stage runs EAGERLY and pins one
+        bounded frame (llm_op.py contract); the next digest checkpoint is
+        its last reader, so it is released right after that."""
+        snap = pinned_ids(sctx)
+        digests, _dead = make_digests(grouped, outline_df, client_factory,
+                                      cfg, retry, metrics=llm("digest"))
+        return digests, pinned_ids(sctx) - snap
+
+    cache_ids: set = set()
+    try:
+        papers, _ = cut("papers", build_papers(surveys))
         grouped = group_papers(papers, cfg, client_factory, retry)
-        init_fn = (init_outlines_fused if cfg.fused_init_outlines
-                   else init_outlines)
-        outlines = init_fn(
-            grouped, client_factory, cfg, retry,
-            metrics=sm.llm("outline") if sm is not None else None)
-        if sm is not None:
-            outlines = sm.observe("outline", outlines)
-        outlines = outlines.localCheckpoint(eager=True)
-        if sm is not None:
-            sm.materialized("outline")
-        fused_df = cfg.fused_digest_feedback
-        # Cached-digest ledger: with cfg.llm_cache_dir the digest stage
-        # runs EAGERLY at make_digests call time and pins one bounded
-        # frame (its eager checkpoint, llm_op.py contract); each cycle's
-        # digest localCheckpoint is its last reader, so it releases
-        # right after that materializes.
-        _c_snap = pinned_ids(surveys.sparkSession.sparkContext)
-        if not fused_df:
-            digests, _dead = make_digests(
-                grouped, outlines, client_factory, cfg, retry,
-                metrics=sm.llm("digest") if sm is not None else None)
-        cache_ids = (pinned_ids(surveys.sparkSession.sparkContext)
-                     - _c_snap)
+        outlines, _ = cut("outline", init_outlines(
+            grouped, client_factory, cfg, retry, metrics=llm("outline")))
+        digests, cache_ids = digest_pass(outlines)
         cur = outlines.select(
             "survey_id", "survey_title", "outline_md",
             F.lit(None).cast("double").alias("eval_score"),
@@ -1457,82 +1090,29 @@ def run_v2_survey(surveys: DataFrame, client_factory,
         # Per-cycle checkpoint release (labelprop/pagerank discipline,
         # r12 audit): cycle N's refined-outline checkpoint is the LAST
         # reader of cycle N−1's `cur` blocks and of cycle N's own
-        # digest checkpoint (suggestions → convolution → refine all
-        # materialize into it), so both are released right after it —
-        # otherwise the loop pins 2 × block_count survey-bounded frames
-        # per run for the session.  Pre-loop checkpoints (papers,
-        # outlines) stay: papers is re-read via `grouped` every cycle
-        # and is the caller-cache shield (first materialization of the
-        # surveys plan).
-        _sctx = surveys.sparkSession.sparkContext
-
+        # digest checkpoint (suggestions → conv_refine materialize into
+        # it), so both are released right after it — otherwise the loop
+        # pins 2 × block_count survey-bounded frames per run for the
+        # session.  Pre-loop checkpoints (papers, outlines) stay: papers
+        # is re-read via `grouped` every cycle and is the caller-cache
+        # shield (first materialization of the surveys plan).
         prev_cur_ids: set = set()   # cur_0 is lazy over outlines: no blocks
         for _cycle in range(cfg.block_count):
-            snap = pinned_ids(_sctx)
-            if fused_df:
-                # LLM-batch-coalescing: the cycle's digest→merge→feedback
-                # chain is ONE applyInPandas stage; its checkpoint plays
-                # the digest checkpoint's role in the release ledger.
-                # Output-identical to the staged path (test_v2_fused).
-                _dg, suggestions = digest_feedback_fused(
-                    grouped, cur, client_factory, cfg, retry,
-                    metrics=sm.llm("digest") if sm is not None else None,
-                    feedback_metrics=(
-                        sm.llm("suggest") if sm is not None else None))
-            else:
-                digests = digests.localCheckpoint(eager=True)
-            digest_ids = pinned_ids(_sctx) - snap
-            # the digest checkpoint (or fused frame) just superseded the
-            # cached stage's eager frames from the make_digests that
-            # produced it
-            release(_sctx, cache_ids)
-            cache_ids = set()
-            if sm is not None:
-                sm.materialized("digest")
-            if not fused_df:
-                suggestions = feedback_suggestions(
-                    digests, cur, client_factory, retry, cfg=cfg,
-                    metrics=sm.llm("suggest") if sm is not None else None)
-            snap = pinned_ids(_sctx)
-            if cfg.fused_conv_refine:
-                cur = conv_refine_fused(cur, suggestions, client_factory,
-                                        cfg, retry).localCheckpoint(eager=True)
-            else:
-                best = convolution_block(cur, suggestions, client_factory,
-                                         cfg, retry)
-                cur = self_refine(best, client_factory, cfg, retry) \
-                    .localCheckpoint(eager=True)
-            new_cur_ids = pinned_ids(_sctx) - snap
-            release(_sctx, prev_cur_ids | digest_ids)
-            prev_cur_ids = new_cur_ids
-            if sm is not None:
-                sm.materialized("refine")
-            if not fused_df:
-                # re-digest against the refined outline (digest_node
-                # re-entry)
-                _c_snap = pinned_ids(_sctx)
-                digests, _dead = make_digests(
-                    grouped, cur, client_factory, cfg, retry,
-                    metrics=sm.llm("digest") if sm is not None else None)
-                cache_ids = pinned_ids(_sctx) - _c_snap
-        if fused_df:
-            # fused mode skips the staged per-cycle re-digest; the decode
-            # stage needs digests against the FINAL refined outline — the
-            # same pass the staged loop runs at the end of its last cycle
-            _c_snap = pinned_ids(_sctx)
-            digests, _dead = make_digests(
-                grouped, cur, client_factory, cfg, retry,
-                metrics=sm.llm("digest") if sm is not None else None)
-            cache_ids = pinned_ids(_sctx) - _c_snap
-        if sm is not None:
-            # rows-out of the FINAL digest pass (re-attached each loop exit;
-            # the per-cycle llm("digest") counters accumulate across passes)
-            digests = sm.observe("digest", digests)
-        digests = digests.localCheckpoint(eager=True)
-        release(_sctx, cache_ids)      # final pass's cached frames superseded
-        cache_ids = set()
-        if sm is not None:
-            sm.materialized("digest")
+            digests, digest_ids = cut("digest", digests, observe=False)
+            release(sctx, cache_ids)
+            suggestions = feedback_suggestions(
+                digests, cur, client_factory, retry, cfg=cfg,
+                metrics=llm("suggest"))
+            cur, cur_ids = cut("refine", conv_refine(
+                cur, suggestions, client_factory, cfg, retry))
+            release(sctx, prev_cur_ids | digest_ids)
+            prev_cur_ids = cur_ids
+            # re-digest against the refined outline (digest_node re-entry)
+            digests, cache_ids = digest_pass(cur)
+        # rows-out of the FINAL digest pass (the llm("digest") counters
+        # accumulate across passes)
+        digests, _ = cut("digest", digests)
+        release(sctx, cache_ids)
         # lift the JSON score bookkeeping back into typed nested arrays now
         # that no pandas boundary remains (see _CONV_SCHEMA note)
         cur = cur.withColumn(
@@ -1542,31 +1122,17 @@ def run_v2_survey(surveys: DataFrame, client_factory,
         ).withColumn(
             "conv_pool_sizes", F.from_json("conv_pool_sizes", _POOL_SIZES)
         )
-        _d_snap = pinned_ids(_sctx)
+        snap = pinned_ids(sctx)
         out = decode_survey(
             cur, digests, papers, client_factory, cfg, retry,
-            metrics=sm.llm("decode") if sm is not None else None,
+            metrics=llm("decode"),
         ).withColumn("block_cycle_count", F.lit(cfg.block_count))
-        decode_ids = pinned_ids(_sctx) - _d_snap   # the `done` section cut
-        if sm is not None:
-            out = sm.observe("decode", out)
-        if cfg.shuffle_partitions is not None:
-            # materialize before the session conf is restored, so the decode
-            # shuffles actually run at the pipeline's sizing
-            out = out.localCheckpoint(eager=True)
-            # the out checkpoint supersedes decode_survey's internal
-            # `done` cut (out is its only reader)
-            release(_sctx, decode_ids)
-            if sm is not None:
-                sm.materialized("decode")
+        done_ids = pinned_ids(sctx) - snap   # decode_survey's `done` cut
+        out, _ = cut("decode", out)
+        release(sctx, done_ids)              # `out` was its only reader
         return out
     except BaseException:
         # nothing is returned on the error path, so any cached-digest
         # frames not yet superseded by a digest checkpoint are releasable
-        release(spark.sparkContext, cache_ids)
+        release(sctx, cache_ids)
         raise
-    finally:
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_aqe is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)

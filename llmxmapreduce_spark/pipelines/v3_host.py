@@ -866,11 +866,8 @@ def make_spark_host(
         )
         suggestions = v2.feedback_suggestions(
             h.state["digests"], cur, client_factory, cfg=rcfg)
-        # r13: one survey-keyed exchange for the conv→refine chain instead
-        # of two — byte-identical by construction (the fused stage runs the
-        # same shared per-group bodies; tests/test_v2_fused.py).
-        refined = v2.conv_refine_fused(cur, suggestions, client_factory,
-                                       rcfg).localCheckpoint(eager=True)
+        refined = v2.conv_refine(cur, suggestions, client_factory,
+                                 rcfg).localCheckpoint(eager=True)
         h.state["refined"] = refined
         h.state["outlines"] = refined.select(
             "survey_id", "survey_title", "outline_md")

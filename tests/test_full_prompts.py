@@ -115,7 +115,7 @@ def test_v2_full_prompt_pipeline_end_to_end(spark):
     surveys = make_surveys(spark, n_surveys=2, n_papers=4)
     cfg = v2.V2Config(conv_layers=1, receptive_field=2, result_num=2,
                       top_k=2, refine_rounds=1, best_of=1, polish=True,
-                      block_count=1, shuffle_partitions=2, full_prompts=True)
+                      block_count=1, full_prompts=True)
     with tempfile.TemporaryDirectory() as d:
         out = v2.run_v2_survey(
             surveys, lambda: SpillingSurveyClient(d), cfg).collect()

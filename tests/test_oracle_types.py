@@ -12,8 +12,9 @@ surface fails CI the day it is written, not two driver rounds later
 """
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def test_every_board_oracle_surface_is_portable():

@@ -133,7 +133,7 @@ def test_v2_pipeline_report_and_layers(spark):
     surveys = make_surveys(spark, n_surveys=2, n_papers=5)
     cfg = v2.V2Config(conv_layers=2, receptive_field=2, result_num=2,
                       top_k=2, refine_rounds=1, best_of=1, polish=False,
-                      block_count=1, shuffle_partitions=2)
+                      block_count=1)
     sm = StageMetrics(spark)
     rows = v2.run_v2_survey(surveys, MockSurveyClient, cfg,
                             stage_metrics=sm).collect()
@@ -148,7 +148,7 @@ def test_v2_pipeline_report_and_layers(spark):
         assert rep[stage]["llm_calls"] > 0, stage
     # wall clocks recorded at every checkpoint boundary
     for stage in ("papers", "outline", "digest", "refine", "decode"):
-        assert rep[stage]["wall_s"] is not None, stage
+        assert rep[stage]["wall_s"] > 0, stage
     # per-(survey, cycle, layer) detail folds from the collected rows
     layers = sm.record_v2_layers([r.asDict() for r in rows])
     assert layers == v2_stage_report([r.asDict() for r in rows])

@@ -22,7 +22,7 @@ REF_KNOBS = dict(conv_layers=6, receptive_field=3, result_num=10, top_k=6,
 
 def _run(spark, n_surveys):
     surveys = make_surveys(spark, n_surveys=n_surveys, n_papers=32)
-    cfg = v2.V2Config(shuffle_partitions=max(2, n_surveys), **REF_KNOBS)
+    cfg = v2.V2Config(**REF_KNOBS)
     t0 = time.time()
     out = v2.run_v2_survey(surveys, MockSurveyClient, cfg).collect()
     return out, time.time() - t0
