@@ -1,24 +1,29 @@
-"""llmxmapreduce_spark — a PySpark-native analytics engine with the query and
-data-processing capabilities of thunlp/LLMxMapReduce.
+"""llmxmapreduce_spark — the LLMxMapReduce queries (thunlp/LLMxMapReduce) on
+PySpark.
 
-The reference (see /root/repo/SURVEY.md) is an LLM-driven dataflow system for
-long-text processing: divide -> map with an LLM -> hierarchically combine ->
-reduce (V1 long-doc QA), plus a multi-stage survey-generation pipeline
-(V2/V3).  This package re-expresses every operator Spark-first:
+The paper's system answers two queries (SURVEY.md §0, §3):
 
-- typed DataFrame schemas for every table (``schemas``)
-- pure-SQL/column text operators (``functions``)
-- one generic batched-LLM ``mapInPandas`` operator with retry + dead-letter
-  semantics (``operators.llm_op``)
-- bounded driver loops for the iterative stages (collapse, convolution,
-  self-refine, content assembly)
-- deterministic seeding everywhere the reference shuffles
-- scale extensions: dedup (exact/MinHash/SimHash/cosine/SemDeDup/span +
-  connected components), similarity search (LSH + IVF), text analysis
-  (quality rulesets, PII, repetition, normalization, decontamination),
-  data mixing + sequence packing + shard sink, multimodal columns,
-  streaming windows + streaming ingestion dedup, and the end-to-end
-  corpus-prep pipeline (``pipelines.corpus_prep``)
+- V1 ``answer(question, document)`` over documents longer than the model's
+  context: chunk, map, collapse, reduce (``pipelines.v1_qa``), scored by the
+  InfiniteBench evaluators (``pipelines.v1_eval``);
+- V2/V3 ``survey(topic, papers)``: group, outline, digest, then convolve,
+  refine and decode (``pipelines.v2_survey``), driven from a topic by the
+  V3 planner loop (``pipelines.v3_host``) over search and crawl
+  (``pipelines.search_crawl``), and judged by SurveyEval
+  (``pipelines.eval_suite``).
+
+They are built from one batched-LLM ``mapInPandas`` operator with retry,
+dead-letter and prompt-cache semantics (``operators.llm_op``), the
+reference's scalar text operators as Spark columns (``functions.text``),
+the operators in ``operators`` that those pipelines import, the LLM clients
+and deterministic mocks (``llm``), the prompt tables (``prompts``),
+checkpoint release (``retention``) and the session factory (``session``).
+
+The remaining modules (media codecs, ANN/graph operators, corpus and
+dataset preparation, streaming, analytics) are an operator library that no
+paper query imports; tests/test_package_closure.py lists them.
+
+``load_table`` reads one table of the generated test data.
 """
 
 __version__ = "0.1.0"
@@ -71,10 +76,3 @@ def load_tables(spark, sf_dir):
     """Load the standard test tables from ``sf_dir`` as a dict of DataFrames."""
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
-
-def register_views(spark, sf_dir):
-    """Register every table in ``sf_dir`` as a temp view; returns the dict."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

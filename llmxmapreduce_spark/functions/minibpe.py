@@ -21,8 +21,7 @@ end-to-end (tests/test_minibpe.py) instead of trusted on inspection.
 Not a production tokenizer: no byte fallback, no special tokens, no
 regex pre-splitting — word-internal character BPE only.  Real trainers
 plug in their real encoder via the tiktoken/hf specs; the packing
-ledger is counted with whatever the trainer will use (the round-6
-waste-vs-tokenizer record in BASELINE.md is exactly this point).
+ledger is counted with whatever the trainer will use.
 """
 
 from __future__ import annotations

@@ -1,42 +1,28 @@
 """DataFrame→DataFrame operators (SURVEY.md §2).
 
-Modules:
+Used by the paper's pipelines:
 
-- ``topk``       — T1-T4/T6/T7 sort/limit/top-k family
-- ``crawl_ops``  — P6 crawl filter + backfill, A5 topic grouping, T4 ranking
-- ``citations``  — P8 scrub UDF, P12 renumbering, J3 index join, A7 cite_ratio
-- ``chunker``    — C1-C3 token-budget chunking / bin-packing
-- ``llm_op``     — the generic batched-LLM ``mapInPandas`` operator
-- ``dedup``      — exact / MinHash-LSH / SimHash / n-gram Jaccard dedup
-- ``similarity`` — embedding cosine top-k + LSH-bucketed ANN
-- ``text_stats`` — language id, quality scores, fingerprints
-- ``skeleton``   — markdown ⇄ tree parse/serialize, J1 alignment
-- ``digest_ops`` — A3 digest merge, digest build
-- ``eval_ops``   — A8 averaging, A9 claim metrics, token-F1 scorers
+- ``llm_op``        — the generic batched-LLM ``mapInPandas`` operator
+                      (retry, dead letters, prompt cache)
+- ``chunker``       — C1-C3 token-budget chunking / bin-packing
+- ``topk``          — T1-T4/T6/T7 sort/limit/top-k family
+- ``sampling``      — T5 seeded suggestion sampling
+- ``grouping``      — C6/C7 paper grouping and hash batches
+- ``crawl_ops``     — P6 crawl filter + backfill, A5 topic grouping
+- ``skeleton``      — markdown ⇄ tree parse/serialize, J1 alignment
+- ``digest_ops``    — A3 digest merge, digest build
+- ``citations``     — P8 scrub, P12 renumbering, J3 index join, A7 cite_ratio
+- ``figures``       — J5 figure anchoring
+- ``eval_ops``      — A8 averaging, A9 claim metrics, InfiniteBench scorers,
+                      A10 fact dedup
+- ``rouge``         — ROUGE-Lsum
+- ``dedup``         — exact / MinHash-LSH / SimHash / n-gram Jaccard dedup
+- ``components``    — connected components (under MinHash fact dedup)
+- ``url_filter``    — domain blocklist, URL canonicalize/dedup, badwords
+- ``text_stats``    — quality features, fingerprints, repetition stats
+- ``decontamination`` — benchmark n-gram overlap (under ``badwords_filter``)
+- ``stage_metrics`` — per-stage telemetry (D10)
 
-Training-data pipeline stack (round 6):
-
-- ``ivf``             — IVF ANN (coarse quantizer, inverted lists) + SemDeDup
-- ``components``      — connected components, canonical-copy dedup
-- ``quality_filters`` — Gopher + C4 filter rulesets
-- ``span_dedup``      — C4 three-sentence span dedup
-- ``pii``             — PII detection / typed-token redaction
-- ``decontamination`` — benchmark n-gram overlap flag/drop/mask (+Bloom)
-- ``mixing``          — stratified sampling, epoch upsampling
-- ``packing``         — fixed-token sequence packing (bucketed FFD)
-- ``multimodal``      — binary media columns (decode stubbed)
-- ``stage_metrics``   — per-stage telemetry (D10)
-
-Rounds 7-8 additions:
-
-- ``lm_filter``          — CCNet bigram-LM perplexity gate
-- ``dsir``               — DSIR hashed-n-gram importance resampling
-- ``quality_classifier`` — GPT-3-style LR quality classifier
-- ``vocab``              — vocab build, token-id encode/decode, BPE train
-- ``url_filter``         — domain blocklist, URL canonicalize/dedup, badwords
-- ``substring_dedup``    — ExactSubstr repeated-passage masking
-- ``line_dedup``         — CCNet per-line boilerplate removal
-- ``splits``             — leakage-safe keyed holdout split
-- ``ordering``           — deterministic shuffle / curriculum / interleave
-- ``report``             — corpus datasheet rollup
+The other modules here are the operator library that no paper query
+imports (tests/test_package_closure.py lists them).
 """

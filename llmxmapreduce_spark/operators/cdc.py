@@ -20,9 +20,9 @@ other value — 'upsert', 'insert', null — replaces).  A delete for an
 absent key is a no-op, and a delete beaten by a later upsert in the
 same log resolves by timestamp, exactly once, inside the compaction.
 
-Values gates: board oracle `cdc_snapshot` (window-ladder twin in
-DuckDB) and tests/test_cdc.py (delete/upsert interleavings, tie
-determinism, absent-key deletes, base passthrough).
+Values gates: a window-ladder twin in DuckDB and tests/test_cdc.py
+(delete/upsert interleavings, tie determinism, absent-key deletes, base
+passthrough).
 """
 
 from __future__ import annotations

@@ -213,8 +213,9 @@ def chunk_documents(
     separator: str = "\n",
 ) -> DataFrame:
     """C1 as a distributed operator: per-row pandas UDF producing
-    ``array<string>`` then ``posexplode`` into the CHUNKS contract
-    (schemas.CHUNKS).  Narrow transformation — no shuffle."""
+    ``array<string>`` then ``posexplode`` into one row per chunk (the
+    input's other columns, ``chunk_id``, ``text``).  Narrow transformation
+    — no shuffle."""
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def chunks_udf(text: pd.Series, budget: pd.Series) -> pd.Series:

@@ -19,7 +19,7 @@ Spark-first, no shuffled pair-strings until counted:
   (partial-agg'd counts, not corpus rows).
 - ``pmi`` — the log-ratio column.  Transcendentals are NOT
   bit-portable across engines, so the VALUES-grade surface is the
-  exact integer counts (board oracle `bigram_stats`); the PMI column
+  exact integer counts; the PMI column
   itself is pytest-gated against a numpy replay instead.
 - ``phrase_candidates`` — the word2phrase rule: bigrams with
   ``count >= min_count`` and ``pmi >= min_pmi``, the input to a

@@ -32,9 +32,8 @@ Scale notes (100 TB case):
   never a driver-side collect of edges.
 
 Correctness gate: pytest ground truth vs an exact union-find
-(tests/test_components.py) on fixed + randomized graphs; off the
-50-entry oracle board by design (the board is capped), priced in
-bench.py via the BENCH_ONLY registry.
+(tests/test_components.py) on fixed + randomized graphs, and the
+closed-form chain graph in tests/test_paper_oracles.py.
 """
 
 from __future__ import annotations

@@ -26,8 +26,8 @@ Rule kinds (thresholds are "metric must be >= / <= bound"):
 Everything is Catalyst expressions inside one ``agg`` — adding rules
 adds aggregate columns, never passes; the report pivot is a literal
 ``stack``, still plan-side.  Ratios divide in IEEE doubles with the
-same operand order in the SQL twin (``constraints_sql``), so the board
-oracle (`dq_report`) is values-grade with the repo's floor-u6 double
+same operand order in the SQL twin (``constraints_sql``), so the DuckDB
+replay is values-grade with the repo's floor-u6 double
 convention.
 
 ``passed`` uses >= for lower bounds / <= for ``max`` on the EXACT

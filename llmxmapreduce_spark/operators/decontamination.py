@@ -25,7 +25,7 @@ docstring contract says to raise ``n`` or split the benchmark into
 passes beyond that.
 
 Values gate: exact DuckDB twin + planted-overlap fixtures in
-tests/test_decontamination.py; priced in bench.py (`decontaminate`).
+tests/test_decontamination.py.
 """
 
 from __future__ import annotations

@@ -17,8 +17,8 @@ historical *portable* md5 family (bit-identical in DuckDB), the *fast*
 xxhash64 family for production (JVM-side, no md5 string churn), and the
 r14 *int60* family — ALSO DuckDB-portable but at ~1/num_hashes of the
 md5 family's hash work (one md5 per word, integer shingle folds, affine
-permutations; the board oracle's family).  All share the same plan
-shape.
+permutations; the family a DuckDB oracle can replay).  All share the
+same plan shape.
 """
 
 from __future__ import annotations
@@ -409,7 +409,7 @@ def minhash_dedup_pairs(
       chance), so the VALUES equal the exact mode's while the shuffle
       drops to 8 bytes per shingle (~2.5×) and the array intersect runs
       on longs, not strings.  The exact-verify-at-scale choice: measured
-      at sf5 where plain ``"exact"`` DNFs (BASELINE.md round-7 note).
+      at sf5 where plain ``"exact"`` does not finish.
     - ``"estimate"`` — signature-agreement estimate
       (:func:`signature_jaccard`); shuffle carries only the num_hashes-long
       signatures.  The production choice at scale.

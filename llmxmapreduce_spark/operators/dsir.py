@@ -28,8 +28,7 @@ Two bucket-hash variants, same shape (the dedup.py convention):
 gate); default xxhash64 (JVM-side, no hex churn).
 
 Values gate: planted domain-shift fixtures + an exact DuckDB twin of
-the weight computation in tests/test_dsir.py; priced in bench.py
-(`dsir_weights`).
+the weight computation in tests/test_dsir.py.
 """
 
 from __future__ import annotations
@@ -130,8 +129,8 @@ def fit_bucket_logratio(
     review finding).  A 100k-row sample estimates each of the 10k
     bucket probabilities from ~10 grams/doc × 100k docs ≈ 10⁶ draws —
     far inside the add-α smoothing noise.  Pass ``raw_sample=None`` for
-    the exact full-corpus fit (the oracle-board twin does, so its DuckDB
-    SQL stays reproducible).  The target side is a trusted corpus —
+    the exact full-corpus fit (the DuckDB twin does, so its SQL stays
+    reproducible).  The target side is a trusted corpus —
     small by construction — and is never sampled."""
     spark = target.sparkSession
     if raw_sample is not None:

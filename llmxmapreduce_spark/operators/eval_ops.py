@@ -40,7 +40,8 @@ def claim_metrics(
     verdict_col: str = "nli_verdict",
     total_papers_col: str = "total_papers",
 ) -> DataFrame:
-    """A9 (judge.py:360-433) per survey over EVAL_CLAIMS-shaped rows:
+    """A9 (judge.py:360-433) per survey over claim rows (survey_id,
+    cited_indices, nli_verdict, total_papers):
 
     - claim_precision     — claims with ≥1 supported citation / claims
     - citation_precision  — supported citations / all citations

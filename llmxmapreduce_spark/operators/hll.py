@@ -65,8 +65,8 @@ def hll_alpha(m: int) -> float:
 def _hash64(cols, portable: bool):
     """Non-negative 63-bit integer hash of the value columns."""
     if portable:
-        # md5 → 15 hex chars → 60-bit int (engine-portable; mirrors
-        # verify_local's fingerprint building block).  Each column is
+        # md5 → 15 hex chars → 60-bit int (engine-portable, so DuckDB
+        # can replay it).  Each column is
         # null-coalesced to a sentinel BEFORE concat_ws: concat_ws
         # silently drops nulls, so ('x', NULL) and (NULL, 'x') would
         # otherwise hash identically and undercount (r10 review).

@@ -22,8 +22,8 @@ gate in :mod:`html_clean` (oracle-checked).  This module provides:
 - :func:`extraction_agreement` — token-set Jaccard between two
   extraction columns, pure Catalyst: the measure used to quantify how
   far the density gate diverges from the reference extractors on a
-  fixture corpus (COVERAGE.md records the table; tests pin the gate
-  against labeled fixtures at ≥ 0.9).
+  fixture corpus (tests/test_html_extractors.py pins the gate against
+  labeled fixtures at ≥ 0.9).
 
 Non-spaced languages (th/zh/ja/ko) follow html_extrator.py:45: justext
 runs with boilerplate removal DISABLED and resiliparse skips the density

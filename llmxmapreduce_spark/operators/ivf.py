@@ -35,10 +35,8 @@ arXiv:2303.09540): cluster with the coarse quantizer, compare pairs only
 WITHIN a cell, transitively close with
 ``components.connected_components``, keep one representative per group.
 
-Correctness gates (off the capped 50-entry oracle board, like the other
-round-6 scale components): recall@k vs the exact scorer, seeded
-determinism, and planted-duplicate recovery — tests/test_ivf.py; priced
-in bench.py via BENCH_ONLY.
+Correctness gates: recall@k vs the exact scorer, seeded
+determinism, and planted-duplicate recovery — tests/test_ivf.py.
 """
 
 from __future__ import annotations
@@ -465,7 +463,7 @@ def ivf_topk_join(
     queries): 25.8 s at nprobe=4 and LINEAR in nprobe (202 s at 32),
     i.e. slower than the 7.2 s brute-force scorer it exists to beat,
     because pair rows carry two vector payloads through the shuffle and
-    the per-element dot is interpreted (scale lesson 2, BASELINE.md).
+    the per-element dot is interpreted.
     The cogroup ships each vector through the shuffle exactly once and
     scores cells at BLAS speed; per-cell work is one
     |cell_c| × |cell_q| matmul — bounded by the data-adaptive quantizer,

@@ -21,10 +21,8 @@ flagged row the caller can route to a dead-letter sink.
   re-serialize with engine-specific whitespace — compare structurally
   if you need those).
 
-Values gates: board oracle `json_extract_agg` (per-type rollup of a
-parsed numeric path vs DuckDB's JSON extraction) and
-tests/test_json_ops.py (malformed/null lanes, kv explode vs json_each,
-plan pin: zero Python nodes, one scan).
+Values gates: tests/test_json_ops.py (malformed/null lanes, kv explode
+vs json_each, plan pin: zero Python nodes, one scan).
 """
 
 from __future__ import annotations

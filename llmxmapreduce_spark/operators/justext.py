@@ -24,10 +24,9 @@ document's blocks (bounded by page size — tens to hundreds of blocks),
 so the distributed wrapper is one Arrow-batched ``mapInPandas`` pass
 with NO shuffle: embarrassingly parallel over documents, the same shape
 the reference's per-record extractor has inside its worker pool.  The
-Catalyst gate remains the SQL-expressible oracle twin for the board
-(`p17_html_extract`); this path is pytest-gated against labeled and
-hostile fixtures (non-SQL-expressible: the neighbour recursion has no
-portable DuckDB form).
+Catalyst gate remains the SQL-expressible oracle twin; this path is
+pytest-gated against labeled and hostile fixtures (non-SQL-expressible:
+the neighbour recursion has no portable DuckDB form).
 """
 
 from __future__ import annotations

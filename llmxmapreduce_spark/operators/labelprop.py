@@ -10,7 +10,7 @@ one stray edge.  Used as the domain-clustering signal (group hosts by
 who links whom) and as the splitter for over-merged near-dup components.
 
 Algorithm (synchronous, deterministic — the module CONTRACT, which the
-board oracle unrolls verbatim in SQL):
+DuckDB twin unrolls verbatim in SQL):
 
 - node set = distinct(src) ∪ distinct(dst); initial label(v) = v.
 - one round: every edge row (s, d) casts one vote of label(s) onto d
@@ -29,7 +29,7 @@ pagerank.py).
 
 Directed-vote convention: an edge row votes src→dst only.  For the
 usual undirected semantics pass both directions (``union`` of the
-reversed frame), exactly like pagerank's board query.
+reversed frame), exactly like pagerank.
 
 Scale notes (100 TB case):
 - Per round: one join keyed on src (edges × labels), one aggregate on
@@ -48,10 +48,9 @@ Scale notes (100 TB case):
 
 Correctness: tests/test_labelprop.py pins a pure-python reference on
 planted two-clique graphs, multi-edge weighting, the self-vote damper
-on a bipartite graph, and determinism under repartition; the board
-entry ``label_propagation`` crosses 3 rounds on the lineitem
-part↔supplier graph against an unrolled DuckDB replay (values-grade,
-integer-only — the pagerank oracle pattern).
+on a bipartite graph, determinism under repartition, and 3 rounds
+against an unrolled DuckDB replay (values-grade, integer-only — the
+pagerank oracle pattern).
 """
 
 from __future__ import annotations
@@ -85,7 +84,8 @@ def label_propagation(
     - ``False`` (default): ONE exchange per round carrying the RAW vote
       stream, hash-partitioned on the node so both downstream
       aggregates reuse it (the r13 shape — measured 1.5-2× faster on
-      the board graph, where exchange/stage count dominates).
+      the lineitem bipartite graph, where exchange/stage count
+      dominates).
     - ``True``: the (node, label) count aggregate keeps its own
       exchange, which restores Catalyst's MAP-SIDE PARTIAL COMBINE
       below it — the first exchange then carries combined partials
@@ -206,7 +206,7 @@ def _one_round(e: DataFrame, labels: DataFrame,
         # exchange carried map-side-combined (n,l) partials — a loss
         # only on graphs whose multi-edge duplication is heavy enough
         # that the combine shrank below |E|+|pairs| combined across both
-        # old exchanges (measured 1.5-2x faster on the board's lineitem
+        # old exchanges (measured 1.5-2x faster on the lineitem
         # bipartite graph).
         votes = (
             all_votes

@@ -196,11 +196,11 @@ def langid_predict_fast(
     Why: the Catalyst path's broadcast model join fans every gram
     INSTANCE out to L language rows before the (doc, lang) partial agg
     — at sf5 that is grams × L ≈ billions of rows through the hash
-    aggregate, 240 s engine time for a 500 M-gram corpus (BASELINE.md
-    r11 pricing).  Here each document is scored locally: count grams
-    once, one vocab-dict lookup per UNIQUE gram, one length-L integer
-    vector accumulate — O(grams + unique_grams × L) per doc, text never
-    leaves its partition, NO shuffle at all.
+    aggregate, 240 s engine time for a 500 M-gram corpus.  Here each
+    document is scored locally: count grams once, one vocab-dict lookup
+    per UNIQUE gram, one length-L integer vector accumulate —
+    O(grams + unique_grams × L) per doc, text never leaves its
+    partition, NO shuffle at all.
 
     Exactness is preserved: the model's DECIMAL(20,8) logps become
     int64 micro-units (logp × 1e8 — exact, the quantization already

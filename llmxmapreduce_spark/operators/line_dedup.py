@@ -36,7 +36,7 @@ like "Home") skew the groupBy exactly like any hot key — AQE territory,
 rows are 20 bytes.
 
 Values gate: exact DuckDB twin (line-text-keyed) in
-tests/test_line_dedup.py; oracle-board entry ``line_dedup``.
+tests/test_line_dedup.py.
 """
 
 from __future__ import annotations

@@ -31,7 +31,7 @@ knob) — the table size is a training-corpus property, not a crawl-size
 property.
 
 Values gate: hand-computed tiny-LM logprobs + an exact DuckDB twin in
-tests/test_lm_filter.py; priced in bench.py (`ccnet_perplexity`).
+tests/test_lm_filter.py.
 """
 
 from __future__ import annotations

@@ -442,7 +442,7 @@ FRAMEPACK_MAGIC = b"FPK1"
 def encode_framepack(frames: list[bytes]) -> bytes:
     """Pack encoded frame images into the trivial length-prefixed
     container (magic + u32 count + per-frame u32 length + bytes).  This
-    is the REFERENCE container for tests and the oracle board — real
+    is the REFERENCE container for tests — real
     video decode needs ffmpeg-class libraries, which follow the same
     injectable-extractor seam as the image/audio codecs."""
     import struct

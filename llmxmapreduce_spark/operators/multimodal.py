@@ -1,5 +1,6 @@
 """Multimodal column operators (scale extension): image/audio/video as
-opaque ``binary`` payloads + typed metadata (schemas.MEDIA_ASSETS).
+opaque ``binary`` payloads + typed metadata (asset_id, doc_id, media_type,
+payload, width, height, duration_ms, codec).
 
 The container has no image/audio *libraries*, so the default decode step
 is stubbed behind ``NotImplementedError`` with a deterministic fake for
@@ -78,7 +79,7 @@ def byte_histogram_feature(payload: bytes, dim: int = 16) -> list[float]:
 
 def extract_features(assets: DataFrame, dim: int = 16,
                      decoder=decode_image, featurizer=None) -> DataFrame:
-    """MEDIA_ASSETS → per-asset feature rows via ``mapInPandas``.
+    """Media asset rows → per-asset feature rows via ``mapInPandas``.
 
     Decode failures follow the D8 error-sentinel contract: the row flows on
     with ``decode_ok=false`` + the byte-level fallback feature.

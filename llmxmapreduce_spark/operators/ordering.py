@@ -31,9 +31,8 @@ projected counts scan + one hash exchange on the 4-byte cell id.  At
 
 Determinism: position is the rank in a TOTAL order (md5 key, then id as
 tiebreak) — a pure function of (data, seed), independent of
-partitioning, task retries, cluster size, or engine (exact DuckDB twins
-on the oracle board: ``corpus_shuffle``, ``curriculum_order``,
-``interleave_sources``).
+partitioning, task retries, cluster size, or engine (exact DuckDB
+twins).
 
 - :func:`deterministic_shuffle` — position = rank by md5(id, seed).
 - :func:`curriculum_order` — position = rank by (bucket(score), md5
@@ -42,7 +41,7 @@ on the oracle board: ``corpus_shuffle``, ``curriculum_order``,
   global rank by (pos_in_stratum, stratum): round-robin over sources,
   so any prefix of the corpus holds each source in proportion ~1/K.
 
-Values gates: exact DuckDB twins (board entries above); permutation /
+Values gates: exact DuckDB twins; permutation /
 determinism / seed-independence / bucket-monotonicity / round-robin /
 plan-shape tests in tests/test_ordering.py.
 """

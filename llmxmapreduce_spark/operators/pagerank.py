@@ -73,9 +73,9 @@ def pagerank(
     redistributed uniformly each round.
 
     ``checkpoint=False`` skips every lineage cut — ONLY for plan
-    auditing (tools/explain_audit.py captures the one-iteration
-    operator pipeline this way; checkpointed results collapse to a
-    Scan ExistingRDD — r10 verdict task #4) or tiny n_iter."""
+    auditing (explain() then shows the one-iteration operator
+    pipeline; checkpointed results collapse to a Scan ExistingRDD) or
+    tiny n_iter."""
 
     def _ck(df: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=True) if checkpoint else df

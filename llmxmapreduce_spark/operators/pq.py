@@ -18,7 +18,7 @@ Pieces:
   (m entries, each in [0, k)).  EXACT-integer assignment: coordinates
   and codebooks are quantized to the 1e-6 grid (``kmeans.quantize_np``)
   and the per-subspace argmin runs in int64 — bit-deterministic under
-  any partitioning and DuckDB-replayable (board oracle `pq_encode`).
+  any partitioning and DuckDB-replayable.
 - :func:`pq_decode` — reconstruction (tests / diagnostics).
 - :func:`pq_adc_topk` — asymmetric-distance top-k: query stays exact,
   corpus stays codes; per-batch local top-k then one global window, the

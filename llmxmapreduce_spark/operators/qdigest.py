@@ -18,7 +18,7 @@ leaves to root; at each level every sibling family with combined count
 <= tau collapses into its parent, otherwise its members are RETAINED in
 the digest.  Compared to the paper's asynchronous 3-way rule this is a
 pure function of the value multiset (no visit-order dependence), which
-is what makes the sketch values-grade: the board oracle replays the
+is what makes the sketch values-grade: the DuckDB twin replays the
 identical recurrence unrolled in DuckDB (the pagerank/LPA pattern).
 
 Accuracy contract (tested): every NON-LEAF node a single build retains

@@ -29,8 +29,7 @@ hashed uni+bi-gram featurizer:
 
 Values gate: sklearn-free hand-checkable fixtures (separable planted
 domains), an exact DuckDB twin of the scoring pass, and determinism
-tests — tests/test_quality_classifier.py; priced in bench.py
-(`quality_classifier`).
+tests — tests/test_quality_classifier.py.
 """
 
 from __future__ import annotations

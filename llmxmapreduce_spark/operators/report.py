@@ -21,8 +21,8 @@ row.  The average is reported as ``avg_words_micro`` — an exact integer
 portable across engines while integer division is (the verify-gate
 convention; callers wanting a float divide by 1e6).
 
-Values gate: exact DuckDB twin (``GROUP BY ROLLUP`` + ``GROUPING()``),
-oracle board entry ``corpus_report``; level semantics / null-stratum /
+Values gate: exact DuckDB twin (``GROUP BY ROLLUP`` + ``GROUPING()``);
+level semantics / null-stratum /
 single-Exchange plan tests in tests/test_report.py.
 """
 

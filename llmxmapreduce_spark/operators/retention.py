@@ -13,7 +13,7 @@ cohort key and the offset are PURE INTEGER DAY ARITHMETIC anchored to
     cohort_week = floor(days_since(1970-01-05, first_anchor_date) / 7)
     offset      = floor(days_between(first_anchor_date, activity) / 7)
 
-which makes the DuckDB twin (board oracle `retention_cohorts`) exact.
+which makes the DuckDB twin exact.
 
 Plan shape: one partial-agg scan builds the per-user anchor table
 (min anchor date — #users rows), one equi-join on user_id attaches it

@@ -33,8 +33,8 @@ of distinct values, where the full count table itself is the problem.
 
 The recount makes the THRESHOLDED output exact and therefore
 partition-independent and engine-portable: it equals DuckDB's
-``GROUP BY key HAVING count(*) > N/(capacity+1)`` — the values oracle
-(board query `heavy_hitters`), even though the intermediate sketch is
+``GROUP BY key HAVING count(*) > N/(capacity+1)`` — the values oracle,
+even though the intermediate sketch is
 approximate.  Two projected scans of one column, bounded memory
 everywhere; that is the trade a 100 TB frequency query wants.
 

@@ -31,7 +31,7 @@ the aggregate is partial-combine-friendly (min of struct).
 
 Values gate: exact DuckDB twin (group-by span TEXT — same equivalence
 classes as the hash, collision-free at test scale) in
-tests/test_span_dedup.py; priced in bench.py (`span_dedup`).
+tests/test_span_dedup.py.
 """
 
 from __future__ import annotations

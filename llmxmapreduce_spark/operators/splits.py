@@ -22,9 +22,8 @@ Hash path: ``xxhash64(key, seed)`` (fast, default) or the portable
 md5 family (``portable=True`` — the dsir/_bucket convention) for
 cross-engine oracle parity.
 
-Values gate: exact DuckDB twin of the portable path (oracle board entry
-``holdout_split``); fraction/cohesion/stability/plan tests in
-tests/test_splits.py.
+Values gate: exact DuckDB twin of the portable path;
+fraction/cohesion/stability/plan tests in tests/test_splits.py.
 """
 
 from __future__ import annotations

@@ -53,8 +53,7 @@ are 20 bytes.
 
 Values gate: exact DuckDB twin (group-by window TEXT — same equivalence
 classes as the hash, collision-free at test scale) in
-tests/test_substring_dedup.py; oracle-board entry ``substring_dedup``;
-priced in bench.py (`substring_dedup`).
+tests/test_substring_dedup.py.
 """
 
 from __future__ import annotations

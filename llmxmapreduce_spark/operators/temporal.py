@@ -3,7 +3,7 @@
 Neither exists in the reference (its event handling is per-survey Python
 loops) nor as a Spark built-in — they are the two classic time-series
 operators a 100 TB log/telemetry pipeline needs next to the windowed
-aggregations (`events_tumbling/sliding/session` on the board):
+aggregations (tumbling/sliding/session windows):
 
 - **as-of join** — for every left row, the single most recent right row
   at-or-before its timestamp (per key): quote attachment, config
@@ -35,10 +35,9 @@ classic bucketed interval-join (Spark itself has no interval join;
 Databricks' range-join hint does the same binning).  Pick ``bucket``
 near the median interval length: explosion factor = len/bucket + 1.
 
-Values gates: board oracles `asof_join` (DuckDB native ASOF LEFT JOIN)
-and `range_join_agg` (BETWEEN join + rollup); pytest twins in
-tests/test_temporal.py including tolerance, forward direction, empty
-sides, and the no-duplicate-pairs property.
+Values gates: pytest twins in tests/test_temporal.py against DuckDB's
+native ASOF LEFT JOIN and a BETWEEN join + rollup, including tolerance,
+forward direction, empty sides, and the no-duplicate-pairs property.
 """
 
 from __future__ import annotations

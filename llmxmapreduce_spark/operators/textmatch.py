@@ -18,7 +18,7 @@ in total pattern length), ships to executors via a Spark broadcast,
 and the scan runs inside an Arrow-batched iterator (``mapInPandas``)
 — only (id, pattern) hit rows ever shuffle, never the text.
 
-Semantics (module contract, mirrored by the board oracle):
+Semantics (module contract, mirrored by the DuckDB twin):
 - substring match anywhere (no token boundaries);
 - ``case_insensitive=True`` lowercases text and patterns (Python
   ``str.lower``, which the oracle replays with SQL ``lower``: the
@@ -32,8 +32,8 @@ Semantics (module contract, mirrored by the board oracle):
 Correctness: tests/test_textmatch.py pins a naive find()-scan
 reference on randomized small-alphabet corpora (the adversarial shape
 for failure links: overlaps everywhere), nested/overlapping pattern
-inventories, case folding, and unicode; the board entry
-``pattern_hits`` crosses the engine against a DuckDB contains() twin.
+inventories, case folding, and unicode; a DuckDB contains() twin
+crosses the engine on corpus text.
 """
 
 # NOTE: no `from __future__ import annotations` here — it stringifies

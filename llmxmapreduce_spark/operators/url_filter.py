@@ -27,8 +27,7 @@ blocklist of ~4.6 M domains + subdomain matching):
   shape as 10.  Multi-word phrases are matched by their first token +
   an ``instr`` confirm, so phrase lists work without a quadratic scan.
 
-Values gate: exact DuckDB twin + fixtures in tests/test_url_filter.py;
-priced in bench.py (`url_filters`).
+Values gate: exact DuckDB twin + fixtures in tests/test_url_filter.py.
 """
 
 from __future__ import annotations

@@ -25,7 +25,7 @@ aggregates ``sort_array(collect_list(struct(pos, id)))`` — positions
 are ints, so the per-doc state is 8 bytes/token.
 
 Values gate: exact DuckDB twin + OOV/roundtrip/determinism fixtures in
-tests/test_vocab.py; priced in bench.py (`token_encode`).
+tests/test_vocab.py.
 """
 
 from __future__ import annotations

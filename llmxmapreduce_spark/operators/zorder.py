@@ -22,8 +22,8 @@ Spark-first construction — everything stays in whole-stage codegen:
 
 Normalization is the repo's portable-double convention: ``floor((x -
 min) * (2^bits - 1) / (max - min))`` evaluated in IEEE doubles with the
-same operation order in Spark and DuckDB, so the board oracle
-(`zorder_key`) is values-grade.  Nulls normalize to 0 (they sort
+same operation order in Spark and DuckDB, so the DuckDB twin is
+values-grade.  Nulls normalize to 0 (they sort
 first, like parquet's nulls-first stats).  Timestamps go through epoch
 micros; total key width n_cols*bits must fit 63 bits.
 

@@ -23,8 +23,8 @@ split exists to prevent).  The split itself is splits.holdout_split:
 keyed, stable under growth, Exchange-free.  Packing runs per side so no
 training sequence ever mixes train and held-out text.
 
-100 TB framing: every stage here is one of the audited plan shapes
-(PLANS.md); the builder adds no new shuffles — the split is a
+100 TB framing: every stage here is one of the audited plan shapes;
+this pipeline adds no new shuffles — the split is a
 projection, the per-side packing partitions by the same bucket id it
 always did, and the datasheet is the single-scan rollup.  The only
 driver-side artifacts are the manifests and the datasheet rows (bounded
@@ -111,8 +111,8 @@ def build_dataset(
         # 100 TB is not an eval set), so the production path hashes
         # grams vectorized per side and joins them NON-broadcast — 8-byte
         # ints only on the wire, neither side's text moves (the Catalyst
-        # twin, contamination_flags(broadcast_bench=False), is the board
-        # oracle `split_scrub`; flag equality is test-pinned)
+        # twin is contamination_flags(broadcast_bench=False); flag
+        # equality is test-pinned)
         from llmxmapreduce_spark.operators.decontamination import (
             contamination_flags_shuffled)
 

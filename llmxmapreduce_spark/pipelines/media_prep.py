@@ -60,7 +60,7 @@ class MediaPrepConfig:
     hash_w: int = 8
     hash_h: int = 8
     # False skips every inter-stage localCheckpoint cut — ONLY for plan
-    # auditing (tools/explain_audit.py shows the full lazy pipeline;
+    # auditing (explain() then shows the full lazy pipeline;
     # checkpointed stages collapse to Scan ExistingRDD) or tiny inputs.
     checkpoint: bool = True
     extra: dict = field(default_factory=dict)

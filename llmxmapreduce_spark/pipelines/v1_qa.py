@@ -179,7 +179,7 @@ def run_v1_qa(
     # round runs, its keep/merge branches are two more consumers — so the
     # map LLM stage executed 2× per run with no collapse and 3× in a
     # collapse round (measured via the map accumulator: 1804 calls for
-    # 902 chunks on the board fixture).  One chunk-bounded eager cut runs
+    # 902 chunks on the sf0.01 documents).  One chunk-bounded eager cut runs
     # it once.  Retention: as the first materialization of the whole
     # upstream plan this cut TAKES OVER the caller-cache-shield role that
     # round 1's loop checkpoint used to play (that checkpoint is now

@@ -32,7 +32,7 @@ it can invoke is one of this repo's existing distributed pipelines
 DataFrames between tool calls — the "survey object" of the reference —
 and only serializes at the reference's own file boundaries.  The planner
 is a plain callable ``conversation -> str`` so a deterministic
-``MockPlanner`` (tests, board) and a real LLM client share one loop.
+``MockPlanner`` (tests) and a real LLM client share one loop.
 """
 
 from __future__ import annotations
@@ -235,8 +235,8 @@ class V3Host:
         self.state: dict[str, Any] = {}          # the "survey" the host carries
         self.operation_history: list[dict[str, Any]] = []
         self.conversation_history: list[dict[str, str]] = []
-        # Checkpoint retention (r13, found by tools/profile_v3_host.py:
-        # each e2e run pinned ~6 localCheckpoint frames for the session).
+        # Checkpoint retention (each e2e run used to pin ~6
+        # localCheckpoint frames for the session).
         # make_spark_host sets _spark; _run_tool then snapshot-diffs the
         # JVM persistent-RDD registry around each tool call and close()
         # releases the accumulated ids — the retention.py discipline.
@@ -413,7 +413,7 @@ class V3Host:
         so ``state`` is cleared too.  Without this, a long-lived
         session (bench loop, multi-topic service) pins ~6 corpus-shaped
         frames per processed task forever — the leak class retention.py
-        exists to prevent, measured by tools/profile_v3_host.py."""
+        exists to prevent."""
         if self._spark is not None and self._created_rdd_ids:
             from llmxmapreduce_spark.retention import release
 

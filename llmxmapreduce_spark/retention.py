@@ -60,8 +60,8 @@ superseded, inside try/except) and its retention gate
 ``tests/test_pagerank.py::test_pagerank_releases_checkpoints`` (assert
 <=N pinned frames after k iterations, plus a caller-cache-survival
 test).  Every iterative loop in this repo either releases through this
-module or carries a documented boundedness argument (BASELINE.md
-retention audit) — keep that invariant.
+module or carries a documented boundedness argument — keep that
+invariant.
 """
 
 from __future__ import annotations

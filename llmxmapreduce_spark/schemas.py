@@ -1,74 +1,12 @@
-"""StructType schemas for every table in the engine (SURVEY.md §1, FIXTURES.md).
+"""StructType schemas for the V2 survey input (SURVEY.md §1, FIXTURES.md).
 
-The reference keeps everything as untyped JSONL records validated only by
-regex-parse-and-retry (reference: src/utils/process_str.py:8-29,
-src/data_structure/digest.py:136-153).  Here every table has a real schema;
-parsers are UDFs returning ``struct(ok, err, value)`` so malformed rows are
-quarantined instead of raising.
+The reference keeps its surveys as untyped JSONL records (reference:
+src/data_structure/survey.py:13-50); here the input table has a real schema.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-# ---------------------------------------------------------------------------
-# V1 long-doc QA (reference: LLMxMapReduce_V1/pipeline.py:30-43)
-# ---------------------------------------------------------------------------
-
-# One row per (document, question) pair.
-QA_DOCUMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("task", T.StringType(), True),
-        T.StructField("context", T.StringType(), False),
-        T.StructField("question", T.StringType(), False),
-        T.StructField("answer", T.ArrayType(T.StringType()), True),
-    ]
-)
-
-# Output of the chunker (reference: Generator.py:234-299).
-CHUNKS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("chunk_id", T.IntegerType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("token_len", T.IntegerType(), False),
-    ]
-)
-
-# Output of an LLM stage: payload + bookkeeping columns shared by every
-# mapInPandas LLM operator (error-sentinel flow, reference async_d/node/node.py:243-272).
-def llm_result_schema(payload_fields: list[T.StructField]) -> T.StructType:
-    return T.StructType(
-        payload_fields
-        + [
-            T.StructField("llm_ok", T.BooleanType(), False),
-            T.StructField("llm_error", T.StringType(), True),
-            T.StructField("llm_attempts", T.IntegerType(), False),
-        ]
-    )
-
-
-MAP_RESULTS = llm_result_schema(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("chunk_id", T.IntegerType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("token_len", T.IntegerType(), True),
-    ]
-)
-
-ANSWERS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("answer", T.StringType(), True),
-        T.StructField("rationale", T.StringType(), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# V2 survey generation (reference: src/data_structure/survey.py:13-50)
-# ---------------------------------------------------------------------------
 
 PAPER = T.StructType(
     [
@@ -86,123 +24,5 @@ SURVEYS_INPUT = T.StructType(
         T.StructField("survey_id", T.StringType(), False),
         T.StructField("title", T.StringType(), False),
         T.StructField("papers", T.ArrayType(PAPER), False),
-    ]
-)
-
-PAPERS = T.StructType(
-    [
-        T.StructField("survey_id", T.StringType(), False),
-        T.StructField("bibkey", T.StringType(), False),
-        T.StructField("title", T.StringType(), False),
-        T.StructField("abstract", T.StringType(), True),
-        T.StructField("txt", T.StringType(), True),
-        T.StructField("url", T.StringType(), True),
-        T.StructField("txt_token", T.LongType(), True),
-    ]
-)
-
-# Skeleton (outline) tree exploded to rows; node_path is the preorder index
-# (reference: src/data_structure/treenode.py:59-79, skeleton.py:75-169).
-SKELETON_NODES = T.StructType(
-    [
-        T.StructField("survey_id", T.StringType(), False),
-        T.StructField("block_cycle", T.IntegerType(), False),
-        T.StructField("node_path", T.ArrayType(T.IntegerType()), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("title", T.StringType(), False),
-        T.StructField("construction", T.StringType(), True),
-        T.StructField("analysis", T.StringType(), True),
-    ]
-)
-
-# Digests: one row per (digest group, skeleton section); the reference's
-# MultiKeyDict frozenset key (multi_key_dict.py:4-62) becomes a bridge table.
-DIGESTS = T.StructType(
-    [
-        T.StructField("survey_id", T.StringType(), False),
-        T.StructField("digest_id", T.StringType(), False),
-        T.StructField("node_path", T.ArrayType(T.IntegerType()), False),
-        T.StructField("description", T.StringType(), True),
-        T.StructField("suggestion", T.StringType(), True),
-    ]
-)
-
-DIGEST_MEMBERS = T.StructType(
-    [
-        T.StructField("survey_id", T.StringType(), False),
-        T.StructField("digest_id", T.StringType(), False),
-        T.StructField("bibkey", T.StringType(), False),
-    ]
-)
-
-# Feedback / suggestions (reference: src/data_structure/feedback.py:11-38).
-SUGGESTIONS = T.StructType(
-    [
-        T.StructField("survey_id", T.StringType(), False),
-        T.StructField("sugg_id", T.StringType(), False),
-        T.StructField("layer", T.IntegerType(), False),
-        T.StructField("outline", T.StringType(), True),
-        T.StructField("content", T.StringType(), True),
-        T.StructField("score", T.DoubleType(), True),
-        T.StructField("eval_detail", T.StringType(), True),
-    ]
-)
-
-# Content sections before assembly (reference: src/data_structure/content.py:14-105).
-SECTIONS = T.StructType(
-    [
-        T.StructField("survey_id", T.StringType(), False),
-        T.StructField("node_path", T.ArrayType(T.IntegerType()), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("is_leaf", T.BooleanType(), False),
-        T.StructField("title", T.StringType(), False),
-        T.StructField("content", T.StringType(), True),
-        T.StructField("is_qualified", T.BooleanType(), False),
-    ]
-)
-
-# Search/crawl records (reference: src/async_crawl.py:294-311, 118-141, 95-116).
-CRAWL_RESULTS = T.StructType(
-    [
-        T.StructField("topic", T.StringType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("raw_content", T.StringType(), True),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("filtered", T.StringType(), True),
-        T.StructField("similarity", T.IntegerType(), True),
-        T.StructField("error", T.BooleanType(), False),
-    ]
-)
-
-# Mock-LLM lookup table (FIXTURES.md A9).
-MOCK_LLM = T.StructType(
-    [
-        T.StructField("prompt_sha256", T.StringType(), False),
-        T.StructField("completion", T.StringType(), False),
-        T.StructField("model", T.StringType(), True),
-    ]
-)
-
-# Eval claim fixtures (reference: evaluation/agents/judge.py:122-194).
-EVAL_CLAIMS = T.StructType(
-    [
-        T.StructField("survey_id", T.StringType(), False),
-        T.StructField("claim", T.StringType(), False),
-        T.StructField("cited_indices", T.ArrayType(T.IntegerType()), True),
-        T.StructField("nli_verdict", T.ArrayType(T.BooleanType()), True),
-    ]
-)
-
-# Multimodal assets: opaque binary payload + typed metadata (scale extension).
-MEDIA_ASSETS = T.StructType(
-    [
-        T.StructField("asset_id", T.StringType(), False),
-        T.StructField("doc_id", T.LongType(), True),
-        T.StructField("media_type", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-        T.StructField("codec", T.StringType(), True),
     ]
 )

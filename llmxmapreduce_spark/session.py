@@ -7,10 +7,10 @@ sized by environment rather than hardcoded for one machine.
 
 Notable conf choices:
 
-- ``spark.sql.legacy.parquet.nanosAsLong=true`` — the driver-generated
+- ``spark.sql.legacy.parquet.nanosAsLong=true`` — the generated test data's
   ``events.parquet`` stores TIMESTAMP(NANOS), which Spark 4 rejects by
   default ([PARQUET_TYPE_ILLEGAL]).  With this flag the column arrives as a
-  nanosecond BIGINT and ``load_tables`` converts it to a proper timestamp.
+  nanosecond BIGINT and ``load_table`` converts it to a proper timestamp.
 - AQE + skew-join so the same plans survive skewed keys at 100 TB.
 - Arrow enabled for every pandas-UDF boundary (the batched LLM operators
   and the tree parsers are Arrow-batched, never row-at-a-time).

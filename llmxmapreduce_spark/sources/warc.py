@@ -677,11 +677,9 @@ def warc_to_documents(
     semantics for real crawled HTML, `LLMxMapReduce_V3/src/mcp_server/
     search/clean/html_extrator.py:85-204`), and the measured-faster
     path at every page size (~2-2.8× vs the gate at 300 B / 20 KB /
-    200 KB pages and sf0.1/1/5 corpora — BASELINE.md r11 addendum +
-    r12 large-page table); ``"gate"`` = the pure-Catalyst stopword
-    density gate (operators.html_clean — zero Python, whole-stage
-    codegen; kept as the board's DuckDB-replayable oracle twin,
-    `p17_html_extract`)."""
+    200 KB pages and sf0.1/1/5 corpora); ``"gate"`` = the pure-Catalyst
+    stopword density gate (operators.html_clean — zero Python,
+    whole-stage codegen; DuckDB-replayable)."""
     from llmxmapreduce_spark.operators.html_clean import extract_main_content
 
     if extractor not in ("gate", "justext"):

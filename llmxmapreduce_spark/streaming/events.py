@@ -1,7 +1,7 @@
 """Watermarked windowed aggregations over the ``events`` table as a stream.
 
 Batch/stream parity by construction: each streaming query is the same
-expression as its batch twin in ``__spark_entry__`` (tumbling / sliding /
+expression as its batch twin (tumbling / sliding /
 session windows), so correctness of the streaming path is checked by
 running the stream with ``Trigger.AvailableNow`` into a memory sink and
 comparing against the batch result (tests/test_streaming.py).

@@ -385,8 +385,8 @@ def test_minhash_int60_family_matches_md5_exact(spark):
 def test_minhash_int60_duckdb_parity(spark):
     """Every int60 building block replays bit-for-bit in DuckDB: the
     60-bit md5 slice, the affine permutation mins, and the injective
-    2-row band combine — the engine-parity contract the board oracle
-    rests on."""
+    2-row band combine — the engine-parity contract the
+    minhash_lsh_neardup oracle in test_paper_oracles.py rests on."""
     import duckdb
 
     from llmxmapreduce_spark.operators.dedup import (

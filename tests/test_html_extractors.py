@@ -1,6 +1,5 @@
 """P17 extractor parity: language-aware density gate, library seams,
-agreement metric, and the labeled-fixture divergence bound the COVERAGE
-table records."""
+agreement metric, and the labeled-fixture divergence bound."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -63,7 +62,7 @@ def _extract(spark, html, **kw):
 def test_density_gate_agreement_with_labels(spark):
     """On the labeled corpus the gate keeps the main prose and drops the
     boilerplate; token-set agreement with the labels >= 0.9 on average
-    (the COVERAGE.md divergence bound)."""
+    (the divergence bound)."""
     rows = [(name, html, " ".join(main)) for name, html, main, _ in FIXTURES]
     df = spark.createDataFrame(rows, "name string, html string, label string")
     got = df.select(
@@ -207,7 +206,7 @@ HOSTILE_FIXTURES = [
 
 
 def test_hostile_fixture_agreement_measured(spark):
-    """The divergence record the COVERAGE.md P17 table publishes: on the
+    """The P17 divergence record: on the
     corpus built from the stateless gate's KNOWN structural weaknesses,
     measure per-fixture agreement for BOTH extraction paths.
 
@@ -234,7 +233,7 @@ def test_hostile_fixture_agreement_measured(spark):
     assert ag["fragmented_prose"] == 1.0, ag
     assert 0.8 <= ag["interjection"] < 1.0, ag
     assert 0.8 <= ag["heading_rescue"] < 1.0, ag
-    # the average over the hostile corpus — the COVERAGE.md number
+    # the average over the hostile corpus
     avg = sum(ag.values()) / len(ag)
     assert avg >= 0.9, ag
 

@@ -1,7 +1,6 @@
 """IVF ANN + SemDeDup semantic dedup (operators/ivf.py).
 
-Correctness gates for the round-6 IVF scale path (off the capped 50-entry
-oracle board, like the other scale components):
+Correctness gates for the IVF scale path:
 - quantizer determinism for a fixed (data, seed);
 - recall@k vs the exact scorer on clustered data (the setting IVF is
   designed for — on uniform random vectors NO space-partitioning ANN has

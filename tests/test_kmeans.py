@@ -105,7 +105,7 @@ def test_quantize_half_away():
 
 def test_duckdb_iteration_twin(spark, planted):
     """assign → update → assign replayed in DuckDB matches the module
-    value-for-value (the board `kmeans_lloyd` contract)."""
+    value-for-value."""
     df, pts, _ = planted
     seeds = kmeans.quantize_np(pts[[0, 50, 100]])
     c1 = kmeans.kmeans_refine(df, seeds, n_iter=1)

@@ -1,7 +1,7 @@
 """Label propagation — pure-python reference equivalence, planted
 two-clique recovery, self-vote oscillation damping on bipartite graphs,
 multi-edge weighting, determinism under repartition, DuckDB unrolled
-twin (the board-oracle recurrence)."""
+twin."""
 
 from collections import Counter
 
@@ -9,6 +9,38 @@ import duckdb
 import pytest
 
 from llmxmapreduce_spark.operators import labelprop as lp
+
+
+def _lpa_oracle_sql(edges_sql: str, n_iter: int = 3) -> str:
+    """Unrolled n-round synchronous min-tie LPA with self-vote in
+    DuckDB — the same integer recurrence as labelprop.label_propagation
+    (module contract), one CTE pair per round.  AS MATERIALIZED: without
+    it the unrolled self-reference re-evaluates exponentially."""
+    parts = [f"""
+        WITH e AS MATERIALIZED ({edges_sql}),
+        l0 AS MATERIALIZED (
+            SELECT node, node AS label FROM (
+                SELECT src AS node FROM e
+                UNION SELECT dst FROM e))"""]
+    for i in range(n_iter):
+        parts.append(f""",
+        v{i} AS MATERIALIZED (
+            SELECT node, label, count(*) AS cnt FROM (
+                SELECT e.dst AS node, l.label
+                FROM e JOIN l{i} l ON e.src = l.node
+                UNION ALL
+                SELECT node, label FROM l{i})
+            GROUP BY node, label),
+        l{i + 1} AS MATERIALIZED (
+            SELECT node, label FROM (
+                SELECT node, label,
+                       row_number() OVER (PARTITION BY node
+                           ORDER BY cnt DESC, label ASC) AS rn
+                FROM v{i}) WHERE rn = 1)""")
+    parts.append(f"""
+        SELECT node, CAST(label AS BIGINT) AS label
+        FROM l{n_iter} ORDER BY node""")
+    return "".join(parts)
 
 
 def _ref_lpa(edges, n_iter=None, max_iter=20):
@@ -135,15 +167,13 @@ def test_community_sizes_partitions_nodes(spark):
 
 
 def test_duckdb_unrolled_twin(spark):
-    """The board oracle's unrolled recurrence reproduces the engine on a
+    """The unrolled DuckDB recurrence reproduces the engine on a
     nontrivial graph (the cross-engine values-grade claim)."""
-    import __spark_entry__ as entry
-
     edges = TWO_CLIQUES + _undirected([(20, 21), (21, 22)])
     got = _run(spark, edges, n_iter=3)
     con = duckdb.connect()
     rows = ",".join(f"({s},{d})" for s, d in edges)
-    sql = entry._lpa_oracle_sql(
+    sql = _lpa_oracle_sql(
         f"SELECT * FROM (VALUES {rows}) t(src, dst)", n_iter=3)
     want = dict(con.execute(sql).fetchall())
     assert got == want

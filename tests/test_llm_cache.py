@@ -140,8 +140,9 @@ def test_duplicate_cache_rows_resolve_deterministically(spark, tmp_path):
 
 
 def test_cache_checkpoint_is_bounded(spark, tmp_path):
-    """Two pinned frames per call (the hash pre-pass and fresh-results
-    checkpoints, documented) — not one per input row or per cached row."""
+    """One pinned frame per call (the one-pass stage's eager checkpoint;
+    the bound leaves one of slack) — not one per input row or per cached
+    row."""
     from llmxmapreduce_spark.retention import pinned_ids, release
 
     sc = spark.sparkContext

@@ -18,12 +18,3 @@ def test_events_ts_is_timestamp(spark):
     row = ev.selectExpr("min(ts) AS lo", "max(ts) AS hi").collect()[0]
     assert row["lo"].year == 2024
 
-
-def test_entry_smoke(spark):
-    import __spark_entry__ as e
-
-    df = e.entry(spark)
-    assert df.count() > 0
-    qs, os_ = e.queries(), e.oracle_sql()
-    assert set(os_) <= set(qs)
-    assert len(qs) >= 18

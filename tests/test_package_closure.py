@@ -1,0 +1,101 @@
+"""The package is the paper's engine plus a listed operator library.
+
+The paper's queries are V1 ``answer(question, document)`` and V2/V3
+``survey(topic, papers)``.  This computes the static import closure of their
+entry points (imports inside functions count) and checks that every other
+module under ``llmxmapreduce_spark/`` is named in ``LIBRARY``: operators no
+paper query imports, kept while their own tests remain.  A listed module
+that is gone, or that a paper module now imports, fails too, so the list
+only ever records what is really outside.  No Spark.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+PKG = "llmxmapreduce_spark"
+
+ENTRY_POINTS = [f"{PKG}.pipelines.{m}" for m in (
+    "v1_qa", "v1_eval", "v2_survey", "v3_host", "search_crawl", "eval_suite")] + [
+    f"{PKG}.operators.stage_metrics", f"{PKG}.llm.survey_mock", f"{PKG}.session",
+    # prompts.get_module loads the two tables by name
+    f"{PKG}.prompts", f"{PKG}.prompts.prompts_en", f"{PKG}.prompts.prompts_zh",
+    # the survey input contract the V2 tests build their inputs from
+    f"{PKG}.schemas",
+]
+
+LIBRARY = {f"{PKG}.{m}" for m in """
+    functions.jpeg functions.minibpe functions.mp4 functions.png functions.wav
+    operators.bloom_join operators.bm25 operators.cdc operators.collocations
+    operators.constraints operators.dsir operators.funnel operators.fuzzy
+    operators.hll operators.html_clean operators.html_extractors
+    operators.io_layout operators.ivf operators.json_ops operators.justext
+    operators.kmeans operators.labelprop operators.langid operators.line_dedup
+    operators.lm_filter operators.media_dedup operators.mixing operators.moments
+    operators.multimodal operators.ordering operators.packing operators.pagerank
+    operators.pii operators.pq operators.qdigest operators.quality_classifier
+    operators.quality_filters operators.quantiles operators.report
+    operators.retention operators.setjoin operators.similarity operators.sketches
+    operators.skew operators.span_dedup operators.splits operators.substring_dedup
+    operators.temporal operators.textmatch operators.triangles operators.vocab
+    operators.zorder
+    pipelines.corpus_prep pipelines.dataset_build pipelines.media_prep
+    pipelines.presets
+    sources.bucketed sources.columnar sources.compaction sources.connectors
+    sources.jsonl sources.shards sources.warc sources.webdataset
+    streaming streaming.events streaming.ingest streaming.joins
+""".split()}
+
+
+def _modules() -> dict[str, Path]:
+    out = {}
+    for path in (REPO / PKG).rglob("*.py"):
+        parts = list(path.relative_to(REPO).with_suffix("").parts)
+        if parts[-1] == "__init__":
+            parts.pop()
+        out[".".join(parts)] = path
+    return out
+
+
+def _imports(name: str, path: Path, mods: dict[str, Path]) -> set[str]:
+    """Package modules ``name`` imports, with every parent package."""
+    pkg = name.split(".") if path.name == "__init__.py" else name.split(".")[:-1]
+    found = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            found.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = ".".join(pkg[:len(pkg) - node.level + 1] + [node.module or ""]
+                            ) if node.level else node.module
+            base = base.rstrip(".")
+            found.add(base)
+            found.update(f"{base}.{a.name}" for a in node.names)
+    parts = {".".join(m.split(".")[:i])
+             for m in found for i in range(1, m.count(".") + 2)}
+    return parts & mods.keys()
+
+
+def _closure(mods: dict[str, Path]) -> set[str]:
+    seen, todo = set(), list(ENTRY_POINTS)
+    while todo:
+        m = todo.pop()
+        if m not in seen:
+            seen.add(m)
+            todo.extend(_imports(m, mods[m], mods))
+    return seen
+
+
+def test_every_module_is_reached_or_listed():
+    mods = _modules()
+    reached = _closure(mods)
+    assert sorted(mods.keys() - reached - LIBRARY) == [], "unreached, unlisted"
+    assert sorted(LIBRARY - mods.keys()) == [], "listed but gone"
+    assert sorted(LIBRARY & reached) == [], "listed but a paper module imports it"
+
+
+def test_no_python_outside_package_perfbench_tests():
+    stray = [str(p.relative_to(REPO)) for p in REPO.rglob("*.py")
+             if p.relative_to(REPO).parts[0] not in (PKG, "perfbench", "tests")]
+    assert stray == []

@@ -8,6 +8,51 @@ import pytest
 from llmxmapreduce_spark.operators import pagerank as pr
 
 
+def _pagerank_oracle_sql(
+    edges_sql: str,
+    n_iter: int = 3,
+    num: int = 17,
+    den: int = 20,
+    scale: int = 10**9,
+) -> str:
+    """Unrolled n-iteration fixed-point PageRank in DuckDB — the same
+    integer recurrence as pagerank.pagerank (module contract), one CTE
+    trio per iteration."""
+    base = (scale * (den - num)) // den
+    # AS MATERIALIZED: without it DuckDB inlines every CTE reference, and
+    # the unrolled recurrence (r_i referenced by both dang_i and sin_i)
+    # re-evaluates r_{i-1} twice per level — exponential in n_iter.
+    parts = [f"""
+        WITH e AS MATERIALIZED ({edges_sql}),
+        nodes AS MATERIALIZED (SELECT DISTINCT node FROM
+                    (SELECT src AS node FROM e
+                     UNION ALL SELECT dst FROM e)),
+        nn AS (SELECT count(*) AS n FROM nodes),
+        deg AS MATERIALIZED (SELECT src, count(*) AS outdeg
+                             FROM e GROUP BY src),
+        r0 AS MATERIALIZED (SELECT node, CAST({scale} AS BIGINT) AS rank_q
+               FROM nodes)"""]
+    for i in range(n_iter):
+        p = f"r{i}"
+        parts.append(f""",
+        dang{i} AS (SELECT coalesce(sum(rank_q), 0) AS m FROM {p}
+                    WHERE node NOT IN (SELECT src FROM deg)),
+        sin{i} AS MATERIALIZED (SELECT e.dst AS node,
+                          sum(r.rank_q // d.outdeg) AS s
+                   FROM e JOIN {p} r ON e.src = r.node
+                        JOIN deg d ON e.src = d.src
+                   GROUP BY e.dst),
+        r{i + 1} AS MATERIALIZED (SELECT n.node,
+                       CAST({base} + ({num} * (coalesce(s.s, 0)
+                             + (dang{i}.m // nn.n))) // {den} AS BIGINT)
+                       AS rank_q
+                FROM nodes n
+                LEFT JOIN sin{i} s ON n.node = s.node
+                CROSS JOIN dang{i} CROSS JOIN nn)""")
+    parts.append(f"\n        SELECT node, rank_q FROM r{n_iter}")
+    return "".join(parts)
+
+
 def _ref_pagerank(edges, n_iter, num=17, den=20, scale=10**9):
     nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
     n = len(nodes)
@@ -79,10 +124,8 @@ def test_overflow_guard(spark):
 
 
 def test_duckdb_unrolled_twin(spark):
-    """The generated n-iteration SQL (same generator the board oracle
-    uses) replays the Spark fixed-point iterations value-for-value."""
-    from __spark_entry__ import _pagerank_oracle_sql
-
+    """The generated n-iteration DuckDB SQL replays the Spark fixed-point
+    iterations value-for-value."""
     edges = CYCLE_PLUS_DANGLE + STAR  # overlapping node ids on purpose
     got = sorted(_run(spark, edges, n_iter=3).items())
     con = duckdb.connect()

@@ -2,22 +2,24 @@
 that pass.  Checks predicate pushdown, column pruning, broadcast joins, and
 absence of cartesian products on the headline queries."""
 
-import __spark_entry__ as entrymod
+from pyspark.sql import functions as F
+
+from llmxmapreduce_spark import load_table
+from llmxmapreduce_spark.functions import text as X
+from tests.test_paper_oracles import _corpus_with_mutants, q_t1_topk_per_group
 
 SF = "/root/testdata/sf0.001"
 
 
-def plan_of(spark, name):
-    fn = entrymod.queries().get(name) or entrymod.RETIRED_QUERIES[name]
-    df = fn(spark, SF)
+def plan_of(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_filter_pushdown_reaches_scan(spark):
-    # p1 filter on documents: doc_id % 7 <> 0 can't push, but the scan must
-    # prune columns (only doc_id + text needed).
-    df = entrymod.RETIRED_QUERIES["p7_bibkey_normalize"](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    # P7 bibkey normalization reads doc_id + text only
+    d = load_table(spark, SF, "documents")
+    plan = plan_of(d.select(
+        "doc_id", X.normalize_bibkey(F.substring("text", 1, 50)).alias("bibkey")))
     assert "ReadSchema" in plan
     # column pruning: n_chars/source/lang must NOT be read
     read_schema = plan.split("ReadSchema:")[1].split("\n")[0]
@@ -25,18 +27,27 @@ def test_filter_pushdown_reaches_scan(spark):
 
 
 def test_partition_filter_pushdown(spark):
-    from pyspark.sql import functions as F
-
-    from llmxmapreduce_spark import load_table
-
     li = load_table(spark, SF, "lineitem").filter(F.col("l_quantity") > 49) \
         .select("l_orderkey", "l_quantity")
-    plan = li._jdf.queryExecution().executedPlan().toString()
+    plan = plan_of(li)
     assert "PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity,49.0)]" in plan
 
 
 def test_star_join_broadcasts_dims(spark):
-    plan = plan_of(spark, "j3_star_join_agg")
+    # J3-shaped bridge join: fact x dims with broadcast, per-region rollup
+    c = load_table(spark, SF, "customer")
+    o = load_table(spark, SF, "orders")
+    n = load_table(spark, SF, "nation")
+    r = load_table(spark, SF, "region")
+    dim = F.broadcast(
+        n.join(r, n.n_regionkey == r.r_regionkey).select("n_nationkey", "r_name"))
+    plan = plan_of(
+        o.join(c, o.o_custkey == c.c_custkey)
+        .join(dim, c.c_nationkey == dim.n_nationkey)
+        .groupBy("r_name")
+        .agg(F.count(F.lit(1)).alias("n_orders"),
+             F.sum(F.col("o_totalprice").cast("decimal(20,4)"))
+             .cast("double").alias("total_price")))
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan
 
@@ -44,38 +55,46 @@ def test_star_join_broadcasts_dims(spark):
 def test_lsh_neardup_no_cartesian(spark):
     # inspect the lazy plan (the query itself materializes via checkpoint,
     # which would hide the join operators)
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as em
     from llmxmapreduce_spark.operators import dedup
 
-    corpus = em._corpus_with_mutants(spark, SF)
+    corpus = _corpus_with_mutants(spark, SF)
     lazy = dedup.minhash_dedup_pairs(corpus, num_hashes=8, bands=4,
                                      threshold=0.5, materialize=False)
-    plan = lazy._jdf.queryExecution().executedPlan().toString()
+    plan = plan_of(lazy)
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
 
 
 def test_cosine_topk_broadcasts_queries(spark):
-    plan = plan_of(spark, "embedding_cosine_topk")
+    from llmxmapreduce_spark.operators import similarity
+
+    emb = load_table(spark, SF, "embeddings")
+    plan = plan_of(similarity.cosine_topk(emb, emb.filter("vec_id < 20"), k=5))
     # the small query side must broadcast; the corpus is scanned once
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
 def test_whole_stage_codegen_on_text_ops(spark):
-    plan = plan_of(spark, "p14_normalize_answer")
+    # P14 answer normalization
+    d = load_table(spark, SF, "documents")
+    plan = plan_of(d.select(
+        "doc_id", X.normalize_answer(F.substring("text", 1, 100)).alias("norm")))
     # '*(n)' marks whole-stage-codegen stages in the plan string
     assert "*(1)" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_topk_uses_single_window_pass(spark):
-    plan = plan_of(spark, "t1_topk_per_group")
+    plan = plan_of(q_t1_topk_per_group(spark, SF))
     assert plan.count("Window") >= 1
     assert "CartesianProduct" not in plan
 
 
 def test_t3_topn_is_take_ordered(spark):
-    plan = plan_of(spark, "t3_topn")
+    # T3 url top-n shape (reference: LLM_search.py:441-443)
+    p = load_table(spark, SF, "part")
+    plan = plan_of(
+        p.orderBy(F.col("p_retailprice").desc(), F.col("p_partkey").asc())
+        .limit(10)
+        .select("p_partkey", "p_name", "p_retailprice"))
     assert "TakeOrderedAndProject" in plan  # no full sort for global top-n

@@ -127,9 +127,8 @@ def test_adc_recall_vs_exact(spark, data):
 
 
 def test_duckdb_encode_twin(spark, data):
-    """pq_encode with seed-row codebooks replayed in DuckDB (the board
-    `pq_encode` contract): per-subspace argmin over quantized-int
-    distances, ties → lowest code."""
+    """pq_encode with seed-row codebooks replayed in DuckDB: per-subspace
+    argmin over quantized-int distances, ties → lowest code."""
     df, pts = data
     # codebooks = subvectors of the first 8 rows (SQL-derivable)
     books = np.stack(

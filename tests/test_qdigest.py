@@ -11,6 +11,40 @@ import pytest
 from llmxmapreduce_spark.operators import qdigest as qd
 
 
+def _qdigest_oracle_sql(values_sql: str, k: int = 10, tau: int = 50) -> str:
+    """Unrolled bottom-up q-digest compression in DuckDB — the same
+    integer recurrence as qdigest._compress (module contract), one CTE
+    trio per level; values_sql yields one pre-universe column v (the
+    oracle clamps like the engine does)."""
+    top = (1 << k) - 1
+    parts = [f"""
+        WITH vals AS MATERIALIZED ({values_sql}),
+        cur{k} AS MATERIALIZED (
+            SELECT {1 << k} + least(greatest(CAST(v AS BIGINT), 0), {top})
+                       AS node,
+                   CAST(count(*) AS BIGINT) AS cnt
+            FROM vals WHERE v IS NOT NULL GROUP BY 1)"""]
+    for lvl in range(k, 0, -1):
+        parts.append(f""",
+        fam{lvl} AS MATERIALIZED (
+            SELECT node // 2 AS p, CAST(SUM(cnt) AS BIGINT) AS s
+            FROM cur{lvl} GROUP BY node // 2),
+        keep{lvl} AS (
+            SELECT c.node, c.cnt FROM cur{lvl} c
+            JOIN fam{lvl} f ON c.node // 2 = f.p WHERE f.s > {tau}),
+        cur{lvl - 1} AS MATERIALIZED (
+            SELECT p AS node, s AS cnt FROM fam{lvl}
+            WHERE s <= {tau} AND s > 0)""")
+    union = "\n            UNION ALL ".join(
+        [f"SELECT node, cnt FROM keep{lvl}" for lvl in range(k, 0, -1)]
+        + ["SELECT node, cnt FROM cur0"])
+    parts.append(f"""
+        SELECT node, cnt FROM (
+            {union}
+        ) ORDER BY node""")
+    return "".join(parts)
+
+
 def _ref_qdigest(values, k, tau):
     """Sibling-pair bottom-up compression (module contract)."""
     top = (1 << k) - 1
@@ -134,9 +168,8 @@ def test_null_values_dropped_both_paths(spark):
               for r in qd.qdigest(df, "v", k=4, tau=1,
                                   clamp=False).collect()}
     assert strict == d
-    # and the board oracle agrees (NULL never reaches the clamp)
-    import __spark_entry__ as entry
-    sql = entry._qdigest_oracle_sql(
+    # and the DuckDB recurrence agrees (NULL never reaches the clamp)
+    sql = _qdigest_oracle_sql(
         "SELECT v FROM (VALUES (0),(NULL),(15),(NULL)) t(v)", k=4, tau=1)
     assert dict(duckdb.connect().execute(sql).fetchall()) == d
 
@@ -162,14 +195,12 @@ def test_bad_params_raise(spark):
 
 
 def test_duckdb_unrolled_twin(spark):
-    """The board oracle's unrolled recurrence reproduces the engine."""
-    import __spark_entry__ as entry
-
+    """The unrolled DuckDB recurrence reproduces the engine."""
     k, tau = 6, 9
     vals = [min(v, 63) for v in ZIPFISH[:800]]
     got = _build(spark, vals, k, tau)
     rows = ",".join(f"({v})" for v in vals)
-    sql = entry._qdigest_oracle_sql(
+    sql = _qdigest_oracle_sql(
         f"SELECT v FROM (VALUES {rows}) t(v)", k=k, tau=tau)
     want = dict(duckdb.connect().execute(sql).fetchall())
     assert got == want

@@ -85,7 +85,7 @@ ORDER BY s.doc_id
 
 def test_duckdb_twin_on_testdata(spark):
     """Values-match vs an independent DuckDB formulation over real docs —
-    same rigor as the board oracles (the 50-entry board is full)."""
+    same rigor as test_paper_oracles.py."""
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     got = {
         r["doc_id"]: r.asDict()

@@ -112,12 +112,12 @@ def test_pattern_count_independence_shape(spark):
 
 
 def test_duckdb_twin(spark):
-    """Board-oracle shape: exploded (doc_id, pattern) hits equal the
-    DuckDB contains() replay on real corpus text."""
-    import __spark_entry__ as e
+    """Exploded (doc_id, pattern) hits equal the DuckDB contains() replay
+    on real corpus text."""
+    from llmxmapreduce_spark import load_table
 
     sf = "/root/testdata/sf0.001"
-    d = e.load_table(spark, sf, "documents")
+    d = load_table(spark, sf, "documents")
     pats = ["data window", "fast merge", "agg join", "table part",
             "table", "customer"]
     got = sorted((r["doc_id"], r["pattern"]) for r in

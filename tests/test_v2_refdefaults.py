@@ -99,12 +99,10 @@ def test_layer_seeds_are_diverse(spark):
 
 
 # ---------------------------------------------------------------------------
-# Golden-transcript hash gate.  v2_survey_refdefaults is bench-only (not on
-# the driver's 50-entry oracle board — see __spark_entry__.queries()), so THIS
-# test is its correctness gate: the survey mock is prompt-hash deterministic,
-# making the scalar projection reproducible bit-for-bit at a fixed input.
-# Frozen at sf0.01 (doc_id < 256) — the same freeze discipline as the
-# GOLDEN_DOC_FP oracles for its two board siblings.
+# Golden-transcript hash gate: the survey mock is prompt-hash deterministic,
+# so the scalar projection of the 8 x 32 survey at the reference knobs is
+# reproducible bit-for-bit at a fixed input.  Frozen at sf0.01
+# (doc_id < 256); REFDEFAULTS_DOC_FP pins that input.
 # ---------------------------------------------------------------------------
 REFDEFAULTS_GOLDEN_SF = "/root/testdata/sf0.01"
 REFDEFAULTS_DOC_FP = "55b52699500e24061a28539377553858"
@@ -120,30 +118,38 @@ REFDEFAULTS_GOLDEN = [
 ]
 
 
-def test_reference_defaults_golden_transcript(spark):
+def _golden_rows(spark, golden_name, **extra_knobs):
+    """The 8 x 32 survey over sf0.01 documents (paper i of survey i % 8),
+    run at REF_KNOBS plus ``extra_knobs``; skips when the input is absent
+    or not the one the golden rows were frozen from."""
     import os
 
+    import pytest
     from pyspark.sql import functions as F
 
-    import __spark_entry__ as em
+    from tests.test_paper_oracles import doc_surveys, text_fingerprint
 
     if not os.path.isdir(REFDEFAULTS_GOLDEN_SF):
-        import pytest
-
         pytest.skip("sf0.01 testdata not present")
-    d = em.load_table(spark, REFDEFAULTS_GOLDEN_SF, "documents").filter(
-        "doc_id < 256")
-    fp = (d.agg(F.md5(F.concat_ws("|", F.transform(
-        F.sort_array(F.collect_list(F.struct("doc_id", "text"))),
-        lambda s: s["text"]))).alias("fp")).collect()[0]["fp"])
+    d = spark.read.parquet(f"{REFDEFAULTS_GOLDEN_SF}/documents.parquet") \
+        .filter("doc_id < 256")
+    fp = text_fingerprint(d)
     if fp != REFDEFAULTS_DOC_FP:
-        import pytest
-
         pytest.skip(f"sf0.01 documents regenerated (fp {fp}); re-freeze "
-                    "REFDEFAULTS_GOLDEN before trusting this gate")
-    rows = (em.q_v2_survey_refdefaults(spark, REFDEFAULTS_GOLDEN_SF)
-            .orderBy("survey_id").collect())
-    assert [tuple(r) for r in rows] == REFDEFAULTS_GOLDEN
+                    f"{golden_name} before trusting this gate")
+    surveys = doc_surveys(d, 8)
+    cfg = v2.V2Config(**REF_KNOBS, **extra_knobs)
+    out = v2.run_v2_survey(surveys, MockSurveyClient, cfg)
+    rows = out.select(
+        "survey_id", "n_sections", "n_papers", "cite_ratio",
+        F.length("content_md").alias("content_len"),
+        "block_cycle_count",
+    ).orderBy("survey_id").collect()
+    return [tuple(r) for r in rows]
+
+
+def test_reference_defaults_golden_transcript(spark):
+    assert _golden_rows(spark, "REFDEFAULTS_GOLDEN") == REFDEFAULTS_GOLDEN
 
 
 FULLPROMPTS_GOLDEN = [
@@ -159,29 +165,8 @@ FULLPROMPTS_GOLDEN = [
 
 
 def test_fullprompts_golden_transcript(spark):
-    """Same gate for the verbatim-reference-prompts bench line
-    (full_prompts=True at refdefaults knobs): prompt-hash determinism holds
-    across the 5-10× larger prompt texts too."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as em
-
-    if not os.path.isdir(REFDEFAULTS_GOLDEN_SF):
-        import pytest
-
-        pytest.skip("sf0.01 testdata not present")
-    d = em.load_table(spark, REFDEFAULTS_GOLDEN_SF, "documents").filter(
-        "doc_id < 256")
-    fp = (d.agg(F.md5(F.concat_ws("|", F.transform(
-        F.sort_array(F.collect_list(F.struct("doc_id", "text"))),
-        lambda s: s["text"]))).alias("fp")).collect()[0]["fp"])
-    if fp != REFDEFAULTS_DOC_FP:
-        import pytest
-
-        pytest.skip(f"sf0.01 documents regenerated (fp {fp}); re-freeze "
-                    "FULLPROMPTS_GOLDEN before trusting this gate")
-    rows = (em.q_v2_survey_fullprompts(spark, REFDEFAULTS_GOLDEN_SF)
-            .orderBy("survey_id").collect())
-    assert [tuple(r) for r in rows] == FULLPROMPTS_GOLDEN
+    """Same gate with the reference's verbatim prompt templates
+    (full_prompts=True at the reference knobs): prompt-hash determinism
+    holds across the 5-10x larger prompt texts too."""
+    assert (_golden_rows(spark, "FULLPROMPTS_GOLDEN", full_prompts=True)
+            == FULLPROMPTS_GOLDEN)
