@@ -4,10 +4,12 @@ OpenAI-compatible client for production (import-gated; no network in CI).
 Reference parity:
 - retry policy — request/openai.py:22-26 (100 attempts, exp backoff ≤60 s);
   here configurable, default 3 for tests.
-- per-model concurrency — request/wrapper.py:17-23 Semaphore(20); here a
-  thread pool inside ``complete_batch`` (per Spark partition, so cluster-wide
-  concurrency = partitions × pool size, tuned by repartitioning the LLM
-  stage's input).
+- per-model concurrency — request/wrapper.py:17-23 Semaphore(20).  The
+  pipelines' ``llm_stage`` calls ``complete()`` one row at a time inside
+  each Spark task, so calls in flight = running tasks (tuned by the LLM
+  stage's input partitioning); V2's per-survey stages add
+  ``V2Config.llm_threads`` calls per task.  ``complete_batch``'s thread
+  pool is for direct callers; no pipeline uses it.
 """
 
 from __future__ import annotations

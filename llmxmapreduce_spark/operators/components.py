@@ -24,7 +24,7 @@ scheme on RDDs; this is a dependency-free DataFrame formulation.
 
 Scale notes (100 TB case):
 - Shuffles carry (id, id) pairs only — never document text.
-- Lineage is cut with an eager ``localCheckpoint`` per round; iterative
+- Lineage is cut with an eager checkpoint per round; iterative
   self-referential plans otherwise grow exponentially.
 - Convergence is detected with an O(|E|) aggregate fingerprint
   (count + sum of xxhash64) that rides the round's checkpoint action as
@@ -42,7 +42,8 @@ import sys
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
-from llmxmapreduce_spark.retention import pinned_ids, release
+
+from llmxmapreduce_spark.retention import checkpoint, owned, release
 
 
 def _symmetrize(e: DataFrame) -> DataFrame:
@@ -116,51 +117,38 @@ def connected_components(
     Ids may be any orderable type (long, string); they are never hashed or
     re-keyed, so labels are directly joinable back to the source table.
     """
-    # Per-round checkpoint release (labelprop/pagerank discipline — r12
-    # audit): the old `e.unpersist()` was a silent NO-OP for block
-    # release (DataFrame.unpersist talks to the cache manager, which
-    # knows nothing of localCheckpoint RDDs), so every call pinned
-    # rounds+1 truncated-lineage edge frames for the session's lifetime
-    # (measured: 4 blocks leaked by one tiny call).  Release goes
-    # through getPersistentRDDs id-diffs instead.  The INITIAL
-    # checkpoint stays pinned: it is the first scan of `edges`, so a
-    # caller cache with lazy registration lands inside its diff and
-    # must not be swept — ≤2 pinned frames per call (initial + final).
+    # Per-round checkpoint release: DataFrame.unpersist() is a NO-OP for
+    # localCheckpoint blocks (it talks to the cache manager), so without
+    # retention.release every call would pin rounds+1 truncated-lineage
+    # edge frames for the session's lifetime.  The initial checkpoint
+    # stays pinned — ≤2 pinned frames per call (initial + final).  An
+    # exception mid-loop releases the live round too.
     sc = edges.sparkSession.sparkContext
-
-
-    e = (
+    e = checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     prev = None
     prev_ids: set = set()    # round 0 = the initial checkpoint: kept
-    # try/except (r13 ADVICE): an exception mid-loop must not leave the
-    # current round's blocks pinned for the session — nothing is
-    # returned on the error path, so the tracked round ids (never the
-    # initial shield checkpoint) are releasable.
     try:
         for _ in range(max_iter):
-            snap = pinned_ids(sc)
             # convergence fingerprint rides the checkpoint action as an
             # observe metric — one job per round instead of checkpoint +
             # a second agg job over the checkpointed blocks (r13).
             # Sum in decimal(38,0): a long sum of 64-bit hashes
             # overflows under ANSI mode.
             obs = Observation()
-            e2 = (
-                _small_star(_large_star(e))
-                .observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.xxhash64("u", "v").cast("decimal(38,0)"))
-                    .alias("h"),
+            with owned() as new_ids:
+                e2 = checkpoint(
+                    _small_star(_large_star(e))
+                    .observe(
+                        obs,
+                        F.count(F.lit(1)).alias("n"),
+                        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)"))
+                        .alias("h"),
+                    )
                 )
-                .localCheckpoint(eager=True)
-            )
-            new_ids = pinned_ids(sc) - snap
             # e2 is materialized — the previous round's blocks (never the
             # initial scan's) had their last read and can go
             release(sc, prev_ids)

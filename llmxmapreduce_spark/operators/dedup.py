@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from llmxmapreduce_spark.retention import checkpoint
+
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
@@ -428,7 +430,7 @@ def minhash_dedup_pairs(
     # Shingling + signatures feed BOTH the bucket join (twice, as left and
     # right) and the verify join — persist so the expensive md5/xxhash pass
     # over the full corpus runs once, not four times.  The cache is released
-    # before returning (the result is materialized via localCheckpoint, so
+    # before returning (the result is materialized via a checkpoint, so
     # repeated calls don't pin corpus-sized blocks for the session's life).
     if family == "int60":
         # no gram strings at all: one portable md5 per WORD, shingle
@@ -482,7 +484,7 @@ def minhash_dedup_pairs(
     if not materialize:
         return pairs
     try:
-        return pairs.localCheckpoint(eager=True)
+        return checkpoint(pairs)
     finally:
         base.unpersist()
 
@@ -629,7 +631,7 @@ def minhash_dedup_incremental(
         losers = comp.filter(F.col("id") != F.col("component")).select(
             F.col("id").alias(id_col)
         )
-        drop = vs_corpus.unionByName(losers).distinct().localCheckpoint(eager=True)
+        drop = checkpoint(vs_corpus.unionByName(losers).distinct())
     finally:
         new_base.unpersist()
         corpus_base.unpersist()

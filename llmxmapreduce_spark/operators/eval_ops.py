@@ -161,9 +161,10 @@ def llm_dedup_claims(
     deterministic :func:`dedup_claims` (MinHash) path — that is the 100 TB
     contract; this mode exists for reference parity of SurveyEval's
     Claim-Num metric."""
-    from llmxmapreduce_spark.llm.client import RetryPolicy, call_with_retry
+    from llmxmapreduce_spark.llm.client import call_with_retry
+    from llmxmapreduce_spark.operators.llm_op import _resolve_retry
 
-    retry = retry or RetryPolicy()
+    retry = _resolve_retry(client_factory, retry)
     out_schema = T.StructType([
         claims.schema[survey_col],
         claims.schema[id_col],

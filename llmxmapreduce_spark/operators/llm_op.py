@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from llmxmapreduce_spark.llm.client import LLMClient, RetryPolicy, call_with_retry
+from llmxmapreduce_spark.retention import checkpoint
 
 LLM_COLS = [
     T.StructField("llm_ok", T.BooleanType(), False),
@@ -292,13 +293,15 @@ def llm_stage_cached(
     Spark broadcasts the cache side while it is small), repartitioned on
     the hash to ``spark.sql.shuffle.partitions`` tasks, and one
     ``mapInPandas`` replays hits and calls the model for misses.  That
-    frame is eagerly localCheckpointed — the upstream plan and the model
-    calls run exactly once, for the returned rows AND the cache append,
-    which reads the checkpoint and is skipped when nothing is fresh.
-    The one pinned frame stays until the caller's own retention boundary
-    releases it.  The explicit partition count is what keeps the model
-    calls parallel: AQE may coalesce a count-less repartition of a small
-    miss set into one task that would call the model serially.
+    frame is an eager :func:`~llmxmapreduce_spark.retention.checkpoint`
+    — the upstream plan and the model calls run exactly once, for the
+    returned rows AND the cache append, which reads the checkpoint and is
+    skipped when nothing is fresh.  The call leaves that one frame pinned;
+    a caller that wraps it in ``retention.owned()`` gets its id and
+    releases it once the rows have been read.  The explicit partition
+    count is what keeps the model calls parallel: AQE may coalesce a
+    count-less repartition of a small miss set into one task that would
+    call the model serially.
 
     Scale: the cache join is an equi-join on a 16-byte hash (broadcast
     while the cache is small, shuffle-on-hash after), the append is an
@@ -365,8 +368,7 @@ def llm_stage_cached(
             fresh_rows.add(sum(r[_FRESH_COL] for r in out_rows))
             yield pd.DataFrame(out_rows, columns=out_names)
 
-    done = routed.mapInPandas(run, schema=out_schema) \
-        .localCheckpoint(eager=True)
+    done = checkpoint(routed.mapInPandas(run, schema=out_schema))
     if fresh_rows.value:
         done.filter(_FRESH_COL).select(
             PROMPT_HASH_COL, *payload_names, "llm_attempts"

@@ -35,7 +35,7 @@ from llmxmapreduce_spark.functions import text as X
 from llmxmapreduce_spark.llm.client import LLMClient, RetryPolicy
 from llmxmapreduce_spark.operators import chunker
 from llmxmapreduce_spark.operators.llm_op import llm_stage, llm_stage_cached
-from llmxmapreduce_spark.retention import pinned_ids, release
+from llmxmapreduce_spark.retention import checkpoint, owned, release
 
 MAX_NEW_TOKENS = 300  # gen_args.get('max_tokens', 300), Generator.py:350
 
@@ -118,13 +118,17 @@ def run_v1_qa(
     work from ``{dir}/map`` / ``{dir}/reduce`` instead of re-calling
     the model (per-stage subdirs because the payload schemas differ).
     The collapse stage stays uncached on purpose: its inputs are
-    intermediate merges that only repeat on byte-identical re-runs,
-    and each in-loop cached call would pin a checkpoint frame the
-    round-release ledger does not track.  Each cached stage is one pass
-    over its input — cache join, hash repartition, one model/replay
-    ``mapInPandas`` — and pins one bounded frame for the call: its
-    eager checkpoint, which also feeds the cache append (llm_op.py
-    contract).
+    intermediate merges that only repeat on byte-identical re-runs.
+    Each cached stage is one pass over its input — cache join, hash
+    repartition, one model/replay ``mapInPandas`` — and leaves one
+    bounded frame pinned: its eager checkpoint, which also feeds the
+    cache append.
+
+    Retention: the call leaves pinned the map cut, the last collapse
+    round's cut and each cached stage's frame; superseded rounds are
+    released inside the call.  A caller that wraps the call in
+    ``retention.owned()`` gets exactly those ids, to release once it has
+    read the result, even while other requests share the session.
     """
     spark = docs.sparkSession
     map_tmpl = (prompts or {}).get("map", MAP_PROMPT)
@@ -180,15 +184,10 @@ def run_v1_qa(
     # map LLM stage executed 2× per run with no collapse and 3× in a
     # collapse round (measured via the map accumulator: 1804 calls for
     # 902 chunks on the sf0.01 documents).  One chunk-bounded eager cut runs
-    # it once.  Retention: as the first materialization of the whole
-    # upstream plan this cut TAKES OVER the caller-cache-shield role that
-    # round 1's loop checkpoint used to play (that checkpoint is now
-    # releasable once round 2 supersedes it); it stays pinned for the
-    # call, same bounded class as v2's decode section cut.
+    # it once; it stays pinned for the call, same bounded class as v2's
+    # decode section cut.
     sc = docs.sparkSession.sparkContext
-    _m_snap = pinned_ids(sc)
-    state = state.localCheckpoint(eager=True)
-    shield: set = pinned_ids(sc) - _m_snap    # map cut + caller caches
+    state = checkpoint(state)
     if stage_metrics is not None:
         stage_metrics.materialized("map")
 
@@ -224,19 +223,13 @@ def run_v1_qa(
         ]
         return pd.DataFrame(rows, columns=[f.name for f in pack_schema.fields])
 
-    # Prior-round checkpoint release (labelprop/pagerank discipline, r12
-    # audit): each round's eager checkpoint supersedes the previous
-    # round's — without a release the loop pins rounds × |chunks| rows
-    # of truncated-lineage blocks for the session.  The caller-cache
-    # shield is the pre-loop map cut above (r13), so every superseded
-    # round checkpoint — including round 1's — is released
-    # (≤2 pinned frames per call: the map cut + the live round).
+    # Prior-round checkpoint release: each round's eager checkpoint
+    # supersedes the previous round's — without a release the loop pins
+    # rounds × |chunks| rows of truncated-lineage blocks for the session
+    # (≤2 pinned frames per call: the map cut + the live round).  An
+    # exception mid-loop (executor loss, a failing LLM stage) releases
+    # the live round too.
     prev_ids: set = set()
-    # try/except (r13 ADVICE, mirroring operators/pagerank.py): an
-    # exception mid-loop (executor loss, a failing LLM stage) must not
-    # leave the current round's checkpoint pinned for the session; the
-    # caller-cache shield stays out of the error release like the
-    # success path's.
     try:
         for _ in range(max_collapse_rounds):
             w = Window.partitionBy("doc_id").orderBy("chunk_id")
@@ -269,17 +262,16 @@ def run_v1_qa(
             new_chunks = _keep_informative(merged.filter("llm_ok")).select(
                 "doc_id", F.col("group_id").alias("chunk_id"), "question", "text"
             )
-            # localCheckpoint: cut the per-round lineage so the loop's plan
-            # doesn't grow superlinearly (bounded driver loop, SURVEY.md §7).
-            snap = pinned_ids(sc)
-            state = ok_chunks.unionByName(new_chunks).localCheckpoint(eager=True)
-            new_ids = pinned_ids(sc) - snap
-            release(sc, prev_ids - shield)
+            # cut the per-round lineage so the loop's plan doesn't grow
+            # superlinearly (bounded driver loop, SURVEY.md §7)
+            with owned() as new_ids:
+                state = checkpoint(ok_chunks.unionByName(new_chunks))
+            release(sc, prev_ids)
             prev_ids = new_ids
             if stage_metrics is not None:
                 stage_metrics.materialized("collapse")
     except BaseException:
-        release(sc, prev_ids - shield)
+        release(sc, prev_ids)
         raise
 
     # --- A2/L3 reduce --------------------------------------------------------

@@ -50,8 +50,8 @@ from llmxmapreduce_spark.llm.client import RetryPolicy, call_with_retry
 from llmxmapreduce_spark.operators import digest_ops, grouping, sampling, skeleton
 from llmxmapreduce_spark.operators.citations import cite_ratio as a7_cite_ratio
 from llmxmapreduce_spark.operators.citations import references_block, renumber_citations
-from llmxmapreduce_spark.operators.llm_op import llm_stage
-from llmxmapreduce_spark.retention import pinned_ids, release
+from llmxmapreduce_spark.operators.llm_op import _resolve_retry, llm_stage
+from llmxmapreduce_spark.retention import checkpoint, owned, release
 
 
 @dataclass
@@ -84,7 +84,7 @@ class V2Config:
     # over unchanged papers/outlines replays digests from
     # ``{dir}/digest`` instead of re-calling the model; cycle-2 prompts
     # embed the refined outline, so they miss (and populate) naturally.
-    # run_v2_survey tracks the cached stage's one eager frame per call
+    # run_v2_survey owns the cached stage's one eager frame per call
     # and releases it once the cycle's digest checkpoint supersedes it.
     # Default off; byte-identity with the uncached path is gated by
     # tests/test_v2_cache.py.
@@ -787,7 +787,7 @@ def conv_refine(outlines: DataFrame, suggestions: DataFrame,
     client — one survey-keyed exchange per cycle.  A survey whose every
     conv chain died emits no row.  → (``_CONV_SCHEMA``) one refined
     outline per survey."""
-    retry = retry or RetryPolicy()
+    retry = _resolve_retry(client_factory, retry)
     cands = suggestions.join(
         F.broadcast(outlines.select("survey_id", "survey_title", "outline_md",
                                     "block_avg_score", "self_refine_score",
@@ -804,6 +804,30 @@ def conv_refine(outlines: DataFrame, suggestions: DataFrame,
         return pd.DataFrame([_refine_group_py(client, retry, cfg, ps, best)])
 
     return cands.groupBy("survey_id").applyInPandas(run, _CONV_SCHEMA)
+
+
+def unrefined_state(outlines: DataFrame) -> DataFrame:
+    """The block loop's state before any cycle: each survey's outline with
+    no eval score and empty score bookkeeping (``_CONV_SCHEMA`` rows)."""
+    return outlines.select(
+        "survey_id", "survey_title", "outline_md",
+        F.lit(None).cast("double").alias("eval_score"),
+        F.lit("[]").alias("block_avg_score"),
+        F.lit("[]").alias("self_refine_score"),
+        F.lit("[]").alias("conv_pool_sizes"),
+    )
+
+
+def typed_scores(state: DataFrame) -> DataFrame:
+    """Lift the JSON score bookkeeping back into typed nested arrays, once
+    no pandas boundary remains (see the ``_CONV_SCHEMA`` note)."""
+    return state.withColumn(
+        "block_avg_score", F.from_json("block_avg_score", _BLOCK_SCORES)
+    ).withColumn(
+        "self_refine_score", F.from_json("self_refine_score", _REFINE_SCORES)
+    ).withColumn(
+        "conv_pool_sizes", F.from_json("conv_pool_sizes", _POOL_SIZES)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -830,7 +854,7 @@ def decode_survey(final_outline: DataFrame, digests: DataFrame, papers: DataFram
     bottom-up, summarizing parents from their children and polishing
     (content.py:139-146 ready-queue semantics, without the level-synchronous
     global barrier: each survey proceeds independently)."""
-    retry = retry or RetryPolicy()
+    retry = _resolve_retry(client_factory, retry)
     ps = _prompt_set(cfg)
     outline_meta = final_outline.select("survey_id", "survey_title",
                                         "outline_md")
@@ -961,10 +985,10 @@ def decode_survey(final_outline: DataFrame, digests: DataFrame, papers: DataFram
     # (measured: the decode LLM accumulator showed 768 calls for 256
     # leaves).  One section-bounded checkpoint runs them once.
     # Retention: run_v2_survey releases it once `out` is checkpointed;
-    # v3_host's per-tool snapshot diff releases it at close(); direct
-    # callers keep one bounded frame per call (same class as the final
-    # digest cut).
-    done = done.localCheckpoint(eager=True)
+    # the V3 host owns it through its per-tool scope and releases it at
+    # close(); other callers keep one bounded frame per call (same class
+    # as the final digest cut).
+    done = checkpoint(done)
 
     tail = decode_tail(done, papers)
     return (
@@ -1039,9 +1063,11 @@ def run_v2_survey(surveys: DataFrame, client_factory,
     per-layer convolution detail in with
     ``stage_metrics.record_v2_layers(rows)``.
 
-    The returned frame is an eager checkpoint; the caller owns its
-    release, as it does the papers, outlines, final refined outline and
-    final digest checkpoints the run leaves pinned.
+    The returned frame is an eager checkpoint.  The run leaves it pinned
+    together with the papers, outlines, final refined outline and final
+    digest checkpoints; a caller that wraps the call in
+    ``retention.owned()`` gets exactly those ids to release once it has
+    read the result.
     """
     cfg = cfg or V2Config()
     sm = stage_metrics
@@ -1053,25 +1079,25 @@ def run_v2_survey(surveys: DataFrame, client_factory,
     def cut(stage: str, df: DataFrame, observe: bool = True) -> tuple[DataFrame, set]:
         """Eagerly checkpoint ``df`` as the end of ``stage`` (rows-out
         observed on the way in, wall time stamped once materialized);
-        → (the checkpoint, the frame ids it pinned)."""
+        → (the checkpoint, its frame id)."""
         if sm is not None and observe:
             df = sm.observe(stage, df)
-        snap = pinned_ids(sctx)
-        df = df.localCheckpoint(eager=True)
+        with owned() as ids:
+            df = checkpoint(df)
         if sm is not None:
             sm.materialized(stage)
-        return df, pinned_ids(sctx) - snap
+        return df, ids
 
     def digest_pass(outline_df: DataFrame) -> tuple[DataFrame, set]:
         """L7→A3 digests against ``outline_df`` → (digests, the frame ids
         the digest stage pinned).  The ids are non-empty only with
         ``cfg.llm_cache_dir``: the cached stage runs EAGERLY and pins one
-        bounded frame (llm_op.py contract); the next digest checkpoint is
-        its last reader, so it is released right after that."""
-        snap = pinned_ids(sctx)
-        digests, _dead = make_digests(grouped, outline_df, client_factory,
-                                      cfg, retry, metrics=llm("digest"))
-        return digests, pinned_ids(sctx) - snap
+        bounded frame; the next digest checkpoint is its last reader, so it
+        is released right after that."""
+        with owned() as ids:
+            digests, _dead = make_digests(grouped, outline_df, client_factory,
+                                          cfg, retry, metrics=llm("digest"))
+        return digests, ids
 
     cache_ids: set = set()
     try:
@@ -1080,22 +1106,14 @@ def run_v2_survey(surveys: DataFrame, client_factory,
         outlines, _ = cut("outline", init_outlines(
             grouped, client_factory, cfg, retry, metrics=llm("outline")))
         digests, cache_ids = digest_pass(outlines)
-        cur = outlines.select(
-            "survey_id", "survey_title", "outline_md",
-            F.lit(None).cast("double").alias("eval_score"),
-            F.lit("[]").alias("block_avg_score"),
-            F.lit("[]").alias("self_refine_score"),
-            F.lit("[]").alias("conv_pool_sizes"),
-        )
-        # Per-cycle checkpoint release (labelprop/pagerank discipline,
-        # r12 audit): cycle N's refined-outline checkpoint is the LAST
-        # reader of cycle N−1's `cur` blocks and of cycle N's own
-        # digest checkpoint (suggestions → conv_refine materialize into
-        # it), so both are released right after it — otherwise the loop
-        # pins 2 × block_count survey-bounded frames per run for the
-        # session.  Pre-loop checkpoints (papers, outlines) stay: papers
-        # is re-read via `grouped` every cycle and is the caller-cache
-        # shield (first materialization of the surveys plan).
+        cur = unrefined_state(outlines)
+        # Per-cycle checkpoint release: cycle N's refined-outline
+        # checkpoint is the LAST reader of cycle N−1's `cur` blocks and of
+        # cycle N's own digest checkpoint (suggestions → conv_refine
+        # materialize into it), so both are released right after it —
+        # otherwise the loop pins 2 × block_count survey-bounded frames
+        # per run for the session.  Pre-loop checkpoints (papers,
+        # outlines) stay: papers is re-read via `grouped` every cycle.
         prev_cur_ids: set = set()   # cur_0 is lazy over outlines: no blocks
         for _cycle in range(cfg.block_count):
             digests, digest_ids = cut("digest", digests, observe=False)
@@ -1113,21 +1131,11 @@ def run_v2_survey(surveys: DataFrame, client_factory,
         # accumulate across passes)
         digests, _ = cut("digest", digests)
         release(sctx, cache_ids)
-        # lift the JSON score bookkeeping back into typed nested arrays now
-        # that no pandas boundary remains (see _CONV_SCHEMA note)
-        cur = cur.withColumn(
-            "block_avg_score", F.from_json("block_avg_score", _BLOCK_SCORES)
-        ).withColumn(
-            "self_refine_score", F.from_json("self_refine_score", _REFINE_SCORES)
-        ).withColumn(
-            "conv_pool_sizes", F.from_json("conv_pool_sizes", _POOL_SIZES)
-        )
-        snap = pinned_ids(sctx)
-        out = decode_survey(
-            cur, digests, papers, client_factory, cfg, retry,
-            metrics=llm("decode"),
-        ).withColumn("block_cycle_count", F.lit(cfg.block_count))
-        done_ids = pinned_ids(sctx) - snap   # decode_survey's `done` cut
+        with owned() as done_ids:            # decode_survey's `done` cut
+            out = decode_survey(
+                typed_scores(cur), digests, papers, client_factory, cfg,
+                retry, metrics=llm("decode"),
+            ).withColumn("block_cycle_count", F.lit(cfg.block_count))
         out, _ = cut("decode", out)
         release(sctx, done_ids)              # `out` was its only reader
         return out

@@ -43,6 +43,8 @@ import re
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
+from llmxmapreduce_spark.retention import checkpoint, owned, release
+
 __all__ = [
     "ToolParam",
     "ToolSpec",
@@ -235,21 +237,11 @@ class V3Host:
         self.state: dict[str, Any] = {}          # the "survey" the host carries
         self.operation_history: list[dict[str, Any]] = []
         self.conversation_history: list[dict[str, str]] = []
-        # Checkpoint retention (each e2e run used to pin ~6
-        # localCheckpoint frames for the session).
-        # make_spark_host sets _spark; _run_tool then snapshot-diffs the
-        # JVM persistent-RDD registry around each tool call and close()
-        # releases the accumulated ids — the retention.py discipline.
+        # Checkpoint retention: _run_tool collects the ids of the
+        # checkpoints each tool call cuts (retention.owned) and close()
+        # releases them; make_spark_host sets _spark.
         self._spark = None
         self._created_rdd_ids: set = set()
-        # Tracking caveat (shared with every retention.py call site): the
-        # snapshot diff attributes ANY registration that first
-        # materializes inside a tool-call window to the host — a caller
-        # cache that lazily registers there would be unpersisted by
-        # close().  Embedders that cache their own frames across tool
-        # calls should pass make_spark_host(track_checkpoints=False)
-        # and manage retention themselves.
-        self._track_checkpoints = True
 
     # ------------------------------------------------------------ registry
 
@@ -412,11 +404,9 @@ class V3Host:
         referenced from ``state`` are unreadable (truncated lineage),
         so ``state`` is cleared too.  Without this, a long-lived
         session (bench loop, multi-topic service) pins ~6 corpus-shaped
-        frames per processed task forever — the leak class retention.py
-        exists to prevent."""
+        frames per processed task forever.  Caller caches, even ones first
+        materialized inside a tool call, are never released."""
         if self._spark is not None and self._created_rdd_ids:
-            from llmxmapreduce_spark.retention import release
-
             release(self._spark.sparkContext, self._created_rdd_ids)
             self._created_rdd_ids = set()
         self.state.clear()
@@ -447,15 +437,11 @@ class V3Host:
         else:
             arguments = decision.get("arguments", {}) or {}
 
-        if self._spark is not None and self._track_checkpoints:
-            from llmxmapreduce_spark.retention import pinned_ids
-
-            snap = pinned_ids(self._spark.sparkContext)
-            result = fn(self, arguments)
-            self._created_rdd_ids |= (
-                pinned_ids(self._spark.sparkContext) - snap)
-        else:
-            result = fn(self, arguments)
+        with owned() as ids:
+            try:
+                result = fn(self, arguments)
+            finally:
+                self._created_rdd_ids |= ids
 
         if tool_name in STATE_SNAPSHOT_TOOLS:
             title = self.state.get("survey_title", "survey")
@@ -628,7 +614,6 @@ def make_spark_host(
     max_rounds: int = 12,
     feedback_fn: Callable[[str], str] | None = None,
     txt_preview_chars: int = 20_000,
-    track_checkpoints: bool = True,
 ) -> V3Host:
     """A :class:`V3Host` with the reference's nine tools registered over
     this repo's distributed stages.  Search tools return counts + file
@@ -657,12 +642,7 @@ def make_spark_host(
     cfg = cfg or v2.V2Config()
     host = V3Host(planner, base_dir, max_rounds=max_rounds,
                   feedback_fn=feedback_fn)
-    host._spark = spark      # enables per-tool checkpoint tracking/close()
-    # track_checkpoints=False for embedders that cache their own frames
-    # lazily inside tool-call windows (the snapshot-diff caveat in
-    # V3Host.__init__) — close() then releases nothing and the caller
-    # owns retention.
-    host._track_checkpoints = track_checkpoints
+    host._spark = spark      # close() releases the tools' checkpoints
 
     # ---------------------------------------------------------- search
     def topic_expansion(h: V3Host, args: dict) -> dict:
@@ -683,8 +663,7 @@ def make_spark_host(
         # eager cut: web_search and crawl_urls both read state["queries"]
         # later — without it each re-runs the expand_queries LLM stage
         # (3 full recomputes per task measured in the e2e bench)
-        queries = sc.expand_queries(topics, client_factory) \
-            .localCheckpoint(eager=True)
+        queries = checkpoint(sc.expand_queries(topics, client_factory))
         h.state["queries"] = queries
         qlist = [r["query"] for r in queries.collect()]
         path = os.path.join(base_dir, topic, "search",
@@ -699,9 +678,8 @@ def make_spark_host(
         topic = args.get("topic") or h.state["topic"]
         # eager cut: crawl_urls scores state["hits"] and re-counts it for
         # the JSON transcript — lazy, both re-ran the whole search stage
-        hits = crawl_src.batch_web_search(
-            h.state["queries"], search_fn_factory, top_n=top_n) \
-            .localCheckpoint(eager=True)
+        hits = checkpoint(crawl_src.batch_web_search(
+            h.state["queries"], search_fn_factory, top_n=top_n))
         h.state["hits"] = hits
         n = hits.count()
         h.state["n_hits"] = n
@@ -816,9 +794,8 @@ def make_spark_host(
                                     .alias("txt_token"))).alias("papers"),
         ).select(F.lit("s0").alias("survey_id"), F.lit(title).alias("title"),
                  "papers")
-        papers = v2.build_papers(surveys).localCheckpoint(eager=True)
-        grouped = v2.group_papers(papers, cfg, client_factory) \
-            .localCheckpoint(eager=True)
+        papers = checkpoint(v2.build_papers(surveys))
+        grouped = checkpoint(v2.group_papers(papers, cfg, client_factory))
         h.state["papers"] = papers
         h.state["grouped"] = grouped
         n_groups = grouped.select("digest_id").distinct().count()
@@ -826,8 +803,8 @@ def make_spark_host(
                 "group_count": n_groups}
 
     def skeleton_init_tool(h: V3Host, args: dict) -> dict:
-        outlines = v2.init_outlines(h.state["grouped"], client_factory, cfg) \
-            .localCheckpoint(eager=True)
+        outlines = checkpoint(
+            v2.init_outlines(h.state["grouped"], client_factory, cfg))
         h.state["outlines"] = outlines
         md = outlines.select("outline_md").collect()[0][0]
         h.state["raw_skeleton"] = md
@@ -836,7 +813,7 @@ def make_spark_host(
     def digest_generation_tool(h: V3Host, args: dict) -> dict:
         digests, _dead = v2.make_digests(
             h.state["grouped"], h.state["outlines"], client_factory, cfg)
-        digests = digests.localCheckpoint(eager=True)
+        digests = checkpoint(digests)
         h.state["digests"] = digests
         return {"digest_count": digests.count()}
 
@@ -857,17 +834,11 @@ def make_spark_host(
             best_of=min(int(args.get("self_refine_best_of", "3")),
                         cfg.best_of),
         )
-        cur = h.state["outlines"].select(
-            "survey_id", "survey_title", "outline_md",
-            F.lit(None).cast("double").alias("eval_score"),
-            F.lit("[]").alias("block_avg_score"),
-            F.lit("[]").alias("self_refine_score"),
-            F.lit("[]").alias("conv_pool_sizes"),
-        )
+        cur = v2.unrefined_state(h.state["outlines"])
         suggestions = v2.feedback_suggestions(
             h.state["digests"], cur, client_factory, cfg=rcfg)
-        refined = v2.conv_refine(cur, suggestions, client_factory,
-                                 rcfg).localCheckpoint(eager=True)
+        refined = checkpoint(
+            v2.conv_refine(cur, suggestions, client_factory, rcfg))
         h.state["refined"] = refined
         h.state["outlines"] = refined.select(
             "survey_id", "survey_title", "outline_md")
@@ -876,23 +847,14 @@ def make_spark_host(
         # re-digest against the refined outline (the block-cycle re-entry)
         digests, _dead = v2.make_digests(
             h.state["grouped"], h.state["outlines"], client_factory, cfg)
-        h.state["digests"] = digests.localCheckpoint(eager=True)
+        h.state["digests"] = checkpoint(digests)
         return {"all_skeleton": md}
 
     def writing_tool(h: V3Host, args: dict) -> dict:
-        from llmxmapreduce_spark.pipelines.v2_survey import (
-            _BLOCK_SCORES, _POOL_SIZES, _REFINE_SCORES)
-
-        cur = h.state["refined"].withColumn(
-            "block_avg_score", F.from_json("block_avg_score", _BLOCK_SCORES)
-        ).withColumn(
-            "self_refine_score",
-            F.from_json("self_refine_score", _REFINE_SCORES)
-        ).withColumn(
-            "conv_pool_sizes", F.from_json("conv_pool_sizes", _POOL_SIZES))
         # decode_survey already runs the deterministic tail (citation
         # renumber, cite_ratio, references, assembly)
-        out = v2.decode_survey(cur, h.state["digests"], h.state["papers"],
+        out = v2.decode_survey(v2.typed_scores(h.state["refined"]),
+                               h.state["digests"], h.state["papers"],
                                client_factory, cfg)
         row = out.collect()[0]
         output_file = args.get("output_file") or os.path.join(

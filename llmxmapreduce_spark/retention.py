@@ -1,72 +1,82 @@
-"""Checkpoint-block release helpers (the r12 retention discipline).
+"""Checkpoint ownership and release.
 
 ``localCheckpoint(eager=True)`` blocks have truncated lineage, are never
-evicted by storage pressure, and — the trap this module exists to
-prevent — are NOT released by ``DataFrame.unpersist()``: that call goes
-to the cache manager, which knows nothing of checkpoint RDDs (one tiny
-``connected_components`` call measurably leaked 4 pinned frames while
-dutifully calling it).  Release must go through the JVM-side
+evicted by storage pressure, and are NOT released by
+``DataFrame.unpersist()``: that call goes to the cache manager, which knows
+nothing of checkpoint RDDs.  Release must go through the JVM-side
 ``getPersistentRDDs`` registry.
 
-Usage pattern (labelprop.py / pagerank.py / components.py /
-v1_qa.py / v2_survey.py / corpus_prep.py / media_prep.py)::
+The paper's pipelines (V1 QA, V2 survey, the V3 host) make every cut
+through :func:`checkpoint`, which reads the checkpoint's RDD id from the
+returned frame's own plan (a ``LogicalRDD``) and adds it to every
+:func:`owned` scope open on the calling thread.  A call therefore owns
+exactly the frames it cut, never a caller's cache that first materializes
+inside the cut, nor a frame another driver thread registers meanwhile::
 
-    pinned = pinned_ids(sc)            # snapshot before a checkpoint
-    df = df.localCheckpoint(eager=True)
-    new_ids = pinned_ids(sc) - pinned  # ids this checkpoint created
-    ...                                 # once superseded:
-    release(sc, old_ids)
+    with owned() as ids:               # ids this block checkpoints
+        df = checkpoint(df)
+    ...                                # once superseded:
+    release(sc, ids)
 
-Two invariants every call site keeps:
+Scopes nest: an outer ``owned()`` (a request wrapper, the V3 host's
+per-tool window) also sees the ids of every checkpoint an inner call cuts,
+and so can release whatever the call leaves pinned.
 
-- **Caller-cache shield.**  A DataFrame cache registers in
-  ``getPersistentRDDs`` lazily, at first materialization — which for a
-  caller's cache happens INSIDE the callee's first scan of its input.
-  The first checkpoint's id-diff therefore may contain caller caches
-  and must never be released; every loop keeps its first
-  materialization's ids pinned (the shield) and only sweeps ids
-  created after it.
-- **Release after supersede.**  An id set is released only once the
-  frame that replaces it is eagerly materialized, so the old blocks
-  have provably had their last read (truncated lineage means they
-  could never be recomputed).
+An id set is released only once the frame that replaces it is eagerly
+materialized, so the old blocks have provably had their last read
+(truncated lineage means they could never be recomputed).  Multi-pass
+loops release their tracked ids on the error path as well (try/except and
+re-raise), so an exception mid-loop does not pin every intermediate for the
+session.
 
-**Concurrency assumption (IMPORTANT).**  The snapshot-diff protocol
-assumes a SINGLE driver thread is submitting jobs on the
-SparkContext while a tracked window is open.  Spark explicitly
-supports concurrent job submission from multiple driver threads (and
-a running Structured Streaming query is such a thread): any cache or
-localCheckpoint another thread registers between a call site's
-``snap`` and its post-materialization diff is attributed to the call
-and later released — and a released localCheckpoint block has
-truncated lineage, so the other workload fails with an unrecoverable
-"checkpoint block not found" instead of recomputing.  Call sites must
-therefore never subtract from the GLOBAL registry (track only
-snapshot diffs around their own stages — the r13 media_prep fix), and
-callers running these pipelines concurrently with other
-cache-registering driver threads should pass their pipeline's
-``checkpoint=False`` / release-disabling knob or serialize the calls.
-
-**Error paths.**  Wrap multi-pass release loops in try/finally (or
-except+re-raise) and release the tracked non-shield, non-returned ids
-on the error path: an exception mid-loop (executor loss, OOM,
-interrupted action) must not leave every not-yet-superseded
-intermediate pinned for the session — that silently reinstates the
-leak exactly when memory pressure is highest.
-
-**Adding a NEW iterative operator?**  Copy the pagerank template:
-``operators/pagerank.py`` (release per-round + setup checkpoints once
-superseded, inside try/except) and its retention gate
-``tests/test_pagerank.py::test_pagerank_releases_checkpoints`` (assert
-<=N pinned frames after k iterations, plus a caller-cache-survival
-test).  Every iterative loop in this repo either releases through this
-module or carries a documented boundedness argument — keep that
-invariant.
+The operator library outside the paper's modules (labelprop, pagerank,
+corpus_prep, media_prep) still finds its checkpoints by diffing
+:func:`pinned_ids` around each cut, keeping its first cut pinned as a
+shield for caller caches that register inside it.  That diff assumes one
+driver thread submits jobs while a window is open.
 """
 
 from __future__ import annotations
 
-__all__ = ["pinned_ids", "release"]
+import threading
+from contextlib import contextmanager
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
+
+__all__ = ["checkpoint", "owned", "pinned_ids", "release"]
+
+_scopes = threading.local()
+
+
+def _open_scopes() -> list[set]:
+    if not hasattr(_scopes, "stack"):
+        _scopes.stack = []
+    return _scopes.stack
+
+
+@contextmanager
+def owned():
+    """Yield the set of RDD ids that :func:`checkpoint` cuts on this thread
+    while the block runs (nested calls included)."""
+    ids: set = set()
+    stack = _open_scopes()
+    stack.append(ids)
+    try:
+        yield ids
+    finally:
+        stack.pop()
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``, its id recorded in every open
+    :func:`owned` scope of this thread."""
+    cp = df.localCheckpoint(eager=True)
+    rid = cp._jdf.queryExecution().logical().rdd().id()
+    for ids in _open_scopes():
+        ids.add(rid)
+    return cp
 
 
 def pinned_ids(sc) -> set:

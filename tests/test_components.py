@@ -195,8 +195,7 @@ def test_component_size_report(spark):
 def test_intermediate_checkpoints_released(spark):
     """r12 audit: DataFrame.unpersist() was a no-op for localCheckpoint
     blocks (it talks to the cache manager), so every call leaked
-    rounds+1 pinned edge frames.  Now only the initial checkpoint (kept
-    as the caller-cache shield — it is the first scan of `edges`) and
+    rounds+1 pinned edge frames.  Now only the initial checkpoint and
     the final fixed-point frame may stay."""
     sc = spark.sparkContext
     before = set(sc._jsc.getPersistentRDDs().keySet().toArray())

@@ -6,7 +6,8 @@ entry points (imports inside functions count) and checks that every other
 module under ``llmxmapreduce_spark/`` is named in ``LIBRARY``: operators no
 paper query imports, kept while their own tests remain.  A listed module
 that is gone, or that a paper module now imports, fails too, so the list
-only ever records what is really outside.  No Spark.
+only ever records what is really outside.  It also checks that the paper
+modules have one checkpoint mechanism, ``retention.checkpoint``.  No Spark.
 """
 
 from __future__ import annotations
@@ -99,3 +100,22 @@ def test_no_python_outside_package_perfbench_tests():
     stray = [str(p.relative_to(REPO)) for p in REPO.rglob("*.py")
              if p.relative_to(REPO).parts[0] not in (PKG, "perfbench", "tests")]
     assert stray == []
+
+
+def test_one_checkpoint_mechanism():
+    """Paper modules cut lineage only through ``retention.checkpoint``,
+    which records each cut's id for the calling scope; none diffs the
+    global persistent-RDD registry (``pinned_ids``) to find its own."""
+    mods = _modules()
+    found = []
+    for m in sorted(_closure(mods)):
+        if m == f"{PKG}.retention":
+            continue
+        for node in ast.walk(ast.parse(mods[m].read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name in ("localCheckpoint", "pinned_ids"):
+                found.append(f"{m}:{node.lineno} {name}")
+    assert found == []

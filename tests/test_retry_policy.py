@@ -6,6 +6,7 @@ attempt budgets and retryable-exception sets)."""
 import pytest
 
 from llmxmapreduce_spark.llm.client import (
+    FlakyClient,
     HashEchoClient,
     LLMClient,
     RetryPolicy,
@@ -111,3 +112,51 @@ def test_batch_still_deterministic_with_policy():
     c = HashEchoClient()
     out = c.complete_batch(["a", "b", "a"])
     assert out[0] == out[2] != out[1]
+
+
+def _preset_flaky(inner_cls):
+    """A client factory whose clients fail every prompt three times and
+    carry their own five-attempt policy, the way ``OpenAICompatClient``
+    carries its provider preset.  (The class is local so executors
+    unpickle it by value.)"""
+
+    class PresetFlaky(FlakyClient):
+        retry_policy = RetryPolicy(max_attempts=5)
+
+        def __init__(self):
+            super().__init__(inner_cls(), n_failures=3)
+
+    return PresetFlaky
+
+
+def test_v2_stages_use_the_client_preset(spark):
+    """No explicit ``retry``: every V2 stage, the per-survey conv/refine
+    and decode assembly included, must retry under the client's own
+    policy — the default three attempts would drop every survey."""
+    from llmxmapreduce_spark.llm.survey_mock import MockSurveyClient
+    from llmxmapreduce_spark.pipelines import v2_survey as v2
+    from tests.test_v2_pipeline import make_surveys
+
+    surveys = make_surveys(spark, n_surveys=2, n_papers=4)
+    cfg = v2.V2Config(conv_layers=1, receptive_field=2, result_num=2,
+                      top_k=2, refine_rounds=1, best_of=1)
+    want = sorted(map(tuple, v2.run_v2_survey(
+        surveys, MockSurveyClient, cfg).collect()))
+    got = v2.run_v2_survey(
+        surveys, _preset_flaky(MockSurveyClient), cfg).collect()
+    assert [r["survey_id"] for r in sorted(got)] == ["survey0", "survey1"]
+    assert all(r["eval_score"] is not None and r["content_md"] for r in got)
+    assert sorted(map(tuple, got)) == want
+
+
+def test_llm_dedup_claims_uses_the_client_preset(spark):
+    from llmxmapreduce_spark.llm.client import MockDedupClient
+    from llmxmapreduce_spark.operators.eval_ops import llm_dedup_claims
+
+    facts = ["alpha finding", "ALPHA finding", "beta finding", "gamma finding"]
+    claims = spark.createDataFrame(
+        [("s1", i, f) for i, f in enumerate(facts)],
+        ["survey_id", "claim_id", "claim"])
+    kept = llm_dedup_claims(claims, _preset_flaky(MockDedupClient),
+                            group_size=2).collect()
+    assert sorted(r["claim_id"] for r in kept) == [0, 2, 3]

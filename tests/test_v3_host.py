@@ -410,14 +410,15 @@ def test_host_close_releases_checkpoints(spark, tmp_path):
         caller.unpersist()
 
 
-def test_host_tracking_opt_out(spark, tmp_path):
-    from llmxmapreduce_spark.retention import pinned_ids, release
+def test_host_close_keeps_caller_cache_made_in_a_tool(spark, tmp_path):
+    """A caller cache first materialized inside a tool call is the
+    caller's, not the host's: close() releases only the checkpoints the
+    tools cut, and the cache stays registered and readable."""
+    from llmxmapreduce_spark.retention import pinned_ids
 
-    """r13 review finding: the per-tool snapshot-diff attributes any
-    caller cache that lazily registers inside a tool-call window to the
-    host; track_checkpoints=False must disable tracking so close()
-    releases nothing (the caller owns retention)."""
     sc = spark.sparkContext
+    before = pinned_ids(sc)
+    caller = spark.range(10).cache()     # registers at first materialization
 
     def fake_search(query):
         return [{"url": f"https://x.test/{abs(hash(query)) % 100}/{i}",
@@ -429,20 +430,27 @@ def test_host_tracking_opt_out(spark, tmp_path):
         body = " ".join(f"word{i} the of and in" for i in range(40 + 10 * n))
         return f"# Page {n}\n{body}"
 
-    topic = "tracking opt-out"
+    topic = "caller cache check"
+    sequence = [("search_server", "warm_caller_cache"), *vh.CANONICAL_SEQUENCE]
     host = vh.make_spark_host(
-        spark, str(tmp_path), vh.MockPlanner(topic), MockSurveyClient,
-        lambda: fake_search, lambda: fake_fetch,
+        spark, str(tmp_path), vh.MockPlanner(topic, sequence),
+        MockSurveyClient, lambda: fake_search, lambda: fake_fetch,
         top_n=6, snippet_threshold=0, similarity_threshold=0,
-        min_length=50, max_length=100000, track_checkpoints=False)
-    before = pinned_ids(sc)
+        min_length=50, max_length=100000)
+    host.register_tool(
+        vh.ToolSpec("search_server", "warm_caller_cache",
+                    "Materialize the embedder's own cached frame."),
+        lambda h, args: {"rows": caller.count()})
     out = host.process_task(f"Write a survey about {topic}")
     assert out["status"] == "completed"
-    assert host._created_rdd_ids == set()    # nothing attributed
-    pinned_by_run = pinned_ids(sc) - before
-    host.close()                              # must release NOTHING
-    still = {rid for rid in pinned_by_run
-             if sc._jsc.getPersistentRDDs().containsKey(rid)}
-    assert still == pinned_by_run, "close() released untracked frames"
-    # test hygiene: free the run's frames ourselves (caller-owned)
-    release(sc, pinned_by_run)
+    tools_run = [op["tool_name"] for op in out["operation_history"]
+                 if op["action"] == "call_tool"]
+    assert tools_run == [t for _s, t in sequence]
+    try:
+        host.close()
+        left = pinned_ids(sc) - before
+        assert len(left) == 1, f"expected only the caller cache, got {left}"
+        assert caller.count() == 10
+    finally:
+        caller.unpersist()
+    assert pinned_ids(sc) - before == set()
