@@ -12,7 +12,10 @@ telemetry with zero extra jobs:
   :class:`~llmxmapreduce_spark.operators.llm_op.LLMMetrics` accumulators,
   one instance per tracked stage;
 - **wall time** for eagerly-materialized stages (the pipelines'
-  ``localCheckpoint`` boundaries), recorded by ``materialized()``.
+  ``localCheckpoint`` boundaries): each ``materialized()`` call adds the
+  interval since the previous one to its stage, so the stage times tile
+  the run, and a stage cut several times (V1 collapse rounds, V2 digest
+  passes) sums its intervals.
 
 Queue depth has no analog — Spark stages don't queue between operators;
 the scheduler's task backlog is visible in the Spark UI — so the report
@@ -38,6 +41,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from llmxmapreduce_spark.operators.llm_op import LLMMetrics
+from llmxmapreduce_spark.retention import checkpoint, frame_id, owned, release
 
 _REPORT_COLS = ["stage", "rows_out", "wall_s", "llm_calls", "llm_failures",
                 "est_prompt_tokens", "est_reply_tokens"]
@@ -52,9 +56,8 @@ class StageMetrics:
         self._obs: dict[str, Observation] = {}
         self._n_obs = 0          # observation names must stay unique
         self._llm: dict[str, LLMMetrics] = {}
-        self._llm_base: dict[str, dict] = {}
         self._wall: dict[str, float] = {}
-        self._t0: dict[str, float] = {}
+        self._mark = time.perf_counter()   # start of the current interval
         self._layers: list[dict[str, Any]] = []
 
     def _ensure(self, name: str) -> None:
@@ -68,7 +71,6 @@ class StageMetrics:
         obs = Observation(f"stage:{name}:{self._n_obs}")
         self._n_obs += 1
         self._obs[name] = obs
-        self._t0.setdefault(name, time.time())
         return df.observe(obs, F.count(F.lit(1)).alias("rows_out"))
 
     def llm(self, name: str) -> LLMMetrics:
@@ -78,15 +80,18 @@ class StageMetrics:
         self._ensure(name)
         if name not in self._llm:
             self._llm[name] = LLMMetrics(self._spark)
-            self._t0.setdefault(name, time.time())
         return self._llm[name]
 
     def materialized(self, name: str) -> None:
-        """Mark ``name`` as materialized NOW — wall time = first telemetry
-        attachment → this call.  Call right after the stage's eager
-        boundary (localCheckpoint / action)."""
+        """Mark ``name`` as materialized NOW: its wall time grows by the
+        interval since the previous ``materialized()`` call (the first
+        interval starts when the collector is made, or when a
+        :class:`StageRun` is entered).  Call once right after each eager
+        boundary (localCheckpoint / action), in the order they happen."""
         self._ensure(name)
-        self._wall[name] = time.time() - self._t0.get(name, time.time())
+        now = time.perf_counter()
+        self._wall[name] = self._wall.get(name, 0.0) + now - self._mark
+        self._mark = now
 
     @staticmethod
     def _probe_rows(obs: Observation) -> int | None:
@@ -189,6 +194,74 @@ class StageMetrics:
                 f"{r['est_prompt_tokens'] if r['est_prompt_tokens'] is not None else '-':>9} "
                 f"{r['est_reply_tokens'] if r['est_reply_tokens'] is not None else '-':>8}")
         return "\n".join(lines)
+
+
+class StageRun:
+    """The stage boundaries of one pipeline call: eager cuts, their
+    release and the stage report::
+
+        with StageRun(spark, stage_metrics) as run:
+            state = run.cut("map", mapped)
+            state = run.cut("collapse", merged, supersedes=(state,))
+            return run.result("reduce", answers)
+
+    The run owns every checkpoint cut on its thread while it is open.  A
+    cut made while a stage is built (``llm_stage_cached``'s frame,
+    decode's section cut) is released once that stage's cut exists, and
+    so are the earlier cuts of this run the new cut ``supersedes`` (other
+    frames, such as a lazy initial state, are ignored).  On exit the run
+    releases the rest, except the :meth:`result` it handed to the caller.
+    With a :class:`StageMetrics`, each cut observes its rows out and is
+    stamped ``materialized``, so the stage times tile the call.
+    """
+
+    def __init__(self, spark: SparkSession, stage_metrics: StageMetrics | None):
+        self._sc = spark.sparkContext
+        self._sm = stage_metrics
+        self._cuts: list[tuple[DataFrame, int]] = []   # live stage cuts
+
+    def __enter__(self) -> StageRun:
+        self._scope = owned()
+        self._ids = self._scope.__enter__()   # this run's unreleased cuts
+        if self._sm is not None:
+            self._sm._mark = time.perf_counter()
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        try:
+            release(self._sc, self._ids)
+        finally:
+            self._scope.__exit__(None, None, None)
+
+    def llm(self, name: str) -> LLMMetrics | None:
+        """The stage's LLM accumulators, or None without a report."""
+        return self._sm.llm(name) if self._sm is not None else None
+
+    def rows(self, name: str, df: DataFrame) -> DataFrame:
+        """Report the rows out of a stage that has no cut of its own."""
+        return self._sm.observe(name, df) if self._sm is not None else df
+
+    def cut(self, name: str, df: DataFrame,
+            supersedes: tuple[DataFrame, ...] = ()) -> DataFrame:
+        """Eagerly checkpoint ``df`` as the end of stage ``name``."""
+        nested = self._ids - {rid for _, rid in self._cuts}
+        cp = checkpoint(self.rows(name, df))
+        gone = nested | {rid for f, rid in self._cuts
+                         if any(f is s for s in supersedes)}
+        release(self._sc, gone)
+        self._ids.difference_update(gone)
+        self._cuts = [(f, rid) for f, rid in self._cuts if rid not in gone]
+        self._cuts.append((cp, frame_id(cp)))
+        if self._sm is not None:
+            self._sm.materialized(name)
+        return cp
+
+    def result(self, name: str, df: DataFrame) -> DataFrame:
+        """The call's final cut, handed to the caller: the one frame the
+        run leaves pinned."""
+        cp = self.cut(name, df)
+        self._ids.discard(frame_id(cp))
+        return cp
 
 
 def v2_stage_report(out_rows: list[dict]) -> list[dict[str, Any]]:

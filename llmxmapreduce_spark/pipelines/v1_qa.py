@@ -24,6 +24,7 @@ semantics.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 import pandas as pd
@@ -35,7 +36,7 @@ from llmxmapreduce_spark.functions import text as X
 from llmxmapreduce_spark.llm.client import LLMClient, RetryPolicy
 from llmxmapreduce_spark.operators import chunker
 from llmxmapreduce_spark.operators.llm_op import llm_stage, llm_stage_cached
-from llmxmapreduce_spark.retention import checkpoint, owned, release
+from llmxmapreduce_spark.operators.stage_metrics import StageRun
 
 MAX_NEW_TOKENS = 300  # gen_args.get('max_tokens', 300), Generator.py:350
 
@@ -110,7 +111,8 @@ def run_v1_qa(
     ``stage_metrics``: optional
     :class:`~llmxmapreduce_spark.operators.stage_metrics.StageMetrics` —
     attaches zero-job rows-out observations and per-stage LLM accumulators
-    for the chunk/map/collapse/reduce stages (D10 report parity).
+    for the chunk/map/collapse/reduce stages, and wall times that tile the
+    call at the map, collapse and reduce cuts (D10 report parity).
 
     ``llm_cache_dir``: optional prompt-hash result cache root
     (:func:`~llmxmapreduce_spark.operators.llm_op.llm_stage_cached`) —
@@ -120,119 +122,94 @@ def run_v1_qa(
     The collapse stage stays uncached on purpose: its inputs are
     intermediate merges that only repeat on byte-identical re-runs.
     Each cached stage is one pass over its input — cache join, hash
-    repartition, one model/replay ``mapInPandas`` — and leaves one
-    bounded frame pinned: its eager checkpoint, which also feeds the
-    cache append.
+    repartition, one model/replay ``mapInPandas`` — whose eager frame
+    also feeds the cache append.
 
-    Retention: the call leaves pinned the map cut, the last collapse
-    round's cut and each cached stage's frame; superseded rounds are
-    released inside the call.  A caller that wraps the call in
-    ``retention.owned()`` gets exactly those ids, to release once it has
-    read the result, even while other requests share the session.
+    Retention: the returned frame is an eager checkpoint, the only frame
+    the call leaves pinned (nothing on an error).  Each cut inside the
+    call is released once its last reader is cut.  A caller that wraps
+    the call in ``retention.owned()`` gets the returned frame's id, to
+    release once it has read the result, even while other requests share
+    the session.
     """
-    spark = docs.sparkSession
     map_tmpl = (prompts or {}).get("map", MAP_PROMPT)
     collapse_tmpl = (prompts or {}).get("collapse", COLLAPSE_PROMPT)
     reduce_tmpl = (prompts or {}).get("reduce", REDUCE_PROMPT)
     map_prompt_len = length_fn(map_tmpl)
     collapse_prompt_len = length_fn(collapse_tmpl)
 
-    # --- C1/C2 chunk -------------------------------------------------------
-    budget = (
-        F.lit(chunk_size - map_prompt_len - MAX_NEW_TOKENS)
-        - X.token_count_bpe_ish(F.col("question"))
-    )
-    chunks = chunker.chunk_documents(
-        docs.withColumn("budget", budget),
-        id_col="doc_id", text_col="context", budget_col="budget",
-        length_fn=length_fn,
-    ).drop("budget")
-    if stage_metrics is not None:
-        chunks = stage_metrics.observe("chunk", chunks)
+    with StageRun(docs.sparkSession, stage_metrics) as run:
+        # --- C1/C2 chunk ---------------------------------------------------
+        budget = (
+            F.lit(chunk_size - map_prompt_len - MAX_NEW_TOKENS)
+            - X.token_count_bpe_ish(F.col("question"))
+        )
+        chunks = run.rows("chunk", chunker.chunk_documents(
+            docs.withColumn("budget", budget),
+            id_col="doc_id", text_col="context", budget_col="budget",
+            length_fn=length_fn,
+        ).drop("budget"))
 
-    # --- L1 map ------------------------------------------------------------
-    def _map_or_cached(df, build_prompt, parse, payload_fields, keep_cols,
-                       metric_name, cache_sub):
-        m = (stage_metrics.llm(metric_name)
-             if stage_metrics is not None else None)
-        if llm_cache_dir is not None:
-            import os as _os
-
+        # --- L1 map --------------------------------------------------------
+        def map_or_cached(df, stage, **kw):
+            """``llm_stage``, replayed from ``{llm_cache_dir}/{stage}``
+            when a cache is given."""
+            kw.update(client_factory=client_factory, retry=retry,
+                      metrics=run.llm(stage))
+            if llm_cache_dir is None:
+                return llm_stage(df, **kw)
             return llm_stage_cached(
-                df, build_prompt, parse, client_factory, payload_fields,
-                keep_cols, _os.path.join(llm_cache_dir, cache_sub),
-                retry, m)
-        return llm_stage(df, build_prompt, parse, client_factory,
-                         payload_fields, keep_cols, retry, m)
+                df, cache_dir=os.path.join(llm_cache_dir, stage), **kw)
 
-    mapped = _map_or_cached(
-        chunks,
-        build_prompt=lambda r: map_tmpl.format(context=r["text"], question=r["question"]),
-        parse=lambda reply: {"text": reply},
-        payload_fields=_TEXT_PAYLOAD,
-        keep_cols=["doc_id", "chunk_id", "question"],
-        metric_name="map", cache_sub="map",
-    )
-    state = _keep_informative(mapped.filter("llm_ok")).select(
-        "doc_id", "chunk_id", "question", "text"
-    )
-    if stage_metrics is not None:
-        state = stage_metrics.observe("map", state)
-    # r13: the collapse loop's budget gate (`over.isEmpty`) and the reduce
-    # path consume `state` through separate actions — and when a collapse
-    # round runs, its keep/merge branches are two more consumers — so the
-    # map LLM stage executed 2× per run with no collapse and 3× in a
-    # collapse round (measured via the map accumulator: 1804 calls for
-    # 902 chunks on the sf0.01 documents).  One chunk-bounded eager cut runs
-    # it once; it stays pinned for the call, same bounded class as v2's
-    # decode section cut.
-    sc = docs.sparkSession.sparkContext
-    state = checkpoint(state)
-    if stage_metrics is not None:
-        stage_metrics.materialized("map")
+        mapped = map_or_cached(
+            chunks, "map",
+            build_prompt=lambda r: map_tmpl.format(context=r["text"], question=r["question"]),
+            parse=lambda reply: {"text": reply},
+            payload_fields=_TEXT_PAYLOAD,
+            keep_cols=["doc_id", "chunk_id", "question"],
+        )
+        # The collapse gate (`over.isEmpty`), the reduce path and a round's
+        # keep/merge branches all read `state`: without this cut the map
+        # LLM stage ran 2-3× (the map accumulator showed 1804 calls for 902
+        # chunks on the sf0.01 documents).  The cut runs it once.
+        state = run.cut("map", _keep_informative(mapped.filter("llm_ok")).select(
+            "doc_id", "chunk_id", "question", "text"
+        ))
 
-    # --- A1/L2 collapse loop ------------------------------------------------
-    # token budget per merged group (Generator.py:347-350)
-    token_max = chunk_size - collapse_prompt_len - MAX_NEW_TOKENS
+        # --- A1/L2 collapse loop --------------------------------------------
+        # token budget per merged group (Generator.py:347-350)
+        token_max = chunk_size - collapse_prompt_len - MAX_NEW_TOKENS
 
-    pack_schema = T.StructType([
-        T.StructField("doc_id", docs.schema["doc_id"].dataType, False),
-        T.StructField("group_id", T.IntegerType(), False),
-        T.StructField("question", T.StringType(), True),
-        T.StructField("context", T.StringType(), True),
-    ])
+        pack_schema = T.StructType([
+            T.StructField("doc_id", docs.schema["doc_id"].dataType, False),
+            T.StructField("group_id", T.IntegerType(), False),
+            T.StructField("question", T.StringType(), True),
+            T.StructField("context", T.StringType(), True),
+        ])
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Per-doc greedy bin-packing (utils.py:61-90) with the reference's
-        formatted-length measure (Generator.py:311-316)."""
-        pdf = pdf.sort_values("chunk_id")
-        texts = list(pdf["text"])
+        def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+            """Per-doc greedy bin-packing (utils.py:61-90) with the reference's
+            formatted-length measure (Generator.py:311-316)."""
+            pdf = pdf.sort_values("chunk_id")
+            texts = list(pdf["text"])
 
-        def fmt_len(docs_list: list[str]) -> int:
-            joined = "".join(
-                f"Information of Chunk {i}:\n{d}\n" for i, d in enumerate(docs_list)
-            )
-            return length_fn(joined)
+            def fmt_len(docs_list: list[str]) -> int:
+                joined = "".join(
+                    f"Information of Chunk {i}:\n{d}\n" for i, d in enumerate(docs_list)
+                )
+                return length_fn(joined)
 
-        groups = chunker.split_list_of_docs(texts, fmt_len, token_max)
-        rows = [
-            {"doc_id": pdf["doc_id"].iloc[0], "group_id": gid,
-             "question": pdf["question"].iloc[0],
-             "context": "\n\n".join(group)}          # join_docs, Generator.py:320-323
-            for gid, group in enumerate(groups)
-        ]
-        return pd.DataFrame(rows, columns=[f.name for f in pack_schema.fields])
+            groups = chunker.split_list_of_docs(texts, fmt_len, token_max)
+            rows = [
+                {"doc_id": pdf["doc_id"].iloc[0], "group_id": gid,
+                 "question": pdf["question"].iloc[0],
+                 "context": "\n\n".join(group)}          # join_docs, Generator.py:320-323
+                for gid, group in enumerate(groups)
+            ]
+            return pd.DataFrame(rows, columns=[f.name for f in pack_schema.fields])
 
-    # Prior-round checkpoint release: each round's eager checkpoint
-    # supersedes the previous round's — without a release the loop pins
-    # rounds × |chunks| rows of truncated-lineage blocks for the session
-    # (≤2 pinned frames per call: the map cut + the live round).  An
-    # exception mid-loop (executor loss, a failing LLM stage) releases
-    # the live round too.
-    prev_ids: set = set()
-    try:
+        w = Window.partitionBy("doc_id").orderBy("chunk_id")
         for _ in range(max_collapse_rounds):
-            w = Window.partitionBy("doc_id").orderBy("chunk_id")
             cur = state.withColumn("__idx", F.row_number().over(w) - 1).withColumn(
                 "__tok",
                 X.token_count_bpe_ish(X.format_chunk_information(F.col("__idx"), F.col("text"))),
@@ -256,64 +233,54 @@ def run_v1_qa(
                 payload_fields=_TEXT_PAYLOAD,
                 keep_cols=["doc_id", "group_id", "question"],
                 retry=retry,
-                metrics=(stage_metrics.llm("collapse")
-                         if stage_metrics is not None else None),
+                metrics=run.llm("collapse"),
             )
             new_chunks = _keep_informative(merged.filter("llm_ok")).select(
                 "doc_id", F.col("group_id").alias("chunk_id"), "question", "text"
             )
             # cut the per-round lineage so the loop's plan doesn't grow
-            # superlinearly (bounded driver loop, SURVEY.md §7)
-            with owned() as new_ids:
-                state = checkpoint(ok_chunks.unionByName(new_chunks))
-            release(sc, prev_ids)
-            prev_ids = new_ids
-            if stage_metrics is not None:
-                stage_metrics.materialized("collapse")
-    except BaseException:
-        release(sc, prev_ids)
-        raise
+            # superlinearly (bounded driver loop, SURVEY.md §7); the round
+            # is the last reader of the state it replaces
+            state = run.cut("collapse", ok_chunks.unionByName(new_chunks),
+                            supersedes=(state,))
 
-    # --- A2/L3 reduce --------------------------------------------------------
-    w = Window.partitionBy("doc_id").orderBy("chunk_id")
-    final = state.withColumn("__idx", F.row_number().over(w) - 1)
-    per_doc = (
-        final.withColumn("__fmt", X.format_chunk_information(F.col("__idx"), F.col("text")))
-        .groupBy("doc_id", "question")
-        .agg(
-            F.concat_ws(
-                "",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("__idx", "__fmt"))),
-                    lambda s: s["__fmt"],
-                ),
-            ).alias("context")
+        # --- A2/L3 reduce ----------------------------------------------------
+        final = state.withColumn("__idx", F.row_number().over(w) - 1)
+        per_doc = (
+            final.withColumn("__fmt", X.format_chunk_information(F.col("__idx"), F.col("text")))
+            .groupBy("doc_id", "question")
+            .agg(
+                F.concat_ws(
+                    "",
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("__idx", "__fmt"))),
+                        lambda s: s["__fmt"],
+                    ),
+                ).alias("context")
+            )
         )
-    )
-    reduced = _map_or_cached(
-        per_doc,
-        build_prompt=lambda r: reduce_tmpl.format(
-            context=r["context"], question=r["question"]),
-        parse=lambda reply: {"raw_reply": reply},
-        payload_fields=[T.StructField("raw_reply", T.StringType(), True)],
-        keep_cols=["doc_id"],
-        metric_name="reduce", cache_sub="reduce",
-    )
-    answers = reduced.select(
-        "doc_id",
-        X.extract_answer(F.col("raw_reply")).alias("answer"),
-        "raw_reply",
-    )
-    if stage_metrics is not None:
-        answers = stage_metrics.observe("reduce", answers)
-    # Documents whose every map/collapse output was filtered (all
-    # [NO INFORMATION] or all llm_ok=false) must still produce a row — the
-    # reference runs mr_reduce regardless and the answer scores 0; dropping
-    # them would silently inflate eval denominators (v1_eval).
-    return docs.select("doc_id").join(answers, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(F.col("answer"), F.lit(X.NO_INFORMATION)).alias("answer"),
-        F.coalesce(F.col("raw_reply"),
-                   F.lit(f"Rationale: no informative chunks.\nAnswer: {X.NO_INFORMATION}")
-                   ).alias("raw_reply"),
-    )
+        reduced = map_or_cached(
+            per_doc, "reduce",
+            build_prompt=lambda r: reduce_tmpl.format(
+                context=r["context"], question=r["question"]),
+            parse=lambda reply: {"raw_reply": reply},
+            payload_fields=[T.StructField("raw_reply", T.StringType(), True)],
+            keep_cols=["doc_id"],
+        )
+        answers = reduced.select(
+            "doc_id",
+            X.extract_answer(F.col("raw_reply")).alias("answer"),
+            "raw_reply",
+        )
+        # Documents whose every map/collapse output was filtered (all
+        # [NO INFORMATION] or all llm_ok=false) must still produce a row —
+        # the reference runs mr_reduce regardless and the answer scores 0;
+        # dropping them would silently inflate eval denominators (v1_eval).
+        return run.result("reduce", docs.select("doc_id").join(
+            answers, "doc_id", "left").select(
+            "doc_id",
+            F.coalesce(F.col("answer"), F.lit(X.NO_INFORMATION)).alias("answer"),
+            F.coalesce(F.col("raw_reply"),
+                       F.lit(f"Rationale: no informative chunks.\nAnswer: {X.NO_INFORMATION}")
+                       ).alias("raw_reply"),
+        ))

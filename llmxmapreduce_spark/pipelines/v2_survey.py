@@ -51,7 +51,8 @@ from llmxmapreduce_spark.operators import digest_ops, grouping, sampling, skelet
 from llmxmapreduce_spark.operators.citations import cite_ratio as a7_cite_ratio
 from llmxmapreduce_spark.operators.citations import references_block, renumber_citations
 from llmxmapreduce_spark.operators.llm_op import _resolve_retry, llm_stage
-from llmxmapreduce_spark.retention import checkpoint, owned, release
+from llmxmapreduce_spark.operators.stage_metrics import StageRun
+from llmxmapreduce_spark.retention import checkpoint
 
 
 @dataclass
@@ -84,8 +85,8 @@ class V2Config:
     # over unchanged papers/outlines replays digests from
     # ``{dir}/digest`` instead of re-calling the model; cycle-2 prompts
     # embed the refined outline, so they miss (and populate) naturally.
-    # run_v2_survey owns the cached stage's one eager frame per call
-    # and releases it once the cycle's digest checkpoint supersedes it.
+    # run_v2_survey owns the cached stage's one eager frame per pass
+    # and releases it once the next digest checkpoint has read it.
     # Default off; byte-identity with the uncached path is gated by
     # tests/test_v2_cache.py.
 
@@ -984,10 +985,8 @@ def decode_survey(final_outline: DataFrame, digests: DataFrame, papers: DataFram
     # in figures mode the L16 figure stage) execute 3× per action
     # (measured: the decode LLM accumulator showed 768 calls for 256
     # leaves).  One section-bounded checkpoint runs them once.
-    # Retention: run_v2_survey releases it once `out` is checkpointed;
-    # the V3 host owns it through its per-tool scope and releases it at
-    # close(); other callers keep one bounded frame per call (same class
-    # as the final digest cut).
+    # Retention: run_v2_survey releases it once its result is cut, the V3
+    # host at close(); other callers own one bounded frame per call.
     done = checkpoint(done)
 
     tail = decode_tail(done, papers)
@@ -1055,92 +1054,46 @@ def run_v2_survey(surveys: DataFrame, client_factory,
 
     ``stage_metrics``: optional
     :class:`~llmxmapreduce_spark.operators.stage_metrics.StageMetrics` —
-    per-stage rows-out (``observe``) and wall time at the checkpoint
-    boundaries (papers / outline / digest / refine / decode), and LLM
+    per-stage rows-out and wall time at the checkpoint boundaries
+    (papers / outline / digest / refine / decode; the wall times tile the
+    call, and a stage cut several times sums its intervals), and LLM
     accumulators for the four row-parallel llm stages (outline / digest /
     suggest / decode); the reference analyser's per-node table
     (pipeline_analyser.py:64-124).  After collecting the result, fold the
     per-layer convolution detail in with
     ``stage_metrics.record_v2_layers(rows)``.
 
-    The returned frame is an eager checkpoint.  The run leaves it pinned
-    together with the papers, outlines, final refined outline and final
-    digest checkpoints; a caller that wraps the call in
-    ``retention.owned()`` gets exactly those ids to release once it has
-    read the result.
+    Retention: the returned frame is an eager checkpoint, the only frame
+    the call leaves pinned (nothing on an error).  Each cut inside the
+    call is released once its last reader is cut; papers and outlines are
+    re-read every cycle and go at the end.  A caller that wraps the call
+    in ``retention.owned()`` gets the returned frame's id, to release once
+    it has read the result.
     """
     cfg = cfg or V2Config()
-    sm = stage_metrics
-    sctx = surveys.sparkSession.sparkContext
-
-    def llm(stage: str):
-        return sm.llm(stage) if sm is not None else None
-
-    def cut(stage: str, df: DataFrame, observe: bool = True) -> tuple[DataFrame, set]:
-        """Eagerly checkpoint ``df`` as the end of ``stage`` (rows-out
-        observed on the way in, wall time stamped once materialized);
-        → (the checkpoint, its frame id)."""
-        if sm is not None and observe:
-            df = sm.observe(stage, df)
-        with owned() as ids:
-            df = checkpoint(df)
-        if sm is not None:
-            sm.materialized(stage)
-        return df, ids
-
-    def digest_pass(outline_df: DataFrame) -> tuple[DataFrame, set]:
-        """L7→A3 digests against ``outline_df`` → (digests, the frame ids
-        the digest stage pinned).  The ids are non-empty only with
-        ``cfg.llm_cache_dir``: the cached stage runs EAGERLY and pins one
-        bounded frame; the next digest checkpoint is its last reader, so it
-        is released right after that."""
-        with owned() as ids:
-            digests, _dead = make_digests(grouped, outline_df, client_factory,
-                                          cfg, retry, metrics=llm("digest"))
-        return digests, ids
-
-    cache_ids: set = set()
-    try:
-        papers, _ = cut("papers", build_papers(surveys))
+    with StageRun(surveys.sparkSession, stage_metrics) as run:
+        papers = run.cut("papers", build_papers(surveys))
         grouped = group_papers(papers, cfg, client_factory, retry)
-        outlines, _ = cut("outline", init_outlines(
-            grouped, client_factory, cfg, retry, metrics=llm("outline")))
-        digests, cache_ids = digest_pass(outlines)
-        cur = unrefined_state(outlines)
-        # Per-cycle checkpoint release: cycle N's refined-outline
-        # checkpoint is the LAST reader of cycle N−1's `cur` blocks and of
-        # cycle N's own digest checkpoint (suggestions → conv_refine
-        # materialize into it), so both are released right after it —
-        # otherwise the loop pins 2 × block_count survey-bounded frames
-        # per run for the session.  Pre-loop checkpoints (papers,
-        # outlines) stay: papers is re-read via `grouped` every cycle.
-        prev_cur_ids: set = set()   # cur_0 is lazy over outlines: no blocks
+        outlines = run.cut("outline", init_outlines(
+            grouped, client_factory, cfg, retry, metrics=run.llm("outline")))
+        digests, _dead = make_digests(grouped, outlines, client_factory, cfg,
+                                      retry, metrics=run.llm("digest"))
+        cur = unrefined_state(outlines)      # lazy: no cut to supersede
         for _cycle in range(cfg.block_count):
-            digests, digest_ids = cut("digest", digests, observe=False)
-            release(sctx, cache_ids)
+            digests = run.cut("digest", digests)
             suggestions = feedback_suggestions(
                 digests, cur, client_factory, retry, cfg=cfg,
-                metrics=llm("suggest"))
-            cur, cur_ids = cut("refine", conv_refine(
-                cur, suggestions, client_factory, cfg, retry))
-            release(sctx, prev_cur_ids | digest_ids)
-            prev_cur_ids = cur_ids
+                metrics=run.llm("suggest"))
+            # the refined outline is the last reader of the previous
+            # state and of this cycle's digests (suggestions → conv_refine)
+            cur = run.cut("refine", conv_refine(
+                cur, suggestions, client_factory, cfg, retry),
+                supersedes=(cur, digests))
             # re-digest against the refined outline (digest_node re-entry)
-            digests, cache_ids = digest_pass(cur)
-        # rows-out of the FINAL digest pass (the llm("digest") counters
-        # accumulate across passes)
-        digests, _ = cut("digest", digests)
-        release(sctx, cache_ids)
-        with owned() as done_ids:            # decode_survey's `done` cut
-            out = decode_survey(
-                typed_scores(cur), digests, papers, client_factory, cfg,
-                retry, metrics=llm("decode"),
-            ).withColumn("block_cycle_count", F.lit(cfg.block_count))
-        out, _ = cut("decode", out)
-        release(sctx, done_ids)              # `out` was its only reader
-        return out
-    except BaseException:
-        # nothing is returned on the error path, so any cached-digest
-        # frames not yet superseded by a digest checkpoint are releasable
-        release(sctx, cache_ids)
-        raise
+            digests, _dead = make_digests(grouped, cur, client_factory, cfg,
+                                          retry, metrics=run.llm("digest"))
+        digests = run.cut("digest", digests)
+        return run.result("decode", decode_survey(
+            typed_scores(cur), digests, papers, client_factory, cfg,
+            retry, metrics=run.llm("decode"),
+        ).withColumn("block_cycle_count", F.lit(cfg.block_count)))

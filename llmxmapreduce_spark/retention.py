@@ -8,7 +8,7 @@ nothing of checkpoint RDDs.  Release must go through the JVM-side
 
 The paper's pipelines (V1 QA, V2 survey, the V3 host) make every cut
 through :func:`checkpoint`, which reads the checkpoint's RDD id from the
-returned frame's own plan (a ``LogicalRDD``) and adds it to every
+returned frame's own plan (:func:`frame_id`) and adds it to every
 :func:`owned` scope open on the calling thread.  A call therefore owns
 exactly the frames it cut, never a caller's cache that first materializes
 inside the cut, nor a frame another driver thread registers meanwhile::
@@ -22,12 +22,12 @@ Scopes nest: an outer ``owned()`` (a request wrapper, the V3 host's
 per-tool window) also sees the ids of every checkpoint an inner call cuts,
 and so can release whatever the call leaves pinned.
 
-An id set is released only once the frame that replaces it is eagerly
-materialized, so the old blocks have provably had their last read
-(truncated lineage means they could never be recomputed).  Multi-pass
-loops release their tracked ids on the error path as well (try/except and
-re-raise), so an exception mid-loop does not pin every intermediate for the
-session.
+An id is released only once every frame that reads it is eagerly
+materialized (truncated lineage means its blocks could never be
+recomputed).  V1 and V2 keep that rule in one place,
+:class:`~llmxmapreduce_spark.operators.stage_metrics.StageRun`: a call
+leaves exactly its returned frame pinned on success, nothing on failure.
+The V3 host keeps its tool calls' ids until ``close()``.
 
 The operator library outside the paper's modules (labelprop, pagerank,
 corpus_prep, media_prep) still finds its checkpoints by diffing
@@ -45,7 +45,7 @@ from typing import TYPE_CHECKING
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
 
-__all__ = ["checkpoint", "owned", "pinned_ids", "release"]
+__all__ = ["checkpoint", "frame_id", "owned", "pinned_ids", "release"]
 
 _scopes = threading.local()
 
@@ -73,10 +73,15 @@ def checkpoint(df: DataFrame) -> DataFrame:
     """``df.localCheckpoint(eager=True)``, its id recorded in every open
     :func:`owned` scope of this thread."""
     cp = df.localCheckpoint(eager=True)
-    rid = cp._jdf.queryExecution().logical().rdd().id()
+    rid = frame_id(cp)
     for ids in _open_scopes():
         ids.add(rid)
     return cp
+
+
+def frame_id(cp: DataFrame) -> int:
+    """The RDD id of a :func:`checkpoint` frame, read from its plan."""
+    return cp._jdf.queryExecution().logical().rdd().id()
 
 
 def pinned_ids(sc) -> set:

@@ -7,7 +7,8 @@ module under ``llmxmapreduce_spark/`` is named in ``LIBRARY``: operators no
 paper query imports, kept while their own tests remain.  A listed module
 that is gone, or that a paper module now imports, fails too, so the list
 only ever records what is really outside.  It also checks that the paper
-modules have one checkpoint mechanism, ``retention.checkpoint``.  No Spark.
+modules have one checkpoint mechanism, ``retention.checkpoint``, and that V1
+and V2 have one stage protocol, ``stage_metrics.StageRun``.  No Spark.
 """
 
 from __future__ import annotations
@@ -118,4 +119,25 @@ def test_one_checkpoint_mechanism():
             name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
             if name in ("localCheckpoint", "pinned_ids"):
                 found.append(f"{m}:{node.lineno} {name}")
+    assert found == []
+
+
+def test_one_stage_protocol():
+    """V1 and V2 make every stage boundary through ``StageRun``: they
+    neither release checkpoints nor stamp the stage report themselves,
+    nor branch on whether a report was asked for."""
+    found = []
+    for m in ("v1_qa", "v2_survey"):
+        tree = ast.parse((REPO / PKG / "pipelines" / f"{m}.py").read_text())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name in ("owned", "release") or (
+                        isinstance(f, ast.Attribute)
+                        and name in ("materialized", "observe")):
+                    found.append(f"{m}:{node.lineno} {name}")
+            elif (isinstance(node, ast.Compare) and isinstance(node.left, ast.Name)
+                  and node.left.id in ("stage_metrics", "sm")):
+                found.append(f"{m}:{node.lineno} {node.left.id} test")
     assert found == []

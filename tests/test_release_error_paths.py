@@ -4,14 +4,24 @@ blocks pinned for the session — that silently reinstates the leak the
 r12 retention sweep fixed, exactly when memory pressure is highest.
 These tests force failures into the corpus_prep cutter, the labelprop
 round loop, and the media_prep pipeline and assert the tracked blocks
-are released while shield/caller frames survive."""
+are released while shield/caller frames survive.
+
+The paper pipelines keep a stricter contract: a ``run_v1_qa`` or
+``run_v2_survey`` call leaves exactly its returned frame pinned on
+success and nothing on failure."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from llmxmapreduce_spark.retention import pinned_ids
+from llmxmapreduce_spark.llm.client import ChattyQAClient
+from llmxmapreduce_spark.llm.survey_mock import MockSurveyClient
+from llmxmapreduce_spark.operators.stage_metrics import StageMetrics
+from llmxmapreduce_spark.pipelines import v1_qa
+from llmxmapreduce_spark.pipelines import v2_survey as v2
+from llmxmapreduce_spark.retention import frame_id, pinned_ids, release
+from tests.test_v2_pipeline import make_surveys
 
 
 def _registered(sc, ids):
@@ -171,3 +181,89 @@ def test_media_prep_releases_on_quarantine_checkpoint_error(
         f"quarantine checkpoint failure leaked kept_ids: {leaked}"
     from llmxmapreduce_spark.retention import release
     release(sc, leaked)
+
+
+# ---------------------------------------------------------------------------
+# paper pipelines: exactly the returned frame on success, nothing on failure
+# ---------------------------------------------------------------------------
+
+V2_CFG = v2.V2Config(conv_layers=1, receptive_field=2, result_num=2,
+                     top_k=2, refine_rounds=1, best_of=1, block_count=1)
+
+
+def _collapse_docs(spark):
+    """Two documents whose padded map replies (``ChattyQAClient``)
+    overflow the collapse budget at ``chunk_size=800``, so the A1 loop
+    runs."""
+    rows = [(i, "\n".join(f"padding sentence {j} here. The secret key for "
+                          f"document {i} is SK-{i}{i}{i}." for j in range(60)),
+             f"What is the secret key for document {i}?") for i in (7, 8)]
+    return spark.createDataFrame(rows, ["doc_id", "context", "question"])
+
+
+def _only_result_pinned(sc, before, out):
+    new = pinned_ids(sc) - before
+    try:
+        assert len(new) == 1, f"the call left {len(new)} frames pinned: {new}"
+        assert new == {frame_id(out)}, "the pinned frame is not the result"
+    finally:
+        release(sc, new)
+
+
+def test_v2_survey_decode_error_leaves_nothing_pinned(spark, monkeypatch):
+    sc = spark.sparkContext
+    surveys = make_surveys(spark)
+    before = pinned_ids(sc)
+
+    def exploding(*a, **k):
+        raise RuntimeError("injected decode failure")
+
+    monkeypatch.setattr(v2, "decode_survey", exploding)
+    with pytest.raises(RuntimeError, match="injected"):
+        v2.run_v2_survey(surveys, MockSurveyClient, V2_CFG)
+    leaked = pinned_ids(sc) - before
+    release(sc, leaked)
+    assert leaked == set(), f"a failed survey left frames pinned: {leaked}"
+
+
+def test_v1_qa_collapse_error_leaves_nothing_pinned(spark, monkeypatch):
+    sc = spark.sparkContext
+    docs = _collapse_docs(spark)
+    before = pinned_ids(sc)
+    real = v1_qa.llm_stage
+
+    def exploding(df, *a, **k):
+        if "group_id" in df.columns:              # a collapse round's input
+            raise RuntimeError("injected collapse failure")
+        return real(df, *a, **k)
+
+    monkeypatch.setattr(v1_qa, "llm_stage", exploding)
+    with pytest.raises(RuntimeError, match="injected"):
+        v1_qa.run_v1_qa(docs, chunk_size=800, client_factory=ChattyQAClient)
+    leaked = pinned_ids(sc) - before
+    release(sc, leaked)
+    assert leaked == set(), f"a failed QA call left frames pinned: {leaked}"
+
+
+def test_v2_survey_leaves_only_its_result_pinned(spark):
+    sc = spark.sparkContext
+    surveys = make_surveys(spark)
+    before = pinned_ids(sc)
+    out = v2.run_v2_survey(surveys, MockSurveyClient, V2_CFG)
+    assert out.count() == 2
+    _only_result_pinned(sc, before, out)
+
+
+def test_v1_qa_leaves_only_its_result_pinned(spark, tmp_path):
+    """With the prompt cache (two cached stages) and collapse rounds."""
+    sc = spark.sparkContext
+    docs = _collapse_docs(spark)
+    before = pinned_ids(sc)
+    sm = StageMetrics(spark)
+    out = v1_qa.run_v1_qa(docs, chunk_size=800, client_factory=ChattyQAClient,
+                          stage_metrics=sm,
+                          llm_cache_dir=str(tmp_path / "cache"))
+    assert sorted((r["doc_id"], r["answer"]) for r in out.collect()) == [
+        (7, "SK-777"), (8, "SK-888")]
+    assert sm.llm("collapse").calls.value > 0
+    _only_result_pinned(sc, before, out)

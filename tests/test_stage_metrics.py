@@ -6,6 +6,8 @@ first implementation (ADVICE r5): ``getOrEmpty`` raising before any action,
 and the Scala ``Map.get`` returning a py4j Option that needs unwrapping.
 """
 
+import time
+
 from pyspark.sql import functions as F
 
 from llmxmapreduce_spark.llm.client import ChattyQAClient, MockQAClient
@@ -159,3 +161,45 @@ def test_v2_pipeline_report_and_layers(spark):
     assert ldf.count() == len(layers)
     assert ldf.columns == ["survey_id", "block_cycle", "conv_layer",
                            "pool_size", "avg_score"]
+
+
+# ---------------------------------------------------------------------------
+# e2e: the stage wall times tile the call
+# ---------------------------------------------------------------------------
+
+def _walls_within(sm, call_s):
+    walls = {r["stage"]: r["wall_s"] for r in sm.report()
+             if r["wall_s"] is not None}
+    # report() rounds each wall to the millisecond
+    assert sum(walls.values()) <= call_s + 0.0005 * len(walls), (walls, call_s)
+    return walls
+
+
+def test_v2_stage_walls_tile_the_call(spark):
+    surveys = make_surveys(spark, n_surveys=2, n_papers=5)
+    cfg = v2.V2Config(conv_layers=1, receptive_field=2, result_num=2,
+                      top_k=2, refine_rounds=1, best_of=1, polish=False,
+                      block_count=2)
+    sm = StageMetrics(spark)
+    t0 = time.perf_counter()
+    v2.run_v2_survey(surveys, MockSurveyClient, cfg, stage_metrics=sm)
+    walls = _walls_within(sm, time.perf_counter() - t0)
+    for stage in ("papers", "outline", "digest", "refine", "decode"):
+        assert walls[stage] > 0, stage
+
+
+def test_v1_stage_walls_tile_the_call(spark):
+    # every line holds the secret, so the padded map replies overflow
+    # the collapse budget and the A1 loop runs
+    context = "\n".join(f"padding sentence {j} here. The secret key for "
+                        f"document 7 is SK-777." for j in range(60))
+    docs = spark.createDataFrame(
+        [(7, context, "What is the secret key for document 7?")],
+        ["doc_id", "context", "question"])
+    sm = StageMetrics(spark)
+    t0 = time.perf_counter()
+    run_v1_qa(docs, chunk_size=800, client_factory=ChattyQAClient,
+              max_collapse_rounds=6, stage_metrics=sm)
+    walls = _walls_within(sm, time.perf_counter() - t0)
+    for stage in ("map", "collapse", "reduce"):
+        assert walls[stage] > 0, stage

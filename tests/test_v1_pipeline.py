@@ -117,9 +117,8 @@ def test_mock_qa_client_routing():
 
 def test_collapse_checkpoints_released(spark):
     """r12 audit: each collapse round's state checkpoint must release
-    the previous round's blocks (round-1 ids stay as the caller-cache
-    shield) — ≤2 pinned frames per call plus nothing from the LLM
-    stages."""
+    the previous round's blocks — a call leaves only its returned frame
+    pinned, nothing from superseded rounds or the LLM stages."""
     sc = spark.sparkContext
     docs = make_docs(spark, n=4, repeats=40)
     before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
@@ -158,9 +157,8 @@ def test_v1_qa_with_llm_cache_replays(spark, tmp_path):
     assert sm2.llm("map").calls.value == 0
     assert sm2.llm("reduce").calls.value == 0
 
-    # bounded retention: ≤2 frames per cached stage (hash pre-pass +
-    # fresh results) × 2 stages × 2 runs + the collapse ledger's
-    # documented ≤2 per call; nothing grows with the corpus
+    # bounded retention: each run leaves only its returned frame pinned
+    # (the bound leaves slack); nothing grows with the corpus
     created = pinned_ids(sc) - before
     assert len(created) <= 12
     release(sc, created)

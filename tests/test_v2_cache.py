@@ -53,9 +53,9 @@ def test_v2_cached_digests_identical_and_replay(spark, tmp_path):
     assert sm2.llm("outline").calls.value > 0
 
     # ledger: cached-stage frames were released as superseded — three
-    # runs pin no more than the documented per-run residue (papers/
-    # outline/cur/digest checkpoints + the decode `done` section cut,
-    # r13), nothing proportional to digest passes × frames
+    # runs pin no more than a per-run residue (each run leaves only its
+    # returned frame; the bound leaves slack), nothing proportional to
+    # digest passes × frames
     created = pinned_ids(sc) - before
     assert len(created) <= 15, f"cached runs leaked frames: {created}"
     release(sc, created)

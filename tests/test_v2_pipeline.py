@@ -94,8 +94,7 @@ def test_sampling_port_properties():
 def test_block_cycle_checkpoints_released(spark):
     """r12 audit: each block cycle's refine checkpoint must release the
     previous cycle's `cur` blocks and the cycle's own digest
-    checkpoint — a run may pin only the pre-loop frames (papers,
-    outlines), the final cur, and the final digest/decode cuts, not
+    checkpoint — a run leaves only its returned frame pinned, not
     2 frames per cycle."""
     sc = spark.sparkContext
     surveys = make_surveys(spark)
@@ -106,8 +105,8 @@ def test_block_cycle_checkpoints_released(spark):
     out.count()
     after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
     leaked = after - before
-    # papers + outlines + final cur + final digests + decode cut = 5;
-    # anything rising with block_count is the leak class
+    # the returned frame = 1 (the bound leaves slack); anything rising
+    # with block_count is the leak class
     assert len(leaked) <= 5, (
         f"{len(leaked)} RDDs left pinned by a 3-cycle v2 run; per-cycle "
         "digest/cur checkpoints are leaking")
