@@ -321,19 +321,6 @@ def token_count_bpe_ish(text: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# C5 — chunk labeling (Generator.py:325-334)
-# ---------------------------------------------------------------------------
-
-
-def format_chunk_information(chunk_id: Column, text: Column) -> Column:
-    """``f'Information of Chunk {index}:\\n{d}\\n'`` (Generator.py:325-331)."""
-    return F.concat(
-        F.lit("Information of Chunk "), chunk_id.cast("string"), F.lit(":\n"),
-        text, F.lit("\n"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # P8 — illegal-citation scrub (process_str.py:44-110 remove_illegal_bibkeys):
 # needs difflib, so this is a Python function applied via pandas UDF in
 # operators/citations.py.

@@ -213,9 +213,10 @@ def chunk_documents(
     separator: str = "\n",
 ) -> DataFrame:
     """C1 as a distributed operator: per-row pandas UDF producing
-    ``array<string>`` then ``posexplode`` into one row per chunk (the
-    input's other columns, ``chunk_id``, ``text``).  Narrow transformation
-    — no shuffle."""
+    ``array<string>`` then ``posexplode_outer`` into one row per chunk (the
+    input's other columns, ``chunk_id``, ``text``); a document with no
+    chunk keeps one row with null ``chunk_id`` and ``text``.  Narrow
+    transformation — no shuffle."""
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def chunks_udf(text: pd.Series, budget: pd.Series) -> pd.Series:
@@ -227,6 +228,6 @@ def chunk_documents(
     budget = F.col(budget_col) if isinstance(budget_col, str) else budget_col
     keep = [c for c in df.columns if c not in (text_col,)]
     return (
-        df.select(*keep, F.posexplode(chunks_udf(F.col(text_col), budget))
+        df.select(*keep, F.posexplode_outer(chunks_udf(F.col(text_col), budget))
                   .alias("chunk_id", "text"))
     )

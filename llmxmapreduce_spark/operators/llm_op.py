@@ -64,7 +64,7 @@ class LLMMetrics:
 
 def llm_stage(
     df: DataFrame,
-    build_prompt: Callable[[dict[str, Any]], str],
+    build_prompt: Callable[[dict[str, Any]], str | None],
     parse: Callable[[str], dict[str, Any]],
     client_factory: Callable[[], LLMClient],
     payload_fields: list[T.StructField],
@@ -74,7 +74,9 @@ def llm_stage(
 ) -> DataFrame:
     """Run one LLM stage over ``df``.
 
-    - ``build_prompt(row_dict) -> str`` — prompt template over row fields.
+    - ``build_prompt(row_dict) -> str | None`` — prompt template over row
+      fields; a row whose prompt is ``None`` sends nothing and comes out
+      ``llm_ok=false``, ``llm_error="NoPrompt"``, ``llm_attempts=0``.
     - ``parse(reply) -> dict`` — validated payload; raising marks the row
       ``llm_ok=false`` (parse-and-retry is the reference's schema system,
       process_str.py:8-29).
@@ -116,13 +118,16 @@ def _resolve_retry(client_factory: Callable[[], LLMClient],
     return getattr(client_factory(), "retry_policy", None) or RetryPolicy()
 
 
-def _call_and_parse(client: LLMClient, prompt: str,
+def _call_and_parse(client: LLMClient, prompt: str | None,
                     parse: Callable[[str], dict[str, Any]],
                     payload_names: list[str], retry: RetryPolicy,
                     metrics: LLMMetrics | None,
                     ) -> tuple[dict[str, Any], bool, str | None, int]:
     """One model call with retries, metered and parsed:
-    ``(payload, llm_ok, llm_error, llm_attempts)``."""
+    ``(payload, llm_ok, llm_error, llm_attempts)``.  A ``None`` prompt
+    calls nothing and meters nothing: ``(nulls, False, "NoPrompt", 0)``."""
+    if prompt is None:
+        return dict.fromkeys(payload_names), False, "NoPrompt", 0
     reply, err, attempts = call_with_retry(client, prompt, retry)
     if metrics is not None:
         metrics.calls.add(1)
@@ -183,14 +188,15 @@ def _cache_bytes(spark, cache_dir: str) -> int:
 
 def with_prompt_hash(
     df: DataFrame,
-    build_prompt: Callable[[dict[str, Any]], str],
+    build_prompt: Callable[[dict[str, Any]], str | None],
     version: str = "",
     hash_col: str = PROMPT_HASH_COL,
 ) -> DataFrame:
     """Pure pre-pass: append the md5 of the prompt each row WOULD send
-    (no LLM traffic).  ``version`` is salted into the hash — bump it when
-    the prompt template or the parser changes semantics, and the whole
-    cache invalidates without a directory wipe.
+    (no LLM traffic; null for a row whose prompt is ``None``).  ``version``
+    is salted into the hash — bump it when the prompt template or the
+    parser changes semantics, and the whole cache invalidates without a
+    directory wipe.
 
     The prompt is built twice for cache misses (here and inside the LLM
     stage) rather than carried as a column: prompts are the widest thing
@@ -203,7 +209,7 @@ def with_prompt_hash(
         raise ValueError(
             f"with_prompt_hash: input already has a {hash_col!r} column")
     out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(hash_col, T.StringType(), False)])
+        list(df.schema.fields) + [T.StructField(hash_col, T.StringType(), True)])
     salt = version.encode() + b"\x00"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -211,9 +217,10 @@ def with_prompt_hash(
 
         for pdf in batches:
             pdf = pdf.copy()
+            prompts = [build_prompt(row) for row in pdf.to_dict("records")]
             pdf[hash_col] = [
-                hashlib.md5(salt + build_prompt(row).encode()).hexdigest()
-                for row in pdf.to_dict("records")
+                None if p is None else hashlib.md5(salt + p.encode()).hexdigest()
+                for p in prompts
             ]
             yield pdf
 
@@ -225,13 +232,14 @@ def read_prompt_cache(spark, cache_dir: str,
                       hash_col: str = PROMPT_HASH_COL,
                       relevant: DataFrame | None = None) -> DataFrame | None:
     """The deduplicated cache table ``(hash_col, *payload, llm_attempts)``,
-    or None before the first write.  Existence goes through the Hadoop
-    FileSystem API (the streaming-admission idiom, streaming/ingest.py) —
-    never a parse of one Spark version's error text.  Appends may have
-    written the same hash twice (two concurrent runs, duplicate prompts in
-    one batch at different times); one row per hash is picked by a total
-    order over the payload struct, so every reader resolves ties the same
-    way.
+    or None before the first write.  The read is given that schema, so it
+    spends no job inferring it from the parquet footers.  Existence goes
+    through the Hadoop FileSystem API (the streaming-admission idiom,
+    streaming/ingest.py) — never a parse of one Spark version's error
+    text.  Appends may have written the same hash twice (two concurrent
+    runs, duplicate prompts in one batch at different times); one row per
+    hash is picked by a total order over the payload struct, so every
+    reader resolves ties the same way.
 
     ``relevant`` (a frame containing ``hash_col``) prunes the cache with a
     left-semi join BEFORE the dedupe shuffle: an incremental batch over a
@@ -246,7 +254,10 @@ def read_prompt_cache(spark, cache_dir: str,
     # read dies with UNABLE_TO_INFER_SCHEMA
     if not fs.exists(base) or not fs.listFiles(base, True).hasNext():
         return None
-    raw = spark.read.parquet(cache_dir)
+    raw = spark.read.schema(T.StructType(
+        [T.StructField(hash_col, T.StringType(), True), *payload_fields,
+         T.StructField("llm_attempts", T.IntegerType(), True)])
+    ).parquet(cache_dir)
     if relevant is not None:
         raw = raw.join(relevant.select(hash_col), hash_col, "left_semi")
     names = [f.name for f in payload_fields] + ["llm_attempts"]
@@ -259,7 +270,7 @@ def read_prompt_cache(spark, cache_dir: str,
 
 def llm_stage_cached(
     df: DataFrame,
-    build_prompt: Callable[[dict[str, Any]], str],
+    build_prompt: Callable[[dict[str, Any]], str | None],
     parse: Callable[[str], dict[str, Any]],
     client_factory: Callable[[], LLMClient],
     payload_fields: list[T.StructField],
@@ -287,6 +298,8 @@ def llm_stage_cached(
 
     Failed rows (``llm_ok=false``) are returned with the usual sentinel
     but NOT cached, so the next run retries them — the D8/D13 contract.
+    Rows whose prompt is ``None`` come out as in ``llm_stage``, with no
+    call and no cache row.
 
     Job shape, one pass over the input: the lazily hashed input is
     left-joined with the deduplicated cache (:func:`read_prompt_cache`;
@@ -335,7 +348,7 @@ def llm_stage_cached(
     keep_fields = [df.schema[c] for c in keep_cols]
     out_schema = T.StructType(
         keep_fields + payload_fields + LLM_COLS
-        + [T.StructField(PROMPT_HASH_COL, T.StringType(), False),
+        + [T.StructField(PROMPT_HASH_COL, T.StringType(), True),
            T.StructField(_FRESH_COL, T.BooleanType(), False)])
     out_names = [f.name for f in out_schema.fields]
     fresh_rows = spark.sparkContext.accumulator(0)

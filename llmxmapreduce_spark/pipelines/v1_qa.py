@@ -6,15 +6,15 @@ Reference: LLMxMapReduce_V1/pipeline.py:30-43 (BasePipeline.run), with
 - map L1        — Generator.py:86-116 + config/qa.yaml map_prompt
 - filter P1     — pipeline.py:10-27 remove_chunk
 - collapse A1/L2 — Generator.py:336-393 mr_collapse (the data-dependent
-  while-loop becomes a bounded driver loop; per-document bin-packing via
-  ``applyInPandas`` so every document converges independently)
+  while-loop runs per document, bounded by ``max_collapse_rounds``, in one
+  ``applyInPandas`` pass, so every document converges independently)
 - reduce A2/L3  — Generator.py:395-419 mr_reduce
 
-Spark shape (SURVEY.md §3.1): documents → chunks (posexplode) →
-mapInPandas(L1) → filter(P1) → [driver loop: per-doc regroup +
-mapInPandas(L2) + filter] → groupBy(doc).collect_list → mapInPandas(L3) →
-answers.  Every LLM call is Arrow-batched; the only driver-side values are
-the loop-termination aggregates (one count per round).
+Spark shape (SURVEY.md §3.1): documents → chunks (posexplode_outer) →
+mapInPandas(L1) → [per-doc applyInPandas: P1 + the A1/L2 loop + the
+chunk labels] → mapInPandas(L3) → answers, one row per document.  Every
+LLM call is Arrow-batched on an executor, the caller's documents are read
+once, and nothing is collected to the driver.
 
 The prompts keep the reference's routing markers and output contract
 (Extracted Information / Rationale / Answer / Confidence Score) in a
@@ -28,14 +28,20 @@ import os
 from collections.abc import Callable
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from llmxmapreduce_spark.functions import text as X
 from llmxmapreduce_spark.llm.client import LLMClient, RetryPolicy
 from llmxmapreduce_spark.operators import chunker
-from llmxmapreduce_spark.operators.llm_op import llm_stage, llm_stage_cached
+from llmxmapreduce_spark.operators.llm_op import (
+    LLMMetrics,
+    _call_and_parse,
+    _resolve_retry,
+    llm_stage,
+    llm_stage_cached,
+)
 from llmxmapreduce_spark.operators.stage_metrics import StageRun
 
 MAX_NEW_TOKENS = 300  # gen_args.get('max_tokens', 300), Generator.py:350
@@ -74,14 +80,73 @@ REDUCE_PROMPT = (
 
 _TEXT_PAYLOAD = [T.StructField("text", T.StringType(), True)]
 
+# the answer row of a document with nothing informative left to reduce
+NO_INFORMATION_REPLY = f"Rationale: no informative chunks.\nAnswer: {X.NO_INFORMATION}"
 
-def _keep_informative(df: DataFrame, text_col: str = "text") -> DataFrame:
+
+def _informative(question: str, text: str) -> bool:
     """P1 with the per-row question escape hatch (pipeline.py:19-20)."""
     marker = X.NO_INFORMATION.upper()
-    return df.filter(
-        F.upper(F.col("question")).contains(marker)
-        | ~F.upper(F.col(text_col)).contains(marker)
-    )
+    return marker in question.upper() or marker not in text.upper()
+
+
+def _chunk_information(texts: list[str]) -> str:
+    """The labelled join that the collapse budget measures and the reduce
+    prompt reads (Generator.py:311-331)."""
+    return "".join(f"Information of Chunk {i}:\n{t}\n" for i, t in enumerate(texts))
+
+
+def _collapse(
+    state: DataFrame,
+    template: str,
+    token_max: int,
+    length_fn: chunker.LengthFn,
+    client_factory: Callable[[], LLMClient],
+    retry: RetryPolicy | None,
+    metrics: LLMMetrics | None,
+    max_rounds: int,
+) -> DataFrame:
+    """A1/L2 as one per-document pass: ``state`` (doc_id, chunk_id,
+    question, text, llm_ok) → (doc_id, question, context), where
+    ``context`` is the reduce's labelled join, or null when nothing
+    informative is left.  Each document filters its map replies (P1) and
+    runs mr_collapse's loop at most ``max_rounds`` times: while the join
+    is over ``token_max``, pack (utils.py:61-90), merge each pack, filter.
+    The explicit partition count keeps the model calls on every core (AQE
+    would coalesce a small count-less shuffle into a task or two)."""
+    retry = _resolve_retry(client_factory, retry)
+    schema = T.StructType([state.schema["doc_id"], state.schema["question"],
+                           T.StructField("context", T.StringType(), True)])
+
+    def fmt_len(texts: list[str]) -> int:
+        return length_fn(_chunk_information(texts))
+
+    def collapse_doc(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("chunk_id")
+        question = pdf["question"].iloc[0]
+        texts = [t for ok, t in zip(pdf["llm_ok"], pdf["text"])
+                 if ok and _informative(question, t)]
+        client = None
+        for _ in range(max_rounds):
+            if fmt_len(texts) <= token_max:
+                break
+            client = client or client_factory()
+            replies = [
+                _call_and_parse(
+                    client, template.format(context="\n\n".join(group),  # join_docs
+                                            question=question),
+                    lambda reply: {"text": reply}, ["text"], retry, metrics)
+                for group in chunker.split_list_of_docs(texts, fmt_len, token_max)
+            ]
+            texts = [p["text"] for p, ok, _, _ in replies
+                     if ok and _informative(question, p["text"])]
+        return pd.DataFrame({
+            "doc_id": [pdf["doc_id"].iloc[0]], "question": [question],
+            "context": [_chunk_information(texts) if texts else None]})
+
+    n_tasks = int(state.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (state.repartition(n_tasks, "doc_id").groupBy("doc_id")
+            .applyInPandas(collapse_doc, schema=schema))
 
 
 def run_v1_qa(
@@ -95,11 +160,14 @@ def run_v1_qa(
     stage_metrics=None,
     llm_cache_dir: str | None = None,
 ) -> DataFrame:
-    """``docs``: (doc_id, context, question) → (doc_id, answer, raw_reply).
+    """``docs``: (doc_id, context, question) → (doc_id, answer, raw_reply),
+    one row per document.  A document with no informative chunk left (an
+    empty one too) answers ``[NO INFORMATION]`` without a reduce call.
 
     ``chunk_size`` is the model context budget in tokens (reference default
     4096); the map budget subtracts the prompt, the question, and
-    MAX_NEW_TOKENS exactly as Generator.py:236-240 does.
+    MAX_NEW_TOKENS exactly as Generator.py:236-240 does.  ``length_fn``
+    counts tokens for both the chunker and the collapse budget.
 
     ``prompts``: optional ``{"map": …, "collapse": …, "reduce": …}``
     templates with ``{context}``/``{question}`` slots — pass
@@ -123,14 +191,15 @@ def run_v1_qa(
     intermediate merges that only repeat on byte-identical re-runs.
     Each cached stage is one pass over its input — cache join, hash
     repartition, one model/replay ``mapInPandas`` — whose eager frame
-    also feeds the cache append.
+    also feeds the cache append.  Rows with no prompt (an empty document,
+    a document with nothing to reduce) are never sent and never cached.
 
-    Retention: the returned frame is an eager checkpoint, the only frame
-    the call leaves pinned (nothing on an error).  Each cut inside the
-    call is released once its last reader is cut.  A caller that wraps
-    the call in ``retention.owned()`` gets the returned frame's id, to
-    release once it has read the result, even while other requests share
-    the session.
+    Retention: the call cuts the map rows, one collapsed row per document
+    and the returned answers, the only frame the call leaves pinned
+    (nothing on an error).  Each cut inside the call is released once its
+    last reader is cut.  A caller that wraps the call in
+    ``retention.owned()`` gets the returned frame's id, to release once
+    it has read the result, even while other requests share the session.
     """
     map_tmpl = (prompts or {}).get("map", MAP_PROMPT)
     collapse_tmpl = (prompts or {}).get("collapse", COLLAPSE_PROMPT)
@@ -163,124 +232,41 @@ def run_v1_qa(
 
         mapped = map_or_cached(
             chunks, "map",
-            build_prompt=lambda r: map_tmpl.format(context=r["text"], question=r["question"]),
+            build_prompt=lambda r: None if r["text"] is None else map_tmpl.format(
+                context=r["text"], question=r["question"]),
             parse=lambda reply: {"text": reply},
             payload_fields=_TEXT_PAYLOAD,
             keep_cols=["doc_id", "chunk_id", "question"],
         )
-        # The collapse gate (`over.isEmpty`), the reduce path and a round's
-        # keep/merge branches all read `state`: without this cut the map
-        # LLM stage ran 2-3× (the map accumulator showed 1804 calls for 902
-        # chunks on the sf0.01 documents).  The cut runs it once.
-        state = run.cut("map", _keep_informative(mapped.filter("llm_ok")).select(
-            "doc_id", "chunk_id", "question", "text"
-        ))
+        # Every chunk row stays, so the collapse pass sees each document
+        # (P1 runs there) and the result needs no join back to `docs`.
+        state = run.cut("map", mapped.select(
+            "doc_id", "chunk_id", "question", "text", "llm_ok"))
 
-        # --- A1/L2 collapse loop --------------------------------------------
+        # --- A1/L2 collapse -------------------------------------------------
         # token budget per merged group (Generator.py:347-350)
         token_max = chunk_size - collapse_prompt_len - MAX_NEW_TOKENS
-
-        pack_schema = T.StructType([
-            T.StructField("doc_id", docs.schema["doc_id"].dataType, False),
-            T.StructField("group_id", T.IntegerType(), False),
-            T.StructField("question", T.StringType(), True),
-            T.StructField("context", T.StringType(), True),
-        ])
-
-        def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-            """Per-doc greedy bin-packing (utils.py:61-90) with the reference's
-            formatted-length measure (Generator.py:311-316)."""
-            pdf = pdf.sort_values("chunk_id")
-            texts = list(pdf["text"])
-
-            def fmt_len(docs_list: list[str]) -> int:
-                joined = "".join(
-                    f"Information of Chunk {i}:\n{d}\n" for i, d in enumerate(docs_list)
-                )
-                return length_fn(joined)
-
-            groups = chunker.split_list_of_docs(texts, fmt_len, token_max)
-            rows = [
-                {"doc_id": pdf["doc_id"].iloc[0], "group_id": gid,
-                 "question": pdf["question"].iloc[0],
-                 "context": "\n\n".join(group)}          # join_docs, Generator.py:320-323
-                for gid, group in enumerate(groups)
-            ]
-            return pd.DataFrame(rows, columns=[f.name for f in pack_schema.fields])
-
-        w = Window.partitionBy("doc_id").orderBy("chunk_id")
-        for _ in range(max_collapse_rounds):
-            cur = state.withColumn("__idx", F.row_number().over(w) - 1).withColumn(
-                "__tok",
-                X.token_count_bpe_ish(X.format_chunk_information(F.col("__idx"), F.col("text"))),
-            )
-            totals = cur.groupBy("doc_id").agg(F.sum("__tok").alias("__total"))
-            over = totals.filter(F.col("__total") > token_max).select("doc_id")
-            if over.isEmpty():
-                break
-            ok_chunks = cur.join(over, "doc_id", "left_anti").select(
-                "doc_id", "chunk_id", "question", "text"
-            )
-            over_chunks = cur.join(over, "doc_id", "left_semi")
-            packed = over_chunks.select("doc_id", "chunk_id", "question", "text") \
-                .groupBy("doc_id").applyInPandas(pack, schema=pack_schema)
-            merged = llm_stage(
-                packed,
-                build_prompt=lambda r: collapse_tmpl.format(
-                    context=r["context"], question=r["question"]),
-                parse=lambda reply: {"text": reply},
-                client_factory=client_factory,
-                payload_fields=_TEXT_PAYLOAD,
-                keep_cols=["doc_id", "group_id", "question"],
-                retry=retry,
-                metrics=run.llm("collapse"),
-            )
-            new_chunks = _keep_informative(merged.filter("llm_ok")).select(
-                "doc_id", F.col("group_id").alias("chunk_id"), "question", "text"
-            )
-            # cut the per-round lineage so the loop's plan doesn't grow
-            # superlinearly (bounded driver loop, SURVEY.md §7); the round
-            # is the last reader of the state it replaces
-            state = run.cut("collapse", ok_chunks.unionByName(new_chunks),
-                            supersedes=(state,))
+        state = run.cut("collapse", _collapse(
+            state, collapse_tmpl, token_max, length_fn, client_factory, retry,
+            run.llm("collapse"), max_collapse_rounds), supersedes=(state,))
 
         # --- A2/L3 reduce ----------------------------------------------------
-        final = state.withColumn("__idx", F.row_number().over(w) - 1)
-        per_doc = (
-            final.withColumn("__fmt", X.format_chunk_information(F.col("__idx"), F.col("text")))
-            .groupBy("doc_id", "question")
-            .agg(
-                F.concat_ws(
-                    "",
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("__idx", "__fmt"))),
-                        lambda s: s["__fmt"],
-                    ),
-                ).alias("context")
-            )
-        )
         reduced = map_or_cached(
-            per_doc, "reduce",
-            build_prompt=lambda r: reduce_tmpl.format(
+            state, "reduce",
+            build_prompt=lambda r: None if r["context"] is None else reduce_tmpl.format(
                 context=r["context"], question=r["question"]),
             parse=lambda reply: {"raw_reply": reply},
             payload_fields=[T.StructField("raw_reply", T.StringType(), True)],
             keep_cols=["doc_id"],
         )
-        answers = reduced.select(
+        # A document whose every map/collapse output was filtered (all
+        # [NO INFORMATION] or all llm_ok=false) still answers — the
+        # reference runs mr_reduce regardless and the answer scores 0;
+        # dropping it would silently inflate eval denominators (v1_eval).
+        return run.result("reduce", reduced.select(
             "doc_id",
-            X.extract_answer(F.col("raw_reply")).alias("answer"),
-            "raw_reply",
-        )
-        # Documents whose every map/collapse output was filtered (all
-        # [NO INFORMATION] or all llm_ok=false) must still produce a row —
-        # the reference runs mr_reduce regardless and the answer scores 0;
-        # dropping them would silently inflate eval denominators (v1_eval).
-        return run.result("reduce", docs.select("doc_id").join(
-            answers, "doc_id", "left").select(
-            "doc_id",
-            F.coalesce(F.col("answer"), F.lit(X.NO_INFORMATION)).alias("answer"),
-            F.coalesce(F.col("raw_reply"),
-                       F.lit(f"Rationale: no informative chunks.\nAnswer: {X.NO_INFORMATION}")
+            F.coalesce(X.extract_answer(F.col("raw_reply")),
+                       F.lit(X.NO_INFORMATION)).alias("answer"),
+            F.coalesce(F.col("raw_reply"), F.lit(NO_INFORMATION_REPLY)
                        ).alias("raw_reply"),
         ))

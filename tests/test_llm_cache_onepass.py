@@ -203,3 +203,30 @@ def test_run_with_nothing_fresh_writes_no_cache_file(spark, tmp_path):
     rows, _ = _run_pinned(spark, lambda: _cached(df, d, m))
     assert m.calls.value == 0 and len(rows) == 2
     assert _cache_files(d) == files
+
+
+def test_no_prompt_rows_send_nothing(spark, tmp_path):
+    """A row whose prompt is None is not sent, metered or cached, in
+    either stage: ``llm_ok=false``, ``NoPrompt``, 0 attempts."""
+    client, build, parse = _mk(always_fail=True)
+
+    def build_or_none(row):
+        return None if row["word"] is None else build(row)
+
+    d = tmp_path / "c"
+    stages = {
+        "llm_stage": lambda df, m: llm_op.llm_stage(
+            df, build_or_none, parse, client, PAYLOAD, KEEP, metrics=m),
+        "llm_stage_cached": lambda df, m: llm_op.llm_stage_cached(
+            df, build_or_none, parse, client, PAYLOAD, KEEP, str(d),
+            metrics=m),
+    }
+    df = _frame(spark, [None, None, None])
+    for name, stage in stages.items():
+        m = llm_op.LLMMetrics(spark)
+        rows, _ = _run_pinned(spark, lambda: stage(df, m))
+        assert rows == [(i, None, None, False, "NoPrompt", 0)
+                        for i in range(3)], name
+        assert m.calls.value == 0 and m.prompt_chars.value == 0, name
+    # nothing was appended: the cache was never created
+    assert not d.exists() or not _cache_files(d)

@@ -230,14 +230,11 @@ def test_v1_qa_collapse_error_leaves_nothing_pinned(spark, monkeypatch):
     sc = spark.sparkContext
     docs = _collapse_docs(spark)
     before = pinned_ids(sc)
-    real = v1_qa.llm_stage
 
-    def exploding(df, *a, **k):
-        if "group_id" in df.columns:              # a collapse round's input
-            raise RuntimeError("injected collapse failure")
-        return real(df, *a, **k)
+    def exploding(state, *a, **k):               # stands in for v1_qa._collapse
+        raise RuntimeError("injected collapse failure")
 
-    monkeypatch.setattr(v1_qa, "llm_stage", exploding)
+    monkeypatch.setattr(v1_qa, "_collapse", exploding)
     with pytest.raises(RuntimeError, match="injected"):
         v1_qa.run_v1_qa(docs, chunk_size=800, client_factory=ChattyQAClient)
     leaked = pinned_ids(sc) - before

@@ -6,12 +6,16 @@ from pyspark.sql import types as T
 from llmxmapreduce_spark.functions import text as X
 
 from llmxmapreduce_spark.llm.client import (
+    ChattyQAClient,
     FlakyClient,
     HashEchoClient,
     MockQAClient,
     RetryPolicy,
 )
+from llmxmapreduce_spark.operators import chunker
 from llmxmapreduce_spark.operators.llm_op import dead_letter_split, llm_stage
+from llmxmapreduce_spark.operators.stage_metrics import StageMetrics
+from llmxmapreduce_spark.pipelines import v1_qa
 from llmxmapreduce_spark.pipelines.v1_qa import run_v1_qa
 
 
@@ -42,18 +46,21 @@ def test_v1_qa_collapse_triggers(spark):
     i = 7
     secret = f"The secret key for document {i} is SK-777."
     context = "\n".join(
-        f"padding sentence {j} here. {secret}" for j in range(30)
+        f"padding sentence {j} here. {secret}" for j in range(60)
     )
     docs = spark.createDataFrame(
         [(i, context, f"What is the secret key for document {i}?")],
         ["doc_id", "context", "question"],
     )
-    # chunk_size 800 -> collapse budget ~330 tokens: 30 surviving ~47-token
-    # blocks exceed it (first round packs ~6 per bin), and the merged blocks
-    # fit, so the loop runs >=1 round and converges.
-    out = run_v1_qa(docs, chunk_size=800, client_factory=MockQAClient,
-                    max_collapse_rounds=6).collect()
+    # chunk_size 800 -> collapse budget 402 tokens: ChattyQAClient's three
+    # padded map replies (136 labelled tokens each) exceed it and pack into
+    # two groups, and the merged blocks fit, so the loop runs one round and
+    # converges.
+    sm = StageMetrics(spark)
+    out = run_v1_qa(docs, chunk_size=800, client_factory=ChattyQAClient,
+                    max_collapse_rounds=6, stage_metrics=sm).collect()
     assert out[0]["answer"] == "SK-777"
+    assert sm.llm("collapse").calls.value > 0
 
 
 def test_v1_qa_deterministic(spark):
@@ -116,19 +123,24 @@ def test_mock_qa_client_routing():
 
 
 def test_collapse_checkpoints_released(spark):
-    """r12 audit: each collapse round's state checkpoint must release
-    the previous round's blocks — a call leaves only its returned frame
-    pinned, nothing from superseded rounds or the LLM stages."""
+    """r12 audit: the collapse cut must release the map cut it replaces —
+    a call that collapses every document leaves only its returned frame
+    pinned, nothing from the map or collapse cuts or the LLM stages."""
     sc = spark.sparkContext
     docs = make_docs(spark, n=4, repeats=40)
     before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    out = run_v1_qa(docs, chunk_size=520, client_factory=MockQAClient)
+    # chunk_size 600 -> collapse budget 202 tokens: each document's two
+    # padded map replies (136 labelled tokens each) overflow it
+    sm = StageMetrics(spark)
+    out = run_v1_qa(docs, chunk_size=600, client_factory=ChattyQAClient,
+                    stage_metrics=sm)
     out.count()
+    assert sm.llm("collapse").calls.value > 0
     after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
     leaked = after - before
     assert len(leaked) <= 3, (
-        f"{len(leaked)} RDDs left pinned by a 3-round collapse run; "
-        "prior-round state checkpoints are leaking")
+        f"{len(leaked)} RDDs left pinned by a collapsing run; "
+        "the map or collapse cuts are leaking")
 
 
 def test_v1_qa_with_llm_cache_replays(spark, tmp_path):
@@ -193,3 +205,84 @@ def test_map_stage_runs_once(spark):
                         client_factory=MockQAClient, stage_metrics=sm)
         assert out.count() == n
         assert sm.llm("map").calls.value == expected
+
+
+def test_docs_read_once(spark, tmp_path):
+    """The caller's documents are read once per call, with and without
+    the prompt cache: every chunk row carries its document to the result,
+    so nothing joins back to ``docs`` (a join that re-read them 3x)."""
+    base = make_docs(spark, n=3)
+    cache_dir = str(tmp_path / "cache")
+    for cache in (None, cache_dir, cache_dir):         # uncached, cold, warm
+        reads = spark.sparkContext.accumulator(0)
+
+        @F.udf(T.BooleanType())
+        def counted(doc_id):
+            reads.add(1)
+            return True
+
+        out = run_v1_qa(base.filter(counted("doc_id")), 520, MockQAClient,
+                        llm_cache_dir=cache)
+        assert sorted(r["doc_id"] for r in out.collect()) == [0, 1, 2]
+        assert reads.value == 3, (cache, reads.value)
+
+
+def _chunk_rows(docs, chunk_size):
+    """The chunker's rows for ``run_v1_qa``'s map budget at ``chunk_size``."""
+    budget = (
+        F.lit(chunk_size - chunker.bpe_ish_len(v1_qa.MAP_PROMPT)
+              - v1_qa.MAX_NEW_TOKENS)
+        - X.token_count_bpe_ish(F.col("question"))
+    )
+    return chunker.chunk_documents(
+        docs.withColumn("budget", budget), id_col="doc_id",
+        text_col="context", budget_col="budget").collect()
+
+
+def test_empty_documents_answer_once(spark, tmp_path):
+    """An empty and a whitespace-only document each keep one chunk row
+    with null text, send no map or reduce prompt, write no cache row and
+    answer [NO INFORMATION] with the default reply — cached or not."""
+    docs = spark.createDataFrame([
+        (0, "filler\nThe secret key for document 0 is SK-9000.\nfiller",
+         "What is the secret key for document 0?"),
+        (1, "", "What is the secret key for document 1?"),
+        (2, "  \n \t ", "What is the secret key for document 2?"),
+    ], ["doc_id", "context", "question"])
+    chunks = _chunk_rows(docs, 520)
+    assert sorted(r["doc_id"] for r in chunks if r["text"] is None) == [1, 2]
+    n_texts = sum(r["text"] is not None for r in chunks)
+    cache = str(tmp_path / "cache")
+    for cache_dir in (None, cache):
+        sm = StageMetrics(spark)
+        out = {r["doc_id"]: r for r in run_v1_qa(
+            docs, 520, MockQAClient, stage_metrics=sm,
+            llm_cache_dir=cache_dir).collect()}
+        assert sorted(out) == [0, 1, 2]
+        assert out[0]["answer"] == "SK-9000"
+        for i in (1, 2):
+            assert out[i]["answer"] == X.NO_INFORMATION
+            assert out[i]["raw_reply"] == v1_qa.NO_INFORMATION_REPLY
+        assert sm.llm("map").calls.value == n_texts
+        assert sm.llm("reduce").calls.value == 1
+    # only document 0's prompts reached the cache
+    assert spark.read.parquet(f"{cache}/map").count() == n_texts
+    assert spark.read.parquet(f"{cache}/reduce").count() == 1
+
+
+def test_collapse_budget_uses_length_fn(spark):
+    """The collapse stop test counts with ``length_fn``, the same count
+    the packing uses: four map replies that fit the collapse budget by
+    ``ws_len`` (88 of 115 words) but not by the bpe-ish count (132) must
+    not be collapsed."""
+    secret = "The secret key for document 7 is SK-777."
+    context = "\n".join(f"padding sentence {j} here. {secret}" for j in range(30))
+    docs = spark.createDataFrame(
+        [(7, context, "What is the secret key for document 7?")],
+        ["doc_id", "context", "question"])
+    sm = StageMetrics(spark)
+    out = run_v1_qa(docs, chunk_size=480, client_factory=MockQAClient,
+                    length_fn=chunker.ws_len, stage_metrics=sm).collect()
+    assert out[0]["answer"] == "SK-777"
+    assert sm.llm("map").calls.value == 4
+    assert sm.llm("collapse").calls.value == 0
