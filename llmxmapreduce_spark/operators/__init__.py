@@ -11,7 +11,7 @@ Used by the paper's pipelines:
 - ``crawl_ops``     — P6 crawl filter + backfill, A5 topic grouping
 - ``skeleton``      — markdown ⇄ tree parse/serialize, J1 alignment
 - ``digest_ops``    — A3 digest merge, digest build
-- ``citations``     — P8 scrub, P12 renumbering, J3 index join, A7 cite_ratio
+- ``citations``     — P8 scrub, P12 renumbering, J3 index join
 - ``figures``       — J5 figure anchoring
 - ``eval_ops``      — A8 averaging, A9 claim metrics, InfiniteBench scorers,
                       A10 fact dedup

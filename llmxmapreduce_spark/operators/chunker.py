@@ -211,23 +211,31 @@ def chunk_documents(
     budget_col: str | Column = "budget",
     length_fn: LengthFn = bpe_ish_len,
     separator: str = "\n",
+    reserve_col: str | None = None,
 ) -> DataFrame:
     """C1 as a distributed operator: per-row pandas UDF producing
     ``array<string>`` then ``posexplode_outer`` into one row per chunk (the
     input's other columns, ``chunk_id``, ``text``); a document with no
     chunk keeps one row with null ``chunk_id`` and ``text``.  Narrow
-    transformation — no shuffle."""
+    transformation — no shuffle.
+
+    ``reserve_col`` names a text column that shares every chunk's prompt
+    (V1's question): its ``length_fn`` count comes off the row's budget,
+    inside the same UDF, so the projection starts one Python worker."""
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
-    def chunks_udf(text: pd.Series, budget: pd.Series) -> pd.Series:
+    def chunks_udf(text: pd.Series, budget: pd.Series,
+                   reserve: pd.Series) -> pd.Series:
         return pd.Series(
-            [chunk_docs(t, int(b), length_fn, separator)
-             for t, b in zip(text, budget)]
+            [chunk_docs(t, int(b) - (0 if r is None else length_fn(r)),
+                        length_fn, separator)
+             for t, b, r in zip(text, budget, reserve)]
         )
 
     budget = F.col(budget_col) if isinstance(budget_col, str) else budget_col
+    reserve = F.col(reserve_col) if reserve_col else F.lit(None).cast("string")
     keep = [c for c in df.columns if c not in (text_col,)]
     return (
-        df.select(*keep, F.posexplode_outer(chunks_udf(F.col(text_col), budget))
-                  .alias("chunk_id", "text"))
+        df.select(*keep, F.posexplode_outer(
+            chunks_udf(F.col(text_col), budget, reserve)).alias("chunk_id", "text"))
     )

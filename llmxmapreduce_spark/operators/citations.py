@@ -1,14 +1,15 @@
-"""Citation operators: P8 scrub, P12 renumbering, J3 index join, A7
-cite_ratio, references block (SURVEY.md §2).
+"""Citation operators: P8 scrub and P12 renumbering (SURVEY.md §2).
 
 Reference: decode_pipeline.py:115-156 (``change_bibkey_to_index``),
 process_str.py:44-110 (``remove_illegal_bibkeys``).
 
-The bibkey→index map is the per-survey ordered paper list; it travels as an
-array column via a broadcast-friendly join (J3), and the rewrite itself is
-an Arrow-batched pandas UDF (regex + difflib are not expressible as Catalyst
-expressions).  cite_ratio (A7) is a plain aggregation over the per-paper
-citation counts — no Python.
+:func:`renumber_citations_py` is the per-content rewrite (regex + difflib
+are not expressible as Catalyst expressions).  The survey decode calls it
+inside its per-survey tail pass (``v2_survey.decode_tail``), which also
+computes A7 ``cite_ratio`` and the references block in the same Python
+pass.  :func:`renumber_citations` is the same rewrite as a DataFrame
+operator: the per-survey ordered paper list travels as an array column via
+a broadcast join (J3), and an Arrow-batched pandas UDF rewrites each row.
 """
 
 from __future__ import annotations
@@ -105,56 +106,4 @@ def renumber_citations(
         .withColumn(content_col, F.col("__res.content"))
         .withColumn("cited_bibkeys", F.col("__res.cited_bibkeys"))
         .drop("__keys", "__res")
-    )
-
-
-def cite_ratio(
-    renumbered_sections: DataFrame,
-    papers: DataFrame,
-    id_col: str = "survey_id",
-    bibkey_col: str = "bibkey",
-) -> DataFrame:
-    """A7 (decode_pipeline.py:147-149): 1 − uncited/all per survey.
-
-    The cited side's join keys are renamed before the join so the operator
-    stays unambiguous even when sections and papers share lineage (e.g. the
-    decode_tail oracle fixture derives both from one table)."""
-    cited = (
-        renumbered_sections.select(F.col(id_col).alias("__cs"),
-                                   F.explode_outer("cited_bibkeys").alias("__ck"))
-        .distinct()
-    )
-    return (
-        papers.join(
-            cited,
-            (F.col(id_col) == F.col("__cs")) & (F.col(bibkey_col) == F.col("__ck")),
-            "left",
-        )
-        .groupBy(id_col)
-        .agg(
-            F.avg(F.when(F.col("__ck").isNotNull(), 1.0).otherwise(0.0)).alias("cite_ratio"),
-            F.count(F.lit(1)).alias("n_papers"),
-        )
-    )
-
-
-def references_block(papers: DataFrame, id_col: str = "survey_id",
-                     order_col: str = "paper_pos") -> DataFrame:
-    """``## References`` block (decode_pipeline.py:152-156):
-    ``[i] title url`` lines, double-newline separated."""
-    line = F.concat(
-        F.lit("["), (F.col(order_col) + 1).cast("string"), F.lit("] "),
-        F.col("title"), F.lit(" "), F.coalesce(F.col("url"), F.lit("")), F.lit("\n\n"),
-    )
-    return (
-        papers.withColumn("__line", F.struct(F.col(order_col).alias("o"),
-                                             line.alias("v")))
-        .groupBy(id_col)
-        .agg(
-            F.concat(
-                F.lit("## References\n"),
-                F.concat_ws("", F.transform(F.array_sort(F.collect_list("__line")),
-                                            lambda s: s["v"])),
-            ).alias("ref_str")
-        )
     )

@@ -17,6 +17,7 @@ its own, one model-calling task per ``spark.sql.shuffle.partitions``.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable, Iterator
 from typing import Any
 
@@ -118,6 +119,11 @@ def _resolve_retry(client_factory: Callable[[], LLMClient],
     return getattr(client_factory(), "retry_policy", None) or RetryPolicy()
 
 
+# an accumulator's add is a read-modify-write: callers that fan calls out
+# over threads (v2_survey._pmap) share one set of counters
+_METER_LOCK = threading.Lock()
+
+
 def _call_and_parse(client: LLMClient, prompt: str | None,
                     parse: Callable[[str], dict[str, Any]],
                     payload_names: list[str], retry: RetryPolicy,
@@ -130,12 +136,13 @@ def _call_and_parse(client: LLMClient, prompt: str | None,
         return dict.fromkeys(payload_names), False, "NoPrompt", 0
     reply, err, attempts = call_with_retry(client, prompt, retry)
     if metrics is not None:
-        metrics.calls.add(1)
-        metrics.prompt_chars.add(len(prompt))
-        if reply is None:
-            metrics.failures.add(1)
-        else:
-            metrics.reply_chars.add(len(reply))
+        with _METER_LOCK:
+            metrics.calls.add(1)
+            metrics.prompt_chars.add(len(prompt))
+            if reply is None:
+                metrics.failures.add(1)
+            else:
+                metrics.reply_chars.add(len(reply))
     payload: dict[str, Any] = dict.fromkeys(payload_names)
     ok = reply is not None
     if ok:

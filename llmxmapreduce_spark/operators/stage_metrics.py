@@ -206,10 +206,10 @@ class StageRun:
             return run.result("reduce", answers)
 
     The run owns every checkpoint cut on its thread while it is open.  A
-    cut made while a stage is built (``llm_stage_cached``'s frame,
-    decode's section cut) is released once that stage's cut exists, and
-    so are the earlier cuts of this run the new cut ``supersedes`` (other
-    frames, such as a lazy initial state, are ignored).  On exit the run
+    cut made while a stage is built (``llm_stage_cached``'s frame) is
+    released once that stage's cut exists, and so are the earlier cuts of
+    this run the new cut ``supersedes`` (other frames, such as a lazy
+    initial state, are ignored).  On exit the run
     releases the rest, except the :meth:`result` it handed to the caller.
     With a :class:`StageMetrics`, each cut observes its rows out and is
     stamped ``materialized``, so the stage times tile the call.

@@ -167,7 +167,8 @@ def run_v1_qa(
     ``chunk_size`` is the model context budget in tokens (reference default
     4096); the map budget subtracts the prompt, the question, and
     MAX_NEW_TOKENS exactly as Generator.py:236-240 does.  ``length_fn``
-    counts tokens for both the chunker and the collapse budget.
+    counts every token: the chunker's, the question's in the map budget
+    and the collapse budget's.
 
     ``prompts``: optional ``{"map": …, "collapse": …, "reduce": …}``
     templates with ``{context}``/``{question}`` slots — pass
@@ -209,15 +210,11 @@ def run_v1_qa(
 
     with StageRun(docs.sparkSession, stage_metrics) as run:
         # --- C1/C2 chunk ---------------------------------------------------
-        budget = (
-            F.lit(chunk_size - map_prompt_len - MAX_NEW_TOKENS)
-            - X.token_count_bpe_ish(F.col("question"))
-        )
         chunks = run.rows("chunk", chunker.chunk_documents(
-            docs.withColumn("budget", budget),
-            id_col="doc_id", text_col="context", budget_col="budget",
-            length_fn=length_fn,
-        ).drop("budget"))
+            docs, id_col="doc_id", text_col="context",
+            budget_col=F.lit(chunk_size - map_prompt_len - MAX_NEW_TOKENS),
+            length_fn=length_fn, reserve_col="question",
+        ))
 
         # --- L1 map --------------------------------------------------------
         def map_or_cached(df, stage, **kw):

@@ -11,23 +11,26 @@ DAG becomes a chain of Spark jobs with a bounded block-cycle loop
     │     L7 per-paper digest → J1 align → A3 merge → digests     (hidden)
     │     L9 feedback → conv block (T5/L10/L11/L12/T1) →
     │     L13 self-refine → refined outline → re-digest]
-    └─ decode: L14 orchestra leaves → A6 bottom-up assembly →
-          L15 polish → P12/J3 renumber → A7 → S5-shape            (decode)
+    └─ decode: [write pass: L14 orchestra leaves → A6 bottom-up
+          assembly → L15 polish] → [tail pass: P12/J3 renumber → A7 →
+          references → S5-shape]                                  (decode)
 
 Each stage has exactly one implementation.  The row-parallel LLM fan-outs —
-L5/L6 init outlines, L7 per-paper digests, L9 feedback, L14 orchestra
-leaves — are ``llm_stage`` (``mapInPandas``) operators.  The per-survey
-iterative algorithms (the reference runs each ``forward()`` per survey
-object) are ONE ``applyInPandas`` stage per survey each: :func:`conv_refine`
-runs the convolution block and self-refine back to back, and
-:func:`decode_survey` assembles bottom-up.  Surveys are the scale axis
-(thousands of independent groups on a cluster), per-survey state is tiny
-(≤ result_num outlines), and intra-survey LLM calls can fan out over
-``V2Config.llm_threads`` (the reference's per-node worker pool).  Neither
-per-survey stage has per-layer or per-depth job barriers: a block cycle's
-conv→refine chain is one shuffle, and assembly is one shuffle, regardless
-of conv depth or tree depth.  :func:`run_v2_survey` never writes session
-conf: shuffles are sized by the session's own settings.
+L5/L6 init outlines, L7 per-paper digests, L9 feedback — are ``llm_stage``
+(``mapInPandas``) operators.  The per-survey algorithms (the reference
+runs each ``forward()`` per survey object) are per-survey pandas passes:
+:func:`conv_refine` runs the convolution block and self-refine back to
+back in ONE ``applyInPandas``, and :func:`decode_survey` is two
+``cogroup`` passes, one that writes a survey's sections (leaf prose,
+bottom-up summaries, polish) and one that renumbers and assembles them.
+Surveys are the scale axis (thousands of independent groups on a
+cluster), per-survey state is tiny (≤ result_num outlines), and
+intra-survey LLM calls can fan out over ``V2Config.llm_threads`` (the
+reference's per-node worker pool).  No per-survey pass has per-layer or
+per-depth job barriers: a block cycle's conv→refine chain is one shuffle,
+and decode is two, regardless of conv depth or tree depth.
+:func:`run_v2_survey` never writes session conf: shuffles are sized by the
+session's own settings.
 
 Determinism: every shuffle the reference does with ``random.shuffle`` is a
 keyed-hash order here; T5 sampling uses a per-survey seeded RandomState; the
@@ -48,11 +51,9 @@ from pyspark.sql import types as T
 from llmxmapreduce_spark.functions import text as X
 from llmxmapreduce_spark.llm.client import RetryPolicy, call_with_retry
 from llmxmapreduce_spark.operators import digest_ops, grouping, sampling, skeleton
-from llmxmapreduce_spark.operators.citations import cite_ratio as a7_cite_ratio
-from llmxmapreduce_spark.operators.citations import references_block, renumber_citations
-from llmxmapreduce_spark.operators.llm_op import _resolve_retry, llm_stage
+from llmxmapreduce_spark.operators.citations import renumber_citations_py
+from llmxmapreduce_spark.operators.llm_op import _call_and_parse, _resolve_retry, llm_stage
 from llmxmapreduce_spark.operators.stage_metrics import StageRun
-from llmxmapreduce_spark.retention import checkpoint
 
 
 @dataclass
@@ -72,9 +73,10 @@ class V2Config:
     figures: bool = False        # L16/J5 chart stage (chart_node)
     group_mode: str = "random"   # C7: 'random' (hash) | 'llm' (L4 + repair)
     llm_threads: int = 1         # intra-survey LLM fan-out inside the
-                                 # per-survey conv_refine and decode
-                                 # assembly stages (reference worker pool,
-                                 # node.py:48); never changes the output
+                                 # per-survey conv_refine pass and decode's
+                                 # write pass (leaf prose and polish;
+                                 # reference worker pool, node.py:48);
+                                 # never changes the output
     full_prompts: bool = False   # use the reference's verbatim prompt texts
                                  # (prompts/prompts_{lang}.py) instead of the
                                  # condensed deterministic test templates
@@ -845,118 +847,136 @@ _DONE_SCHEMA = T.StructType([
 ])
 
 
+_TAIL_SCHEMA = T.StructType([
+    T.StructField("survey_id", _STR, False),
+    T.StructField("content_md", _STR, True),
+    T.StructField("n_sections", T.LongType(), False),
+    T.StructField("cite_ratio", T.DoubleType(), True),
+    T.StructField("n_papers", T.LongType(), True),
+    T.StructField("ref_str", _STR, True),
+])
+
+
+def _orchestra_prompt(ps: dict | None, survey_title: str, outline_md: str,
+                      section_title: str, material: str) -> str:
+    """L14 leaf-section prompt (orchestra_module.py:70-78)."""
+    if ps:
+        return ps["ORCHESTRA_PROMPT"].format(
+            title=survey_title, outline=outline_md, digest=material,
+            section_title=section_title)
+    return (
+        f"[ORCHESTRA] Survey title: {survey_title}\n"
+        f"Section title: {section_title}\n"
+        f"Digests:\n{material[:3000]}\n"
+        "Write the section prose, citing papers as [bibkey]."
+    )
+
+
+def _section_material(digests: pd.DataFrame) -> dict[int, str]:
+    """pos → the section's digest material: its descriptions in
+    (digest_id, description) order, nulls skipped, newline-joined."""
+    by_pos: dict[int, list[tuple]] = {}
+    for d_id, pos, desc in zip(digests["digest_id"], digests["pos"],
+                               digests["description"]):
+        if desc is not None:
+            by_pos.setdefault(pos, []).append((d_id, desc))
+    return {pos: "\n".join(desc for _, desc in sorted(items))
+            for pos, items in by_pos.items()}
+
+
+def _write_survey_py(client, retry: RetryPolicy, cfg: V2Config, ps, metrics,
+                     outline, digests: pd.DataFrame) -> list[dict]:
+    """One survey's decode prose (content.py:108-146): L14 orchestra prose
+    for every leaf from its digest material, then bottom-up A6 summaries,
+    deepest parents first (ready-queue semantics), then L15 polish.  A
+    section whose call failed is left out, and so is a parent whose
+    children all failed.  → ``_DONE_SCHEMA`` rows in preorder."""
+    sid, title = outline["survey_id"], outline["survey_title"]
+    outline_md = outline["outline_md"]
+    nodes = skeleton.parse_outline_py(title, outline_md)
+    material = _section_material(digests)
+    threads = cfg.llm_threads
+
+    def leaf(n: dict) -> str | None:
+        prompt = _orchestra_prompt(ps, title, outline_md, n["title"],
+                                   material.get(n["pos"], ""))
+        payload, ok, _err, _attempts = _call_and_parse(
+            client, prompt, lambda s: {"content": s}, ["content"], retry,
+            metrics)
+        return payload["content"] if ok else None
+
+    leaves = [n for n in nodes if n["n_children"] == 0]
+    content: dict[int, str] = {
+        n["pos"]: c for n, c in zip(leaves, _pmap(leaf, leaves, threads))
+        if c is not None
+    }
+    # Parent sections carry their own digest material too: the reference
+    # orchestra module fills the SUMMARY_PROMPT {digest} slot with the
+    # section's digest content (orchestra_module.py:70-78).
+    children_of: dict[tuple, list[dict]] = {}
+    for n in nodes:
+        path = tuple(n["node_path"])
+        if len(path) > 1:
+            children_of.setdefault(path[:-1], []).append(n)
+    parents = [n for n in nodes if n["n_children"] > 0]
+    for n in sorted(parents, key=lambda n: (-n["depth"], n["pos"])):
+        kids = [content[c["pos"]]
+                for c in children_of.get(tuple(n["node_path"]), [])
+                if c["pos"] in content]
+        if not kids:
+            continue
+        reply = _call(
+            client,
+            _summary_prompt(title, n["title"], "\n\n".join(kids), ps,
+                            outline=outline_md,
+                            digest=material.get(n["pos"], "")),
+            retry)
+        if reply is not None:
+            content[n["pos"]] = reply
+    rows = [{"survey_id": sid, "pos": n["pos"], "depth": n["depth"],
+             "title": n["title"], "content": content[n["pos"]]}
+            for n in nodes if n["pos"] in content]
+    if cfg.polish:
+        replies = _pmap(
+            lambda r: _call(client, _polish_prompt(r["title"], r["content"], ps),
+                            retry),
+            rows, threads)
+        rows = [{**r, "content": rep} for r, rep in zip(rows, replies)
+                if rep is not None]
+    return rows
+
+
 def decode_survey(final_outline: DataFrame, digests: DataFrame, papers: DataFrame,
                   client_factory, cfg: V2Config,
                   retry: RetryPolicy | None = None,
                   metrics=None) -> DataFrame:
-    """content.py:108-146 decode: leaf sections get prose from their digest
-    material (L14 orchestra — the per-section fan-out stays a row-parallel
-    llm_stage), then ONE per-survey ``applyInPandas`` walks the tree
-    bottom-up, summarizing parents from their children and polishing
-    (content.py:139-146 ready-queue semantics, without the level-synchronous
-    global barrier: each survey proceeds independently)."""
+    """content.py:108-146 decode as two per-survey passes, the reference's
+    one sequential pass per survey (decode_pipeline.py:115-156).  The write
+    pass cogroups each survey's outline with its digests and runs
+    :func:`_write_survey_py`: leaf prose, bottom-up assembly and polish
+    (``metrics`` meters the leaf calls).  The tail pass,
+    :func:`decode_tail`, renumbers and assembles.  Each pass reads its
+    inputs once, so nothing is checkpointed in between; surveys proceed
+    independently, without a level-synchronous barrier."""
     retry = _resolve_retry(client_factory, retry)
     ps = _prompt_set(cfg)
     outline_meta = final_outline.select("survey_id", "survey_title",
                                         "outline_md")
-    nodes = skeleton.parse_outlines(
-        final_outline, title_col="survey_title", md_col="outline_md"
+    done_cols = [f.name for f in _DONE_SCHEMA.fields]
+
+    def write(outline: pd.DataFrame, dig: pd.DataFrame) -> pd.DataFrame:
+        if outline.empty:
+            return pd.DataFrame(columns=done_cols)
+        rows = _write_survey_py(client_factory(), retry, cfg, ps, metrics,
+                                outline.iloc[0], dig)
+        return pd.DataFrame(rows, columns=done_cols)
+
+    done = (
+        outline_meta.groupBy("survey_id")
+        .cogroup(digests.select("survey_id", "digest_id", "pos", "description")
+                 .groupBy("survey_id"))
+        .applyInPandas(write, _DONE_SCHEMA)
     )
-    # leaf = node with no children (content.py:139-146: leaves seed the
-    # ready queue)
-    leaves = nodes.filter(F.col("n_children") == 0)
-
-    # digest material per (survey, pos)
-    section_digests = (
-        digests.withColumn("__d", F.struct(F.col("digest_id").alias("k"),
-                                           F.col("description").alias("v")))
-        .groupBy("survey_id", "pos")
-        .agg(F.concat_ws("\n", F.transform(F.array_sort(F.collect_list("__d")),
-                                           lambda s: s["v"])).alias("material"))
-    )
-    leaf_in = leaves.join(section_digests, ["survey_id", "pos"], "left") \
-        .join(F.broadcast(outline_meta), "survey_id")
-    contents = llm_stage(
-        leaf_in.withColumn("material", F.coalesce("material", F.lit(""))),
-        build_prompt=lambda r: (
-            ps["ORCHESTRA_PROMPT"].format(
-                title=r["survey_title"], outline=r["outline_md"],
-                digest=r["material"],
-                section_title=r["title"])            # orchestra_module.py:70-78
-            if ps else
-            f"[ORCHESTRA] Survey title: {r['survey_title']}\n"
-            f"Section title: {r['title']}\n"
-            f"Digests:\n{r['material'][:3000]}\n"
-            "Write the section prose, citing papers as [bibkey]."
-        ),
-        parse=lambda s: {"content": s},
-        client_factory=client_factory,
-        payload_fields=_payload("content"),
-        keep_cols=["survey_id", "pos"],
-        retry=retry,
-        metrics=metrics,
-    ).filter("llm_ok").select("survey_id", "pos", "content")
-
-    # A6 bottom-up assembly + L15 polish, one stage per survey.  Parent
-    # sections carry their own digest material too: the reference orchestra
-    # module fills the SUMMARY_PROMPT {digest} slot with the section's
-    # digest content (orchestra_module.py:70-78), not an empty string.
-    asm_in = (
-        nodes.select("survey_id", "pos", "node_path", "depth", "title", "n_children")
-        .join(contents, ["survey_id", "pos"], "left")
-        .join(section_digests, ["survey_id", "pos"], "left")
-        .join(F.broadcast(outline_meta), "survey_id")
-    )
-    polish, threads = cfg.polish, cfg.llm_threads
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        client = client_factory()
-        rows = pdf.sort_values("pos").to_dict("records")
-        survey_title = rows[0]["survey_title"]
-        content: dict[int, str] = {
-            r["pos"]: r["content"] for r in rows
-            if r["n_children"] == 0 and r["content"] is not None
-        }
-        children_of: dict[tuple, list[dict]] = {}
-        for r in rows:
-            path = tuple(r["node_path"])
-            if len(path) > 1:
-                children_of.setdefault(path[:-1], []).append(r)
-        # bottom-up: deepest parents first; a parent whose children all
-        # failed stays contentless (inner-join semantics)
-        parents = [r for r in rows if r["n_children"] > 0]
-        for r in sorted(parents, key=lambda r: (-r["depth"], r["pos"])):
-            kids = [content[c["pos"]]
-                    for c in children_of.get(tuple(r["node_path"]), [])
-                    if c["pos"] in content]
-            if not kids:
-                continue
-            reply = _call(
-                client,
-                _summary_prompt(survey_title, r["title"], "\n\n".join(kids),
-                                ps, outline=rows[0].get("outline_md") or "",
-                                digest=r.get("material") or ""),
-                retry)
-            if reply is not None:
-                content[r["pos"]] = reply
-        out_rows = [
-            {"survey_id": r["survey_id"], "pos": r["pos"], "depth": r["depth"],
-             "title": r["title"], "content": content[r["pos"]]}
-            for r in rows if r["pos"] in content
-        ]
-        if polish:
-            replies = _pmap(
-                lambda r: _call(client, _polish_prompt(r["title"], r["content"],
-                                                       ps),
-                                retry),
-                out_rows, threads)
-            out_rows = [
-                {**r, "content": rep} for r, rep in zip(out_rows, replies)
-                if rep is not None
-            ]
-        return pd.DataFrame(out_rows, columns=[f.name for f in _DONE_SCHEMA.fields])
-
-    done = asm_in.groupBy("survey_id").applyInPandas(assemble, _DONE_SCHEMA)
 
     # L16/J5 figures: propose from the assembled draft, anchor per section
     # (figure_module.py:27-48)
@@ -977,59 +997,76 @@ def decode_survey(final_outline: DataFrame, digests: DataFrame, papers: DataFram
         figs = generate_figures(draft_with_heads, client_factory, retry)
         done = anchor_figures(done, figs)
 
-    # r13: decode_tail consumes `done` through THREE plan branches
-    # (sections → renumbered → {cite_ratio, assembled} plus the
-    # assembled join's own done.select), and exchange reuse cannot
-    # dedupe a FlatMapGroupsInPandas ABOVE the shared exchange — without
-    # an eager cut the leaf-prose llm_stage and the assemble stage (and
-    # in figures mode the L16 figure stage) execute 3× per action
-    # (measured: the decode LLM accumulator showed 768 calls for 256
-    # leaves).  One section-bounded checkpoint runs them once.
-    # Retention: run_v2_survey releases it once its result is cut, the V3
-    # host at close(); other callers own one bounded frame per call.
-    done = checkpoint(done)
-
-    tail = decode_tail(done, papers)
     return (
-        tail.join(F.broadcast(final_outline), "survey_id")
+        decode_tail(done, papers).join(F.broadcast(final_outline), "survey_id")
         .select("survey_id", "survey_title", "outline_md", "content_md",
                 "ref_str", "cite_ratio", "n_papers", "n_sections", "eval_score",
                 "block_avg_score", "self_refine_score", "conv_pool_sizes")
     )
 
 
+def _tail_py(sections: pd.DataFrame, papers: pd.DataFrame) -> dict:
+    """One survey's deterministic decode suffix (decode_pipeline.py:115-156).
+
+    - P12: scrub, then renumber each section's citations against the
+      survey's bibkeys in ``paper_pos`` order.
+    - A7 ``cite_ratio``: the share of paper rows whose bibkey is cited.
+    - ``ref_str``: ``[i] title url`` lines under ``## References``.
+    - ``content_md``: ``#``-headed sections in ``pos`` order.  A section
+      with a null title or content is left out but still counted in
+      ``n_sections``.
+
+    A survey with no papers has null ``cite_ratio``, ``n_papers`` and
+    ``ref_str``.  → one ``_TAIL_SCHEMA`` row."""
+    papers = papers.sort_values("paper_pos")
+    keys = list(papers["bibkey"])
+    cited: set[str] = set()
+    blocks = []
+    for r in sections.sort_values("pos").to_dict("records"):
+        content = r["content"]
+        if content is not None:
+            content, hits = renumber_citations_py(
+                X.scrub_illegal_citations_py(content, keys), keys)
+            cited.update(hits)
+        if r["title"] is not None and content is not None:
+            blocks.append(f"{'#' * (r['depth'] + 1)} {r['title']}\n{content}")
+    out = {"survey_id": sections["survey_id"].iloc[0],
+           "content_md": "\n\n".join(blocks), "n_sections": len(sections),
+           "cite_ratio": None, "n_papers": None, "ref_str": None}
+    if keys:
+        out["n_papers"] = len(keys)
+        out["cite_ratio"] = sum(k in cited for k in keys) / len(keys)
+        out["ref_str"] = "## References\n" + "".join(
+            f"[{p + 1}] {t} {u or ''}\n\n"
+            for p, t, u in zip(papers["paper_pos"], papers["title"], papers["url"])
+            if t is not None)
+    return out
+
+
 def decode_tail(done: DataFrame, papers: DataFrame) -> DataFrame:
-    """The deterministic decode suffix (decode_pipeline.py:115-156): P12
-    citation renumbering over the assembled sections, A7 cite_ratio, the
-    ``## References`` block, and the per-survey markdown assembly.  LLM-free
-    — exercised hash-checked by the ``v2_decode_tail`` oracle query.
+    """The deterministic decode suffix as one cogroup of each survey's
+    sections with its papers, running :func:`_tail_py`.  LLM-free —
+    exercised hash-checked by the ``v2_decode_tail`` oracle query.  A
+    survey with no section rows emits no row.
 
     ``done``: (survey_id, pos, depth, title, content) section rows.
     → (survey_id, content_md, n_sections, cite_ratio, n_papers, ref_str).
     """
-    sections = done.select("survey_id", "pos", "content")
-    renumbered = renumber_citations(sections, papers)
-    ratios = a7_cite_ratio(renumbered, papers)
-    refs = references_block(papers)
+    tail_cols = [f.name for f in _TAIL_SCHEMA.fields]
 
-    assembled = (
-        renumbered.join(done.select("survey_id", "pos", "depth", "title"),
-                        ["survey_id", "pos"])
-        .withColumn("__s", F.struct(
-            F.col("pos").alias("k"),
-            F.concat(F.repeat(F.lit("#"), F.col("depth") + 1), F.lit(" "),
-                     F.col("title"), F.lit("\n"), F.col("content")).alias("v"),
-        ))
-        .groupBy("survey_id")
-        .agg(
-            F.concat_ws("\n\n", F.transform(F.array_sort(F.collect_list("__s")),
-                                            lambda s: s["v"])).alias("content_md"),
-            F.count(F.lit(1)).alias("n_sections"),
-        )
-    )
+    def tail(sections: pd.DataFrame, refs: pd.DataFrame) -> pd.DataFrame:
+        if sections.empty:
+            return pd.DataFrame(columns=tail_cols)
+        return pd.DataFrame([_tail_py(sections, refs)], columns=tail_cols)
+
+    # the papers-side key is renamed: callers may derive both sides from
+    # one table, and a shared survey_id would be ambiguous in the cogroup
+    refs = papers.select(F.col("survey_id").alias("__sid"), "paper_pos",
+                         "bibkey", "title", "url")
     return (
-        assembled.join(ratios, "survey_id", "left")
-        .join(refs, "survey_id", "left")
+        done.select("survey_id", "pos", "depth", "title", "content")
+        .groupBy("survey_id").cogroup(refs.groupBy("__sid"))
+        .applyInPandas(tail, _TAIL_SCHEMA)
     )
 
 
@@ -1047,19 +1084,20 @@ def run_v2_survey(surveys: DataFrame, client_factory,
     Implements the reference's block cycle (hidden_pipeline.py:73-85): while
     ``block_cycle_count < block_count``, the survey loops
     ``digest → skeleton_refine → digest`` — so decode always consumes digests
-    regenerated against the *refined* outline, and the digest→section join
-    in :func:`decode_survey` cannot misalign when refinement restructures the
-    outline.  ``block_count=0`` decodes the unrefined outline (args.py:21
-    default); the shipped script uses 1 (scripts/pipeline_start.sh:13).
+    regenerated against the *refined* outline, and the digest→section
+    lookup in :func:`decode_survey` cannot misalign when refinement
+    restructures the outline.  ``block_count=0`` decodes the unrefined
+    outline (args.py:21 default); the shipped script uses 1
+    (scripts/pipeline_start.sh:13).
 
     ``stage_metrics``: optional
     :class:`~llmxmapreduce_spark.operators.stage_metrics.StageMetrics` —
     per-stage rows-out and wall time at the checkpoint boundaries
     (papers / outline / digest / refine / decode; the wall times tile the
     call, and a stage cut several times sums its intervals), and LLM
-    accumulators for the four row-parallel llm stages (outline / digest /
-    suggest / decode); the reference analyser's per-node table
-    (pipeline_analyser.py:64-124).  After collecting the result, fold the
+    accumulators for the row-parallel llm stages (outline / digest /
+    suggest) and for decode's leaf calls; the reference analyser's
+    per-node table (pipeline_analyser.py:64-124).  After collecting the result, fold the
     per-layer convolution detail in with
     ``stage_metrics.record_v2_layers(rows)``.
 

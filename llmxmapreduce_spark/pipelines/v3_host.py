@@ -851,8 +851,9 @@ def make_spark_host(
         return {"all_skeleton": md}
 
     def writing_tool(h: V3Host, args: dict) -> dict:
-        # decode_survey already runs the deterministic tail (citation
-        # renumber, cite_ratio, references, assembly)
+        # decode_survey writes the sections and runs the deterministic
+        # tail (citation renumber, cite_ratio, references, assembly) as
+        # two per-survey passes; it pins nothing
         out = v2.decode_survey(v2.typed_scores(h.state["refined"]),
                                h.state["digests"], h.state["papers"],
                                client_factory, cfg)

@@ -286,3 +286,20 @@ def test_collapse_budget_uses_length_fn(spark):
     assert out[0]["answer"] == "SK-777"
     assert sm.llm("map").calls.value == 4
     assert sm.llm("collapse").calls.value == 0
+
+
+def test_map_budget_uses_length_fn(spark):
+    """The map budget subtracts the question as ``length_fn`` counts it:
+    "What is the secret key for document 7?" is 8 words (9 bpe-ish
+    tokens), which leaves exactly room for two 10-word lines per chunk."""
+    question = "What is the secret key for document 7?"
+    chunk_size = (chunker.ws_len(v1_qa.MAP_PROMPT) + v1_qa.MAX_NEW_TOKENS
+                  + chunker.ws_len(question) + 20)
+    context = "\n".join(" ".join(f"w{i}_{j}" for j in range(10))
+                        for i in range(4))
+    docs = spark.createDataFrame([(7, context, question)],
+                                 ["doc_id", "context", "question"])
+    sm = StageMetrics(spark)
+    run_v1_qa(docs, chunk_size=chunk_size, client_factory=MockQAClient,
+              length_fn=chunker.ws_len, stage_metrics=sm).collect()
+    assert sm.llm("map").calls.value == 2

@@ -113,11 +113,10 @@ def test_block_cycle_checkpoints_released(spark):
 
 
 def test_decode_leaf_stage_runs_once(spark):
-    """r13: decode_tail consumes `done` through three plan branches; the
-    section checkpoint in decode_survey must keep the leaf-prose
-    llm_stage at exactly ONE execution — the decode LLM accumulator
-    equals the leaf count of each survey's final outline (pre-fix it
-    measured 3× that)."""
+    """Decode's write pass runs once: the decode LLM accumulator equals
+    the leaf count of each survey's final outline.  A plan that reads the
+    written sections through several branches would run the leaf calls
+    once per branch (3× once, when the tail was four joins)."""
     from llmxmapreduce_spark.operators import skeleton
     from llmxmapreduce_spark.operators.stage_metrics import StageMetrics
 
