@@ -5,11 +5,11 @@ Reference parity:
 - retry policy — request/openai.py:22-26 (100 attempts, exp backoff ≤60 s);
   here configurable, default 3 for tests.
 - per-model concurrency — request/wrapper.py:17-23 Semaphore(20).  The
-  pipelines' ``llm_stage`` calls ``complete()`` one row at a time inside
-  each Spark task, so calls in flight = running tasks (tuned by the LLM
-  stage's input partitioning); V2's per-survey stages add
-  ``V2Config.llm_threads`` calls per task.  ``complete_batch``'s thread
-  pool is for direct callers; no pipeline uses it.
+  pipelines call ``complete()`` through ``llm_op._call_and_parse``, one
+  row at a time inside each Spark task, so calls in flight = running tasks
+  (tuned by the LLM stage's input partitioning); V2's per-survey stages
+  add ``V2Config.llm_threads`` calls per task.  The client contract is
+  stated once, at ``llm_op.llm_stage``'s ``client_factory``.
 """
 
 from __future__ import annotations
@@ -18,7 +18,6 @@ import hashlib
 import random
 import re
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 
@@ -89,19 +88,12 @@ class RetryPolicy:
 
 
 class LLMClient:
-    """Protocol: ``complete(prompt) -> str``; batch default fans out over a
-    bounded thread pool (the reference's Semaphore(20) analog)."""
-
-    pool_size: int = 20
+    """Protocol: ``complete(prompt) -> str``, raising on a failed call.
+    Callers go through ``llm_op._call_and_parse`` (retries, metering,
+    parsing); a client may carry its own ``retry_policy``."""
 
     def complete(self, prompt: str) -> str:  # pragma: no cover - interface
         raise NotImplementedError
-
-    def complete_batch(self, prompts: list[str]) -> list[str]:
-        if len(prompts) <= 1:
-            return [self.complete(p) for p in prompts]
-        with ThreadPoolExecutor(max_workers=self.pool_size) as ex:
-            return list(ex.map(self.complete, prompts))
 
 
 class HashEchoClient(LLMClient):

@@ -161,8 +161,7 @@ def llm_dedup_claims(
     deterministic :func:`dedup_claims` (MinHash) path — that is the 100 TB
     contract; this mode exists for reference parity of SurveyEval's
     Claim-Num metric."""
-    from llmxmapreduce_spark.llm.client import call_with_retry
-    from llmxmapreduce_spark.operators.llm_op import _resolve_retry
+    from llmxmapreduce_spark.operators.llm_op import _call_and_parse, _resolve_retry
 
     retry = _resolve_retry(client_factory, retry)
     out_schema = T.StructType([
@@ -181,12 +180,13 @@ def llm_dedup_claims(
         def dedup_group(group):
             if not group:
                 return group
-            reply, _err, _n = call_with_retry(
-                client, _dedup_prompt([f for _, f in group]), retry)
-            if reply is None:
+            payload, ok, _err, _n = _call_and_parse(
+                client, _dedup_prompt([f for _, f in group]),
+                lambda reply: {"drop": _parse_remove_indices(reply)},
+                ["drop"], retry, None)
+            if not ok:
                 return group        # dead-letter semantics: keep the group
-            drop = _parse_remove_indices(reply)
-            return [f for i, f in enumerate(group) if i not in drop]
+            return [f for i, f in enumerate(group) if i not in payload["drop"]]
 
         groups = [dedup_group(g) for g in groups]
         # pairwise cross-group merge until a single group remains

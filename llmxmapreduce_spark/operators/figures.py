@@ -51,8 +51,9 @@ def parse_figures(reply: str) -> dict:
 
 
 def generate_figures(surveys_content: DataFrame, client_factory,
-                     retry=None) -> DataFrame:
-    """L16: per-survey figure proposals → exploded figure rows."""
+                     retry=None, metrics=None) -> DataFrame:
+    """L16: per-survey figure proposals → exploded figure rows
+    (``metrics`` meters the calls)."""
     out = llm_stage(
         surveys_content,
         build_prompt=lambda r: (
@@ -66,6 +67,7 @@ def generate_figures(surveys_content: DataFrame, client_factory,
         payload_fields=[T.StructField("figures", FIGURES, True)],
         keep_cols=["survey_id"],
         retry=retry,
+        metrics=metrics,
     ).filter("llm_ok")
     return out.select("survey_id", F.explode_outer("figures").alias("f")) \
         .filter(F.col("f").isNotNull()).select("survey_id", "f.*")

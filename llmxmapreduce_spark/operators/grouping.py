@@ -99,7 +99,8 @@ def parse_group_result_py(raw_result: str, bibkeys: list[str]
 
 def llm_group_papers(papers, client_factory, batch_size: int,
                      retry=None, group_col: str = "digest_id",
-                     full_prompts: bool = False, prompt_lang: str = "en"):
+                     full_prompts: bool = False, prompt_lang: str = "en",
+                     metrics=None):
     """C7 'llm' mode (L4 GroupNeuron + repair, group_module.py:62-133):
     one LLM call per survey proposes semantic groups over (title, bibkey)
     pairs; ``regroup_result_py`` repairs sizes; output = papers with a
@@ -109,7 +110,10 @@ def llm_group_papers(papers, client_factory, batch_size: int,
     stage's Arrow batch) — the papers themselves never round-trip through
     the prompt.  ``full_prompts`` swaps in the reference's verbatim
     GROUP_PROMPT (group_module.py:160-173: papers listed as
-    ``Title: "…" Bibkey: '…'``).
+    ``Title: "…" Bibkey: '…'``).  ``metrics`` meters the L4 calls.
+
+    The result is lazy: every action that reads it makes the L4 calls
+    again, so a caller with several readers checkpoints it once.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -147,6 +151,7 @@ def llm_group_papers(papers, client_factory, batch_size: int,
         payload_fields=[T.StructField("reply", T.StringType(), True)],
         keep_cols=["survey_id", "bibkeys"],
         retry=retry,
+        metrics=metrics,
     ).filter("llm_ok")
 
     assign_type = T.ArrayType(T.StructType([

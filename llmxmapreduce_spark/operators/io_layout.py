@@ -44,9 +44,10 @@ def repartition_for_llm(df: DataFrame, rows_per_partition: int = 512,
                         row_estimate: int | None = None) -> DataFrame:
     """Bound LLM-stage parallelism: n_partitions = ceil(rows / rpp).
 
-    With pool_size=20 per client (llm/client.py), cluster-wide concurrency =
-    n_partitions × 20 — tune rows_per_partition to the provider's rate
-    limit instead of letting input partitioning decide it.
+    ``llm_stage`` calls the model one row at a time per task, so
+    cluster-wide concurrency = n_partitions — tune rows_per_partition to
+    the provider's rate limit instead of letting input partitioning
+    decide it.
 
     ``row_estimate`` is the caller's row count (exact or approximate —
     e.g. carried from an upstream stage or a catalog statistic).  When
@@ -58,7 +59,7 @@ def repartition_for_llm(df: DataFrame, rows_per_partition: int = 512,
     rowCount only for plans Catalyst can size (e.g. CBO-analyzed tables,
     LocalRelations); a filtered parquet scan without CBO has none, and the
     partition-count fallback then no longer bounds cluster-wide concurrency
-    at ``n_partitions × pool_size``.  Callers on non-trivial plans that
+    at ``n_partitions``.  Callers on non-trivial plans that
     need a hard rate-limit bound must pass ``row_estimate``; the fallback
     warns so the unbounded case is visible in logs."""
     if row_estimate is None:
@@ -74,7 +75,7 @@ def repartition_for_llm(df: DataFrame, rows_per_partition: int = 512,
         warnings.warn(
             "repartition_for_llm: no row_estimate and Catalyst plan stats "
             f"have no rowCount — falling back to the input partition count "
-            f"({n}); the n_partitions × pool_size concurrency bound is NOT "
+            f"({n}); the n_partitions concurrency bound is NOT "
             "enforced. Pass row_estimate to bound LLM parallelism.",
             stacklevel=2,
         )

@@ -9,6 +9,12 @@ error-sentinel bookkeeping columns ``llm_ok/llm_error/llm_attempts``
 (async_d/node/node.py:243-272, decorator.py:9-18).  Failed rows flow on and
 can be quarantined with :func:`dead_letter_split` instead of killing the job.
 
+Every model call of the paper's queries, in these stages, V1's collapse,
+V2's per-survey passes and A10's LLM dedup, goes through
+:func:`_call_and_parse`, which retries, meters and parses it: the
+reference's one request path (request/wrapper.py:12-67,
+token_counter.py:7-37).
+
 Scale notes: Arrow-batched (never row-at-a-time Python), no driver collect.
 ``llm_stage``'s parallelism is its input partitioning, so its concurrency
 is tuned by ``repartition(n)`` before the stage; ``llm_stage_cached`` sets
@@ -75,6 +81,10 @@ def llm_stage(
 ) -> DataFrame:
     """Run one LLM stage over ``df``.
 
+    - ``client_factory() -> LLMClient`` — the contract of every
+      model-calling stage: one client per task (per survey in V2's
+      per-survey passes), plus one on the driver for its ``retry_policy``;
+      ``complete()`` must be thread-safe when ``V2Config.llm_threads > 1``.
     - ``build_prompt(row_dict) -> str | None`` — prompt template over row
       fields; a row whose prompt is ``None`` sends nothing and comes out
       ``llm_ok=false``, ``llm_error="NoPrompt"``, ``llm_attempts=0``.
@@ -86,8 +96,7 @@ def llm_stage(
 
     When ``retry`` is omitted, the policy comes from the client's own
     ``retry_policy`` (the per-provider preset on OpenAICompatClient),
-    falling back to the test default.  The probe instantiates one client on
-    the driver; per-partition clients are created inside ``run``.
+    falling back to the test default.
     """
     retry = _resolve_retry(client_factory, retry)
     keep_fields = [df.schema[c] for c in keep_cols]
@@ -119,8 +128,9 @@ def _resolve_retry(client_factory: Callable[[], LLMClient],
     return getattr(client_factory(), "retry_policy", None) or RetryPolicy()
 
 
-# an accumulator's add is a read-modify-write: callers that fan calls out
-# over threads (v2_survey._pmap) share one set of counters
+# an accumulator's add is a read-modify-write, and V2's per-survey passes
+# call _call_and_parse from several threads (v2_survey._pmap) that share
+# their stage's counters
 _METER_LOCK = threading.Lock()
 
 
@@ -395,132 +405,6 @@ def llm_stage_cached(
         ).write.mode("append").parquet(cache_dir)
     return done.select(*keep_cols, *payload_names, "llm_ok", "llm_error",
                        "llm_attempts")
-
-
-# ---------------------------------------------------------------------------
-# Deterministic-filter pushdown below the LLM stage (SURVEY.md §4's other
-# optional rule: "push deterministic filters below LLM ops if a user
-# composes them out of order").
-#
-# Catalyst cannot do this itself: mapInPandas is an opaque barrier, so a
-# filter written AFTER the stage — even one touching only pass-through
-# columns — executes after every LLM call has been paid.  The deferred
-# builder below knows the stage's keep-column contract, so it can classify
-# each top-level conjunct of a user filter and run the deterministic
-# input-column ones BEFORE the model.
-# ---------------------------------------------------------------------------
-
-
-def _conjuncts(jexpr):
-    """Top-level AND conjuncts of an analyzed Catalyst expression."""
-    if jexpr.getClass().getSimpleName() == "And":
-        return _conjuncts(jexpr.left()) + _conjuncts(jexpr.right())
-    return [jexpr]
-
-
-def _classify_predicate(spark, predicate: str,
-                        input_fields: list[T.StructField],
-                        output_fields: list[T.StructField],
-                        ) -> tuple[list[str], list[str]]:
-    """Split ``predicate`` into (pre_stage, post_stage) conjunct SQL lists.
-
-    A conjunct runs pre-stage iff it is deterministic and references only
-    input columns; everything else runs post-stage (and must reference
-    only output columns — anything less is a user error worth a clear
-    message, not a late AnalysisException).  Analysis happens on an empty
-    frame carrying the union of both schemas WITH their real types (a
-    bare ``llm_ok`` predicate must typecheck as boolean), so resolution
-    and the ``deterministic`` bit come from Catalyst itself, not a
-    re-parser.
-    """
-    merged: list[T.StructField] = []
-    seen: set[str] = set()
-    for f in list(input_fields) + list(output_fields):
-        if f.name not in seen:
-            seen.add(f.name)
-            merged.append(f)
-    probe = spark.createDataFrame([], T.StructType(merged))
-    cond = probe.filter(predicate)._jdf.queryExecution().analyzed().condition()
-
-    pre, post = [], []
-    in_set = {f.name for f in input_fields}
-    out_set = {f.name for f in output_fields}
-    for cj in _conjuncts(cond):
-        refs = cj.references().toSeq()
-        names = {refs.apply(i).name() for i in range(refs.size())}
-        sql = cj.sql()
-        if cj.deterministic() and names <= in_set:
-            pre.append(sql)
-        elif names <= out_set:
-            post.append(sql)
-        else:
-            missing = sorted(names - out_set)
-            raise ValueError(
-                f"filter conjunct {sql} references column(s) {missing} that "
-                "are neither pre-stage input columns nor post-stage output "
-                "columns (keep_cols + payload + llm_* sentinels)")
-    return pre, post
-
-
-class DeferredLLMStage:
-    """An :func:`llm_stage` (or :func:`llm_stage_cached`) whose build is
-    deferred so filters composed "after" it can be cost-placed.
-
-    ::
-
-        out = (DeferredLLMStage(df, build_prompt, parse, factory,
-                                PAYLOAD, ["doc_id", "lang"])
-               .filter("lang = 'en'")            # runs BEFORE the model
-               .filter("llm_ok AND score > 3")   # runs after
-               .df())
-
-    Classification is per top-level AND conjunct: deterministic conjuncts
-    over input columns are pushed below the stage (each skipped row is a
-    skipped LLM call); conjuncts touching the payload or the ``llm_*``
-    sentinels stay above; non-deterministic conjuncts are never reordered
-    (a sampling filter must see the stage the user wrote it against).
-    ``cache_dir`` routes the build through the prompt-hash cache.
-    """
-
-    def __init__(self, df: DataFrame, build_prompt, parse, client_factory,
-                 payload_fields: list[T.StructField], keep_cols: list[str],
-                 retry: RetryPolicy | None = None,
-                 metrics: LLMMetrics | None = None,
-                 cache_dir: str | None = None, version: str = ""):
-        self._df = df
-        self._args = (build_prompt, parse, client_factory, payload_fields,
-                      keep_cols, retry, metrics, cache_dir, version)
-        self._pre: list[str] = []
-        self._post: list[str] = []
-
-    def filter(self, predicate) -> "DeferredLLMStage":
-        """Add a filter; each top-level conjunct lands on the cheap side."""
-        payload_fields, keep_cols = self._args[3], self._args[4]
-        output_fields = ([self._df.schema[c] for c in keep_cols]
-                         + list(payload_fields) + list(LLM_COLS))
-        pre, post = _classify_predicate(
-            self._df.sparkSession, str(predicate),
-            list(self._df.schema.fields), output_fields)
-        self._pre += pre
-        self._post += post
-        return self
-
-    def df(self) -> DataFrame:
-        (build_prompt, parse, client_factory, payload_fields, keep_cols,
-         retry, metrics, cache_dir, version) = self._args
-        src = self._df
-        for p in self._pre:
-            src = src.filter(p)
-        if cache_dir is not None:
-            out = llm_stage_cached(src, build_prompt, parse, client_factory,
-                                   payload_fields, keep_cols, cache_dir,
-                                   retry, metrics, version)
-        else:
-            out = llm_stage(src, build_prompt, parse, client_factory,
-                            payload_fields, keep_cols, retry, metrics)
-        for p in self._post:
-            out = out.filter(p)
-        return out
 
 
 def compact_prompt_cache(spark, cache_dir: str,

@@ -41,6 +41,7 @@ mock client is prompt-hash deterministic — two runs are byte-identical
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -49,11 +50,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from llmxmapreduce_spark.functions import text as X
-from llmxmapreduce_spark.llm.client import RetryPolicy, call_with_retry
+from llmxmapreduce_spark.llm.client import RetryPolicy
 from llmxmapreduce_spark.operators import digest_ops, grouping, sampling, skeleton
 from llmxmapreduce_spark.operators.citations import renumber_citations_py
 from llmxmapreduce_spark.operators.llm_op import _call_and_parse, _resolve_retry, llm_stage
 from llmxmapreduce_spark.operators.stage_metrics import StageRun
+from llmxmapreduce_spark.retention import checkpoint
 
 
 @dataclass
@@ -152,6 +154,17 @@ def _parse_score(reply: str) -> dict:
     if not 0 <= score <= 10:
         raise ValueError(f"score out of bounds: {score}")
     return {"score": score}
+
+
+def _parse_eval(reply: str) -> dict:
+    """L12 eval payload: the score, plus the reply itself as the eval
+    detail that the next self-refine prompt quotes."""
+    return {**_parse_score(reply), "eval_detail": reply}
+
+
+def _parse_text(reply: str) -> dict:
+    """Section prose (L14 leaves, A6 summaries, L15 polish): the reply."""
+    return {"content": reply}
 
 
 # ---------------------------------------------------------------------------
@@ -264,46 +277,44 @@ def _polish_prompt(section: str, content: str,
     return f"[POLISH] Section title: {section}\nDraft:\n{content}"
 
 
-def _call(client, prompt: str, retry: RetryPolicy) -> str | None:
-    reply, _err, _attempts = call_with_retry(client, prompt, retry)
-    return reply
+def _ask(client, retry: RetryPolicy, metrics, prompt: str, parse,
+         *names: str) -> dict | None:
+    """One model call of a per-survey pass, through ``_call_and_parse``
+    and metered into ``metrics``: the parsed payload (``names``), or None
+    when the call or its parse failed (the caller drops the candidate or
+    section, matching ``llm_stage``'s ``filter(llm_ok)``).  Bound to a
+    client, policy and meter, it is the ``ask`` of the per-survey bodies."""
+    payload, ok, _err, _attempts = _call_and_parse(
+        client, prompt, parse, list(names), retry, metrics)
+    return payload if ok else None
 
 
-def _modify_eval_py(client, retry: RetryPolicy, title: str, outline_md: str,
-                    sugg_id: str, content: str,
+def _modify_eval_py(ask, title: str, outline_md: str, sugg_id: str,
+                    content: str,
                     ps: dict[str, str] | None = None) -> dict | None:
-    """One L11 modify → L12 eval chain for a candidate suggestion; None on
-    any LLM failure or parse error (the candidate drops, matching
-    ``llm_stage``'s ``filter(llm_ok)`` semantics).  Shared by the conv block
-    and self-refine bodies."""
-    reply = _call(client, _modify_prompt(title, outline_md, content, ps), retry)
-    if reply is None:
+    """One L11 modify → L12 eval chain for a candidate suggestion; None
+    when either call fails.  Shared by the conv block and self-refine
+    bodies."""
+    mod = ask(_modify_prompt(title, outline_md, content, ps), _parse_fenced,
+              "md")
+    if mod is None:
         return None
-    try:
-        new_md = _parse_fenced(reply)["md"]
-    except ValueError:
-        return None
-    reply2 = _call(client, _eval_prompt(title, new_md, ps), retry)
-    if reply2 is None:
-        return None
-    try:
-        score = _parse_score(reply2)["score"]
-    except ValueError:
+    ev = ask(_eval_prompt(title, mod["md"], ps), _parse_eval,
+             "score", "eval_detail")
+    if ev is None:
         return None
     return {"sugg_id": sugg_id, "content": content,
-            "new_outline_md": new_md, "score": score,
-            "eval_detail": reply2}
+            "new_outline_md": mod["md"], **ev}
 
 
 def _pmap(fn, items, threads: int):
     """Order-preserving map with bounded intra-survey concurrency (the
     per-survey stages' analog of the reference's per-node worker pool,
-    async_d node.py:48).
+    async_d node.py:48), and the engine's only fan-out of model calls.
 
-    With ``threads > 1`` the ONE client instance of the enclosing stage is
-    called concurrently — the same contract as ``LLMClient.complete_batch``
-    (a thread pool over ``self.complete``), so clients must keep
-    ``complete()`` thread-safe, as the base class already requires."""
+    With ``threads > 1`` the ONE client of the enclosing survey is called
+    concurrently, so its ``complete()`` must be thread-safe (the client
+    contract at ``llm_op.llm_stage``'s ``client_factory``)."""
     items = list(items)
     if threads <= 1 or len(items) <= 1:
         return [fn(x) for x in items]
@@ -344,16 +355,18 @@ def build_papers(surveys: DataFrame) -> DataFrame:
 
 
 def group_papers(papers: DataFrame, cfg: V2Config,
-                 client_factory=None, retry=None) -> DataFrame:
+                 client_factory=None, retry=None, metrics=None) -> DataFrame:
     """C7: 'random' = keyed-hash shuffle batches; 'llm' = L4 GroupNeuron
-    proposal + regroup repair (group_module.py:29-133)."""
+    proposal + regroup repair (group_module.py:29-133), its calls metered
+    into ``metrics``."""
     if cfg.group_mode == "llm":
         if client_factory is None:
             raise ValueError("group_mode='llm' needs a client_factory")
         return grouping.llm_group_papers(papers, client_factory,
                                          cfg.digest_batch, retry,
                                          full_prompts=cfg.full_prompts,
-                                         prompt_lang=cfg.prompt_lang)
+                                         prompt_lang=cfg.prompt_lang,
+                                         metrics=metrics)
     return grouping.hash_shuffled_batches(
         papers, "bibkey", cfg.digest_batch, seed=cfg.seed,
         partition_cols=["survey_id"], group_col="digest_id",
@@ -629,7 +642,7 @@ def _dumps(val: list) -> str:
     return json.dumps(val)
 
 
-def _conv_group_py(client, retry, cfg: V2Config, ps, pdf: pd.DataFrame) -> dict | None:
+def _conv_group_py(ask, cfg: V2Config, ps, pdf: pd.DataFrame) -> dict | None:
     """Per-survey convolution block (convolution_module.py:38-127): the
     initial single-suggestion pass, then ``conv_layers`` rounds of T5
     sample → L10 kernel → L11 modify → L12 eval, appending this cycle's
@@ -651,8 +664,7 @@ def _conv_group_py(client, retry, cfg: V2Config, ps, pdf: pd.DataFrame) -> dict 
     outline_md = pdf["outline_md"].iloc[0]
 
     def modify_eval(item: tuple[str, str]) -> dict | None:
-        return _modify_eval_py(client, retry, title, outline_md, *item,
-                               ps=ps)
+        return _modify_eval_py(ask, title, outline_md, *item, ps=ps)
 
     init = sorted(zip(pdf["sugg_id"], pdf["content"]))
     state = [r for r in _pmap(modify_eval, init, threads) if r]
@@ -681,14 +693,11 @@ def _conv_group_py(client, retry, cfg: V2Config, ps, pdf: pd.DataFrame) -> dict 
             if len(members) > 1:
                 joined = "\n---\n".join(
                     by_id[m]["content"] for m in sorted(members))
-                reply = _call(client, _kernel_prompt(
-                    title, joined, ps, outline_md), retry)
-                if reply is None:
+                merged = ask(_kernel_prompt(title, joined, ps, outline_md),
+                             _parse_suggestion, "suggestion")
+                if merged is None:
                     return None
-                try:
-                    content = _parse_suggestion(reply)["suggestion"]
-                except ValueError:
-                    return None
+                content = merged["suggestion"]
             else:
                 content = by_id[members[0]]["content"]
             return (f"l{layer}g{gid}", content)
@@ -722,7 +731,7 @@ def _conv_group_py(client, retry, cfg: V2Config, ps, pdf: pd.DataFrame) -> dict 
     }
 
 
-def _refine_group_py(client, retry, cfg: V2Config, ps, row) -> dict:
+def _refine_group_py(ask, cfg: V2Config, ps, row) -> dict:
     """Per-survey self-refine (refine_module.py:25-66): ``refine_rounds``
     rounds of best-of L13→L11→L12 chains, keeping the max (ties prefer the
     kept state: 'keep' sorts before 'r…c…'), appending this cycle's
@@ -746,20 +755,14 @@ def _refine_group_py(client, retry, cfg: V2Config, ps, row) -> dict:
         detail_now = state_detail
 
         def chain(chain_id: int) -> tuple[str, str] | None:
-            reply = _call(
-                client, _refine_prompt(chain_id, rnd, title, outline_now,
-                                       ps, detail_now), retry)
-            if reply is None:
-                return None
-            try:
-                content = _parse_suggestion(reply)["suggestion"]
-            except ValueError:
-                return None
-            return (f"r{rnd}c{chain_id}", content)
+            got = ask(_refine_prompt(chain_id, rnd, title, outline_now, ps,
+                                     detail_now),
+                      _parse_suggestion, "suggestion")
+            return None if got is None else (f"r{rnd}c{chain_id}",
+                                             got["suggestion"])
 
         def modify_eval(item: tuple[str, str]) -> dict | None:
-            return _modify_eval_py(client, retry, title, outline_now, *item,
-                                   ps=ps)
+            return _modify_eval_py(ask, title, outline_now, *item, ps=ps)
 
         cands = [c for c in _pmap(chain, range(best_of), threads) if c]
         results = [r for r in _pmap(modify_eval, cands, threads) if r]
@@ -783,11 +786,13 @@ def _refine_group_py(client, retry, cfg: V2Config, ps, row) -> dict:
 
 def conv_refine(outlines: DataFrame, suggestions: DataFrame,
                 client_factory, cfg: V2Config,
-                retry: RetryPolicy | None = None) -> DataFrame:
+                retry: RetryPolicy | None = None,
+                metrics=None) -> DataFrame:
     """One block cycle's convolution block → self-refine chain as ONE
     ``applyInPandas`` over survey groups: per survey, :func:`_conv_group_py`
     then :func:`_refine_group_py` back to back in one Python pass with one
-    client — one survey-keyed exchange per cycle.  A survey whose every
+    client — one survey-keyed exchange per cycle.  ``metrics`` meters
+    every kernel, modify, eval and self-refine call.  A survey whose every
     conv chain died emits no row.  → (``_CONV_SCHEMA``) one refined
     outline per survey."""
     retry = _resolve_retry(client_factory, retry)
@@ -800,11 +805,11 @@ def conv_refine(outlines: DataFrame, suggestions: DataFrame,
     ps = _prompt_set(cfg)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        client = client_factory()
-        best = _conv_group_py(client, retry, cfg, ps, pdf)
+        ask = partial(_ask, client_factory(), retry, metrics)
+        best = _conv_group_py(ask, cfg, ps, pdf)
         if best is None:
             return pd.DataFrame(columns=[f.name for f in _CONV_SCHEMA.fields])
-        return pd.DataFrame([_refine_group_py(client, retry, cfg, ps, best)])
+        return pd.DataFrame([_refine_group_py(ask, cfg, ps, best)])
 
     return cands.groupBy("survey_id").applyInPandas(run, _CONV_SCHEMA)
 
@@ -884,11 +889,16 @@ def _section_material(digests: pd.DataFrame) -> dict[int, str]:
             for pos, items in by_pos.items()}
 
 
-def _write_survey_py(client, retry: RetryPolicy, cfg: V2Config, ps, metrics,
+# report rows of decode's write pass: leaf prose, A6 summaries, L15 polish
+_WRITE_STAGES = ("decode", "summary", "polish")
+
+
+def _write_survey_py(client, retry: RetryPolicy, cfg: V2Config, ps, meters,
                      outline, digests: pd.DataFrame) -> list[dict]:
     """One survey's decode prose (content.py:108-146): L14 orchestra prose
     for every leaf from its digest material, then bottom-up A6 summaries,
-    deepest parents first (ready-queue semantics), then L15 polish.  A
+    deepest parents first (ready-queue semantics), then L15 polish, each
+    kind metered into its ``meters`` entry (``_WRITE_STAGES`` order).  A
     section whose call failed is left out, and so is a parent whose
     children all failed.  → ``_DONE_SCHEMA`` rows in preorder."""
     sid, title = outline["survey_id"], outline["survey_title"]
@@ -896,19 +906,19 @@ def _write_survey_py(client, retry: RetryPolicy, cfg: V2Config, ps, metrics,
     nodes = skeleton.parse_outline_py(title, outline_md)
     material = _section_material(digests)
     threads = cfg.llm_threads
+    leaf_ask, summary_ask, polish_ask = (partial(_ask, client, retry, m)
+                                         for m in meters)
 
-    def leaf(n: dict) -> str | None:
-        prompt = _orchestra_prompt(ps, title, outline_md, n["title"],
-                                   material.get(n["pos"], ""))
-        payload, ok, _err, _attempts = _call_and_parse(
-            client, prompt, lambda s: {"content": s}, ["content"], retry,
-            metrics)
-        return payload["content"] if ok else None
+    def leaf(n: dict) -> dict | None:
+        return leaf_ask(_orchestra_prompt(ps, title, outline_md, n["title"],
+                                          material.get(n["pos"], "")),
+                        _parse_text, "content")
 
     leaves = [n for n in nodes if n["n_children"] == 0]
     content: dict[int, str] = {
-        n["pos"]: c for n, c in zip(leaves, _pmap(leaf, leaves, threads))
-        if c is not None
+        n["pos"]: got["content"]
+        for n, got in zip(leaves, _pmap(leaf, leaves, threads))
+        if got is not None
     }
     # Parent sections carry their own digest material too: the reference
     # orchestra module fills the SUMMARY_PROMPT {digest} slot with the
@@ -925,49 +935,52 @@ def _write_survey_py(client, retry: RetryPolicy, cfg: V2Config, ps, metrics,
                 if c["pos"] in content]
         if not kids:
             continue
-        reply = _call(
-            client,
+        got = summary_ask(
             _summary_prompt(title, n["title"], "\n\n".join(kids), ps,
                             outline=outline_md,
                             digest=material.get(n["pos"], "")),
-            retry)
-        if reply is not None:
-            content[n["pos"]] = reply
+            _parse_text, "content")
+        if got is not None:
+            content[n["pos"]] = got["content"]
     rows = [{"survey_id": sid, "pos": n["pos"], "depth": n["depth"],
              "title": n["title"], "content": content[n["pos"]]}
             for n in nodes if n["pos"] in content]
     if cfg.polish:
-        replies = _pmap(
-            lambda r: _call(client, _polish_prompt(r["title"], r["content"], ps),
-                            retry),
+        polished = _pmap(
+            lambda r: polish_ask(_polish_prompt(r["title"], r["content"], ps),
+                                 _parse_text, "content"),
             rows, threads)
-        rows = [{**r, "content": rep} for r, rep in zip(rows, replies)
-                if rep is not None]
+        rows = [{**r, **got} for r, got in zip(rows, polished)
+                if got is not None]
     return rows
 
 
 def decode_survey(final_outline: DataFrame, digests: DataFrame, papers: DataFrame,
                   client_factory, cfg: V2Config,
                   retry: RetryPolicy | None = None,
-                  metrics=None) -> DataFrame:
+                  meter=lambda stage: None) -> DataFrame:
     """content.py:108-146 decode as two per-survey passes, the reference's
     one sequential pass per survey (decode_pipeline.py:115-156).  The write
     pass cogroups each survey's outline with its digests and runs
-    :func:`_write_survey_py`: leaf prose, bottom-up assembly and polish
-    (``metrics`` meters the leaf calls).  The tail pass,
-    :func:`decode_tail`, renumbers and assembles.  Each pass reads its
-    inputs once, so nothing is checkpointed in between; surveys proceed
-    independently, without a level-synchronous barrier."""
+    :func:`_write_survey_py`: leaf prose, bottom-up assembly and polish.
+    The tail pass, :func:`decode_tail`, renumbers and assembles.  Each pass
+    reads its inputs once, so nothing is checkpointed in between; surveys
+    proceed independently, without a level-synchronous barrier.
+    ``meter(stage)`` (``StageRun.llm``) is resolved on the driver for the
+    ``_WRITE_STAGES`` and ``figures``.  With ``cfg.figures`` the figure
+    draft and anchoring both read the sections, so they are a checkpoint
+    that the caller's ``retention.owned()`` scope owns."""
     retry = _resolve_retry(client_factory, retry)
     ps = _prompt_set(cfg)
     outline_meta = final_outline.select("survey_id", "survey_title",
                                         "outline_md")
     done_cols = [f.name for f in _DONE_SCHEMA.fields]
+    meters = [meter(stage) for stage in _WRITE_STAGES]
 
     def write(outline: pd.DataFrame, dig: pd.DataFrame) -> pd.DataFrame:
         if outline.empty:
             return pd.DataFrame(columns=done_cols)
-        rows = _write_survey_py(client_factory(), retry, cfg, ps, metrics,
+        rows = _write_survey_py(client_factory(), retry, cfg, ps, meters,
                                 outline.iloc[0], dig)
         return pd.DataFrame(rows, columns=done_cols)
 
@@ -983,6 +996,7 @@ def decode_survey(final_outline: DataFrame, digests: DataFrame, papers: DataFram
     if cfg.figures:
         from llmxmapreduce_spark.operators.figures import anchor_figures, generate_figures
 
+        done = checkpoint(done)
         # draft includes section headings so the model can reference them
         draft_with_heads = (
             done.withColumn("__s", F.struct(
@@ -994,7 +1008,8 @@ def decode_survey(final_outline: DataFrame, digests: DataFrame, papers: DataFram
                 F.array_sort(F.collect_list("__s")), lambda s: s["v"])).alias("content_md"))
             .join(F.broadcast(outline_meta), "survey_id")
         )
-        figs = generate_figures(draft_with_heads, client_factory, retry)
+        figs = generate_figures(draft_with_heads, client_factory, retry,
+                                metrics=meter("figures"))
         done = anchor_figures(done, figs)
 
     return (
@@ -1093,13 +1108,15 @@ def run_v2_survey(surveys: DataFrame, client_factory,
     ``stage_metrics``: optional
     :class:`~llmxmapreduce_spark.operators.stage_metrics.StageMetrics` —
     per-stage rows-out and wall time at the checkpoint boundaries
-    (papers / outline / digest / refine / decode; the wall times tile the
-    call, and a stage cut several times sums its intervals), and LLM
-    accumulators for the row-parallel llm stages (outline / digest /
-    suggest) and for decode's leaf calls; the reference analyser's
-    per-node table (pipeline_analyser.py:64-124).  After collecting the result, fold the
-    per-layer convolution detail in with
-    ``stage_metrics.record_v2_layers(rows)``.
+    (papers / [group] / outline / digest / refine / decode; the wall times
+    tile the call, and a stage cut several times sums its intervals), and
+    every model call metered under the stage that makes it: [group,]
+    outline, digest, suggest, refine, decode (leaves), summary, polish
+    [, figures] — the ``llm_calls`` sum to the model's call count (the
+    bracketed rows need ``group_mode="llm"`` / ``figures=True``); the
+    reference analyser's per-node table (pipeline_analyser.py:64-124).
+    After collecting the result, fold the per-layer convolution detail in
+    with ``stage_metrics.record_v2_layers(rows)``.
 
     Retention: the returned frame is an eager checkpoint, the only frame
     the call leaves pinned (nothing on an error).  Each cut inside the
@@ -1111,7 +1128,13 @@ def run_v2_survey(surveys: DataFrame, client_factory,
     cfg = cfg or V2Config()
     with StageRun(surveys.sparkSession, stage_metrics) as run:
         papers = run.cut("papers", build_papers(surveys))
-        grouped = group_papers(papers, cfg, client_factory, retry)
+        if cfg.group_mode == "llm":
+            # outline and both digest passes read the grouping: one L4
+            # call per survey, not one per reader
+            grouped = run.cut("group", group_papers(
+                papers, cfg, client_factory, retry, metrics=run.llm("group")))
+        else:
+            grouped = group_papers(papers, cfg)   # Catalyst over the cut
         outlines = run.cut("outline", init_outlines(
             grouped, client_factory, cfg, retry, metrics=run.llm("outline")))
         digests, _dead = make_digests(grouped, outlines, client_factory, cfg,
@@ -1125,7 +1148,8 @@ def run_v2_survey(surveys: DataFrame, client_factory,
             # the refined outline is the last reader of the previous
             # state and of this cycle's digests (suggestions → conv_refine)
             cur = run.cut("refine", conv_refine(
-                cur, suggestions, client_factory, cfg, retry),
+                cur, suggestions, client_factory, cfg, retry,
+                metrics=run.llm("refine")),
                 supersedes=(cur, digests))
             # re-digest against the refined outline (digest_node re-entry)
             digests, _dead = make_digests(grouped, cur, client_factory, cfg,
@@ -1133,5 +1157,5 @@ def run_v2_survey(surveys: DataFrame, client_factory,
         digests = run.cut("digest", digests)
         return run.result("decode", decode_survey(
             typed_scores(cur), digests, papers, client_factory, cfg,
-            retry, metrics=run.llm("decode"),
+            retry, meter=run.llm,
         ).withColumn("block_cycle_count", F.lit(cfg.block_count)))

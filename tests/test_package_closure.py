@@ -7,8 +7,9 @@ module under ``llmxmapreduce_spark/`` is named in ``LIBRARY``: operators no
 paper query imports, kept while their own tests remain.  A listed module
 that is gone, or that a paper module now imports, fails too, so the list
 only ever records what is really outside.  It also checks that the paper
-modules have one checkpoint mechanism, ``retention.checkpoint``, and that V1
-and V2 have one stage protocol, ``stage_metrics.StageRun``.  No Spark.
+modules have one checkpoint mechanism, ``retention.checkpoint``, that V1
+and V2 have one stage protocol, ``stage_metrics.StageRun``, and that model
+calls have one path, ``llm_op._call_and_parse``.  No Spark.
 """
 
 from __future__ import annotations
@@ -140,4 +141,55 @@ def test_one_stage_protocol():
             elif (isinstance(node, ast.Compare) and isinstance(node.left, ast.Name)
                   and node.left.id in ("stage_metrics", "sm")):
                 found.append(f"{m}:{node.lineno} {node.left.id} test")
+    assert found == []
+
+
+def _scoped(node, scope=()):
+    """Every node under ``node`` with the names of its enclosing defs."""
+    for child in ast.iter_child_nodes(node):
+        inner = scope
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            inner = scope + (child.name,)
+        yield child, inner
+        yield from _scoped(child, inner)
+
+
+def _call_path_use(node) -> str | None:
+    """``call_with_retry`` for a call of it, ``complete`` for a
+    ``.complete(`` call, ``ThreadPoolExecutor`` for any mention of it."""
+    if isinstance(node, ast.Call):
+        f = node.func
+        if isinstance(f, ast.Attribute) and f.attr == "complete":
+            return "complete"
+        name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+        return name if name == "call_with_retry" else None
+    if isinstance(node, ast.ImportFrom):
+        names = [a.name for a in node.names]
+    elif isinstance(node, (ast.Name, ast.Attribute)):
+        names = [node.id if isinstance(node, ast.Name) else node.attr]
+    else:
+        return None
+    return "ThreadPoolExecutor" if "ThreadPoolExecutor" in names else None
+
+
+def test_one_call_path():
+    """Every model call of a paper module goes through
+    ``llm_op._call_and_parse``, which retries and meters it: only
+    ``llm_op`` calls ``call_with_retry``; only the clients under ``llm/``
+    and the V3 planner seam (``v3_host.client_planner``) call
+    ``.complete(``; and ``v2_survey._pmap`` is the one thread pool."""
+    allowed = {
+        "call_with_retry": lambda m, scope: m == f"{PKG}.operators.llm_op",
+        "complete": lambda m, scope: m.startswith(f"{PKG}.llm.") or (
+            m == f"{PKG}.pipelines.v3_host" and scope[:1] == ("client_planner",)),
+        "ThreadPoolExecutor": lambda m, scope: (
+            m == f"{PKG}.pipelines.v2_survey" and scope == ("_pmap",)),
+    }
+    mods = _modules()
+    found = []
+    for m in sorted(_closure(mods)):
+        for node, scope in _scoped(ast.parse(mods[m].read_text())):
+            use = _call_path_use(node)
+            if use is not None and not allowed[use](m, scope):
+                found.append(f"{m}:{node.lineno} {'.'.join(scope)} {use}")
     assert found == []

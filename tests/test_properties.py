@@ -157,30 +157,6 @@ def test_zh_f1_identity(t):
         assert qa_f1_zh_py(t, t) == 0.0
 
 
-def test_complete_batch_fans_out_in_order(spark):
-    """D12: the client-side request pool preserves input order under
-    concurrency."""
-    import threading
-    import time as _t
-
-    from llmxmapreduce_spark.llm.client import LLMClient
-
-    seen_threads = set()
-
-    class SlowEcho(LLMClient):
-        pool_size = 8
-
-        def complete(self, prompt):
-            seen_threads.add(threading.get_ident())
-            _t.sleep(0.01)
-            return f"r:{prompt}"
-
-    prompts = [f"p{i}" for i in range(32)]
-    got = SlowEcho().complete_batch(prompts)
-    assert got == [f"r:p{i}" for i in range(32)]
-    assert len(seen_threads) > 1        # genuinely concurrent
-
-
 # ---------------------------------------------------------------------------
 # round-6 pure cores: FFD packing + mixture planning
 # ---------------------------------------------------------------------------

@@ -7,7 +7,6 @@ import pytest
 
 from llmxmapreduce_spark.llm.client import (
     FlakyClient,
-    HashEchoClient,
     LLMClient,
     RetryPolicy,
     call_with_retry,
@@ -106,12 +105,6 @@ def test_provider_preset_selection_requires_known_name():
 
     with pytest.raises(ValueError):
         OpenAICompatClient("m", provider="nope")
-
-
-def test_batch_still_deterministic_with_policy():
-    c = HashEchoClient()
-    out = c.complete_batch(["a", "b", "a"])
-    assert out[0] == out[2] != out[1]
 
 
 def _preset_flaky(inner_cls):

@@ -8,10 +8,12 @@ and the Scala ``Map.get`` returning a py4j Option that needs unwrapping.
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from llmxmapreduce_spark.llm.client import ChattyQAClient, MockQAClient
 from llmxmapreduce_spark.llm.survey_mock import MockSurveyClient
+from llmxmapreduce_spark.operators import skeleton
 from llmxmapreduce_spark.operators.stage_metrics import StageMetrics, v2_stage_report
 from llmxmapreduce_spark.pipelines import v2_survey as v2
 from llmxmapreduce_spark.pipelines.v1_qa import run_v1_qa
@@ -161,6 +163,69 @@ def test_v2_pipeline_report_and_layers(spark):
     assert ldf.count() == len(layers)
     assert ldf.columns == ["survey_id", "block_cycle", "conv_layer",
                            "pool_size", "avg_score"]
+
+
+# ---------------------------------------------------------------------------
+# e2e: every V2 model call is made once and metered once
+# ---------------------------------------------------------------------------
+
+def _counting_survey_client(sc):
+    """A MockSurveyClient class that counts its calls, and its ``[GROUP]``
+    calls apart, in accumulators (the class is local, so executors
+    unpickle it by value)."""
+    calls, group_calls = sc.accumulator(0), sc.accumulator(0)
+
+    class CountingSurveyClient(MockSurveyClient):
+        def complete(self, prompt: str) -> str:
+            calls.add(1)
+            if prompt.startswith("[GROUP]"):
+                group_calls.add(1)
+            return super().complete(prompt)
+
+    return CountingSurveyClient, calls, group_calls
+
+
+@pytest.fixture(scope="module")
+def v2_all_stages(spark):
+    """One survey run with every model-calling stage on: LLM grouping,
+    conv layers, a refine round, polish and figures."""
+    surveys = make_surveys(spark, n_surveys=2, n_papers=4)
+    cfg = v2.V2Config(conv_layers=1, receptive_field=2, result_num=2,
+                      top_k=2, refine_rounds=1, best_of=1, polish=True,
+                      figures=True, group_mode="llm", block_count=1)
+    client, calls, group_calls = _counting_survey_client(spark.sparkContext)
+    sm = StageMetrics(spark)
+    rows = v2.run_v2_survey(surveys, client, cfg, stage_metrics=sm).collect()
+    assert len(rows) == 2
+    return rows, sm, calls.value, group_calls.value
+
+
+def test_v2_report_accounts_for_every_call(v2_all_stages):
+    _rows, sm, calls, _ = v2_all_stages
+    rep = {r["stage"]: r for r in sm.report()}
+    for stage in ("group", "outline", "digest", "suggest", "refine",
+                  "decode", "summary", "polish", "figures"):
+        assert rep[stage]["llm_calls"] > 0, stage
+    assert sum(r["llm_calls"] or 0 for r in rep.values()) == calls
+
+
+def test_v2_figures_run_the_write_pass_once(v2_all_stages):
+    """With figures on, the figure draft and the anchoring read one
+    materialization of the written sections: the leaf calls still equal
+    the leaf count of each survey's final outline."""
+    rows, sm, _, _ = v2_all_stages
+    leaves = sum(n["n_children"] == 0 for r in rows
+                 for n in skeleton.parse_outline_py(r["survey_title"],
+                                                    r["outline_md"]))
+    assert leaves > 0
+    assert sm.llm("decode").calls.value == leaves
+
+
+def test_v2_llm_grouping_calls_once_per_survey(v2_all_stages):
+    """The L4 grouping is cut once, so the outline pass and both digest
+    passes read one grouping: the client sees one call per survey."""
+    rows, _, _, group_calls = v2_all_stages
+    assert group_calls == len(rows)
 
 
 # ---------------------------------------------------------------------------
