@@ -464,6 +464,11 @@ def minhash_dedup_pairs(
             "sh_h", F.transform("shingles", lambda s: F.xxhash64(s))
         ).drop("shingles")
     base = base.persist()
+    # Fill the cache before planning the pairs: an unfilled cache is sized
+    # from its input's estimate, so AQE turns the joins into broadcasts
+    # only as its cache stages finish, and whether a shuffle job runs
+    # first then depends on task timing.
+    base.count()
     cands = lsh_candidate_pairs(base, id_col, "signature", bands,
                                 rows_per_band, int_bands=family == "int60")
     if verify == "exact" and family == "int60":

@@ -23,6 +23,7 @@ its own, one model-calling task per ``spark.sql.shuffle.partitions``.
 
 from __future__ import annotations
 
+import math
 import threading
 from collections.abc import Callable, Iterator
 from typing import Any
@@ -186,6 +187,10 @@ PROMPT_HASH_COL = "__prompt_hash"
 # semi-join on the batch's hashes instead of deduping the whole cache
 PRUNE_CACHE_READ_BYTES = 256 * 1024 * 1024
 
+# llm_stage_cached appends its fresh rows in one parquet file per this many
+# rows, not one per shuffle partition
+ROWS_PER_APPEND_FILE = 1_000_000
+
 # llm_stage_cached's internal columns: the cache-side payload struct and
 # the flag on the one row per fresh successful hash that the append writes
 _CACHED_COL = "__cached"
@@ -310,8 +315,9 @@ def llm_stage_cached(
       sharing a prompt lands in the same task, and a per-task memo
       serves the repeats;
     - successful fresh results are appended to ``cache_dir`` (parquet;
-      appends are new files, so concurrent runs never corrupt — dup
-      hashes are resolved deterministically at read).
+      appends are new files, one per ``ROWS_PER_APPEND_FILE`` fresh rows,
+      so concurrent runs never corrupt — dup hashes are resolved
+      deterministically at read).
 
     Failed rows (``llm_ok=false``) are returned with the usual sentinel
     but NOT cached, so the next run retries them — the D8/D13 contract.
@@ -402,7 +408,8 @@ def llm_stage_cached(
     if fresh_rows.value:
         done.filter(_FRESH_COL).select(
             PROMPT_HASH_COL, *payload_names, "llm_attempts"
-        ).write.mode("append").parquet(cache_dir)
+        ).coalesce(math.ceil(fresh_rows.value / ROWS_PER_APPEND_FILE)
+                   ).write.mode("append").parquet(cache_dir)
     return done.select(*keep_cols, *payload_names, "llm_ok", "llm_error",
                        "llm_attempts")
 

@@ -14,6 +14,17 @@ Notable conf choices:
 - AQE + skew-join so the same plans survive skewed keys at 100 TB.
 - Arrow enabled for every pandas-UDF boundary (the batched LLM operators
   and the tree parsers are Arrow-batched, never row-at-a-time).
+- ``spark.python.daemon.module`` is ``pyworker``: every Python task calls
+  ``importlib.invalidate_caches()``, and on Python 3.11 that re-reads the
+  central directory of the spark-core jar (5,359 entries) and
+  ``pyspark.zip`` (1,328) once per zipimporter, 16 of them on a warm
+  worker: about 0.2 s per task alone, more with four workers at once.
+  The package daemon re-reads an archive only when it has changed on
+  disk, which moves a task's start from ~0.3 s to ~0.1 s after its job
+  is submitted.  Contract: the Python workers must be able to import
+  this package (they already must, since every pipeline UDF pickles
+  package functions by reference), so a session must be started from a
+  directory or environment that puts it on their path.
 """
 
 from __future__ import annotations
@@ -21,6 +32,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from llmxmapreduce_spark import pyworker
 
 
 def _default_cpus() -> int:
@@ -53,6 +66,7 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.daemon.module", pyworker.__name__)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

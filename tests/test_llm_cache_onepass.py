@@ -230,3 +230,15 @@ def test_no_prompt_rows_send_nothing(spark, tmp_path):
         assert m.calls.value == 0 and m.prompt_chars.value == 0, name
     # nothing was appended: the cache was never created
     assert not d.exists() or not _cache_files(d)
+
+
+def test_cold_append_writes_one_file(spark, tmp_path):
+    """Fresh rows from every shuffle partition land in one parquet part
+    file per append, not one per partition."""
+    d = tmp_path / "c"
+    words = [f"w{i}" for i in range(40)]
+    _run_pinned(spark, lambda: _cached(_frame(spark, words[:20], 4), d))
+    assert len(_cache_files(d)) == 1
+    _run_pinned(spark, lambda: _cached(_frame(spark, words, 4), d))
+    assert len(_cache_files(d)) == 2
+    assert spark.read.parquet(str(d)).count() == 40
