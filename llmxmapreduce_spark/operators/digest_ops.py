@@ -61,6 +61,36 @@ def merge_digest_descriptions(
     )
 
 
+def merge_digest_nodes_py(nodes) -> list[dict]:
+    """A3 in Python, for V2's per-survey digest pass: ``nodes`` are one
+    survey's per-paper node dicts (``digest_id``, ``bibkey``, ``pos``,
+    ``description``), merged per (``digest_id``, ``pos``) into the rows
+    :func:`merge_digest_descriptions` gives for them with ``bibkeys =
+    [bibkey]``, ``digest_id_col="bibkey"`` and the digest group among the
+    ``id_cols``: the non-empty descriptions' entries in (bibkey, entry)
+    order, a null bibkey first as Spark sorts a struct's fields, and
+    ``all_bibkeys`` sorted and distinct, a null key last.
+    → (``digest_id``, ``pos``, ``description``, ``all_bibkeys``) dicts in
+    (digest_id, pos) order."""
+    by_key: dict[tuple, list[dict]] = {}
+    for n in nodes:
+        by_key.setdefault((n["digest_id"], n["pos"]), []).append(n)
+    out = []
+    for digest_id, pos in sorted(by_key):
+        group = by_key[digest_id, pos]
+        entries = sorted(
+            (n["bibkey"] is not None, n["bibkey"] or "",
+             f"Paper bibkey: [{n['bibkey'] or ''}]\nDigest: \n{n['description']}")
+            for n in group if n["description"])
+        keys = {n["bibkey"] for n in group}
+        out.append({
+            "digest_id": digest_id, "pos": pos,
+            "description": MERGE_SEPARATOR.join(e[2] for e in entries),
+            "all_bibkeys": sorted(keys - {None}) + [None] * (None in keys),
+        })
+    return out
+
+
 def enrich_papers(papers: DataFrame, txt_col: str = "txt",
                   abstract_col: str = "abstract",
                   token_col: str = "txt_token") -> DataFrame:

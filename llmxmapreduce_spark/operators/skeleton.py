@@ -168,49 +168,29 @@ def _norm_title_py(t: str) -> str:
 def align_reason_py(provide_title: str, outline_md: str,
                     digest_md: str) -> str | None:
     """Scalar form of :func:`align_digest_nodes` for one (outline, digest)
-    pair (digest.py:238-255): positional compare of the two preorder node
-    lists; returns the first mismatch reason, or ``None`` when the digest's
-    structure corresponds fully.  Used by the V2 pipeline so per-paper
-    alignment costs one column expression instead of an explode + full-outer
-    join + regroup round-trip."""
-    o = parse_outline_py(provide_title, outline_md)
-    d = parse_outline_py(provide_title, digest_md)
-    for pos in range(max(len(o), len(d))):
-        if pos >= len(o):
+    pair (digest.py:238-255): the first mismatch reason of
+    :func:`align_reason_nodes`, or ``None`` when the digest's structure
+    corresponds fully."""
+    return align_reason_nodes(parse_outline_py(provide_title, outline_md),
+                              parse_outline_py(provide_title, digest_md))
+
+
+def align_reason_nodes(outline: list[dict], digest: list[dict]) -> str | None:
+    """Positional compare of two preorder node lists
+    (:func:`parse_outline_py`): the first mismatch reason, or ``None``.
+    The V2 digest pass parses each outline once and each digest once, and
+    keeps the digest's nodes for the merge."""
+    for pos in range(max(len(outline), len(digest))):
+        if pos >= len(outline):
             return "extra digest section"
-        if pos >= len(d):
+        if pos >= len(digest):
             return "missing digest section"
-        if _norm_title_py(o[pos]["title"]) != _norm_title_py(d[pos]["title"]):
+        if (_norm_title_py(outline[pos]["title"])
+                != _norm_title_py(digest[pos]["title"])):
             return "title mismatch"
-        if o[pos]["node_path"] != d[pos]["node_path"]:
+        if outline[pos]["node_path"] != digest[pos]["node_path"]:
             return "index mismatch"
     return None
-
-
-@F.pandas_udf(T.ArrayType(NODE_FIELDS))
-def parse_nodes_udf(titles: pd.Series, mds: pd.Series) -> pd.Series:
-    """Scalar (title, markdown) → array<node> — explode-friendly parse that
-    needs no per-group shuffle."""
-    return pd.Series([parse_outline_py(t, m) for t, m in zip(titles, mds)])
-
-
-@F.pandas_udf(T.StringType())
-def placeholder_udf(titles: pd.Series, mds: pd.Series) -> pd.Series:
-    """Outline markdown → digest-placeholder markdown (serialize ∘ parse with
-    ``with_digest_placeholder``), as one scalar column expression."""
-    return pd.Series([
-        serialize_outline_py(parse_outline_py(t, m), with_digest_placeholder=True)
-        for t, m in zip(titles, mds)
-    ])
-
-
-@F.pandas_udf(T.StringType())
-def align_reason_udf(titles: pd.Series, outline_mds: pd.Series,
-                     digest_mds: pd.Series) -> pd.Series:
-    return pd.Series([
-        align_reason_py(t, o, d)
-        for t, o, d in zip(titles, outline_mds, digest_mds)
-    ])
 
 
 def parse_outlines(df: DataFrame, id_col: str = "survey_id",

@@ -14,8 +14,8 @@ telemetry with zero extra jobs:
 - **wall time** for eagerly-materialized stages (the pipelines'
   ``localCheckpoint`` boundaries): each ``materialized()`` call adds the
   interval since the previous one to its stage, so the stage times tile
-  the run, and a stage cut several times (V1 collapse rounds, V2 digest
-  passes) sums its intervals.
+  the run, and a stage cut several times (V2's ``digest``, cut once per
+  block cycle and once before decode) sums its intervals.
 
 Queue depth has no analog — Spark stages don't queue between operators;
 the scheduler's task backlog is visible in the Spark UI — so the report
@@ -75,8 +75,8 @@ class StageMetrics:
 
     def llm(self, name: str) -> LLMMetrics:
         """The stage's LLMMetrics accumulator set (pass to ``llm_stage``).
-        Re-using a name accumulates into the same counters (e.g. every
-        collapse round under one "collapse" stage)."""
+        Re-using a name accumulates into the same counters (e.g. both of
+        V2's digest passes under one "digest" stage)."""
         self._ensure(name)
         if name not in self._llm:
             self._llm[name] = LLMMetrics(self._spark)

@@ -6,29 +6,33 @@ DAG becomes a chain of Spark jobs with a bounded block-cycle loop
 ``block_cycle_count < block_count``):
 
   surveys ─ explode → papers ─ C7 group → digest groups
-    ├─ C6 batch → L5 init outlines → L6 concat → outline          (encode)
+    ├─ [outline pass: C6 batch → L5 init outlines → L6 concat] → outline
+    │                                                             (encode)
     ├─ [block cycle ×block_count:
-    │     L7 per-paper digest → J1 align → A3 merge → digests     (hidden)
-    │     L9 feedback → conv block (T5/L10/L11/L12/T1) →
-    │     L13 self-refine → refined outline → re-digest]
+    │     L7 per-paper digest → [digest pass: J1 align → A3 merge]
+    │       → digests                                             (hidden)
+    │     [refine pass: L9 feedback → conv block (T5/L10/L11/L12/T1)
+    │       → L13 self-refine] → refined outline → re-digest]
     └─ decode: [write pass: L14 orchestra leaves → A6 bottom-up
           assembly → L15 polish] → [tail pass: P12/J3 renumber → A7 →
           references → S5-shape]                                  (decode)
 
-Each stage has exactly one implementation.  The row-parallel LLM fan-outs —
-L5/L6 init outlines, L7 per-paper digests, L9 feedback — are ``llm_stage``
-(``mapInPandas``) operators.  The per-survey algorithms (the reference
-runs each ``forward()`` per survey object) are per-survey pandas passes:
-:func:`conv_refine` runs the convolution block and self-refine back to
-back in ONE ``applyInPandas``, and :func:`decode_survey` is two
-``cogroup`` passes, one that writes a survey's sections (leaf prose,
-bottom-up summaries, polish) and one that renumbers and assembles them.
-Surveys are the scale axis (thousands of independent groups on a
-cluster), per-survey state is tiny (≤ result_num outlines), and
-intra-survey LLM calls can fan out over ``V2Config.llm_threads`` (the
-reference's per-node worker pool).  No per-survey pass has per-layer or
-per-depth job barriers: a block cycle's conv→refine chain is one shuffle,
-and decode is two, regardless of conv depth or tree depth.
+Each stage has exactly one implementation.  The one row-parallel LLM
+fan-out, the L7 per-paper digest, is an ``llm_stage`` (``mapInPandas``)
+operator.  Everything else is a per-survey pandas pass (the reference runs
+each ``forward()`` per survey object), one ``groupBy("survey_id")``
+exchange each: :func:`init_outlines` batches, outlines and concatenates;
+:func:`make_digests`' digest pass aligns and merges the L7 replies;
+:func:`conv_refine` runs L9 feedback, the convolution block and
+self-refine back to back; and :func:`decode_survey` is two ``cogroup``
+passes, one that writes a survey's sections (leaf prose, bottom-up
+summaries, polish) and one that renumbers and assembles them.  Surveys
+are the scale axis (thousands of independent groups on a cluster),
+per-survey state is tiny (≤ result_num outlines), and intra-survey LLM
+calls fan out over ``V2Config.llm_threads`` (the reference's per-node
+worker pool).  No per-survey pass has per-layer or per-depth job
+barriers: a block cycle's feedback→conv→refine chain is one shuffle, and
+decode is two, regardless of conv depth or tree depth.
 :func:`run_v2_survey` never writes session conf: shuffles are sized by the
 session's own settings.
 
@@ -41,7 +45,7 @@ mock client is prompt-hash deterministic — two runs are byte-identical
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import partial
+from functools import lru_cache, partial
 
 import numpy as np
 import pandas as pd
@@ -75,8 +79,9 @@ class V2Config:
     figures: bool = False        # L16/J5 chart stage (chart_node)
     group_mode: str = "random"   # C7: 'random' (hash) | 'llm' (L4 + repair)
     llm_threads: int = 1         # intra-survey LLM fan-out inside the
-                                 # per-survey conv_refine pass and decode's
-                                 # write pass (leaf prose and polish;
+                                 # per-survey passes (L5 outlines, L9
+                                 # feedback, the conv and refine chains,
+                                 # decode's leaf prose and polish;
                                  # reference worker pool, node.py:48);
                                  # never changes the output
     full_prompts: bool = False   # use the reference's verbatim prompt texts
@@ -408,67 +413,69 @@ def _concat_outline_prompt(ps: dict | None, survey_title: str,
     )
 
 
+_OUTLINE_SCHEMA = T.StructType([
+    T.StructField("survey_id", _STR, False),
+    T.StructField("survey_title", _STR, True),
+    T.StructField("outline_md", _STR, True),
+])
+
+
+def _skeleton_batches_py(papers: pd.DataFrame, batch_size: int,
+                         seed: int) -> list[str]:
+    """One survey's C6 batches (skeleton_init_module.py:25-32) as packed
+    abstracts, in ``batch_id`` order: ``grouping.hash_shuffled_batches``'s
+    md5(``digest_id``‖``#seed``) order over the survey's digest groups,
+    cut into ``batch_size`` groups; each batch's papers as
+    ``Bibkey: '…':\nAbstract:\n<first 1,500 characters>`` in (bibkey,
+    entry) order, a paper with a null bibkey or abstract left out."""
+    import hashlib
+
+    order = sorted({int(d) for d in papers["digest_id"]},
+                   key=lambda d: (hashlib.md5(f"{d}#{seed}".encode()).hexdigest(), d))
+    batch_of = {d: i // batch_size for i, d in enumerate(order)}
+    entries: list[list[tuple[str, str]]] = [[] for _ in range(-(-len(order) // batch_size))]
+    for d, key, abstract in zip(papers["digest_id"], papers["bibkey"],
+                                papers["abstract"]):
+        if key is not None and abstract is not None:
+            entries[batch_of[int(d)]].append(
+                (key, f"Bibkey: '{key}':\nAbstract:\n{abstract[:1500]}"))
+    return ["\n---------------------\n".join(v for _, v in sorted(batch))
+            for batch in entries]
+
+
 def init_outlines(papers_grouped: DataFrame, client_factory, cfg: V2Config,
                   retry: RetryPolicy | None = None,
                   metrics=None) -> DataFrame:
-    """C6 skeleton batching + per-batch abstract packing (pure Catalyst),
-    L5 per-batch outlines, then the L6 per-survey concat.
+    """Skeleton init (skeleton_init_module.py:25-111) as one per-survey
+    pass: C6 batching and abstract packing (:func:`_skeleton_batches_py`),
+    an L5 outline per batch fanned out over ``cfg.llm_threads``, then the
+    L6 concat of the batches' outlines in ``batch_id`` order, every call
+    metered into ``metrics``.  A survey whose L5 calls all failed, or
+    whose L6 call failed, emits no row.
     → (survey_id, survey_title, outline_md)."""
-    batches = grouping.hash_shuffled_batches(
-        papers_grouped.select("survey_id", "digest_id").distinct(),
-        "digest_id", cfg.skeleton_batch, seed=cfg.seed + 1,
-        partition_cols=["survey_id"], group_col="batch_id",
-    )
-    joined = papers_grouped.join(F.broadcast(batches), ["survey_id", "digest_id"])
-    abstract_fmt = F.concat(
-        F.lit("Bibkey: '"), F.col("bibkey"), F.lit("':\nAbstract:\n"),
-        F.substring(F.col("abstract"), 1, 1500),
-    )
-    per_batch = (
-        joined.withColumn("__a", F.struct(F.col("bibkey").alias("k"),
-                                          abstract_fmt.alias("v")))
-        .groupBy("survey_id", "survey_title", "batch_id")
-        .agg(F.concat_ws(
-            "\n---------------------\n",
-            F.transform(F.array_sort(F.collect_list("__a")), lambda s: s["v"]),
-        ).alias("abstracts"))
-    )
+    retry = _resolve_retry(client_factory, retry)
     ps = _prompt_set(cfg)
-    single = llm_stage(
-        per_batch,
-        build_prompt=lambda r: _init_outline_prompt(
-            ps, r["survey_title"], r["abstracts"]),
-        parse=_parse_fenced,
-        client_factory=client_factory,
-        payload_fields=_payload("md"),
-        keep_cols=["survey_id", "survey_title", "batch_id"],
-        retry=retry,
-        metrics=metrics,
-    ).filter("llm_ok")
-    per_survey = (
-        single.withColumn("__o", F.struct(F.col("batch_id").alias("k"),
-                                          F.col("md").alias("v")))
-        .groupBy("survey_id", "survey_title")
-        .agg(F.concat_ws(
-            _OUTLINE_CONCAT_SEPARATOR,
-            F.transform(
-                F.array_sort(F.collect_list("__o")),
-                lambda s: F.concat(F.lit("```markdown\n"), s["v"], F.lit("\n```")),
-            ),
-        ).alias("outlines"))
+    batch_size, seed, threads = cfg.skeleton_batch, cfg.seed + 1, cfg.llm_threads
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        sid, title = pdf["survey_id"].iloc[0], pdf["survey_title"].iloc[0]
+        ask = partial(_ask, client_factory(), retry, metrics)
+        singles = [got["md"] for got in _pmap(
+            lambda abstracts: ask(_init_outline_prompt(ps, title, abstracts),
+                                  _parse_fenced, "md"),
+            _skeleton_batches_py(pdf, batch_size, seed), threads) if got]
+        merged = singles and ask(
+            _concat_outline_prompt(ps, title, _OUTLINE_CONCAT_SEPARATOR.join(
+                f"```markdown\n{md}\n```" for md in singles)),
+            _parse_fenced, "md")
+        rows = [(sid, title, merged["md"])] if merged else []
+        return pd.DataFrame(rows, columns=[f.name for f in _OUTLINE_SCHEMA.fields])
+
+    return (
+        papers_grouped.select("survey_id", "survey_title", "digest_id",
+                              "bibkey", "abstract")
+        .groupBy("survey_id").applyInPandas(run, _OUTLINE_SCHEMA)
     )
-    return llm_stage(
-        per_survey,
-        build_prompt=lambda r: _concat_outline_prompt(
-            ps, r["survey_title"], r["outlines"]),
-        parse=_parse_fenced,
-        client_factory=client_factory,
-        payload_fields=_payload("md"),
-        keep_cols=["survey_id", "survey_title"],
-        retry=retry,
-        metrics=metrics,
-    ).filter("llm_ok").select("survey_id", "survey_title",
-                              F.col("md").alias("outline_md"))
 
 
 # ---------------------------------------------------------------------------
@@ -509,28 +516,65 @@ def _feedback_prompt(ps: dict | None, survey_title: str, outline_md: str,
     )
 
 
+@lru_cache(maxsize=64)
+def _placeholder_md(survey_title: str, outline_md: str) -> str:
+    """An outline as the L7 digest placeholder (serialize ∘ parse with
+    ``with_digest_placeholder``), built once per outline in a worker."""
+    return skeleton.serialize_outline_py(
+        skeleton.parse_outline_py(survey_title, outline_md),
+        with_digest_placeholder=True)
+
+
+def _digest_survey_py(pdf: pd.DataFrame) -> list[dict]:
+    """One survey's successful L7 replies, all against the survey's one
+    outline → its digests and its misaligned papers.  J1
+    (digest.py:238-255): each reply's node list must match the outline's;
+    a paper whose reply does not quarantines like a D8 dead letter (the
+    reference raises and retries per paper) and comes out as a ``reason``
+    row.  The aligned papers' nodes are A3-merged per digest group
+    (:func:`digest_ops.merge_digest_nodes_py`) into rows with a null
+    ``reason``."""
+    title = pdf["survey_title"].iloc[0]
+    outline = skeleton.parse_outline_py(title, pdf["outline_md"].iloc[0])
+    nodes, dead = [], []
+    for d, key, md in zip(pdf["digest_id"], pdf["bibkey"], pdf["md"]):
+        got = skeleton.parse_outline_py(title, md)
+        reason = skeleton.align_reason_nodes(outline, got)
+        if reason is not None:
+            dead.append({"bibkey": key, "reason": reason})
+            continue
+        nodes += [{"digest_id": d, "bibkey": key, "pos": n["pos"],
+                   "description": n["description"]} for n in got]
+    # every row names every field: a missing one would reach Arrow as NaN
+    return ([{**m, "bibkey": None, "reason": None}
+             for m in digest_ops.merge_digest_nodes_py(nodes)]
+            + [{"digest_id": None, "pos": None, "description": None,
+                "all_bibkeys": None, **d} for d in dead])
+
+
 def make_digests(papers_grouped: DataFrame, outlines: DataFrame, client_factory,
                  cfg: V2Config, retry: RetryPolicy | None = None,
                  metrics=None) -> tuple[DataFrame, DataFrame]:
-    """→ (digests (survey_id, digest_id, pos, description), dead_letters).
+    """→ (digests (survey_id, digest_id, pos, description, all_bibkeys),
+    dead_letters (survey_id, bibkey, reason)).
 
-    One row-parallel llm_stage over papers (the big fan-out), with the
-    placeholder serialization and J1 structural alignment as scalar column
-    expressions (skeleton.placeholder_udf / align_reason_udf) — no
-    explode/regroup or full-outer join round-trips; the only shuffle is the
-    A3 merge aggregation.  Runs once per block cycle (digest_node re-entry,
+    The L7 per-paper digest is the row-parallel ``llm_stage`` (or
+    ``llm_stage_cached`` under ``cfg.llm_cache_dir``), its prompt built
+    with the outline's placeholder form (:func:`_placeholder_md`).  Then
+    ONE per-survey pass, :func:`_digest_survey_py`, runs J1 alignment and
+    the A3 merge over the survey's successful replies.  The dead letters
+    are the failed L7 calls and the pass's misaligned papers: they read
+    the same pass, so an unread ``dead`` adds nothing to the digests'
+    plan.  Runs once per block cycle (digest_node re-entry,
     hidden_pipeline.py:75).
     """
-    o = outlines.select(
-        "survey_id", "survey_title", "outline_md",
-        skeleton.placeholder_udf("survey_title", "outline_md").alias("placeholder_md"),
-    )
+    o = outlines.select("survey_id", "survey_title", "outline_md")
     per_paper = papers_grouped.drop("survey_title").join(F.broadcast(o), "survey_id")
     ps = _prompt_set(cfg)
     stage_kw = dict(
         build_prompt=lambda r: _digest_prompt(
-            ps, r["survey_title"], r["bibkey"], r["content"],
-            r["outline_md"], r["placeholder_md"]),
+            ps, r["survey_title"], r["bibkey"], r["content"], r["outline_md"],
+            _placeholder_md(r["survey_title"], r["outline_md"])),
         parse=_parse_fenced_with_suggestion,
         client_factory=client_factory,
         payload_fields=_payload("md", "suggestion"),
@@ -548,71 +592,39 @@ def make_digests(papers_grouped: DataFrame, outlines: DataFrame, client_factory,
             **stage_kw)
     else:
         raw = llm_stage(per_paper, **stage_kw)
-    # J1 per-paper structural correspondence; misaligned papers quarantine
-    # like D8 dead letters (the reference raises + retries per paper).
-    checked = raw.filter("llm_ok").withColumn(
-        "align_reason",
-        skeleton.align_reason_udf("survey_title", "outline_md", "md"),
+    schema = T.StructType([
+        T.StructField("survey_id", _STR, False),
+        T.StructField("digest_id", papers_grouped.schema["digest_id"].dataType, True),
+        T.StructField("pos", T.IntegerType(), True),
+        T.StructField("description", _STR, True),
+        T.StructField("all_bibkeys", T.ArrayType(_STR), True),
+        T.StructField("bibkey", _STR, True),
+        T.StructField("reason", _STR, True),
+    ])
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = pd.DataFrame(_digest_survey_py(pdf),
+                           columns=[f.name for f in schema.fields[1:]])
+        return out.assign(survey_id=pdf["survey_id"].iloc[0])[schema.fieldNames()]
+
+    passed = (
+        raw.filter("llm_ok")
+        .select("survey_id", "survey_title", "outline_md", "digest_id",
+                "bibkey", "md")
+        .groupBy("survey_id").applyInPandas(run, schema)
     )
-    good_nodes = (
-        checked.filter("align_reason IS NULL")
-        .select(
-            "survey_id", "digest_id", "bibkey",
-            F.explode(skeleton.parse_nodes_udf("survey_title", "md")).alias("node"),
-        )
-        .select("survey_id", "digest_id", "bibkey",
-                F.col("node.pos").alias("pos"),
-                F.col("node.description").alias("description"))
-    )
-    merged = digest_ops.merge_digest_descriptions(
-        good_nodes.withColumn("bibkeys", F.array("bibkey")),
-        id_cols=["survey_id", "digest_id"],
-        digest_id_col="bibkey",
-    )
+    digests = passed.filter("reason IS NULL").select(
+        "survey_id", "digest_id", "pos", "description", "all_bibkeys")
     dead = raw.filter("NOT llm_ok").select(
         "survey_id", "bibkey", F.col("llm_error").alias("reason")
     ).unionByName(
-        checked.filter("align_reason IS NOT NULL")
-        .select("survey_id", "bibkey", F.col("align_reason").alias("reason"))
-    )
-    return merged, dead
+        passed.filter("reason IS NOT NULL").select("survey_id", "bibkey", "reason"))
+    return digests, dead
 
 
 # ---------------------------------------------------------------------------
-# hidden block: L9 feedback → conv block + self-refine (one stage)
+# hidden block: L9 feedback → conv block → self-refine (one pass)
 # ---------------------------------------------------------------------------
-
-
-def feedback_suggestions(digests: DataFrame, outlines: DataFrame, client_factory,
-                         retry: RetryPolicy | None = None,
-                         cfg: V2Config | None = None,
-                         metrics=None) -> DataFrame:
-    ps = _prompt_set(cfg) if cfg is not None else None
-    per_group = (
-        digests.withColumn("__d", F.struct(F.col("pos").alias("k"),
-                                           F.col("description").alias("v")))
-        .groupBy("survey_id", "digest_id")
-        .agg(F.concat_ws("\n", F.transform(F.array_sort(F.collect_list("__d")),
-                                           lambda s: s["v"])).alias("digest_content"))
-        .join(F.broadcast(outlines.select("survey_id", "survey_title", "outline_md")),
-              "survey_id")
-    )
-    out = llm_stage(
-        per_group,
-        build_prompt=lambda r: _feedback_prompt(
-            ps, r["survey_title"], r["outline_md"], r["digest_content"]),
-        parse=_parse_suggestion,
-        client_factory=client_factory,
-        payload_fields=_payload("suggestion"),
-        keep_cols=["survey_id", "digest_id"],
-        retry=retry,
-        metrics=metrics,
-    ).filter("llm_ok")
-    return out.select(
-        "survey_id",
-        F.concat(F.lit("s"), F.col("digest_id").cast("string")).alias("sugg_id"),
-        F.col("suggestion").alias("content"),
-    )
 
 
 # The score bookkeeping crosses the applyInPandas boundary as JSON strings:
@@ -642,11 +654,37 @@ def _dumps(val: list) -> str:
     return json.dumps(val)
 
 
-def _conv_group_py(ask, cfg: V2Config, ps, pdf: pd.DataFrame) -> dict | None:
-    """Per-survey convolution block (convolution_module.py:38-127): the
-    initial single-suggestion pass, then ``conv_layers`` rounds of T5
-    sample → L10 kernel → L11 modify → L12 eval, appending this cycle's
-    per-layer average scores to ``block_avg_score``
+def _suggest_py(ask, ps, threads: int, title: str, outline_md: str,
+                digests: pd.DataFrame) -> list[tuple[str, str]]:
+    """L9 feedback (neurons.py:55-67) for one survey: one suggestion per
+    digest group, its prompt quoting the group's descriptions in ``pos``
+    order, nulls skipped, newline-joined; the calls fan out over
+    ``threads``.  → ``(sugg_id, content)`` pairs, ``sugg_id`` being
+    ``s<digest_id>``; a group whose call failed has none."""
+    groups: dict[int, list[tuple]] = {}
+    for d, pos, desc in zip(digests["digest_id"], digests["pos"],
+                            digests["description"]):
+        groups.setdefault(int(d), []).append((pos, desc))
+
+    def feedback(item: tuple[int, list[tuple]]) -> tuple[str, str] | None:
+        d, entries = item
+        content = "\n".join(desc for _, desc in sorted(entries, key=lambda e: e[0])
+                            if desc is not None)
+        got = ask(_feedback_prompt(ps, title, outline_md, content),
+                  _parse_suggestion, "suggestion")
+        return None if got is None else (f"s{d}", got["suggestion"])
+
+    return [s for s in _pmap(feedback, sorted(groups.items()), threads) if s]
+
+
+def _conv_group_py(ask, cfg: V2Config, ps, row,
+                   suggestions: list[tuple[str, str]]) -> dict | None:
+    """Per-survey convolution block (convolution_module.py:38-127) over
+    the state ``row`` (``_CONV_SCHEMA`` fields) and its L9
+    ``suggestions``: the initial single-suggestion pass, then
+    ``conv_layers`` rounds of T5 sample → L10 kernel → L11 modify → L12
+    eval, appending this cycle's per-layer average scores to
+    ``block_avg_score``
     (convolution_module.py:45-122).  Layer capacity follows the
     reference's two modes (:80-97): while candidates / receptive_field
     still exceeds ``result_num``, POOLING — the new results replace the
@@ -659,19 +697,16 @@ def _conv_group_py(ask, cfg: V2Config, ps, pdf: pd.DataFrame) -> dict | None:
     conv_layers, receptive_field = cfg.conv_layers, cfg.receptive_field
     result_num, top_k, seed, threads = (cfg.result_num, cfg.top_k, cfg.seed,
                                         cfg.llm_threads)
-    sid = pdf["survey_id"].iloc[0]
-    title = pdf["survey_title"].iloc[0]
-    outline_md = pdf["outline_md"].iloc[0]
+    sid, title, outline_md = row["survey_id"], row["survey_title"], row["outline_md"]
 
     def modify_eval(item: tuple[str, str]) -> dict | None:
         return _modify_eval_py(ask, title, outline_md, *item, ps=ps)
 
-    init = sorted(zip(pdf["sugg_id"], pdf["content"]))
-    state = [r for r in _pmap(modify_eval, init, threads) if r]
+    state = [r for r in _pmap(modify_eval, sorted(suggestions), threads) if r]
     cycle_scores: list[float] = []
     if state:
         cycle_scores.append(float(np.mean([r["score"] for r in state])))
-    cycle = len(_nested(pdf["block_avg_score"].iloc[0]))
+    cycle = len(_nested(row["block_avg_score"]))
     pool_sizes: list[int] = [len(state)]
     for layer in range(conv_layers):
         # fresh per-layer RandomState, seeded on (survey, block cycle,
@@ -719,15 +754,13 @@ def _conv_group_py(ask, cfg: V2Config, ps, pdf: pd.DataFrame) -> dict | None:
     best = _prune_py(state, 1)
     if not best:
         return None
-    block_scores = _nested(pdf["block_avg_score"].iloc[0]) + [cycle_scores]
     return {
         "survey_id": sid, "survey_title": title,
         "outline_md": best[0]["new_outline_md"],
         "eval_score": best[0]["score"],
-        "block_avg_score": _dumps(block_scores),
-        "self_refine_score": pdf["self_refine_score"].iloc[0] or "[]",
-        "conv_pool_sizes": _dumps(
-            _nested(pdf["conv_pool_sizes"].iloc[0]) + [pool_sizes]),
+        "block_avg_score": _dumps(_nested(row["block_avg_score"]) + [cycle_scores]),
+        "self_refine_score": row["self_refine_score"] or "[]",
+        "conv_pool_sizes": _dumps(_nested(row["conv_pool_sizes"]) + [pool_sizes]),
     }
 
 
@@ -784,34 +817,43 @@ def _refine_group_py(ask, cfg: V2Config, ps, row) -> dict:
     }
 
 
-def conv_refine(outlines: DataFrame, suggestions: DataFrame,
+def conv_refine(state: DataFrame, digests: DataFrame,
                 client_factory, cfg: V2Config,
                 retry: RetryPolicy | None = None,
-                metrics=None) -> DataFrame:
-    """One block cycle's convolution block → self-refine chain as ONE
-    ``applyInPandas`` over survey groups: per survey, :func:`_conv_group_py`
-    then :func:`_refine_group_py` back to back in one Python pass with one
-    client — one survey-keyed exchange per cycle.  ``metrics`` meters
-    every kernel, modify, eval and self-refine call.  A survey whose every
-    conv chain died emits no row.  → (``_CONV_SCHEMA``) one refined
-    outline per survey."""
+                meter=lambda stage: None) -> DataFrame:
+    """One block cycle's hidden block as ONE per-survey pass: a cogroup
+    of each survey's ``state`` row (``_CONV_SCHEMA``) with its digests
+    runs L9 feedback (:func:`_suggest_py`), then :func:`_conv_group_py`,
+    then :func:`_refine_group_py`, back to back with one client.
+    ``meter(stage)`` (``StageRun.llm``) is resolved on the driver: the L9
+    calls are metered under ``suggest``, the kernel, modify, eval and
+    self-refine calls under ``refine``.  A survey whose every L9 call or
+    every conv chain failed emits no row.  → (``_CONV_SCHEMA``) one
+    refined outline per survey."""
     retry = _resolve_retry(client_factory, retry)
-    cands = suggestions.join(
-        F.broadcast(outlines.select("survey_id", "survey_title", "outline_md",
-                                    "block_avg_score", "self_refine_score",
-                                    "conv_pool_sizes")),
-        "survey_id",
-    )
     ps = _prompt_set(cfg)
+    suggest_meter, refine_meter = meter("suggest"), meter("refine")
+    cols = [f.name for f in _CONV_SCHEMA.fields]
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        ask = partial(_ask, client_factory(), retry, metrics)
-        best = _conv_group_py(ask, cfg, ps, pdf)
-        if best is None:
-            return pd.DataFrame(columns=[f.name for f in _CONV_SCHEMA.fields])
-        return pd.DataFrame([_refine_group_py(ask, cfg, ps, best)])
+    def run(outline: pd.DataFrame, dig: pd.DataFrame) -> pd.DataFrame:
+        if outline.empty:
+            return pd.DataFrame(columns=cols)
+        row, client = outline.iloc[0], client_factory()
+        suggestions = _suggest_py(partial(_ask, client, retry, suggest_meter),
+                                  ps, cfg.llm_threads, row["survey_title"],
+                                  row["outline_md"], dig)
+        ask = partial(_ask, client, retry, refine_meter)
+        best = suggestions and _conv_group_py(ask, cfg, ps, row, suggestions)
+        if not best:
+            return pd.DataFrame(columns=cols)
+        return pd.DataFrame([_refine_group_py(ask, cfg, ps, best)], columns=cols)
 
-    return cands.groupBy("survey_id").applyInPandas(run, _CONV_SCHEMA)
+    return (
+        state.select(*cols).groupBy("survey_id")
+        .cogroup(digests.select("survey_id", "digest_id", "pos", "description")
+                 .groupBy("survey_id"))
+        .applyInPandas(run, _CONV_SCHEMA)
+    )
 
 
 def unrefined_state(outlines: DataFrame) -> DataFrame:
@@ -1142,14 +1184,10 @@ def run_v2_survey(surveys: DataFrame, client_factory,
         cur = unrefined_state(outlines)      # lazy: no cut to supersede
         for _cycle in range(cfg.block_count):
             digests = run.cut("digest", digests)
-            suggestions = feedback_suggestions(
-                digests, cur, client_factory, retry, cfg=cfg,
-                metrics=run.llm("suggest"))
             # the refined outline is the last reader of the previous
-            # state and of this cycle's digests (suggestions → conv_refine)
+            # state and of this cycle's digests
             cur = run.cut("refine", conv_refine(
-                cur, suggestions, client_factory, cfg, retry,
-                metrics=run.llm("refine")),
+                cur, digests, client_factory, cfg, retry, meter=run.llm),
                 supersedes=(cur, digests))
             # re-digest against the refined outline (digest_node re-entry)
             digests, _dead = make_digests(grouped, cur, client_factory, cfg,

@@ -835,10 +835,8 @@ def make_spark_host(
                         cfg.best_of),
         )
         cur = v2.unrefined_state(h.state["outlines"])
-        suggestions = v2.feedback_suggestions(
-            h.state["digests"], cur, client_factory, cfg=rcfg)
         refined = checkpoint(
-            v2.conv_refine(cur, suggestions, client_factory, rcfg))
+            v2.conv_refine(cur, h.state["digests"], client_factory, rcfg))
         h.state["refined"] = refined
         h.state["outlines"] = refined.select(
             "survey_id", "survey_title", "outline_md")

@@ -23,8 +23,11 @@ Notable conf choices:
   disk, which moves a task's start from ~0.3 s to ~0.1 s after its job
   is submitted.  Contract: the Python workers must be able to import
   this package (they already must, since every pipeline UDF pickles
-  package functions by reference), so a session must be started from a
-  directory or environment that puts it on their path.
+  package functions by reference).
+- ``spark.executorEnv.PYTHONPATH`` starts with the package's parent
+  directory, ahead of any value the caller passes: a worker's own path
+  starts with the JVM's working directory, so without it a session
+  started outside the checkout fails every Python task at daemon start.
 """
 
 from __future__ import annotations
@@ -34,6 +37,10 @@ import os
 from pyspark.sql import SparkSession
 
 from llmxmapreduce_spark import pyworker
+
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+# the directory that holds the package, for the workers' imports
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(pyworker.__file__)))
 
 
 def _default_cpus() -> int:
@@ -51,6 +58,9 @@ def get_spark(
 ) -> SparkSession:
     cpus = _default_cpus()
     master = master or f"local[{cpus}]"
+    extra_conf = dict(extra_conf or {})
+    worker_path = os.pathsep.join(
+        p for p in (_PACKAGE_ROOT, extra_conf.pop(_WORKER_PATH, "")) if p)
     shuffle_partitions = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(master)
@@ -67,8 +77,9 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.python.daemon.module", pyworker.__name__)
+        .config(_WORKER_PATH, worker_path)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # Also set on an existing session (tests may reuse one created elsewhere).

@@ -4,16 +4,20 @@ Every Python task calls ``importlib.invalidate_caches()``; under the
 package daemon a zipimporter re-reads its archive only when the archive's
 ``(st_mtime_ns, st_size)`` stamp has changed.  The first test checks that
 contract in this process, without Spark; the second checks that the
-session's workers really run under the daemon.
+session's workers really run under the daemon; the third that they
+import the package whatever directory the driver starts in.
 """
 
 from __future__ import annotations
 
 import importlib
 import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
+from pathlib import Path
 
 import pandas as pd
 
@@ -85,3 +89,30 @@ def test_workers_run_under_the_package_daemon(spark):
         probe, "module string, reads int").collect()[0]
     assert row["module"] == pyworker.__name__
     assert row["reads"] == 0
+
+
+def test_workers_import_the_package_from_any_start_directory(tmp_path):
+    """A driver started outside the checkout, with the package on its own
+    ``sys.path`` only, still runs Python tasks: ``get_spark`` puts the
+    package's parent directory on the workers' path."""
+    root = str(Path(__file__).resolve().parent.parent)
+    script = tmp_path / "driver.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {root!r})
+        from llmxmapreduce_spark.session import get_spark
+
+        s = get_spark("start-dir", master="local[1]", shuffle_partitions=1)
+        rows = s.range(0, 4, numPartitions=1).mapInPandas(
+            lambda batches: batches, "id long").collect()
+        print("ids", sorted(r["id"] for r in rows))
+        s.stop()
+    """))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.abspath(p) != root)
+    out = subprocess.run([sys.executable, str(script)], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "ids [0, 1, 2, 3]" in out.stdout
