@@ -260,19 +260,6 @@ def normalize_answer_zh_py(s: str) -> str:
     return "".join(s.split())
 
 
-def normalize_answer_zh(s: Column) -> Column:
-    """Chinese variant (compute_scores.py:35-49): delete ASCII + CJK
-    punctuation, remove ALL whitespace (``"".join(text.split())``)."""
-    cn = (
-        "！？｡。＂＃＄％＆＇（）＊＋，－／：；＜＝＞＠［＼］＾＿｀｛｜｝～｟｠｢｣､、〃》「」"
-        "『』【】〔〕〖〗〘〙〚〛〜〝〞〟〰〾〿–—‘’‛“”„‟…‧﹏."
-    )
-    t = F.lower(s)
-    t = F.regexp_replace(t, _PUNCT_CLASS, "")
-    t = F.translate(t, cn, "")
-    return F.regexp_replace(t, r"\s+", "")
-
-
 # ---------------------------------------------------------------------------
 # P15 — sentence split (LLMxMapReduce_V1/Generator.py:134-148)
 # ---------------------------------------------------------------------------

@@ -108,9 +108,11 @@ def llm_group_papers(papers, client_factory, batch_size: int,
 
     The per-survey title list is small (collect_list per survey inside the
     stage's Arrow batch) — the papers themselves never round-trip through
-    the prompt.  ``full_prompts`` swaps in the reference's verbatim
-    GROUP_PROMPT (group_module.py:160-173: papers listed as
-    ``Title: "…" Bibkey: '…'``).  ``metrics`` meters the L4 calls.
+    the prompt.  ``full_prompts`` picks the reference's GROUP_PROMPT
+    (group_module.py:160-173: papers listed as ``Title: "…" Bibkey: '…'``)
+    from ``prompts.table``.  ``metrics`` meters the L4 calls.  Each
+    ``(survey_id, bibkey)`` gets one assignment, so every paper keeps one
+    row, a bibkey shared by two papers included.
 
     The result is lazy: every action that reads it makes the L4 calls
     again, so a caller with several readers checkpoints it once.
@@ -118,13 +120,10 @@ def llm_group_papers(papers, client_factory, batch_size: int,
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    from llmxmapreduce_spark import prompts
     from llmxmapreduce_spark.operators.llm_op import llm_stage
 
-    group_tmpl = None
-    if full_prompts:
-        from llmxmapreduce_spark import prompts as P
-
-        group_tmpl = P.template("GROUP_PROMPT", prompt_lang)
+    tmpl = prompts.table(full_prompts, prompt_lang)["GROUP_PROMPT"]
 
     per_survey = papers.groupBy("survey_id", "survey_title").agg(
         F.array_sort(F.collect_list("bibkey")).alias("bibkeys"),
@@ -135,17 +134,11 @@ def llm_group_papers(papers, client_factory, batch_size: int,
 
     out = llm_stage(
         per_survey,
-        build_prompt=lambda r: (
-            group_tmpl.format(
-                survey_title=r["survey_title"],
-                titles="\n".join(f"Title: \"{p['t']}\" Bibkey: '{p['k']}'"
-                                 for p in r["paper_infos"]))
-            if group_tmpl else
-            f"[GROUP] Survey title: {r['survey_title']}\n"
-            "Cluster these papers into research-direction groups; reply with "
-            "bracketed bibkey lists.\n"
-            + "\n".join(f"- {k}" for k in r["bibkeys"])
-        ),
+        build_prompt=lambda r: tmpl.format(
+            survey_title=r["survey_title"],
+            titles="\n".join(f"Title: \"{p['t']}\" Bibkey: '{p['k']}'"
+                             for p in r["paper_infos"]),
+            bibkeys="\n".join(f"- {k}" for k in r["bibkeys"])),
         parse=lambda reply: {"reply": reply},
         client_factory=client_factory,
         payload_fields=[T.StructField("reply", T.StringType(), True)],
@@ -164,10 +157,13 @@ def llm_group_papers(papers, client_factory, batch_size: int,
         import pandas as pd
 
         def one(rep, keys):
-            groups, rest = parse_group_result_py(rep, list(keys))
-            repaired = regroup_result_py(groups, rest, batch_size)
-            return [{"bibkey": b, "gid": gid}
-                    for gid, group in enumerate(repaired) for b in group]
+            groups, rest = parse_group_result_py(rep, list(dict.fromkeys(keys)))
+            gid_of: dict[str, int] = {}     # a key's first group wins
+            for gid, group in enumerate(regroup_result_py(groups, rest,
+                                                          batch_size)):
+                for b in group:
+                    gid_of.setdefault(b, gid)
+            return [{"bibkey": b, "gid": gid} for b, gid in gid_of.items()]
 
         return pd.Series([one(r, k) for r, k in zip(reply, bibkeys)])
 

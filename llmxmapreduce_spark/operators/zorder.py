@@ -1,9 +1,9 @@
 """Z-order (Morton-curve) multi-column layout clustering.
 
-The missing piece of `io_layout`'s story: partitioning prunes on ONE
-directory column and a plain sort clusters ONE leading column, but a
-100 TB table queried by several independent predicates (user AND time,
-host AND language) needs MULTI-column data skipping.  Sorting by the
+Partitioning prunes on ONE directory column and a plain sort clusters
+ONE leading column, but a 100 TB table queried by several independent
+predicates (user AND time, host AND language) needs MULTI-column data
+skipping.  Sorting by the
 interleaved-bit Morton code gives every participating column locality
 at once: parquet row-group min/max stats become tight on ALL of them,
 so any single-column or box predicate skips most row groups (the same

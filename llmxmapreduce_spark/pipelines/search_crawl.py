@@ -16,29 +16,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from llmxmapreduce_spark import prompts
 from llmxmapreduce_spark.operators import crawl_ops
 from llmxmapreduce_spark.operators.llm_op import llm_stage
 from llmxmapreduce_spark.operators.topk import over_fetch
 from llmxmapreduce_spark.sources import crawl as crawl_src
 
 _STR = T.StringType()
-
-_SC_PROMPT_NAMES = ("QUERY_EXPAND_PROMPT_WITH_ABSTRACT",
-                    "QUERY_EXPAND_PROMPT_WITHOUT_ABSTRACT",
-                    "SNIPPET_FILTER_PROMPT", "PAGE_REFINE_PROMPT",
-                    "SIMILARITY_PROMPT")
-
-
-def _sc_templates(full_prompts: bool, lang: str = "en") -> dict[str, str] | None:
-    """Resolved verbatim reference templates for the search/crawl LLM steps
-    (LLM_search.py / async_crawl.py prompt imports) — None keeps the
-    condensed deterministic test prompts.  Resolved on the driver, captured
-    by value into the stage closures."""
-    if not full_prompts:
-        return None
-    from llmxmapreduce_spark import prompts as P
-
-    return {n: P.template(n, lang) for n in _SC_PROMPT_NAMES}
 
 
 def _parse_query_block(reply: str) -> dict:
@@ -118,21 +102,13 @@ def expand_queries(topics: DataFrame, client_factory, retry=None,
     exploded (topic, query) rows.  Full mode picks the reference's
     with/without-abstract template by whether a description is present
     (LLM_search.py query expansion)."""
-    tp = _sc_templates(full_prompts, prompt_lang)
+    tp = prompts.table(full_prompts, prompt_lang)
 
     def build(r):
         desc = r.get("description") or ""
-        if tp:
-            if desc:
-                return tp["QUERY_EXPAND_PROMPT_WITH_ABSTRACT"].format(
-                    topic=r["topic"], abstract=desc)
-            return tp["QUERY_EXPAND_PROMPT_WITHOUT_ABSTRACT"].format(
-                topic=r["topic"])
-        return (
-            f"[QUERY_EXPAND] Survey title: {r['topic']}\n"
-            f"Description: {desc}\n"
-            "Propose search queries, ';'-separated, in a fenced ```markdown block."
-        )
+        name = ("QUERY_EXPAND_PROMPT_WITH_ABSTRACT" if desc
+                else "QUERY_EXPAND_PROMPT_WITHOUT_ABSTRACT")
+        return tp[name].format(topic=r["topic"], abstract=desc)
 
     out = llm_stage(
         topics,
@@ -150,16 +126,11 @@ def score_snippets(hits: DataFrame, client_factory, retry=None,
                    full_prompts: bool = False,
                    prompt_lang: str = "en") -> DataFrame:
     """L19: topic × snippet relevance 0-100."""
-    tp = _sc_templates(full_prompts, prompt_lang)
+    tmpl = prompts.table(full_prompts, prompt_lang)["SNIPPET_FILTER_PROMPT"]
     out = llm_stage(
         hits,
-        build_prompt=lambda r: (
-            tp["SNIPPET_FILTER_PROMPT"].format(
-                topic=r["topic"], snippet=r["snippet"])
-            if tp else
-            f"[SNIPPET_SCORE] Survey title: {r['topic']}\n"
-            f"Snippet:\n{r['snippet']}\nScore 0-100 as <SCORE>n</SCORE>."
-        ),
+        build_prompt=lambda r: tmpl.format(topic=r["topic"],
+                                           snippet=r["snippet"]),
         parse=_parse_score_100,
         client_factory=client_factory,
         payload_fields=[T.StructField("score", T.IntegerType(), True)],
@@ -173,17 +144,11 @@ def refine_pages(pages: DataFrame, client_factory, retry=None,
                  full_prompts: bool = False,
                  prompt_lang: str = "en") -> DataFrame:
     """L20: raw page → <TITLE>/<CONTENT> boilerplate removal."""
-    tp = _sc_templates(full_prompts, prompt_lang)
+    tmpl = prompts.table(full_prompts, prompt_lang)["PAGE_REFINE_PROMPT"]
     return llm_stage(
         pages.filter(~F.col("error")),
-        build_prompt=lambda r: (
-            tp["PAGE_REFINE_PROMPT"].format(
-                topic=r["topic"], raw_content=r["raw_content"] or "")
-            if tp else
-            f"[PAGE_REFINE] Survey title: {r['topic']}\n"
-            f"Page:\n{(r['raw_content'] or '')[:4000]}\n"
-            "Reply with <TITLE>…</TITLE> and <CONTENT>…</CONTENT>."
-        ),
+        build_prompt=lambda r: tmpl.format(topic=r["topic"],
+                                           raw_content=r["raw_content"] or ""),
         parse=_parse_title_content,
         client_factory=client_factory,
         payload_fields=[T.StructField("title", _STR, True),
@@ -197,17 +162,11 @@ def score_pages(refined: DataFrame, client_factory, retry=None,
                 full_prompts: bool = False,
                 prompt_lang: str = "en") -> DataFrame:
     """L21: topic × cleaned page similarity 0-100."""
-    tp = _sc_templates(full_prompts, prompt_lang)
+    tmpl = prompts.table(full_prompts, prompt_lang)["SIMILARITY_PROMPT"]
     out = llm_stage(
         refined,
-        build_prompt=lambda r: (
-            tp["SIMILARITY_PROMPT"].format(
-                topic=r["topic"], content=r["filtered"] or "")
-            if tp else
-            f"[SIMILARITY] Survey title: {r['topic']}\n"
-            f"Content:\n{(r['filtered'] or '')[:4000]}\n"
-            "Score 0-100 as <SCORE>n</SCORE>."
-        ),
+        build_prompt=lambda r: tmpl.format(topic=r["topic"],
+                                           content=r["filtered"] or ""),
         parse=_parse_score_100,
         client_factory=client_factory,
         payload_fields=[T.StructField("score", T.IntegerType(), True)],

@@ -5,7 +5,7 @@ DAG becomes a chain of Spark jobs with a bounded block-cycle loop
 (hidden_pipeline.py:73-85 — ``digest → skeleton_refine → re-digest`` while
 ``block_cycle_count < block_count``):
 
-  surveys ─ explode → papers ─ C7 group → digest groups
+  surveys ─ explode → papers → C7 group → grouped papers (one cut)
     ├─ [outline pass: C6 batch → L5 init outlines → L6 concat] → outline
     │                                                             (encode)
     ├─ [block cycle ×block_count:
@@ -36,6 +36,13 @@ decode is two, regardless of conv depth or tree depth.
 :func:`run_v2_survey` never writes session conf: shuffles are sized by the
 session's own settings.
 
+Each survey choice is made in one place.  The prompt texts are the run's
+``prompts.table`` (the condensed texts, or the reference's under
+``V2Config.full_prompts``), which every builder formats by name.  The
+grouping mode only decides how :func:`group_papers` assigns ``digest_id``:
+in both modes the grouped papers are one cut that the outline pass, the
+digest passes and decode read.
+
 Determinism: every shuffle the reference does with ``random.shuffle`` is a
 keyed-hash order here; T5 sampling uses a per-survey seeded RandomState; the
 mock client is prompt-hash deterministic — two runs are byte-identical
@@ -53,6 +60,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from llmxmapreduce_spark import prompts
 from llmxmapreduce_spark.functions import text as X
 from llmxmapreduce_spark.llm.client import RetryPolicy
 from llmxmapreduce_spark.operators import digest_ops, grouping, sampling, skeleton
@@ -173,113 +181,58 @@ def _parse_text(reply: str) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# prompt templates for the row-parallel llm_stage operators and the
-# per-survey applyInPandas stages.
-#
-# Two prompt modes (SURVEY.md §2 prompt parity):
-# - condensed (default): the short deterministic templates below — the
-#   test/mock contract every correctness golden hashes against.
-# - full: the reference's verbatim texts (prompts/prompts_{lang}.py,
-#   reference prompts_en.py:1-782), selected via
-#   ``V2Config(full_prompts=True, prompt_lang=…)``.  ``_prompt_set``
-#   resolves the template STRINGS on the driver; they ride into the stage
-#   closures by value, so executors never consult driver-mutated globals.
+# prompt builders.  Each formats one entry of the run's prompt table
+# (``prompts.table``: the condensed texts or the reference's, SURVEY.md §2
+# prompt parity) with every slot either table names.  ``_prompt_set``
+# resolves the table on the driver; it rides into the stage closures by
+# value, so executors never consult driver-mutated globals.
 # ---------------------------------------------------------------------------
 
-_REF_PROMPT_NAMES = (
-    "INIT_OUTLINE_PROMPT", "CONCAT_OUTLINE_PROMPT", "SINGLE_DIGEST_PROMPT",
-    "DIGEST_BASE_PROMPT", "DIGEST_FREE_PROMPT", "OUTLINE_CONVOLUTION_PROMPT",
-    "MODIFY_OUTLINE_PROMPT", "OUTLINE_ENTROPY_PROMPT", "ORCHESTRA_PROMPT",
-    "SUMMARY_PROMPT", "POLISH_PROMPT",
-)
 
-
-def _prompt_set(cfg: "V2Config") -> dict[str, str] | None:
-    """None for condensed mode; else name → verbatim reference template."""
-    if not getattr(cfg, "full_prompts", False):
-        return None
-    from llmxmapreduce_spark import prompts as P
-
-    return {n: P.template(n, cfg.prompt_lang) for n in _REF_PROMPT_NAMES}
+def _prompt_set(cfg: "V2Config") -> dict[str, str]:
+    """The run's prompt table: name → template."""
+    return prompts.table(cfg.full_prompts, cfg.prompt_lang)
 
 
 def _modify_prompt(title: str, outline_md: str, content: str,
-                   ps: dict[str, str] | None = None) -> str:
-    if ps:
-        # neurons.py:137-142 (bibkeys ride inside the digests/outline text)
-        return ps["MODIFY_OUTLINE_PROMPT"].format(
-            title=title, old_outline=outline_md, outlines=content)
-    return (
-        f"[MODIFY] Survey title: {title}\n"
-        f"Outline:\n```markdown\n{outline_md}\n```\n"
-        f"Suggestion:\n```suggestion\n{content}\n```\n"
-        "Apply the suggestion; reply with a fenced ```markdown outline."
-    )
+                   ps: dict[str, str]) -> str:
+    # neurons.py:137-142 (bibkeys ride inside the digests/outline text)
+    return ps["MODIFY_OUTLINE_PROMPT"].format(
+        title=title, old_outline=outline_md, outlines=content)
 
 
-def _eval_prompt(title: str, outline_md: str,
-                 ps: dict[str, str] | None = None) -> str:
-    if ps:
-        return ps["OUTLINE_ENTROPY_PROMPT"].format(
-            title=title, outline=outline_md)     # neurons.py:237-240
-    return (
-        f"[EVAL_OUTLINE] Survey title: {title}\n"
-        f"Outline:\n```markdown\n{outline_md}\n```\n"
-        "Score the information entropy 0-10 as <SCORE>x</SCORE>."
-    )
+def _eval_prompt(title: str, outline_md: str, ps: dict[str, str]) -> str:
+    return ps["OUTLINE_ENTROPY_PROMPT"].format(     # neurons.py:237-240
+        title=title, outline=outline_md)
 
 
-def _kernel_prompt(title: str, joined: str,
-                   ps: dict[str, str] | None = None,
-                   outline_md: str = "") -> str:
-    if ps:
-        return ps["OUTLINE_CONVOLUTION_PROMPT"].format(
-            title=title, outline=outline_md,
-            suggestions=joined)                  # neurons.py:130-136
-    return (
-        f"[KERNEL] Survey title: {title}\n"
-        f"Merge these suggestions into one:\n{joined}\n"
-        "Reply with a ```suggestion block."
-    )
+def _kernel_prompt(title: str, joined: str, ps: dict[str, str],
+                   outline_md: str) -> str:
+    return ps["OUTLINE_CONVOLUTION_PROMPT"].format(  # neurons.py:130-136
+        title=title, outline=outline_md, suggestions=joined)
 
 
 def _refine_prompt(chain_id: int, rnd: int, title: str, outline_md: str,
-                   ps: dict[str, str] | None = None,
-                   eval_detail: str = "") -> str:
-    if ps:
-        # neurons.py:267-272: the free-refine suggestion prompt takes the
-        # incumbent outline + its eval detail; chain/round diversity comes
-        # from model sampling, not the prompt text.
-        return ps["DIGEST_FREE_PROMPT"].format(
-            title=title, outline=outline_md, eval_detail=eval_detail)
-    return (
-        f"[SELF_REFINE] chain {chain_id} round {rnd}\n"
-        f"Survey title: {title}\n"
-        f"Outline:\n```markdown\n{outline_md}\n```\n"
-        "Reply with a ```suggestion block."
-    )
+                   ps: dict[str, str], eval_detail: str) -> str:
+    # neurons.py:267-272: the free-refine suggestion prompt takes the
+    # incumbent outline + its eval detail; in the reference text,
+    # chain/round diversity comes from model sampling, not the prompt.
+    return ps["DIGEST_FREE_PROMPT"].format(
+        chain_id=chain_id, round=rnd, title=title, outline=outline_md,
+        eval_detail=eval_detail)
 
 
 def _summary_prompt(title: str, section: str, subcontents: str,
-                    ps: dict[str, str] | None = None,
-                    outline: str = "", digest: str = "") -> str:
-    if ps:
-        return ps["SUMMARY_PROMPT"].format(
-            title=title, section_title=section, subcontents=subcontents,
-            outline=outline, digest=digest)      # orchestra_module.py:70-78
-    return (
-        f"[SUMMARY] Survey title: {title}\n"
-        f"Section title: {section}\n"
-        f"Subsections:\n{subcontents[:3000]}\n"
-        "Summarize into the parent section's lead prose."
-    )
+                    ps: dict[str, str], outline: str = "",
+                    digest: str = "") -> str:
+    return ps["SUMMARY_PROMPT"].format(             # orchestra_module.py:70-78
+        title=title, section_title=section, subcontents=subcontents,
+        outline=outline, digest=digest)
 
 
-def _polish_prompt(section: str, content: str,
-                   ps: dict[str, str] | None = None) -> str:
-    if ps:
-        return ps["POLISH_PROMPT"].format(content=content)  # orchestra:171
-    return f"[POLISH] Section title: {section}\nDraft:\n{content}"
+def _polish_prompt(section: str, content: str, ps: dict[str, str]) -> str:
+    return ps["POLISH_PROMPT"].format(              # orchestra_module.py:171
+        section_title=section, content=content)
 
 
 def _ask(client, retry: RetryPolicy, metrics, prompt: str, parse,
@@ -295,8 +248,7 @@ def _ask(client, retry: RetryPolicy, metrics, prompt: str, parse,
 
 
 def _modify_eval_py(ask, title: str, outline_md: str, sugg_id: str,
-                    content: str,
-                    ps: dict[str, str] | None = None) -> dict | None:
+                    content: str, ps: dict[str, str]) -> dict | None:
     """One L11 modify → L12 eval chain for a candidate suggestion; None
     when either call fails.  Shared by the conv block and self-refine
     bodies."""
@@ -361,9 +313,12 @@ def build_papers(surveys: DataFrame) -> DataFrame:
 
 def group_papers(papers: DataFrame, cfg: V2Config,
                  client_factory=None, retry=None, metrics=None) -> DataFrame:
-    """C7: 'random' = keyed-hash shuffle batches; 'llm' = L4 GroupNeuron
-    proposal + regroup repair (group_module.py:29-133), its calls metered
-    into ``metrics``."""
+    """C7: the papers with a ``digest_id``, one row per paper.  'random'
+    = keyed-hash shuffle batches; 'llm' = L4 GroupNeuron proposal +
+    regroup repair (group_module.py:29-133), its calls metered into
+    ``metrics``; a survey whose L4 call failed has no rows.  Lazy in both
+    modes: :func:`run_v2_survey` cuts it once, as its papers, for every
+    reader."""
     if cfg.group_mode == "llm":
         if client_factory is None:
             raise ValueError("group_mode='llm' needs a client_factory")
@@ -386,31 +341,18 @@ def group_papers(papers: DataFrame, cfg: V2Config,
 _OUTLINE_CONCAT_SEPARATOR = "\n--------------------------\n"
 
 
-def _init_outline_prompt(ps: dict | None, survey_title: str,
+def _init_outline_prompt(ps: dict[str, str], survey_title: str,
                          abstracts: str) -> str:
     """L5 per-batch outline prompt."""
-    if ps:
-        return ps["INIT_OUTLINE_PROMPT"].format(
-            title=survey_title, abstracts=abstracts)
-    return (
-        f"[INIT_OUTLINE] Survey title: {survey_title}\n"
-        f"Propose a markdown outline (## sections with Digest "
-        f"Construction/Analysis) for these papers.\nAbstracts:\n{abstracts}\n"
-        "Reply with a fenced ```markdown block."
-    )
+    return ps["INIT_OUTLINE_PROMPT"].format(title=survey_title,
+                                            abstracts=abstracts)
 
 
-def _concat_outline_prompt(ps: dict | None, survey_title: str,
+def _concat_outline_prompt(ps: dict[str, str], survey_title: str,
                            outlines: str) -> str:
     """L6 per-survey concat prompt."""
-    if ps:
-        return ps["CONCAT_OUTLINE_PROMPT"].format(
-            title=survey_title, outlines=outlines)
-    return (
-        f"[CONCAT_OUTLINE] Survey title: {survey_title}\n"
-        f"Merge these partial outlines into one.\n{outlines}\n"
-        "Reply with a fenced ```markdown block."
-    )
+    return ps["CONCAT_OUTLINE_PROMPT"].format(title=survey_title,
+                                              outlines=outlines)
 
 
 _OUTLINE_SCHEMA = T.StructType([
@@ -483,37 +425,21 @@ def init_outlines(papers_grouped: DataFrame, client_factory, cfg: V2Config,
 # ---------------------------------------------------------------------------
 
 
-def _digest_prompt(ps: dict | None, survey_title: str, bibkey: str,
+def _digest_prompt(ps: dict[str, str], survey_title: str, bibkey: str,
                    content: str, outline_md: str, placeholder_md: str) -> str:
     """L7 per-paper digest prompt (digest_module.py:99-105)."""
-    if ps:
-        return ps["SINGLE_DIGEST_PROMPT"].format(
-            survey_title=survey_title, paper_bibkey=bibkey,
-            paper_content=(content or "").replace("#", ""),
-            survey_outline=outline_md,
-            outline_example=placeholder_md)
-    return (
-        f"[DIGEST] Paper bibkey: {bibkey}\n"
-        f"Extract a digest aligned to this outline.\n"
-        f"Paper:\n{(content or '')[:2000]}\n"
-        f"Outline:\n```markdown\n{placeholder_md}\n```\n"
-        "Reply with a fenced ```markdown digest matching the outline "
-        "structure and a ```suggestion block."
-    )
+    content = content or ""
+    return ps["SINGLE_DIGEST_PROMPT"].format(
+        paper_bibkey=bibkey, paper=content,
+        paper_content=content.replace("#", ""), survey_outline=outline_md,
+        outline_example=placeholder_md)
 
 
-def _feedback_prompt(ps: dict | None, survey_title: str, outline_md: str,
+def _feedback_prompt(ps: dict[str, str], survey_title: str, outline_md: str,
                      digest_content: str) -> str:
     """L9 per-digest-group feedback prompt (neurons.py:55-67)."""
-    if ps:
-        return ps["DIGEST_BASE_PROMPT"].format(
-            title=survey_title, outline=outline_md, digests=digest_content)
-    return (
-        f"[FEEDBACK] Survey title: {survey_title}\n"
-        f"Outline:\n```markdown\n{outline_md}\n```\n"
-        f"Digest group:\n{digest_content[:3000]}\n"
-        "Reply with a ```suggestion block."
-    )
+    return ps["DIGEST_BASE_PROMPT"].format(
+        title=survey_title, outline=outline_md, digests=digest_content)
 
 
 @lru_cache(maxsize=64)
@@ -904,19 +830,12 @@ _TAIL_SCHEMA = T.StructType([
 ])
 
 
-def _orchestra_prompt(ps: dict | None, survey_title: str, outline_md: str,
+def _orchestra_prompt(ps: dict[str, str], survey_title: str, outline_md: str,
                       section_title: str, material: str) -> str:
     """L14 leaf-section prompt (orchestra_module.py:70-78)."""
-    if ps:
-        return ps["ORCHESTRA_PROMPT"].format(
-            title=survey_title, outline=outline_md, digest=material,
-            section_title=section_title)
-    return (
-        f"[ORCHESTRA] Survey title: {survey_title}\n"
-        f"Section title: {section_title}\n"
-        f"Digests:\n{material[:3000]}\n"
-        "Write the section prose, citing papers as [bibkey]."
-    )
+    return ps["ORCHESTRA_PROMPT"].format(
+        title=survey_title, outline=outline_md, digest=material,
+        section_title=section_title)
 
 
 def _section_material(digests: pd.DataFrame) -> dict[int, str]:
@@ -1150,36 +1069,35 @@ def run_v2_survey(surveys: DataFrame, client_factory,
     ``stage_metrics``: optional
     :class:`~llmxmapreduce_spark.operators.stage_metrics.StageMetrics` —
     per-stage rows-out and wall time at the checkpoint boundaries
-    (papers / [group] / outline / digest / refine / decode; the wall times
+    (papers / outline / digest / refine / decode; the wall times
     tile the call, and a stage cut several times sums its intervals), and
-    every model call metered under the stage that makes it: [group,]
+    every model call metered under the stage that makes it: group,
     outline, digest, suggest, refine, decode (leaves), summary, polish
-    [, figures] — the ``llm_calls`` sum to the model's call count (the
-    bracketed rows need ``group_mode="llm"`` / ``figures=True``); the
-    reference analyser's per-node table (pipeline_analyser.py:64-124).
+    [, figures] — the ``llm_calls`` sum to the model's call count (group
+    makes calls only with ``group_mode="llm"``, and the figures row needs
+    ``figures=True``); the reference analyser's per-node table
+    (pipeline_analyser.py:64-124).
     After collecting the result, fold the per-layer convolution detail in
     with ``stage_metrics.record_v2_layers(rows)``.
 
     Retention: the returned frame is an eager checkpoint, the only frame
     the call leaves pinned (nothing on an error).  Each cut inside the
-    call is released once its last reader is cut; papers and outlines are
-    re-read every cycle and go at the end.  A caller that wraps the call
-    in ``retention.owned()`` gets the returned frame's id, to release once
-    it has read the result.
+    call is released once its last reader is cut; the grouped papers and
+    the outlines are re-read every cycle and go at the end.  A caller that
+    wraps the call in ``retention.owned()`` gets the returned frame's id,
+    to release once it has read the result.
     """
     cfg = cfg or V2Config()
     with StageRun(surveys.sparkSession, stage_metrics) as run:
-        papers = run.cut("papers", build_papers(surveys))
-        if cfg.group_mode == "llm":
-            # outline and both digest passes read the grouping: one L4
-            # call per survey, not one per reader
-            grouped = run.cut("group", group_papers(
-                papers, cfg, client_factory, retry, metrics=run.llm("group")))
-        else:
-            grouped = group_papers(papers, cfg)   # Catalyst over the cut
+        # the papers and their C7 grouping are one cut: the outline pass,
+        # both digest passes and decode read it, and the grouping (its
+        # window, or its L4 calls) runs once
+        papers = run.cut("papers", group_papers(
+            build_papers(surveys), cfg, client_factory, retry,
+            metrics=run.llm("group")))
         outlines = run.cut("outline", init_outlines(
-            grouped, client_factory, cfg, retry, metrics=run.llm("outline")))
-        digests, _dead = make_digests(grouped, outlines, client_factory, cfg,
+            papers, client_factory, cfg, retry, metrics=run.llm("outline")))
+        digests, _dead = make_digests(papers, outlines, client_factory, cfg,
                                       retry, metrics=run.llm("digest"))
         cur = unrefined_state(outlines)      # lazy: no cut to supersede
         for _cycle in range(cfg.block_count):
@@ -1190,7 +1108,7 @@ def run_v2_survey(surveys: DataFrame, client_factory,
                 cur, digests, client_factory, cfg, retry, meter=run.llm),
                 supersedes=(cur, digests))
             # re-digest against the refined outline (digest_node re-entry)
-            digests, _dead = make_digests(grouped, cur, client_factory, cfg,
+            digests, _dead = make_digests(papers, cur, client_factory, cfg,
                                           retry, metrics=run.llm("digest"))
         digests = run.cut("digest", digests)
         return run.result("decode", decode_survey(

@@ -794,17 +794,16 @@ def make_spark_host(
                                     .alias("txt_token"))).alias("papers"),
         ).select(F.lit("s0").alias("survey_id"), F.lit(title).alias("title"),
                  "papers")
-        papers = checkpoint(v2.build_papers(surveys))
-        grouped = checkpoint(v2.group_papers(papers, cfg, client_factory))
+        papers = checkpoint(v2.group_papers(v2.build_papers(surveys), cfg,
+                                            client_factory))
         h.state["papers"] = papers
-        h.state["grouped"] = grouped
-        n_groups = grouped.select("digest_id").distinct().count()
+        n_groups = papers.select("digest_id").distinct().count()
         return {"title": title, "paper_count": n_papers,
                 "group_count": n_groups}
 
     def skeleton_init_tool(h: V3Host, args: dict) -> dict:
         outlines = checkpoint(
-            v2.init_outlines(h.state["grouped"], client_factory, cfg))
+            v2.init_outlines(h.state["papers"], client_factory, cfg))
         h.state["outlines"] = outlines
         md = outlines.select("outline_md").collect()[0][0]
         h.state["raw_skeleton"] = md
@@ -812,7 +811,7 @@ def make_spark_host(
 
     def digest_generation_tool(h: V3Host, args: dict) -> dict:
         digests, _dead = v2.make_digests(
-            h.state["grouped"], h.state["outlines"], client_factory, cfg)
+            h.state["papers"], h.state["outlines"], client_factory, cfg)
         digests = checkpoint(digests)
         h.state["digests"] = digests
         return {"digest_count": digests.count()}
@@ -844,7 +843,7 @@ def make_spark_host(
         h.state["all_skeleton"] = md
         # re-digest against the refined outline (the block-cycle re-entry)
         digests, _dead = v2.make_digests(
-            h.state["grouped"], h.state["outlines"], client_factory, cfg)
+            h.state["papers"], h.state["outlines"], client_factory, cfg)
         h.state["digests"] = checkpoint(digests)
         return {"all_skeleton": md}
 

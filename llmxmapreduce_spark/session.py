@@ -36,11 +36,12 @@ import os
 
 from pyspark.sql import SparkSession
 
-from llmxmapreduce_spark import pyworker
-
+# named, not imported: ``python -m`` runs the daemon module as __main__,
+# and a copy the package had already imported would make it run twice
+_DAEMON = "llmxmapreduce_spark.pyworker"
 _WORKER_PATH = "spark.executorEnv.PYTHONPATH"
 # the directory that holds the package, for the workers' imports
-_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(pyworker.__file__)))
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_cpus() -> int:
@@ -76,7 +77,7 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.python.daemon.module", pyworker.__name__)
+        .config("spark.python.daemon.module", _DAEMON)
         .config(_WORKER_PATH, worker_path)
     )
     for k, v in extra_conf.items():

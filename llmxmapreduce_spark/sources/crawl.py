@@ -1,8 +1,8 @@
-"""Search / crawl front-end (S3, S4, S6, S10, T7) — interface-gated.
+"""Search / crawl front-end (S3, S4, S10, T7) — interface-gated.
 
 Reference: LLM_search.py:153-445 (S3 web search), async_crawl.py:283-331
-(S4 crawler), :333-390 (S6 grouped sink), V3
-llm_search_mcp_server.py:1033-1238 (S10 incremental crawl state).
+(S4 crawler), V3 llm_search_mcp_server.py:1033-1238 (S10 incremental
+crawl state).  The S6 per-topic grouping is ``crawl_ops.group_topics``.
 
 No network access in this environment, so the fetchers are *injected*
 callables; tests use deterministic fakes.  The Spark shapes are real:
@@ -98,18 +98,6 @@ def crawl_urls(targets: DataFrame, fetch_fn_factory: Callable[[], FetchFn],
             yield pd.DataFrame(rows, columns=[f.name for f in CRAWL_RESULT.fields])
 
     return targets.mapInPandas(run, schema=CRAWL_RESULT)
-
-
-def grouped_crawl_sink(filtered: DataFrame, path: str,
-                       topic_col: str = "topic") -> None:
-    """S6 (async_crawl.py:333-390): one JSONL row per topic with its papers
-    gathered — ``{"title": topic, "papers": [...]}``."""
-    from llmxmapreduce_spark.operators.crawl_ops import group_topics
-
-    out = group_topics(filtered, topic_col=topic_col).select(
-        F.col(topic_col).alias("title"), "papers"
-    )
-    out.write.mode("overwrite").json(path)
 
 
 def upsert_crawl_state(spark: SparkSession, state_path: str,

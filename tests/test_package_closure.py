@@ -8,8 +8,10 @@ paper query imports, kept while their own tests remain.  A listed module
 that is gone, or that a paper module now imports, fails too, so the list
 only ever records what is really outside.  It also checks that the paper
 modules have one checkpoint mechanism, ``retention.checkpoint``, that V1
-and V2 have one stage protocol, ``stage_metrics.StageRun``, and that model
-calls have one path, ``llm_op._call_and_parse``.  No Spark.
+and V2 have one stage protocol, ``stage_metrics.StageRun``, that model
+calls have one path, ``llm_op._call_and_parse``, that prompt texts are
+chosen in ``prompts`` only, and that the survey's group mode is not a
+branch of ``run_v2_survey``.  No Spark.
 """
 
 from __future__ import annotations
@@ -23,6 +25,8 @@ PKG = "llmxmapreduce_spark"
 ENTRY_POINTS = [f"{PKG}.pipelines.{m}" for m in (
     "v1_qa", "v1_eval", "v2_survey", "v3_host", "search_crawl", "eval_suite")] + [
     f"{PKG}.operators.stage_metrics", f"{PKG}.llm.survey_mock", f"{PKG}.session",
+    # the worker daemon every session starts by module name
+    f"{PKG}.pyworker",
     # prompts.get_module loads the two tables by name
     f"{PKG}.prompts", f"{PKG}.prompts.prompts_en", f"{PKG}.prompts.prompts_zh",
     # the survey input contract the V2 tests build their inputs from
@@ -34,7 +38,7 @@ LIBRARY = {f"{PKG}.{m}" for m in """
     operators.bloom_join operators.bm25 operators.cdc operators.collocations
     operators.constraints operators.dsir operators.funnel operators.fuzzy
     operators.hll operators.html_clean operators.html_extractors
-    operators.io_layout operators.ivf operators.json_ops operators.justext
+    operators.ivf operators.json_ops operators.justext
     operators.kmeans operators.labelprop operators.langid operators.line_dedup
     operators.lm_filter operators.media_dedup operators.mixing operators.moments
     operators.multimodal operators.ordering operators.packing operators.pagerank
@@ -192,4 +196,35 @@ def test_one_call_path():
             use = _call_path_use(node)
             if use is not None and not allowed[use](m, scope):
                 found.append(f"{m}:{node.lineno} {'.'.join(scope)} {use}")
+    assert found == []
+
+
+def test_one_prompt_choice():
+    """The prompt texts are chosen in ``prompts`` only: no module outside
+    the package ``prompts`` picks a template by name with
+    ``prompts.template`` (the builders format ``prompts.table`` entries)."""
+    found = []
+    for m, path in sorted(_modules().items()):
+        if m == f"{PKG}.prompts" or m.startswith(f"{PKG}.prompts."):
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name == "template":
+                    found.append(f"{m}:{node.lineno} template")
+    assert found == []
+
+
+def test_survey_group_mode_is_one_cut():
+    """``run_v2_survey`` cuts the papers with their grouping in both group
+    modes: it never compares ``group_mode``."""
+    tree = ast.parse((REPO / PKG / "pipelines" / "v2_survey.py").read_text())
+    (fn,) = [n for n in ast.walk(tree)
+             if isinstance(n, ast.FunctionDef) and n.name == "run_v2_survey"]
+    found = [
+        node.lineno for node in ast.walk(fn) if isinstance(node, ast.Compare)
+        and any(isinstance(x, ast.Attribute) and x.attr == "group_mode"
+                or isinstance(x, ast.Name) and x.id == "group_mode"
+                for x in [node.left, *node.comparators])]
     assert found == []

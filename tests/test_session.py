@@ -5,7 +5,8 @@ package daemon a zipimporter re-reads its archive only when the archive's
 ``(st_mtime_ns, st_size)`` stamp has changed.  The first test checks that
 contract in this process, without Spark; the second checks that the
 session's workers really run under the daemon; the third that they
-import the package whatever directory the driver starts in.
+import the package whatever directory the driver starts in; the fourth
+that importing the package does not load the daemon module.
 """
 
 from __future__ import annotations
@@ -116,3 +117,18 @@ def test_workers_import_the_package_from_any_start_directory(tmp_path):
                          capture_output=True, text=True, timeout=600)
     assert out.returncode == 0, out.stderr[-3000:]
     assert "ids [0, 1, 2, 3]" in out.stdout
+
+
+def test_importing_the_package_leaves_the_daemon_module_unloaded():
+    """``python -m llmxmapreduce_spark.pyworker`` imports the package
+    before it runs the daemon module as ``__main__``; the package must not
+    have imported that module already, or it runs twice (runpy's
+    ``found in sys.modules`` warning)."""
+    root = str(Path(__file__).resolve().parent.parent)
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import sys; import llmxmapreduce_spark; "
+         "print('llmxmapreduce_spark.pyworker' in sys.modules)"],
+        cwd=root, capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip() == "False"
